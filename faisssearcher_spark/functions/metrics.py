@@ -4,9 +4,12 @@ Reference parity: ``backend/faiss_searcher.py:75-90`` (``set_measure_metric``)
 maps a measurement name to a FAISS metric enum and lets FAISS C++ do the
 arithmetic. Here every metric is a **Catalyst column expression** over two
 ``array<float|double>`` columns, built from ``zip_with`` / ``aggregate`` /
-``array_max`` higher-order functions. These compile to whole-stage-codegen'd
-JVM bytecode: the scoring hot path never crosses into Python, which is what
-lets the exact k-NN join run at cluster scale.
+``array_max`` higher-order functions, so scoring runs in the JVM and never
+crosses into Python.  It is *not* whole-stage-codegen'd: in Spark 4.1.2
+``ZipWith`` and ``ArrayAggregate`` implement ``CodegenFallback`` (``javap``
+on ``spark-catalyst_2.13-4.1.2.jar``), so every pair is scored by the
+expression interpreter.  The benchmark's ``flat_search`` workload traces
+about 226k scored pairs/s on 3 task slots.
 
 Conventions (must match FAISS, see SURVEY.md §2.3):
 
@@ -45,7 +48,7 @@ def as_double(c: ColumnOrName) -> Column:
 
 
 def _sum(arr: Column) -> Column:
-    """Left-to-right float64 sum over an array column (codegen'd)."""
+    """Left-to-right float64 sum over an array column."""
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
 
 

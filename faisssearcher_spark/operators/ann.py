@@ -1343,6 +1343,18 @@ class IVFPQIndex(_ItemsLifecycleMixin):
         self._items = coded.cache()
         return self
 
+    # The inner IVFIndex pins the cell assignments the codes were built
+    # from; release them with the codes.  Search needs only its centroids.
+    def unpersist(self, blocking: bool = False):
+        if self._ivf is not None:
+            self._ivf.unpersist(blocking)
+        return super().unpersist(blocking)
+
+    def close(self) -> None:
+        super().close()
+        if self._ivf is not None:
+            self._ivf.close()
+
     def add_items(self, items: DataFrame) -> "IVFPQIndex":
         """FAISS ``index.add`` after training: assign new rows to their
         nearest existing cell, encode residuals with the existing

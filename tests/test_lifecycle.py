@@ -49,6 +49,21 @@ def test_unpersist_releases_then_close_bricks(spark, emb_small, queries,
         idx.search(queries, k=3, query_item_col="qid")
 
 
+def test_ivfpq_close_releases_inner_ivf_cache(spark, emb_small):
+    # the inner IVFIndex's cached cell assignments go with the codes
+    emb_small.count()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    idx = IVFPQIndex(n_cells=4, nprobe=4, m=4, metric="cos", seed=1,
+                     kmeans_max_iter=2).fit(emb_small, item_key_col="vec_id",
+                                            item_vec_col="embedding")
+    idx._items.count()
+    assert jsc.getPersistentRDDs().size() > before
+    idx.close()
+    assert jsc.getPersistentRDDs().size() == before
+    idx._ivf.close()   # still idempotent after the outer close
+
+
 def test_nsw_close(spark, emb_small, queries):
     idx = NSWIndex(m=4, ef_construction=8, ef_search=16, metric="cos",
                    n_shards=2).fit(emb_small, item_key_col="vec_id",

@@ -23,6 +23,24 @@ class TestCatalog:
         catalog.register_views(spark, sf_dir)
         assert spark.sql("SELECT count(*) AS n FROM region").first()["n"] > 0
 
+    def test_failed_footer_probe_is_memoized(self, spark, tmp_path,
+                                             monkeypatch):
+        # a path pyarrow cannot read is probed once per process; the
+        # Spark count fallback answers both calls
+        import pyarrow.dataset as ds
+
+        spark.range(5).write.parquet(str(tmp_path / "t.parquet"))
+        calls = []
+
+        def unreadable(*args, **kwargs):
+            calls.append(args)
+            raise OSError("unreadable")
+
+        monkeypatch.setattr(ds, "dataset", unreadable)
+        assert catalog.table_num_rows(spark, str(tmp_path), "t") == 5
+        assert catalog.table_num_rows(spark, str(tmp_path), "t") == 5
+        assert len(calls) == 1
+
 
 class TestCorpusReaders:
     @pytest.fixture(scope="class")

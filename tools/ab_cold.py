@@ -2,9 +2,10 @@
 
 Each run of THIS SCRIPT is one fresh Spark session (the bench.py cold
 shape): same generic warmups as bench.py, then for each named query
-time fn()+noop twice (cold, warm). Prints one JSON line. Run it
-alternately against two checkouts (PYTHONPATH decides which code) to
-A/B a cold-path change with interleaved samples:
+time fn()+noop twice (cold, warm). Prints one JSON line,
+``{"code": <checkout>, "results": {<query>: {"cold": s, "warm": s}}}``.
+Run it alternately against two checkouts (PYTHONPATH decides which
+code) to A/B a cold-path change with interleaved samples:
 
     for i in 1 2 3; do
       PYTHONPATH=/tmp/r14c_base python tools/ab_cold.py searcher_text_knn
@@ -57,8 +58,10 @@ def main() -> None:
         _wav(F.array(F.col("id").cast("double"))).alias("features"))
     _WKM(k=2, maxIter=1).fit(_wkf)
 
+    results: dict[str, dict[str, float]] = {}
     out = {"code": os.path.dirname(os.path.dirname(
-        os.path.abspath(faisssearcher_spark.__file__)))}
+        os.path.abspath(faisssearcher_spark.__file__))),
+        "results": results}
     for name in names:
         fn = registry.ALL_QUERY_FNS[name]
         t0 = time.time()
@@ -67,7 +70,7 @@ def main() -> None:
         t0 = time.time()
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         w = time.time() - t0
-        out[name] = {"cold": round(cold, 3), "warm": round(w, 3)}
+        results[name] = {"cold": round(cold, 3), "warm": round(w, 3)}
     print(json.dumps(out))
 
 
