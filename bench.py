@@ -257,7 +257,7 @@ def main() -> None:
         canary.append(round(_time_one("tpch_q6_revenue"), 3))
 
     isolated_samples: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
-    # pass-boundary teardown (r12 verdict #2): the ANN/text memos hold
+    # pass-boundary teardown (r12 verdict #2): the bench memo holds
     # fitted indexes whose encoded corpora re-cache LAZILY after the
     # clearCache below — that re-materialization otherwise lands inside
     # whichever unrelated leg runs nearby in the isolated pass (the r12
@@ -265,7 +265,7 @@ def main() -> None:
     # lifecycle API: the first isolated sample of each memoized leg
     # repays one fit, the second sweep's sample is steady-state, and
     # min-of-samples keeps pricing the search.
-    registry.close_bench_caches(spark)
+    registry.BENCH_MEMO.close()
     spark.catalog.clearCache()
     _canary()                      # baseline right after the warm sweep
     for _sweep in range(2):
@@ -298,6 +298,7 @@ def main() -> None:
         deep = int(os.environ.get("SPARK_GRAFT_SCALE_DEEP", "100"))
         scale = run_scale_sweep(spark, sf_dir, factor=factor,
                                 deep_factor=deep or None)
+    registry.BENCH_MEMO.close()
 
     total = round(sum(timings.values()), 3)
     # The driver keeps only the LAST 2000 chars of stdout and json-parses

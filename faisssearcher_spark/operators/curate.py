@@ -48,10 +48,6 @@ _LANDING_REFS: dict[int, int] = {}
 _LANDING_LOCK = threading.RLock()
 
 
-def _landing_lock():
-    return _LANDING_LOCK
-
-
 def _land(frame: DataFrame,
           landed: "list[tuple[DataFrame, int | None]]") -> DataFrame:
     """Refcount the plan BEFORE persisting it (r13 ADVICE: persisting
@@ -64,13 +60,13 @@ def _land(frame: DataFrame,
     except Exception:
         h = None
     if h is not None:
-        with _landing_lock():
+        with _LANDING_LOCK:
             _LANDING_REFS[h] = _LANDING_REFS.get(h, 0) + 1
     try:
         f = frame.persist()
     except BaseException:
         if h is not None:
-            with _landing_lock():
+            with _LANDING_LOCK:
                 left = _LANDING_REFS.get(h, 1) - 1
                 if left > 0:
                     _LANDING_REFS[h] = left
@@ -87,7 +83,7 @@ def _release_one(f: DataFrame, h: "int | None") -> None:
     holder; a hash FAILURE (h None) unpersists unconditionally — the
     conservative direction for a leak guard."""
     if h is not None:
-        with _landing_lock():
+        with _LANDING_LOCK:
             left = _LANDING_REFS.get(h, 1) - 1
             if left > 0:
                 _LANDING_REFS[h] = left

@@ -140,8 +140,8 @@ def contaminated_spans(train: DataFrame, eval_df: DataFrame, *,
         raise ValueError(f"train_id_col {train_id_col!r} collides with "
                          "an output column; rename it first")
     # ``train_wins`` / ``eval_wins`` reuse precomputed window-occurrence
-    # frames (one dedup.token_windows_multi pass shared across a
-    # composite's span consumers — the share-one-scan discipline).
+    # frames (one stamped window frame shared across a composite's
+    # span consumers — the share-one-scan discipline).
     # Eval windows only contribute their distinct ``__w`` keys, so any
     # frame carrying the eval set's size-min_len window hashes works.
     if train_wins is not None:

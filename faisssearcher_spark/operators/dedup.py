@@ -1570,109 +1570,6 @@ def _token_windows(df: DataFrame, *, id_col: str, text_col: str,
     return toked, wins
 
 
-def token_windows_multi(df: DataFrame, *, ns: "Sequence[int]",
-                        id_col: str = "doc_id", text_col: str = "text",
-                        tokens_col: str | None = None,
-                        extra_cols: "tuple[str, ...]" = ()) -> DataFrame:
-    """ONE tokenize + ONE explode producing the sliding-window
-    occurrence rows for SEVERAL window sizes at once — the tagged union
-    of :func:`_token_windows` at each ``n`` in ``ns``. Output
-    ``(id, *extra_cols, __n, start, __w)`` where ``__n`` is the window
-    size, ``start`` the 0-based token offset and ``__w`` the xxhash64
-    window key, all bit-identical to the per-size frames.
-
-    Why: composite reports (the ``text_fingerprints`` gate) run span
-    dedup, boilerplate stripping, ExactSubstr and decontamination over
-    the SAME corpus at different window lengths — each re-scanning and
-    re-tokenizing the corpus for its own window build (guide §2.3:
-    shuffle/scan the bytes once, tag, don't repeat). One pass builds
-    all the arrays off one token split; the size tag is recovered from
-    the explode position against the running array lengths, a
-    codegen'd CASE chain (the ``_tagged_gram_explode`` discipline —
-    per-element struct transforms run interpreted and slower). Callers
-    persist the result and carve per-size frames with
-    :func:`window_slice`."""
-    sizes = sorted({int(n) for n in ns})
-    if not sizes or sizes[0] < 1:
-        raise ValueError(f"ns must be a non-empty set of ints >= 1, "
-                         f"got {ns!r}")
-    toks = (F.col(tokens_col) if tokens_col is not None
-            else T.tokens(text_col))
-    base = df.select(F.col(id_col), *[F.col(c) for c in extra_cols],
-                     toks.alias("__toks"))
-    nt = F.size("__toks")
-
-    # one-positional-arg lambda per size (a `n=n` default would make
-    # pyspark treat it as the two-arg (element, index) HOF form and
-    # bind n to the INDEX column)
-    def _whash(n: int):
-        return lambda s: F.xxhash64(F.slice(F.col("__toks"), s, n))
-
-    for n in sizes:
-        starts = F.when(nt >= n, F.sequence(F.lit(1), nt - n + 1)) \
-                  .otherwise(F.array().cast("array<int>"))
-        base = base.withColumn(f"__wa{n}",
-                               F.transform(starts, _whash(n)))
-    cat = F.concat(*[F.col(f"__wa{n}") for n in sizes])
-    bands = [F.size(f"__wa{n}").alias(f"__s{n}") for n in sizes[:-1]]
-    g = base.select(F.col(id_col), *[F.col(c) for c in extra_cols],
-                    *bands, F.posexplode(cat).alias("__p", "__w"))
-    running = None
-    tag = None
-    off = None
-    prev = F.lit(0)
-    for n in sizes[:-1]:
-        s = F.col(f"__s{n}")
-        running = s if running is None else running + s
-        cond = F.col("__p") < running
-        tag = (F.when(cond, F.lit(n)) if tag is None
-               else tag.when(cond, F.lit(n)))
-        o = F.col("__p") - prev
-        off = F.when(cond, o) if off is None else off.when(cond, o)
-        prev = running
-    tag = (F.lit(sizes[-1]) if tag is None
-           else tag.otherwise(F.lit(sizes[-1])))
-    off = ((F.col("__p") - prev) if off is None
-           else off.otherwise(F.col("__p") - prev))
-    out = g.select(F.col(id_col), *[F.col(c) for c in extra_cols],
-                   tag.alias("__n"), off.alias("start"), F.col("__w"))
-    return _stamp_spans(out, producer="token_windows_multi",
-                        ns=tuple(sizes), id_col=id_col,
-                        extra_cols=tuple(extra_cols))
-
-
-def window_slice(wall: DataFrame, n: int, *, id_col: str = "doc_id",
-                 extra_cols: "tuple[str, ...]" = ()) -> DataFrame:
-    """Carve the size-``n`` windows frame ``(id, *extra_cols, start,
-    __w)`` out of a :func:`token_windows_multi` union — row-identical
-    to ``_token_windows(df, n=n)``'s occurrence frame, so the span
-    consumers' ``wins=`` hooks accept it. Validates the union's stamp
-    (a size the union never built would silently slice empty)."""
-    n = int(n)
-    meta = getattr(wall, "_fs_spans_meta", None)
-    if meta is not None:
-        if meta.get("producer") != "token_windows_multi":
-            raise ValueError(
-                "window_slice expects a token_windows_multi frame, got "
-                f"producer={meta.get('producer')!r}")
-        if n not in meta.get("ns", ()):
-            raise ValueError(
-                f"window_slice(n={n}): the union was built for sizes "
-                f"{meta.get('ns')!r} — slicing an unbuilt size would "
-                "be silently empty")
-        missing = [c for c in extra_cols
-                   if c not in meta.get("extra_cols", ())]
-        if missing:
-            raise ValueError(
-                f"window_slice extra_cols {missing!r} were not carried "
-                f"by the union (has {meta.get('extra_cols')!r})")
-    out = (wall.filter(F.col("__n") == n)
-           .select(F.col(id_col), *[F.col(c) for c in extra_cols],
-                   "start", "__w"))
-    return _stamp_spans(out, producer="token_windows", n=n,
-                        id_col=id_col, extra_cols=tuple(extra_cols))
-
-
 def _check_wins(wins: DataFrame, consumer: str, *, n: int, id_col: str,
                 extra_cols: "tuple[str, ...]" = ()) -> None:
     """Validate a ``wins=`` occurrence frame against the consumer's
@@ -1760,7 +1657,7 @@ def remove_duplicate_spans(df: DataFrame, *, id_col: str = "doc_id",
         raise ValueError(f"id_col {id_col!r} collides with a span-dedup "
                          "output column; rename it first")
     # ``wins`` reuses a precomputed window-occurrence frame (one
-    # token_windows_multi pass shared across a composite's span
+    # stamped _token_windows frame shared across a composite's span
     # consumers — the share-one-scan discipline, like ``tokens_col``)
     if wins is not None:
         _check_wins(wins, "remove_duplicate_spans", n=n, id_col=id_col)
@@ -1912,7 +1809,7 @@ def exact_substring_spans(df: DataFrame, *, id_col: str = "doc_id",
         raise ValueError(f"id_col {id_col!r} collides with an "
                          "ExactSubstr output column; rename it first")
     # ``wins`` reuses a precomputed window-occurrence frame (one
-    # token_windows_multi pass shared across a composite — the
+    # stamped _token_windows frame shared across a composite — the
     # share-one-scan discipline, like ``tokens_col``)
     if wins is not None:
         _check_wins(wins, "exact_substring_spans", n=min_len,
@@ -2485,7 +2382,7 @@ def remove_boilerplate(df: DataFrame, *, id_col: str = "doc_id",
         raise ValueError(f"id_col {id_col!r} collides with a span-dedup "
                          "output column; rename it first")
     # ``wins`` reuses a precomputed (grouped) window-occurrence frame
-    # (one token_windows_multi pass shared across a composite)
+    # (one stamped _token_windows frame shared across a composite)
     if wins is not None:
         _check_wins(wins, "remove_boilerplate", n=n, id_col=id_col,
                     extra_cols=(group_col,))

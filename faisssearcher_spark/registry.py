@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from faisssearcher_spark.encoders.mock import HashingEncoder
 from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.functions import text as T
+from faisssearcher_spark.memo import LandedFrame, SessionMemo
 from faisssearcher_spark.operators import (ann, dedup, events, temporal,
                                            text_analysis)
 from faisssearcher_spark.operators.knn import cal_sim, knn_join
@@ -64,6 +65,29 @@ _TOKS = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
          "t -> t != '')")
 
 _MD5INT = "('0x' || substring(md5({x}), 1, 8))::BIGINT"
+
+#: the bench session memo (faisssearcher_spark/memo.py): fitted indexes,
+#: the curate landing frame, the store arcs' collected rows and the
+#: streamed-CMS state dir. The reference trains once and searches many
+#: times (faiss_searcher.py:116-125 trains, :161 searches the trained
+#: index); without the memo every bench invocation re-paid the driver
+#: training (~1-2 s numpy Lloyd for OPQ) plus the corpus encode pass, so
+#: the isolated pass timed "train+encode+search" where a serving
+#: deployment pays only "search", and single-sample train noise read as
+#: a search regression (r11 verdict #2). The fit is priced once in the
+#: cold pass; warm/isolated price the steady state. The store-arc bench
+#: entries (dedup_incremental_screen, dedup_upsert_screen,
+#: dedup_fpstore_screen, text_cms_stream) refresh their entry so they
+#: time the real I/O while the gate queries reuse it. bench.py closes
+#: the memo at pass boundaries and at the end of the run.
+BENCH_MEMO = SessionMemo()
+
+
+def _memo_key(spark: SparkSession, sf_dir: str, spec: str) -> tuple:
+    """BENCH_MEMO key: entries hold live session-bound DataFrames, so a
+    second session in the same process re-builds instead of inheriting
+    handles into a stopped one."""
+    return (spark.sparkContext.applicationId, sf_dir, spec)
 
 
 # ===========================================================================
@@ -715,7 +739,8 @@ def _q_searcher_text_hash_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.train(validate=False)
         return s
 
-    searcher = _fitted_index(spark, sf_dir, "searcher_hash8", _build)
+    searcher = BENCH_MEMO.get(_memo_key(spark, sf_dir, "searcher_hash8"),
+                              _build)
     queries = [r["text"] for r in
                docs.filter(F.col("doc_id") < 5).orderBy("doc_id").collect()]
     res = searcher.search(queries, topK=3, keep_rank_no=True, score_scale=4)
@@ -1212,10 +1237,6 @@ WHERE n_common::DOUBLE / (sa.n_sh + sb.n_sh - n_common) >= 0.3
 #: the correctness gate is uncapped
 INC_CAP = 1000
 
-#: per-process memo of the incremental leg's (deterministic) rows by
-#: sf_dir — the arc's eager store I/O runs once per corpus per session
-_INC_LEG_CACHE: dict[str, list] = {}
-
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + 4-band LSH candidates over 3-gram shingles, verified
@@ -1248,7 +1269,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (dedup_incremental_screen, ordered before this query in bench.py)
     # so this flagship gate's cold number prices only its declarative
     # legs (r6 verdict #7)
-    inc = _mh_leg_df(spark, _incremental_arc_rows(spark, sf_dir))
+    inc = _mh_leg_df(spark, BENCH_MEMO.get(
+        _memo_key(spark, sf_dir, "mh_incremental"),
+        lambda: _incremental_arc_rows(spark, sf_dir)))
 
     # tag-union leg (round 10): the MERGE/upsert maintenance arc —
     # commit a corpus with planted WRONG vintages (every doc_id%10==0
@@ -1260,7 +1283,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row k is its odd neighbor's signature, so screening odd k+1
     # yields a guaranteed extra (k+1, k, est=1.0) hit the oracle
     # doesn't expect.
-    up = _mh_leg_df(spark, _upsert_arc_rows(spark, sf_dir))
+    up = _mh_leg_df(spark, BENCH_MEMO.get(
+        _memo_key(spark, sf_dir, "mh_upsert"),
+        lambda: _upsert_arc_rows(spark, sf_dir)))
     return pairs.unionByName(inc).unionByName(up)
 
 
@@ -1275,8 +1300,7 @@ def _mh_leg_df(spark: SparkSession, rows: list) -> DataFrame:
             else spark.createDataFrame([], _MH_LEG_SCHEMA))
 
 
-def _incremental_arc_rows(spark: SparkSession, sf_dir: str,
-                          use_memo: bool = True) -> list:
+def _incremental_arc_rows(spark: SparkSession, sf_dir: str) -> list:
     """The MinHashStore commit→screen arc over the first INC_CAP doc_ids
     (even half commits, odd half screens at est ≥ 0.5), materialized to
     driver rows — shared by the gate leg (memoized per corpus per
@@ -1286,8 +1310,6 @@ def _incremental_arc_rows(spark: SparkSession, sf_dir: str,
 
     from faisssearcher_spark.operators.incremental import MinHashStore
 
-    if use_memo and sf_dir in _INC_LEG_CACHE:
-        return _INC_LEG_CACHE[sf_dir]
     docs = load_table_parallel(spark, sf_dir, "documents")
     capped = docs.filter(F.col("doc_id") < INC_CAP)
     with tempfile.TemporaryDirectory(prefix="mhstore_gate_") as tmp:
@@ -1303,16 +1325,10 @@ def _incremental_arc_rows(spark: SparkSession, sf_dir: str,
             F.col("new_id").alias("id_a"),
             F.col("known_id").alias("id_b"),
             F.round("est_jaccard", 4).alias("jaccard")).collect()
-    _INC_LEG_CACHE[sf_dir] = inc_rows
     return inc_rows
 
 
-#: memo for the upsert arc — same discipline as _INC_LEG_CACHE
-_UPSERT_LEG_CACHE: dict[str, list] = {}
-
-
-def _upsert_arc_rows(spark: SparkSession, sf_dir: str,
-                     use_memo: bool = True) -> list:
+def _upsert_arc_rows(spark: SparkSession, sf_dir: str) -> list:
     """The MinHashStore MERGE arc: commit the even half with PLANTED
     WRONG vintages (doc_id % 10 == 0 evens carry their odd neighbor's
     text), ``upsert`` the corrected batch, ``compact``, then screen the
@@ -1330,8 +1346,6 @@ def _upsert_arc_rows(spark: SparkSession, sf_dir: str,
 
     from faisssearcher_spark.operators.incremental import MinHashStore
 
-    if use_memo and sf_dir in _UPSERT_LEG_CACHE:
-        return _UPSERT_LEG_CACHE[sf_dir]
     docs = load_table_parallel(spark, sf_dir, "documents")
     capped = docs.filter(F.col("doc_id") < INC_CAP).select("doc_id", "text")
     evens = capped.filter(F.col("doc_id") % 2 == 0)
@@ -1359,7 +1373,6 @@ def _upsert_arc_rows(spark: SparkSession, sf_dir: str,
             F.col("new_id").alias("id_a"),
             F.col("known_id").alias("id_b"),
             F.round("est_jaccard", 4).alias("jaccard")).collect()
-    _UPSERT_LEG_CACHE[sf_dir] = up_rows
     return up_rows
 
 
@@ -1608,14 +1621,7 @@ def _gate_video_shiftnoise_assets(docs: DataFrame) -> DataFrame:
                        F.unhex(F.concat(*parts)).alias("payload"))
 
 
-#: per-process memo of the fingerprint-store leg's rows by sf_dir —
-#: the _INC_LEG_CACHE discipline: the arc's eager store I/O runs once
-#: per corpus per session; the bench entry re-runs it fresh
-_FPSTORE_LEG_CACHE: dict[str, list] = {}
-
-
-def _fpstore_arc_rows(spark: SparkSession, sf_dir: str,
-                      use_memo: bool = True) -> list:
+def _fpstore_arc_rows(spark: SparkSession, sf_dir: str) -> list:
     """The FingerprintStore commit→screen arc (operators/incremental.py
     — the third store, Hamming fingerprints): even doc_ids commit their
     32-bit SimHash prints as banded state, odd doc_ids screen at
@@ -1627,8 +1633,6 @@ def _fpstore_arc_rows(spark: SparkSession, sf_dir: str,
 
     from faisssearcher_spark.operators.incremental import FingerprintStore
 
-    if use_memo and sf_dir in _FPSTORE_LEG_CACHE:
-        return _FPSTORE_LEG_CACHE[sf_dir]
     docs = load_table_parallel(spark, sf_dir, "documents")
     fps = dedup.simhash(docs, bits=32)
     with tempfile.TemporaryDirectory(prefix="fpstore_gate_") as tmp:
@@ -1647,7 +1651,6 @@ def _fpstore_arc_rows(spark: SparkSession, sf_dir: str,
             F.col("known_id").alias("id_b"),
             F.col("hamming").cast("int").alias("hamming")).toPandas()
         rows = [tuple(r) for r in pdf.to_numpy().tolist()]
-    _FPSTORE_LEG_CACHE[sf_dir] = rows
     return rows
 
 
@@ -1812,7 +1815,8 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arc (the third incremental store — Hamming prints; see
     # _fpstore_arc_rows), memoized per session and priced under its
     # own bench entry dedup_fpstore_screen, the store-arc discipline.
-    fp_rows = _fpstore_arc_rows(spark, sf_dir)
+    fp_rows = BENCH_MEMO.get(_memo_key(spark, sf_dir, "fpstore"),
+                             lambda: _fpstore_arc_rows(spark, sf_dir))
     fp_schema = "leg string, id_a long, id_b long, hamming int"
     fpstore_leg = (spark.createDataFrame(fp_rows, fp_schema) if fp_rows
                    else spark.createDataFrame([], fp_schema))
@@ -2242,14 +2246,8 @@ WHERE round({_dot('ea.v', 'eb.v')}, 4) >= {threshold}
 #: synthetic testdata, so a higher threshold would gate an empty set)
 ESTORE_TABLES, ESTORE_BITS, ESTORE_THRESHOLD = 16, 4, 0.45
 
-#: per-process memo of the estore leg's (deterministic) rows by sf_dir —
-#: same discipline as _INC_LEG_CACHE: the arc's eager store I/O runs
-#: once per corpus per session; the bench entry re-runs it fresh
-_ESTORE_LEG_CACHE: dict[str, list] = {}
-
 
 def _estore_arc_rows(spark: SparkSession, sf_dir: str,
-                     use_memo: bool = True,
                      tables: int = ESTORE_TABLES,
                      bits: int = ESTORE_BITS) -> list:
     """The EmbeddingStore commit→screen arc (operators/incremental.py):
@@ -2265,8 +2263,6 @@ def _estore_arc_rows(spark: SparkSession, sf_dir: str,
 
     from faisssearcher_spark.operators.incremental import EmbeddingStore
 
-    if use_memo and sf_dir in _ESTORE_LEG_CACHE:
-        return _ESTORE_LEG_CACHE[sf_dir]
     emb = load_table_parallel(spark, sf_dir, "embeddings")
     with tempfile.TemporaryDirectory(prefix="estore_gate_") as tmp:
         store = EmbeddingStore(spark, tmp, dim=64, tables=tables,
@@ -2279,10 +2275,6 @@ def _estore_arc_rows(spark: SparkSession, sf_dir: str,
             F.col("new_id").alias("id_a"),
             F.col("known_id").alias("id_b"),
             F.col("cos_sim")).collect()
-    if (tables, bits) == (ESTORE_TABLES, ESTORE_BITS):
-        # never memoize a differently-parameterized (bench-sized) run
-        # as the gate leg's row set
-        _ESTORE_LEG_CACHE[sf_dir] = rows
     return rows
 
 
@@ -2305,7 +2297,8 @@ def q_dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = dedup.embedding_cosine_pairs(emb, threshold=0.45, score_scale=4,
                                        strategy="lsh", lsh_tables=8,
                                        lsh_bits=4)
-    est_rows = _estore_arc_rows(spark, sf_dir)
+    est_rows = BENCH_MEMO.get(_memo_key(spark, sf_dir, "estore"),
+                              lambda: _estore_arc_rows(spark, sf_dir))
     schema = "strategy string, id_a long, id_b long, cos_sim double"
     est = spark.createDataFrame(est_rows, schema) if est_rows \
         else spark.createDataFrame([], schema)
@@ -3223,18 +3216,12 @@ def q_text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are a filter of it (the eval set is a slice of this corpus), so
     # the separate eval tokenize+window subtree is gone. Window VALUES
     # are identical by construction (same xxhash64 over the same
-    # slices) ⇒ the gate hash is unchanged. The landed
-    # token_windows_multi union (one tagged pass for n∈{5,8,10},
-    # persisted+refcounted) was built, tested and MEASURED here too:
-    # it wins first-execution (11.1 → 7.7 interleaved single-session)
-    # and is the right shape when the corpus scan dominates (real
-    # scale), but at the single-row-group local shape its steady state
-    # pays cache churn + a 1-task materialization every consumer waits
-    # on (3.8–4.5 → 4.9+ steady; bench cold 4.91 → 8.18) — reverted to
-    # the share-without-landing form, which measured at-or-better
-    # steady (5.46 vs 5.79 mean) with no churn. The operator API
-    # (token_windows_multi/window_slice + wins= hooks) stays for
-    # scan-bound callers, parity-pinned in tests/test_dedup_spans.py.
+    # slices) ⇒ the gate hash is unchanged. A landed multi-size window
+    # union (one tagged pass for n∈{5,8,10}, persisted+refcounted) was
+    # measured here and reverted: it won first-execution but lost
+    # steady state at the single-row-group local shape (numbers in
+    # OPTIMIZATION_r14.md). The wins= hooks are pinned in
+    # tests/test_dedup_spans.py.
     from faisssearcher_spark.operators.dedup import (_stamp_spans,
                                                      _token_windows)
 
@@ -3553,9 +3540,9 @@ def q_text_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     matter the batching), and the top-20 point-query against that
     state lands as ``cms_est_streamed``. The oracle aliases its batch
     estimate twice — equality IS the stream≡batch parity claim. The
-    eager stream run is memoized per corpus per session (the
-    _INC_LEG_CACHE discipline) and priced FRESH under its own bench
-    entry (text_cms_stream, ordered before this query in bench.py)."""
+    eager stream run is memoized per corpus per session (BENCH_MEMO)
+    and priced FRESH under its own bench entry (text_cms_stream,
+    ordered before this query in bench.py)."""
     from faisssearcher_spark.operators import sketches
     from faisssearcher_spark.streaming.sketches import read_sketch_state
 
@@ -3563,7 +3550,8 @@ def q_text_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = (docs.select(F.explode_outer(T.word_ngrams("text", 3))
                          .alias("ngram"))
              .filter(F.col("ngram").isNotNull()))
-    state = _cms_stream_state(spark, sf_dir, grams)
+    state = BENCH_MEMO.get(_memo_key(spark, sf_dir, "cms_stream"),
+                           lambda: _cms_stream_state(spark, grams))
     # top-20 and the batch sketch both read the LANDED gram files (the
     # stream build materialized them) instead of re-tokenizing the
     # corpus once per subtree — identical multiset, identical counts
@@ -3580,33 +3568,15 @@ def q_text_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.col("freq").desc(), F.col("ngram").asc()))
 
 
-#: memo of the streamed-CMS state dir by sf_dir — the _INC_LEG_CACHE
-#: discipline: the eager multi-epoch stream runs once per corpus per
-#: session; the bench entry re-runs it fresh
-_CMS_STREAM_CACHE: dict[str, str] = {}
-
-#: superseded state dirs awaiting exit-time cleanup (deletion is
-#: deferred — see the comment in _cms_stream_state)
-_CMS_STREAM_RETIRED: list[str] = []
-
-
-def _cms_stream_state(spark: SparkSession, sf_dir: str,
-                      grams: DataFrame,
-                      use_memo: bool = True) -> str:
+def _cms_stream_state(spark: SparkSession, grams: DataFrame) -> str:
     """Replay ``grams`` as a 4-file availableNow stream through the
-    count-min sink and return the state directory (memoized per
-    corpus per session unless ``use_memo=False`` — the fresh-timing
-    path for the bench entry)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    count-min sink and return the state directory. The directory sits
+    under BENCH_MEMO's temp root and is removed at exit, never earlier:
+    a returned state path may still back a lazy, not-yet-executed
+    plan."""
     from faisssearcher_spark.streaming.sketches import cms_sketch_sink
 
-    if use_memo and sf_dir in _CMS_STREAM_CACHE:
-        return _CMS_STREAM_CACHE[sf_dir]
-    root = tempfile.mkdtemp(prefix="ngram_cms_stream_")
+    root = BENCH_MEMO.tmpdir(prefix="ngram_cms_stream_")
     gpath = f"{root}/grams"
     # HASH-partitioned by ngram, not round-robin repartition(4): round
     # robin pays sortBeforeRepartition (a full sort of every trigram
@@ -3621,23 +3591,6 @@ def _cms_stream_state(spark: SparkSession, sf_dir: str,
                     state_dir=f"{root}/state",
                     checkpoint_dir=f"{root}/ckpt",
                     depth=4, width=512).awaitTermination()
-    # track every created dir and clean them ALL at exit (r10 advice:
-    # long sessions accumulated unbounded /tmp state). Deletion is
-    # DEFERRED to exit rather than done on supersede: a previously
-    # returned state path may still back a lazy, not-yet-executed
-    # plan, and an eager rmtree here would be a use-after-free the
-    # moment callers interleave (review catch) — the cost is at most
-    # one extra live dir per (sf_dir, invocation) until exit.
-    old = _CMS_STREAM_CACHE.get(sf_dir)
-    if old:
-        _CMS_STREAM_RETIRED.append(old)
-    if not _CMS_STREAM_CACHE and not _CMS_STREAM_RETIRED:
-        atexit.register(
-            lambda: [shutil.rmtree(os.path.dirname(p),
-                                   ignore_errors=True)
-                     for p in (list(_CMS_STREAM_CACHE.values())
-                               + _CMS_STREAM_RETIRED)])
-    _CMS_STREAM_CACHE[sf_dir] = f"{root}/state"
     return f"{root}/state"
 
 
@@ -3660,8 +3613,8 @@ def _cms_landed_grams(spark: SparkSession, state: str) -> DataFrame:
     (guide §1.2/#2: the tokenize HOFs are CodegenFallback and each
     subtree re-paid them; counts over the landed multiset are identical
     by construction, so the oracle hash is untouched). The files
-    outlive the call — cleanup is deferred to exit with the state dir
-    (see _cms_stream_state)."""
+    outlive the call and are removed at exit with the state dir (see
+    _cms_stream_state)."""
     import os
 
     return spark.read.parquet(os.path.join(os.path.dirname(state),
@@ -6048,62 +6001,6 @@ def q_ann_nsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     query_item_col="qid", item_key_col="vec_id")
 
 
-#: session memo of FITTED quantizer indexes for the bench PQ family,
-#: keyed by (sf_dir, spec). The reference trains once and searches many
-#: (faiss_searcher.py:116-125 trains, :161 searches the trained index);
-#: before r12 every bench invocation re-paid the driver training
-#: (~1-2 s numpy Lloyd for OPQ) plus the corpus encode pass, which made
-#: the isolated pass time "train+encode+search" while a serving
-#: deployment pays only "search" — and made single-sample train noise
-#: (identical OPQ numpy measured 1.0-5.0 s across quiet runs, NOTES.md)
-#: read as a search regression (r11 verdict #2). The _INC_LEG_CACHE
-#: discipline applied to indexes: the fit is priced ONCE in the cold
-#: pass; warm/isolated price the steady-state search.
-_FITTED_INDEX_CACHE: dict = {}
-
-#: guards _FITTED_INDEX_CACHE reads/writes: composite legs overlap their
-#: independent retrieval legs on driver threads (guide §2.6 — the
-#: searcher_text_knn hash/bm25 pair), and an unguarded stale-eviction
-#: scan racing an insert raises "dict changed size during iteration".
-#: Builders run OUTSIDE the lock (two DIFFERENT fits overlap) but
-#: SERIALIZE per key via _FITTED_KEY_LOCKS: a double-build on one key
-#: cannot simply be closed away, because Spark's CacheManager dedups
-#: cached data by LOGICAL PLAN — a plan-equal loser's blocking
-#: unpersist would evict the winner's cache entries too (review catch).
-import threading as _threading
-
-_FITTED_INDEX_LOCK = _threading.RLock()
-_FITTED_KEY_LOCKS: dict = {}
-
-
-def close_bench_caches(spark: SparkSession) -> int:
-    """Release every session-bound bench memo through the lifecycle API.
-
-    The ANN memo holds FITTED indexes whose encoded corpora sit in
-    executor storage; bench.py calls this at pass boundaries so the
-    isolated pass doesn't inherit storage pressure (or lazy re-cache
-    jobs) from the cold/warm passes' fits, and a long-lived process can
-    call it between sessions. close() is terminal — the next
-    ``_fitted_index`` hit re-fits once, then steady-state. Returns
-    the number of entries released."""
-    # snapshot+clear under the lock (review catch: an unlocked
-    # iteration racing a composite leg's insert raises "dict changed
-    # size during iteration"); close() runs outside it so a slow
-    # blocking unpersist doesn't stall concurrent lookups
-    with _FITTED_INDEX_LOCK:
-        entries = list(_FITTED_INDEX_CACHE.values())
-        _FITTED_INDEX_CACHE.clear()
-        _FITTED_KEY_LOCKS.clear()
-    for idx in entries:
-        try:
-            idx.close()
-        except Exception:
-            # a stopped session makes unpersist() throw; the snapshot
-            # going out of scope still drops the python references
-            pass
-    return len(entries)
-
-
 def _bm25_docs(spark: SparkSession, sf_dir: str, docs: DataFrame):
     """The ONE session-memoized BM25 fit over documents — every bench
     leg that searches it goes through here, so the memo key and the fit
@@ -6111,92 +6008,21 @@ def _bm25_docs(spark: SparkSession, sf_dir: str, docs: DataFrame):
     synchronized builders under one key)."""
     from faisssearcher_spark.operators.bm25 import BM25Index
 
-    return _fitted_index(spark, sf_dir, "bm25_docs",
-                         lambda: BM25Index().fit(docs, id_col="doc_id",
-                                                 text_col="text"))
-
-
-class _LandedFrame:
-    """Minimal lifecycle-protocol wrapper (the _ItemsLifecycleMixin
-    contract) for a bench-memoized LANDING frame — a persisted
-    DataFrame that several bench invocations consume (the curate
-    survivor table). ``holds`` keeps upstream result objects alive so
-    their own _release_with finalizers don't fire while the landing
-    frame still reads through their caches."""
-
-    def __init__(self, df: DataFrame, holds=()):
-        self.df = df.persist()
-        self._holds = tuple(holds)
-
-    def _cached_state(self):
-        return [] if self.df is None else [self.df]
-
-    def close(self) -> None:
-        if self.df is not None:
-            self.df.unpersist(True)
-        self.df = None
-        self._holds = ()
-
-
-def _fitted_index(spark: SparkSession, sf_dir: str, spec: str,
-                      builder):
-    # keyed by applicationId too: the memo holds LIVE session-bound
-    # DataFrames (unlike _INC_LEG_CACHE's collected rows), and a second
-    # session in the same process must re-fit, not inherit handles into
-    # a stopped session (review catch)
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, spec)
-    # evict entries bound to a dead session (r12 ADVICE): they pin
-    # DataFrames/plans of a stopped SparkContext for the process
-    # lifetime; any lookup under a NEW applicationId proves the old
-    # session's entries unreachable, so drop them (close() would throw
-    # against the stopped context — python deref is the release here)
-    with _FITTED_INDEX_LOCK:
-        stale = [k for k in _FITTED_INDEX_CACHE if k[0] != app_id]
-        for k in stale:
-            del _FITTED_INDEX_CACHE[k]
-            _FITTED_KEY_LOCKS.pop(k, None)
-        idx = _FITTED_INDEX_CACHE.get(key)
-        klock = (_FITTED_KEY_LOCKS.setdefault(key, _threading.Lock())
-                 if idx is None else None)
-    if idx is None:
-        # build outside the GLOBAL lock (overlapped legs fit
-        # concurrently on different keys) but under the PER-KEY lock:
-        # a same-key racer waits and reads the winner's entry instead
-        # of double-building
-        with klock:
-            with _FITTED_INDEX_LOCK:
-                idx = _FITTED_INDEX_CACHE.get(key)
-            if idx is None:
-                idx = builder()
-                with _FITTED_INDEX_LOCK:
-                    _FITTED_INDEX_CACHE[key] = idx
-                    _FITTED_KEY_LOCKS.pop(key, None)
-    # bench.py's isolated pass clearCache()s the session, which drops
-    # the fitted index's encoded-state cache registration permanently —
-    # re-register on hit (lazy + idempotent) so isolated samples price
-    # the SEARCH, not encode+search (review catch: ann_pq iso read
-    # 1.7x warm from exactly this). NB: is_cached stays True after
-    # clearCache (stale registration flag); the honest signal is the
-    # storageLevel collapsing to NONE (measured: re-cache restores the
-    # 1.2s search-only reading vs 2.6s without).
-    for frame in idx._cached_state():
-        sl = frame.storageLevel
-        if not (sl.useMemory or sl.useDisk):
-            frame.cache()
-    return idx
+    return BENCH_MEMO.get(_memo_key(spark, sf_dir, "bm25_docs"),
+                          lambda: BM25Index().fit(docs, id_col="doc_id",
+                                                  text_col="text"))
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bench-only: PQ16 ADC search end-to-end (driver Lloyd codebooks +
     one encode pass + distributed LUT-gather top-10 for 20 queries); the
     ann_ivf_recall gate carries the recall-contract twin. Fit memoized
-    per session (train-once/search-many, _FITTED_INDEX_CACHE)."""
+    per session (train-once/search-many, BENCH_MEMO)."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), "embedding")
-    pq = _fitted_index(
-        spark, sf_dir, "pq16",
+    pq = BENCH_MEMO.get(
+        _memo_key(spark, sf_dir, "pq16"),
         lambda: ann.PQIndex(m=16, metric="cos", seed=42)
         .fit(emb, item_key_col="vec_id", item_vec_col="embedding"))
     return pq.search(q, k=10, query_item_col="qid",
@@ -6235,8 +6061,8 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), "embedding")
-    idx = _fitted_index(
-        spark, sf_dir, "ivf16pq16",
+    idx = BENCH_MEMO.get(
+        _memo_key(spark, sf_dir, "ivf16pq16"),
         lambda: ann.IVFPQIndex(n_cells=16, nprobe=8, m=16, metric="cos",
                                seed=42, kmeans_max_iter=8)
         .fit(emb, item_key_col="vec_id", item_vec_col="embedding"))
@@ -6252,8 +6078,8 @@ def q_ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), "embedding")
-    pq = _fitted_index(
-        spark, sf_dir, "opq16",
+    pq = BENCH_MEMO.get(
+        _memo_key(spark, sf_dir, "opq16"),
         lambda: ann.PQIndex(m=16, metric="cos", seed=42, opq=True,
                             opq_iters=6)
         .fit(emb, item_key_col="vec_id", item_vec_col="embedding"))
@@ -6267,8 +6093,8 @@ def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), "embedding")
-    sq = _fitted_index(
-        spark, sf_dir, "sq8",
+    sq = BENCH_MEMO.get(
+        _memo_key(spark, sf_dir, "sq8"),
         lambda: ann.SQIndex(nbits=8, metric="cos")
         .fit(emb, item_key_col="vec_id", item_vec_col="embedding"))
     return sq.search(q, k=10, query_item_col="qid",
@@ -6439,7 +6265,7 @@ def q_pipeline_pretrain_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the synthetic classes are indistinguishable (see
     text_quality_classifier).
 
-    The curate stage lands once per session (``_fitted_index`` — the
+    The curate stage lands once per session (``BENCH_MEMO`` — the
     landing-table shape a production pipeline materializes once and
     runs prep epochs over; curate_documents prices that stage as its
     own bench leg): the memoized frame passes in via ``curated=``, so
@@ -6452,9 +6278,10 @@ def q_pipeline_pretrain_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _land():
         cur = curate_documents(docs.select("doc_id", "text"),
                                keep_text=True)
-        return _LandedFrame(cur.select("doc_id", "text"), holds=(cur,))
+        return LandedFrame(cur.select("doc_id", "text"), holds=(cur,))
 
-    landing = _fitted_index(spark, sf_dir, "curated_landing", _land)
+    landing = BENCH_MEMO.get(
+        _memo_key(spark, sf_dir, "curated_landing"), _land)
     ref = docs.filter(F.col("source") == "src1").select("doc_id", "text")
     ev = docs.orderBy("doc_id").limit(50).select("doc_id", "text")
     return prepare_pretraining_data(
@@ -6571,8 +6398,8 @@ def q_text_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bench-only: the streamed count-min arc under its own name (the
     store-arc pricing discipline) — trigram re-land as 4 files, the
     multi-epoch cms_sketch_sink replay, the state read and the top-20
-    point-query, timed fresh on every invocation (no memo; refreshes
-    the gate memo so text_ngram_topk's cold number prices only its
+    point-query, timed fresh on every invocation (refreshes the gate
+    memo so text_ngram_topk's cold number prices only its
     declarative legs)."""
     from faisssearcher_spark.operators import sketches
     from faisssearcher_spark.streaming.sketches import read_sketch_state
@@ -6581,8 +6408,8 @@ def q_text_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = (docs.select(F.explode_outer(T.word_ngrams("text", 3))
                          .alias("ngram"))
              .filter(F.col("ngram").isNotNull()))
-    state = _cms_stream_state(spark, sf_dir, grams, use_memo=False)
-    _CMS_STREAM_CACHE[sf_dir] = state
+    state = BENCH_MEMO.refresh(_memo_key(spark, sf_dir, "cms_stream"),
+                               lambda: _cms_stream_state(spark, grams))
     # top-20 from the landed gram files, not a second tokenize+explode
     # of the corpus (same multiset — see _cms_landed_grams)
     landed = _cms_landed_grams(spark, state)
@@ -6620,11 +6447,13 @@ def q_dedup_incremental_screen(spark: SparkSession,
     """Bench-only: the MinHashStore commit→screen arc under its own name
     (r6 verdict #7) — two signature passes, the parquet state write, the
     banded screen join, and the bounded hit collect, timed fresh on
-    every invocation (no memo). Ordered before dedup_minhash_lsh in
-    BENCH_QUERIES, so that gate's cold number prices only its
-    declarative legs while the arc's real cost stays visible here."""
-    return _mh_leg_df(spark,
-                      _incremental_arc_rows(spark, sf_dir, use_memo=False))
+    every invocation (refreshes the gate memo). Ordered before
+    dedup_minhash_lsh in BENCH_QUERIES, so that gate's cold number
+    prices only its declarative legs while the arc's real cost stays
+    visible here."""
+    return _mh_leg_df(spark, BENCH_MEMO.refresh(
+        _memo_key(spark, sf_dir, "mh_incremental"),
+        lambda: _incremental_arc_rows(spark, sf_dir)))
 
 
 def q_dedup_upsert_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6632,19 +6461,21 @@ def q_dedup_upsert_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     store-arc pricing discipline) — commit with planted wrong
     vintages, keyed upsert (full-state rewrite + atomic pointer swap),
     compact (second rewrite), screen; timed fresh on every invocation
-    (no memo). Prices the maintenance path the three stores share, so
-    the append-only dedup_incremental_screen number stays comparable
-    across rounds."""
-    return _mh_leg_df(spark,
-                      _upsert_arc_rows(spark, sf_dir, use_memo=False))
+    (refreshes the gate memo). Prices the maintenance path the three
+    stores share, so the append-only dedup_incremental_screen number
+    stays comparable across rounds."""
+    return _mh_leg_df(spark, BENCH_MEMO.refresh(
+        _memo_key(spark, sf_dir, "mh_upsert"),
+        lambda: _upsert_arc_rows(spark, sf_dir)))
 
 
 def q_dedup_fpstore_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bench-only: the FingerprintStore commit→screen arc under its own
     name (the store-arc pricing discipline) — simhash pass, banded
     state write, band equi-join screen with popcount verify, timed
-    fresh on every invocation (no memo; refreshes the gate memo)."""
-    rows = _fpstore_arc_rows(spark, sf_dir, use_memo=False)
+    fresh on every invocation (refreshes the gate memo)."""
+    rows = BENCH_MEMO.refresh(_memo_key(spark, sf_dir, "fpstore"),
+                              lambda: _fpstore_arc_rows(spark, sf_dir))
     schema = "leg string, id_a long, id_b long, hamming int"
     return (spark.createDataFrame(rows, schema) if rows
             else spark.createDataFrame([], schema))
@@ -6655,11 +6486,9 @@ def q_dedup_estore_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     name (the r6 verdict #7 pricing discipline, applied to the r8
     'estore' gate leg) — bucket+f16 encode pass, parquet state write,
     bucket equi-join screen with f16 decode + cosine verify, timed
-    fresh on every invocation. Note the memo interplay is one-way
-    only: this entry runs corpus-SIZED bucket bits, which deliberately
-    do NOT refresh the gate leg's fixed-parameter memo (the gate query
-    dedup_embedding_neardup is driver-side, not in BENCH_QUERIES, and
-    builds its own memo on first run).
+    fresh on every invocation. It runs corpus-SIZED bucket bits, so it
+    never touches the gate leg's fixed-parameter memo (the gate query
+    dedup_embedding_neardup is driver-side, not in BENCH_QUERIES).
 
     Bucket bits are sized from the corpus (expected occupancy ~8 per
     bucket per table — the standard LSH discipline the scale sweep
@@ -6677,8 +6506,7 @@ def q_dedup_estore_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table_num_rows(spark, sf_dir, "embeddings")
     bits = min(8, max(4, math.ceil(math.log2(max(n, 2) / 8))))
     tables = min(ESTORE_TABLES, 64 // bits)   # axis mode: tables*bits<=dim
-    rows = _estore_arc_rows(spark, sf_dir, use_memo=False,
-                            tables=tables, bits=bits)
+    rows = _estore_arc_rows(spark, sf_dir, tables=tables, bits=bits)
     schema = "strategy string, id_a long, id_b long, cos_sim double"
     return (spark.createDataFrame(rows, schema) if rows
             else spark.createDataFrame([], schema))

@@ -284,24 +284,22 @@ def _hamming_planted(docs: DataFrame) -> DataFrame:
     return hamming_pairs(fps, bits=64, max_hamming=3)
 
 
-#: per-(docs frame, factor) parquet of synthesized video payloads —
-#: built on the leg's FIRST execution, read thereafter, so best-of-N
-#: timing measures the operator (decode → band → MinHash), not the
-#: one-time ~7 s Janino compile of the 219-part synth concat that
-#: dominated both r10 sweep points (r10 verdict #5). Cleaned at exit.
-_VMH_ASSET_CACHE: dict = {}
-
-
 def _video_vmh(docs: DataFrame, factor: int = 1) -> DataFrame:
     """Shift+noise-tolerant video matching over the synthesized twin
     corpus (registry._gate_video_shiftnoise_assets — pure-SQL Y4M
     payloads keyed on the scaled doc ids, so every even/odd pair is a
     planted shifted+perturbed match and pair output grows linearly
-    with the corpus). Payloads materialize to parquet once per
-    (corpus, factor) — see _VMH_ASSET_CACHE."""
+    with the corpus). Payloads materialize to parquet under
+    BENCH_MEMO's temp root once per (corpus, factor) — built on the
+    leg's FIRST execution, read thereafter, so best-of-N timing
+    measures the operator (decode → band → MinHash), not the one-time
+    ~7 s Janino compile of the 219-part synth concat that dominated
+    both r10 sweep points (r10 verdict #5)."""
     from faisssearcher_spark.operators.multimodal import \
         video_minhash_near_dup_pairs
-    from faisssearcher_spark.registry import _gate_video_shiftnoise_assets
+    from faisssearcher_spark.registry import (BENCH_MEMO,
+                                              _gate_video_shiftnoise_assets,
+                                              _memo_key)
 
     # key on a marker ATTRIBUTE stamped onto the docs frame, not
     # id(docs): a CPython address recycles after GC, so a later sweep
@@ -314,22 +312,17 @@ def _video_vmh(docs: DataFrame, factor: int = 1) -> DataFrame:
 
         marker = uuid.uuid4().hex
         docs._fs_vmh_marker = marker
-    key = (marker, factor)
-    path = _VMH_ASSET_CACHE.get(key)
-    if path is None:
-        import atexit
 
-        root = tempfile.mkdtemp(prefix="vmh_assets_")
-        path = f"{root}/assets"
+    def _build() -> str:
+        path = BENCH_MEMO.tmpdir(prefix="vmh_assets_") + "/assets"
         _gate_video_shiftnoise_assets(docs.select("doc_id")) \
             .write.parquet(path)
-        if not _VMH_ASSET_CACHE:
-            atexit.register(
-                lambda: [shutil.rmtree(os.path.dirname(p),
-                                       ignore_errors=True)
-                         for p in _VMH_ASSET_CACHE.values()])
-        _VMH_ASSET_CACHE[key] = path
-    assets = docs.sparkSession.read.parquet(path)
+        return path
+
+    spark = docs.sparkSession
+    path = BENCH_MEMO.get(_memo_key(spark, marker, f"vmh_assets_x{factor}"),
+                          _build)
+    assets = spark.read.parquet(path)
     return video_minhash_near_dup_pairs(assets, hash_size=8,
                                         max_hamming=1, num_hashes=16,
                                         bands=16, verify_threshold=0.15)

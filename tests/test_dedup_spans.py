@@ -522,11 +522,24 @@ def test_remove_exact_substrings_auto_min_len(spark):
         remove_exact_substrings(df, min_len="auto", spans=spans)
 
 
-class TestTokenWindowsMulti:
-    """r14: ONE tagged multi-size window pass shared across a
-    composite's span consumers — slices must be row-identical to the
-    per-size _token_windows frames, and every wins= consumer must
-    return exactly its build-my-own-windows result."""
+def _stamped_wins(df, n, extra_cols=()):
+    """A size-``n`` window-occurrence frame stamped the way the
+    text_fingerprints gate builds the one it shares across consumers."""
+    from faisssearcher_spark.operators.dedup import (_stamp_spans,
+                                                     _token_windows)
+
+    _, wins = _token_windows(df, id_col="doc_id", text_col="text", n=n,
+                             extra_cols=tuple(extra_cols))
+    return _stamp_spans(wins.select("doc_id", *extra_cols, "start", "__w"),
+                        producer="token_windows", n=n, id_col="doc_id",
+                        extra_cols=tuple(extra_cols))
+
+
+class TestWinsHooks:
+    """A shared window frame passed through ``wins=`` / ``train_wins=`` /
+    ``eval_wins=`` must give every consumer exactly its
+    build-my-own-windows result, and a frame built for other parameters
+    must be refused."""
 
     @pytest.fixture(scope="class")
     def docs(self, spark):
@@ -542,47 +555,14 @@ class TestTokenWindowsMulti:
                                      "doc_id long, text string, "
                                      "source string")
 
-    def test_slices_equal_per_size_frames(self, spark, docs):
-        from faisssearcher_spark.operators.dedup import (_token_windows,
-                                                         token_windows_multi,
-                                                         window_slice)
-
-        wall = token_windows_multi(docs, ns=(2, 3, 5), id_col="doc_id",
-                                   extra_cols=("source",))
-        for n in (2, 3, 5):
-            got = sorted(map(tuple, window_slice(
-                wall, n, id_col="doc_id",
-                extra_cols=("source",)).collect()))
-            _, wins = _token_windows(docs, id_col="doc_id",
-                                     text_col="text", n=n,
-                                     extra_cols=("source",))
-            want = sorted(map(tuple, wins.select(
-                "doc_id", "source", "start", "__w").collect()))
-            assert got == want, f"n={n}"
-
-    def test_slice_validation(self, spark, docs):
-        from faisssearcher_spark.operators.dedup import (token_windows_multi,
-                                                         window_slice)
-
-        wall = token_windows_multi(docs, ns=(2, 3), id_col="doc_id")
-        with pytest.raises(ValueError, match="unbuilt size"):
-            window_slice(wall, 7, id_col="doc_id")
-        with pytest.raises(ValueError, match="not carried"):
-            window_slice(wall, 2, id_col="doc_id",
-                         extra_cols=("source",))
-
     def test_wins_consumers_match_plain_paths(self, spark, docs):
         from faisssearcher_spark.operators.decontam import (
             contaminated_spans)
         from faisssearcher_spark.operators.dedup import (
-            exact_substring_spans, remove_boilerplate,
-            remove_duplicate_spans, token_windows_multi, window_slice)
+            exact_substring_spans, remove_boilerplate)
 
-        wall = token_windows_multi(docs, ns=(2, 3), id_col="doc_id",
-                                   extra_cols=("source",))
-        w3 = window_slice(wall, 3, id_col="doc_id")
-        w2s = window_slice(wall, 2, id_col="doc_id",
-                           extra_cols=("source",))
+        w3 = _stamped_wins(docs, 3)
+        w2s = _stamped_wins(docs, 2, extra_cols=("source",))
         pairs = [
             (remove_duplicate_spans(docs, n=3, wins=w3),
              remove_duplicate_spans(docs, n=3)),
@@ -592,12 +572,9 @@ class TestTokenWindowsMulti:
              exact_substring_spans(docs, min_len=3)),
         ]
         ev = docs.filter(F.col("doc_id") < 3)
-        ew3 = window_slice(wall.filter(F.col("doc_id") < 3), 3,
-                           id_col="doc_id")
-        w3b = window_slice(wall, 3, id_col="doc_id")
         pairs.append(
-            (contaminated_spans(docs, ev, min_len=3, train_wins=w3b,
-                                eval_wins=ew3),
+            (contaminated_spans(docs, ev, min_len=3, train_wins=w3,
+                                eval_wins=w3.filter(F.col("doc_id") < 3)),
              contaminated_spans(docs, ev, min_len=3)))
         for got_df, want_df in pairs:
             got = sorted(map(tuple, got_df.collect()))
@@ -605,10 +582,5 @@ class TestTokenWindowsMulti:
             assert got == want
 
     def test_wins_stamp_mismatch_raises(self, spark, docs):
-        from faisssearcher_spark.operators.dedup import (
-            remove_duplicate_spans, token_windows_multi, window_slice)
-
-        wall = token_windows_multi(docs, ns=(2, 3), id_col="doc_id")
-        w2 = window_slice(wall, 2, id_col="doc_id")
         with pytest.raises(ValueError, match="different parameters"):
-            remove_duplicate_spans(docs, n=3, wins=w2)
+            remove_duplicate_spans(docs, n=3, wins=_stamped_wins(docs, 2))

@@ -166,82 +166,95 @@ def test_searcher_cached_state_includes_inner_index(spark, documents):
     assert s._cached_state() == []
 
 
-def test_close_bench_caches_releases_memo(spark, sf_dir):
-    from faisssearcher_spark import registry
-    from faisssearcher_spark.operators.ann import PQIndex
+class _Entry:
+    """A memo entry with the lifecycle protocol and a close() counter."""
 
-    emb = registry.load_table(spark, sf_dir, "embeddings")
-    idx = registry._fitted_index(
-        spark, sf_dir, "test_pq4",
-        lambda: PQIndex(m=4, metric="cos", seed=1).fit(
-            emb, item_key_col="vec_id", item_vec_col="embedding"))
-    assert registry._FITTED_INDEX_CACHE   # populated
-    n = registry.close_bench_caches(spark)
-    assert n >= 1
-    assert not registry._FITTED_INDEX_CACHE
+    def __init__(self):
+        self.closes = 0
+
+    def _cached_state(self):
+        return []
+
+    def close(self):
+        self.closes += 1
+
+
+def _pq_fit(emb):
+    return PQIndex(m=4, metric="cos", seed=1).fit(
+        emb, item_key_col="vec_id", item_vec_col="embedding")
+
+
+def test_memo_close_is_terminal_then_refits(spark, emb_small, queries):
+    from faisssearcher_spark.memo import SessionMemo
+
+    memo = SessionMemo()
+    key = (spark.sparkContext.applicationId, "/sf", "pq4")
+    idx = memo.get(key, lambda: _pq_fit(emb_small))
+    assert memo.get(key, lambda: _pq_fit(emb_small)) is idx   # a hit
+    assert memo.close() == 1
+    assert key not in memo
     # close() is terminal on the released index
-    q = emb.limit(2).select(F.col("vec_id").alias("qid"), "embedding")
     with pytest.raises(RuntimeError, match="fit"):
-        idx.search(q, k=2, query_item_col="qid")
+        idx.search(queries, k=2, query_item_col="qid")
     # a later lookup re-fits (train-once per SESSION, not per process)
-    idx2 = registry._fitted_index(
-        spark, sf_dir, "test_pq4",
-        lambda: PQIndex(m=4, metric="cos", seed=1).fit(
-            emb, item_key_col="vec_id", item_vec_col="embedding"))
+    idx2 = memo.get(key, lambda: _pq_fit(emb_small))
     assert idx2 is not idx
-    assert idx2.search(q, k=2, query_item_col="qid").count() > 0
-    registry.close_bench_caches(spark)
+    assert idx2.search(queries, k=2, query_item_col="qid").count() > 0
+    memo.close()
 
 
-def test_fitted_index_concurrent_distinct_keys_overlap(spark, sf_dir):
-    """Two threads fitting DIFFERENT specs must both land in the memo,
+def test_memo_hit_recaches_dropped_state(spark, emb_small):
+    from faisssearcher_spark.memo import SessionMemo
+
+    memo = SessionMemo()
+    key = (spark.sparkContext.applicationId, "/sf", "pq4_recache")
+    idx = memo.get(key, lambda: _pq_fit(emb_small))
+    idx._items.unpersist(True)      # what the bench's clearCache() does
+    assert not idx._items.storageLevel.useMemory
+    assert memo.get(key, lambda: _pq_fit(emb_small)) is idx
+    level = idx._items.storageLevel
+    assert level.useMemory or level.useDisk
+    memo.close()
+
+
+def test_fitted_index_concurrent_distinct_keys_overlap():
+    """Two threads building DIFFERENT keys must both land in the memo,
     each builder running exactly once, and the builds must be able to
     OVERLAP (the guide §2.6 composite-leg pattern: searcher_text_knn
-    submits its hash and bm25 fits from two driver threads) — i.e. the
-    lock guards the dict, not the builder call."""
+    submits its hash and bm25 fits from two driver threads) — i.e. no
+    lock is held across two keys' builder calls."""
     import threading
 
-    from faisssearcher_spark import registry
+    from faisssearcher_spark.memo import SessionMemo
 
+    memo = SessionMemo()
     calls = {"a": 0, "b": 0}
     inside = threading.Barrier(2, timeout=10)
-
-    class _Idx:
-        def _cached_state(self):
-            return []
-
-        def close(self):
-            pass
 
     def make(tag):
         def build():
             calls[tag] += 1
             # both builders must be in flight at once; a builder running
-            # under the lock would deadlock this barrier (caught by the
-            # timeout instead of hanging the suite)
+            # under a shared lock would deadlock this barrier (caught by
+            # the timeout instead of hanging the suite)
             inside.wait()
-            return _Idx()
+            return _Entry()
         return build
 
-    out = {}
-
     def run(tag):
-        out[tag] = registry._fitted_index(
-            spark, sf_dir, f"test_conc_{tag}", make(tag))
+        memo.get(("app", "/sf", tag), make(tag))
 
     ts = [threading.Thread(target=run, args=(t,)) for t in ("a", "b")]
     for t in ts:
         t.start()
     for t in ts:
         t.join(timeout=15)
+        assert not t.is_alive()
     assert calls == {"a": 1, "b": 1}
-    app = spark.sparkContext.applicationId
-    assert (app, sf_dir, "test_conc_a") in registry._FITTED_INDEX_CACHE
-    assert (app, sf_dir, "test_conc_b") in registry._FITTED_INDEX_CACHE
-    registry.close_bench_caches(spark)
+    assert ("app", "/sf", "a") in memo and ("app", "/sf", "b") in memo
 
 
-def test_fitted_index_same_key_race_builds_once(spark, sf_dir):
+def test_fitted_index_same_key_race_builds_once():
     """A same-key race must build exactly ONCE (per-key serialization):
     closing a double-built loser is NOT safe — Spark's CacheManager
     dedups cached data by logical plan, so a plan-equal loser's
@@ -249,29 +262,22 @@ def test_fitted_index_same_key_race_builds_once(spark, sf_dir):
     import threading
     import time
 
-    from faisssearcher_spark import registry
+    from faisssearcher_spark.memo import SessionMemo
 
+    memo = SessionMemo()
     built = []
     started = threading.Event()
-
-    class _Idx:
-        def _cached_state(self):
-            return []
-
-        def close(self):
-            pass
 
     def build():
         started.set()
         built.append(object())
         time.sleep(0.3)   # hold the build window open so the racer
-        return _Idx()     # provably arrives while it is in flight
+        return _Entry()   # provably arrives while it is in flight
 
     out = []
 
     def run():
-        out.append(registry._fitted_index(
-            spark, sf_dir, "test_conc_same", build))
+        out.append(memo.get(("app", "/sf", "same"), build))
 
     t1 = threading.Thread(target=run)
     t1.start()
@@ -280,27 +286,167 @@ def test_fitted_index_same_key_race_builds_once(spark, sf_dir):
     t2.start()
     t1.join(timeout=15)
     t2.join(timeout=15)
+    assert not (t1.is_alive() or t2.is_alive())
     assert len(built) == 1            # the racer waited, no double build
     assert out[0] is out[1]           # both callers see the same entry
-    registry.close_bench_caches(spark)
 
 
-def test_fitted_index_evicts_dead_session_entries(spark, sf_dir):
-    from faisssearcher_spark import registry
-    from faisssearcher_spark.operators.ann import PQIndex
+def test_memo_close_during_build_race_builds_once():
+    """close() while a build is in flight must not let a later caller
+    build the same key again: the waiter reads the in-flight winner's
+    entry, and the next close() releases that entry exactly once."""
+    import threading
+    import time
 
-    class _Dummy:
-        def _cached_state(self):
-            return []
+    from faisssearcher_spark.memo import SessionMemo
 
-        def close(self):
-            pass
+    memo = SessionMemo()
+    key = ("app", "/sf", "slow")
+    built = []
+    started, finish = threading.Event(), threading.Event()
 
-    registry._FITTED_INDEX_CACHE[("dead-app-id", "/x", "spec")] = _Dummy()
-    emb = registry.load_table(spark, sf_dir, "embeddings")
-    registry._fitted_index(
-        spark, sf_dir, "test_pq4_evict",
-        lambda: PQIndex(m=4, metric="cos", seed=1).fit(
-            emb, item_key_col="vec_id", item_vec_col="embedding"))
-    assert ("dead-app-id", "/x", "spec") not in registry._FITTED_INDEX_CACHE
-    registry.close_bench_caches(spark)
+    def build():
+        entry = _Entry()
+        built.append(entry)
+        started.set()
+        assert finish.wait(timeout=10)
+        return entry
+
+    out = {}
+
+    def run(tag):
+        out[tag] = memo.get(key, build)
+
+    a = threading.Thread(target=run, args=("a",))
+    a.start()
+    assert started.wait(timeout=10)
+    assert memo.close() == 0          # nothing built yet
+    b = threading.Thread(target=run, args=("b",))
+    b.start()
+    time.sleep(0.3)                   # b is now waiting on the key
+    finish.set()
+    a.join(timeout=15)
+    b.join(timeout=15)
+    assert not (a.is_alive() or b.is_alive())
+    assert len(built) == 1
+    assert out["a"] is out["b"] is built[0]
+    assert memo.close() == 1
+    assert built[0].closes == 1
+    assert memo.close() == 0
+
+
+def test_memo_refresh_releases_superseded_at_next_close():
+    from faisssearcher_spark.memo import SessionMemo
+
+    memo = SessionMemo()
+    key = ("app", "/sf", "arc")
+    first = memo.get(key, _Entry)
+    second = memo.refresh(key, _Entry)
+    assert second is not first
+    assert memo.get(key, _Entry) is second
+    # an earlier caller's lazy plan may still read the superseded entry
+    assert first.closes == 0
+    assert memo.close() == 2
+    assert (first.closes, second.closes) == (1, 1)
+    # plain values pin no storage: close() keeps them memoized
+    rows = memo.refresh(("app", "/sf", "rows"), lambda: [(1, 2)])
+    assert memo.close() == 0
+    assert memo.get(("app", "/sf", "rows"), list) is rows
+
+
+def test_memo_concurrent_stress_closes_every_entry_once():
+    """Many threads mixing get / refresh / close on a few keys, with a
+    short switch interval: no entry is closed twice and, after a final
+    close(), none is left unreleased (a lost update would orphan or
+    double-close one)."""
+    import sys
+    import threading
+
+    from faisssearcher_spark.memo import SessionMemo
+
+    memo = SessionMemo()
+    built, built_lock = [], threading.Lock()
+
+    def build():
+        entry = _Entry()
+        with built_lock:
+            built.append(entry)
+        return entry
+
+    def worker(seed):
+        for i in range(200):
+            key = ("app", "/sf", (seed + i) % 3)
+            op = (seed * 7 + i) % 5
+            if op == 0:
+                memo.refresh(key, build)
+            elif op == 1:
+                memo.close()
+            else:
+                memo.get(key, build)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ts = [threading.Thread(target=worker, args=(n,)) for n in range(16)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=60)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(old)
+    memo.close()
+    assert built and all(e.closes == 1 for e in built)
+    assert not memo._key_locks
+
+
+def test_fitted_index_evicts_dead_session_entries():
+    from faisssearcher_spark.memo import SessionMemo
+
+    memo = SessionMemo()
+    dead = memo.get(("dead-app-id", "/x", "spec"), _Entry)
+    memo.get(("live-app-id", "/x", "spec"), _Entry)
+    assert ("dead-app-id", "/x", "spec") not in memo
+    # the dead session's context is gone: dropped, never closed
+    assert dead.closes == 0
+    assert memo.close() == 1
+
+
+def test_memo_close_returns_persistent_rdds_to_baseline(spark, emb_small):
+    from faisssearcher_spark.memo import LandedFrame, SessionMemo
+
+    emb_small.count()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    memo = SessionMemo()
+    app = spark.sparkContext.applicationId
+    idx = memo.get((app, "/sf", "pq4_exit"), lambda: _pq_fit(emb_small))
+    landed = memo.get((app, "/sf", "landed"), lambda: LandedFrame(
+        emb_small.select("vec_id").filter(F.col("vec_id") % 2 == 0)))
+    idx._items.count()
+    landed.df.count()
+    assert jsc.getPersistentRDDs().size() >= before + 2
+    assert memo.close() == 2
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_memo_tmp_root_removed_at_exit():
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import os\n"
+            "from faisssearcher_spark.memo import SessionMemo\n"
+            "m = SessionMemo()\n"
+            "d = m.tmpdir(prefix='state_')\n"
+            "root = os.path.dirname(d)\n"
+            "assert os.path.isdir(d) and os.path.isdir(root)\n"
+            "assert os.path.dirname(m.tmpdir()) == root\n"
+            "open(os.path.join(d, 'f'), 'w').close()\n"
+            "print(root)\n")
+    res = subprocess.run([sys.executable, "-c", code], cwd=repo,
+                         capture_output=True, text=True, timeout=60)
+    assert res.returncode == 0, res.stderr
+    root = res.stdout.strip().splitlines()[-1]
+    assert root and not os.path.exists(root)

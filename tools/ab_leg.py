@@ -2,7 +2,7 @@
 suspected bench regression (NOTES traps appendix): re-measure the one
 leg with real repeats on a quiet machine, optionally across commits
 via a /tmp worktree + PYTHONPATH, BEFORE touching code. Generalizes
-ab_ann_pq.py / ab_ann_nsw.py (kept for their recorded histories).
+the former per-leg ab_ann_pq.py / ab_ann_nsw.py harnesses.
 
     python tools/ab_leg.py ann_pq                 # x1 + x10
     AB_POINTS=1,10,100 AB_RUNS=3 python tools/ab_leg.py ann_nsw
