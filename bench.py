@@ -159,6 +159,15 @@ def compact_line(detail: dict) -> str:
     return _dump()
 
 
+def persistent_rdds(sc) -> dict:
+    """The RDDs still persisted in ``sc``'s block managers: their count
+    and sorted names. Read after the bench memo's final close, where any
+    entry is a cache that a leg or the memo failed to release."""
+    rdds = list(sc._jsc.getPersistentRDDs().values())
+    return {"count": len(rdds),
+            "names": sorted(str(r.name()) for r in rdds)}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from faisssearcher_spark.session import get_spark
@@ -299,6 +308,10 @@ def main() -> None:
         scale = run_scale_sweep(spark, sf_dir, factor=factor,
                                 deep_factor=deep or None)
     registry.BENCH_MEMO.close()
+    leaked = persistent_rdds(spark.sparkContext)
+    if leaked["count"]:
+        print(f"bench: {leaked['count']} persistent RDD(s) at exit: "
+              f"{leaked['names']}", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
     # The driver keeps only the LAST 2000 chars of stdout and json-parses
@@ -320,6 +333,7 @@ def main() -> None:
         "isolated_canary": canary,
         "scale": scale,
         "sf": sf,
+        "persistent_rdds_at_exit": leaked,
     }
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as fh:

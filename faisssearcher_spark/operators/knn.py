@@ -21,12 +21,15 @@ Scale design (the part FAISS cannot do):
   window lets Spark insert a WindowGroupLimit below the exchange, so each map
   task emits at most m·k rows into the shuffle instead of m·n: the shuffle
   volume is O(queries × k × partitions), independent of corpus size.
-- **No Python on the scoring path.** Metric expressions are
-  higher-order-function Catalyst exprs (see functions/metrics.py).  They do
-  not join whole-stage codegen: ``ZipWith`` / ``ArrayAggregate`` are
-  ``CodegenFallback`` in Spark 4.1.2, so every pair is scored by the
-  interpreter (the benchmark's ``flat_search`` traces ~226k pairs/s on 3
-  task slots).  The GEMM strategies below score with BLAS instead.
+- **Interpreted scoring, hence the GEMM kernels.** This plan's metric
+  expressions are higher-order-function Catalyst exprs (see
+  functions/metrics.py). They do not join whole-stage codegen:
+  ``ZipWith`` / ``ArrayAggregate`` are ``CodegenFallback`` in Spark 4.1.2,
+  so every pair is scored by the interpreter (~226k pairs/s on 3 task
+  slots). ``strategy="auto"`` — the ``SparkSearcher.search`` default —
+  therefore scores ``cos`` / ``ip`` / ``l2`` with BLAS in the blocked,
+  sharded or grid kernel below and keeps this plan for every metric a
+  GEMM cannot express.
 - Skewed query_ids can't occur (each query id appears exactly n times by
   construction) so no salting is needed; AQE handles partition sizing.
 
@@ -56,6 +59,10 @@ QUERY_BROADCAST_CAP_BYTES = 64 << 20
 #: default cap on single-machine corpus materialization (blocked strategy
 #: collects the item matrix to the driver and broadcasts it).
 ITEMS_MEMORY_CAP_BYTES = 256 << 20
+#: largest corpus estimate ``strategy="auto"`` hands a small query set to
+#: the blocked kernel; past it the per-search corpus collect costs more
+#: than sharded's corpus scan (measurements in :func:`_auto_strategy`).
+BLOCKED_SMALL_QUERY_ITEMS_BYTES = 8 << 20
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
@@ -69,38 +76,62 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
 def _auto_strategy(q_bytes: int | None, i_bytes: int | None, *,
                    query_cap: int = QUERY_BROADCAST_CAP_BYTES,
                    items_cap: int = ITEMS_MEMORY_CAP_BYTES) -> str:
-    """Pick the knn_join execution strategy from the two sides' estimated
-    sizes — the quadrant matrix the four strategies were designed for:
+    """Pick the GEMM kernel for ``strategy="auto"`` from the two sides'
+    estimated sizes:
 
-    =============  ==============  =========
-    queries        items           strategy
-    =============  ==============  =========
-    small (≤caps)  small           catalyst (broadcast queries, pure plan)
-    small          large           sharded  (queries broadcast, corpus
-                                   never moves, per-shard GEMM + merge)
-    large          small           blocked  (corpus broadcast, per-batch
-                                   GEMM over streaming queries)
-    large          large           grid     (block × shard GEMM cells)
-    =============  ==============  =========
+    =============  ==================  =========
+    queries        items               strategy
+    =============  ==================  =========
+    any            ≤ 8 MB (``BLOCKED_  blocked  (corpus broadcast,
+                   SMALL_QUERY_ITEMS_           per-batch GEMM over
+                   BYTES``)                     streaming queries)
+    small (≤ cap)  > 8 MB              sharded  (queries broadcast,
+                                                corpus never moves,
+                                                per-shard GEMM + merge)
+    large          ≤ items cap         blocked
+    large          > items cap         grid     (block × shard cells)
+    =============  ==================  =========
 
     An unknown estimate is treated as LARGE: every strategy is exact, so
     the only risk of guessing big is extra shuffle — guessing small risks
-    a driver/executor OOM. The small-queries quadrants differ: catalyst
-    needs only broadcast room (shuffle O(m·k)), while sharded additionally
-    drives one GEMM per Arrow batch.
+    an OOM wherever a side is collected or broadcast.
 
-    The small/small quadrant's choice is not a latency win: at 64 queries
-    × 4,096 items × 64 dims (cosine, k=10, warm, same session,
-    oracle-checked, ``local[3]`` on 4 cores) catalyst took 1.14 s, sharded
-    0.55 s and blocked 0.43 s; with the worker daemon of ``session.py``
-    1.31 s, 0.30 s and 0.21 s.  The catalyst metric expressions run
-    interpreted (see the module docstring).  The default stays until a
-    benchmarked change flips it."""
-    q_small = q_bytes is not None and q_bytes <= query_cap
-    i_small = i_bytes is not None and i_bytes <= items_cap
-    if q_small:
-        return "catalyst" if i_small else "sharded"
-    return "blocked" if i_small else "grid"
+    Blocked collects and broadcasts the corpus on every call, sharded
+    only the query matrix, so for a small query set blocked wins only
+    while the corpus is small. Measured through the facade
+    (``tools/ab_knn_route.py``: raw-vector cosine, 64 queries × 64 dims,
+    k=10, ten alternating rounds, oracle-checked, ``local[3]`` on 4
+    cores), median s blocked / sharded by corpus rows (Catalyst estimate):
+    4,096 (2.3 MB) 0.36 / 0.41, 8,192 (4.6 MB) 0.33 / 0.41, 12,288
+    (6.9 MB) 0.45 / 0.50 and 14,336 (8.0 MB) 0.49 / 0.53, blocked 10/10
+    each; 16,384 (9.2 MB) 0.48 / 0.46 and 0.47 / 0.48 on two runs, 4/10
+    and 7/10; 32,768 (18 MB) 0.71 / 0.60, 131,072 (73 MB) 2.38 / 1.50,
+    458,752 (257 MB, the items cap) 8.80 / 4.46, sharded 9/10, 10/10,
+    10/10. The catalyst plan, which had this quadrant before, took
+    2.42 s at 4,096 rows, 9.16 s at 16,384 and 40.7 s at 65,536 (three
+    rounds; sharded 1.35 s). Through ``perfbench/run.py
+    --workload flat_search --seconds 12`` (4,096 × 64 corpus, ten
+    alternating pairs) the blocked pick took the median ``query_p50_s``
+    from 1.72 s (quartiles 1.59-1.81) to 0.42 s (0.41-0.48); a sharded
+    pick measured 0.50-0.52 s. The catalyst plan stays the fallback for
+    calls no kernel can serve (see :func:`_gemm_servable`)."""
+    if i_bytes is not None and i_bytes <= BLOCKED_SMALL_QUERY_ITEMS_BYTES:
+        return "blocked"
+    if q_bytes is not None and q_bytes <= query_cap:
+        return "sharded"
+    return "blocked" if i_bytes is not None and i_bytes <= items_cap else "grid"
+
+
+def _gemm_servable(metric: str, p: float | None, normalize: bool | None,
+                   query_item_col: str | None) -> bool:
+    """Whether the blocked / sharded / grid kernels compute what the
+    catalyst plan would: a dot-product metric (``cos`` scores as a dot
+    only on normalized vectors, so ``normalize=False`` keeps the plan's
+    true cosine), no ``p``, and a query id column (the kernels cannot
+    mint positional ids across executors)."""
+    return (metric in ("cos", "ip", "l2") and p is None
+            and not (metric == "cos" and normalize is False)
+            and query_item_col is not None)
 
 
 def knn_join(
@@ -149,13 +180,24 @@ def knn_join(
 
     ``strategy``:
 
-    - ``"auto"``: pick one of the four below from Catalyst's size
-      estimates of the two sides (see :func:`_auto_strategy` for the
-      quadrant matrix and the treat-unknown-as-large rule).
+    - ``"auto"`` (``SparkSearcher.search``'s default): a GEMM kernel
+      below picked from Catalyst's size estimates of the two sides (see
+      :func:`_auto_strategy` for the matrix and the treat-unknown-as-large
+      rule), or ``"catalyst"`` when no kernel can serve the call — a
+      metric other than ``cos`` / ``ip`` / ``l2``, ``cos`` with
+      ``normalize=False``, a ``p``, or positional query ids. The kernels
+      rank the same rows as the plan with two provisos: ``l2`` is
+      scored as ||q||² − 2q·x + ||x||² (the plan sums (q − x)²), so two
+      items whose distances differ only by float rounding may swap
+      ranks unless ``score_scale`` rounds them into a tie; and a
+      query id that repeats is ranked per query ROW by blocked (k rows
+      each) but per id by the others (k rows in all), so give each
+      query its own id.
     - ``"catalyst"`` (default): the pure-plan path above. Scales in BOTH
-      dimensions (nothing is collected anywhere) — the safe default.
-    - ``"blocked"``: SURVEY §7 hard-part (a)'s mitigation for LARGE query
-      sets — the key-ordered corpus matrix broadcasts to executors and
+      dimensions (nothing is collected anywhere) and serves every metric,
+      but scores each pair in the interpreter.
+    - ``"blocked"``: for a corpus within ``ITEMS_MEMORY_CAP_BYTES``, any
+      query size — the key-ordered corpus matrix broadcasts to executors and
       each Arrow batch of queries scores against it with numpy float64
       matmuls over bounded item blocks (~256 MB score scratch, so worker
       memory stays flat at the corpus cap) + stable-argsort top-k merge
@@ -203,9 +245,13 @@ def knn_join(
         raise ValueError(
             f"payload_cols {missing_payload} not found in items frame "
             f"(columns: {items.columns})")
+    if query_item_col is None and item_key_col in queries.columns:
+        query_item_col = item_key_col
     if strategy == "auto":
-        strategy = _auto_strategy(_plan_size_bytes(queries),
-                                  _plan_size_bytes(items))
+        strategy = (_auto_strategy(_plan_size_bytes(queries),
+                                   _plan_size_bytes(items))
+                    if _gemm_servable(metric, p, normalize, query_item_col)
+                    else "catalyst")
     if strategy == "blocked":
         return _knn_join_blocked(
             queries, items, metric=metric, k=k,
@@ -239,9 +285,6 @@ def knn_join(
     metric_fn, higher_is_closer = M.resolve_metric(score_metric, p=p)
     if metric == "cos":
         higher_is_closer = True
-
-    if query_item_col is None:
-        query_item_col = item_key_col if item_key_col in queries.columns else None
 
     q_vec: Column = F.col(query_vec_col)
     i_vec: Column = F.col(item_vec_col)
@@ -627,6 +670,25 @@ def _merge_candidates(cand: DataFrame, items: DataFrame, *, k: int,
                            payload_cols=payload_cols)
 
 
+def _empty_result(queries: DataFrame, items: DataFrame, *,
+                  query_item_col: str, item_key_col: str,
+                  payload_cols: Sequence[str],
+                  keep_rank_no: bool) -> DataFrame:
+    """The typed ``(source_item, sim_item, sim_val[, rank_no], *payload)``
+    frame with no rows — what the catalyst plan returns when either side
+    is empty, built from the two schemas without running a job."""
+    from pyspark.sql import types as T
+
+    fields = [T.StructField("source_item",
+                            queries.schema[query_item_col].dataType),
+              T.StructField("sim_item", items.schema[item_key_col].dataType),
+              T.StructField("sim_val", T.DoubleType())]
+    if keep_rank_no:
+        fields.append(T.StructField("rank_no", T.IntegerType()))
+    fields += [items.schema[c] for c in payload_cols]
+    return items.sparkSession.createDataFrame([], T.StructType(fields))
+
+
 def _knn_join_blocked(
     queries: DataFrame,
     items: DataFrame,
@@ -654,8 +716,6 @@ def _knn_join_blocked(
     higher_is_closer = metric in ("cos", "ip")
 
     if query_item_col is None:
-        query_item_col = item_key_col if item_key_col in queries.columns else None
-    if query_item_col is None:
         raise ValueError("blocked strategy needs query_item_col (no implicit "
                          "positional ids across executors)")
     if payload_cols is None:
@@ -664,20 +724,14 @@ def _knn_join_blocked(
 
     spark = items.sparkSession
     item_pdf = items.select(item_key_col, item_vec_col).toPandas()
-    key_field = items.schema[item_key_col]
-    q_key_field = queries.schema[query_item_col]
     if not len(item_pdf):
         # top-k of an empty corpus is an empty result, same as catalyst —
         # without the guard the kernel's (0,)-shaped matrix breaks axis
         # math before any task runs
-        empty_schema = (f"source_item {q_key_field.dataType.simpleString()}, "
-                        f"sim_item {key_field.dataType.simpleString()}, "
-                        "sim_val double, rank_no int")
-        ranked = spark.createDataFrame([], empty_schema)
-        ranked = _attach_payload(ranked, items, item_key_col=item_key_col,
-                                 payload_cols=payload_cols,
-                                 broadcast_side="payload")
-        return ranked if keep_rank_no else ranked.drop("rank_no")
+        return _empty_result(queries, items, query_item_col=query_item_col,
+                             item_key_col=item_key_col,
+                             payload_cols=payload_cols,
+                             keep_rank_no=keep_rank_no)
     mat = np.array(item_pdf[item_vec_col].to_list(), dtype=np.float64)
     if normalize:
         norms = np.linalg.norm(mat, axis=1, keepdims=True)
@@ -693,10 +747,10 @@ def _knn_join_blocked(
     keys = keys[order]
     b_mat = spark.sparkContext.broadcast(mat)
     b_keys = spark.sparkContext.broadcast(keys)
-    # squared norms are only read by the l2 decomposition — don't ship
-    # a dead corpus-sized array for cos/ip (review catch)
-    b_sq = spark.sparkContext.broadcast(
-        (mat * mat).sum(axis=1) if metric == "l2" else None)
+    # squared norms are only read by the l2 decomposition — no broadcast
+    # at all for cos/ip
+    b_sq = (spark.sparkContext.broadcast((mat * mat).sum(axis=1))
+            if metric == "l2" else None)
 
     met, kk, nrm, scale = metric, k, normalize, score_scale
 
@@ -704,7 +758,8 @@ def _knn_join_blocked(
         # full/fkeys/fsq arrive KEY-ORDERED from the driver: column
         # position == key rank, so the stable argsorts below reproduce
         # the catalyst window's (score, key) tie-break directly
-        full_o, fkeys, fsq_o = b_mat.value, b_keys.value, b_sq.value
+        full_o, fkeys = b_mat.value, b_keys.value
+        fsq_o = b_sq.value if b_sq is not None else None
         n_items = full_o.shape[0]
         for pdf in batches:
             if not len(pdf):
@@ -720,17 +775,15 @@ def _knn_join_blocked(
             top_pos, top_val = _gemm_topk(
                 q, full_o, fsq_o, metric=met, kc=kc, scale=scale,
                 higher_is_closer=higher_is_closer)
-            rows_src, rows_item, rows_val, rows_rank = [], [], [], []
-            for i in range(len(q)):
-                rows_src.extend([pdf["__qid"].iloc[i]] * kc)
-                rows_item.extend(fkeys[top_pos[i]])
-                rows_val.extend(top_val[i])
-                rows_rank.extend(range(kc))
-            yield pd.DataFrame({"source_item": rows_src,
-                                "sim_item": rows_item,
-                                "sim_val": rows_val,
-                                "rank_no": rows_rank})
+            yield pd.DataFrame({
+                "source_item": np.repeat(pdf["__qid"].to_numpy(), kc),
+                "sim_item": fkeys[top_pos.ravel()],
+                "sim_val": top_val.ravel(),
+                "rank_no": np.tile(np.arange(kc, dtype=np.int32), len(q)),
+            })
 
+    key_field = items.schema[item_key_col]
+    q_key_field = queries.schema[query_item_col]
     out_schema = (f"source_item {q_key_field.dataType.simpleString()}, "
                   f"sim_item {key_field.dataType.simpleString()}, "
                   "sim_val double, rank_no int")
@@ -774,8 +827,6 @@ def _knn_join_sharded(
     higher_is_closer = metric in ("cos", "ip")
 
     if query_item_col is None:
-        query_item_col = item_key_col if item_key_col in queries.columns else None
-    if query_item_col is None:
         raise ValueError("sharded strategy needs query_item_col (no implicit "
                          "positional ids across executors)")
     if payload_cols is None:
@@ -784,8 +835,12 @@ def _knn_join_sharded(
 
     q_pdf = queries.select(query_item_col, query_vec_col).toPandas()
     if not len(q_pdf):
-        raise ValueError("sharded strategy needs a non-empty query set "
-                         "(the query matrix is driver-collected)")
+        # no queries, no rows — the broadcast query matrix would be
+        # (0,)-shaped, which the kernel's axis math cannot take
+        return _empty_result(queries, items, query_item_col=query_item_col,
+                             item_key_col=item_key_col,
+                             payload_cols=payload_cols,
+                             keep_rank_no=keep_rank_no)
     qmat = np.array(q_pdf[query_vec_col].to_list(), dtype=np.float64)
     if normalize:
         qn = np.linalg.norm(qmat, axis=1, keepdims=True)
@@ -796,15 +851,16 @@ def _knn_join_sharded(
     # query squared norms: computed ONCE on the driver and broadcast —
     # recomputing them inside the kernel would read the whole broadcast
     # query matrix on every item batch (review catch); l2 only
-    b_qsq = spark.sparkContext.broadcast(
-        (qmat * qmat).sum(axis=1) if metric == "l2" else None)
+    b_qsq = (spark.sparkContext.broadcast((qmat * qmat).sum(axis=1))
+             if metric == "l2" else None)
 
     key_field = items.schema[item_key_col]
     q_key_field = queries.schema[query_item_col]
     met, kk, nrm, scale, higher = metric, k, normalize, score_scale, higher_is_closer
 
     def _local(batches):
-        q, qids, qsq = b_q.value, b_qid.value, b_qsq.value
+        q, qids = b_q.value, b_qid.value
+        qsq = b_qsq.value if b_qsq is not None else None
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -897,8 +953,6 @@ def _knn_join_grid(
     if n_query_blocks < 1 or n_item_shards < 1:
         raise ValueError("n_query_blocks and n_item_shards must be >= 1")
 
-    if query_item_col is None:
-        query_item_col = item_key_col if item_key_col in queries.columns else None
     if query_item_col is None:
         raise ValueError("grid strategy needs query_item_col (no implicit "
                          "positional ids across executors)")

@@ -246,7 +246,7 @@ class SparkSearcher:
         topK: Union[int, Iterable[int]] = 10,
         keep_rank_no: bool = False,
         score_scale: int | None = None,
-        strategy: str = "catalyst",
+        strategy: str = "auto",
         **strategy_kwargs: Any,
     ) -> Union[DataFrame, Mapping[int, DataFrame]]:
         corpus = self._require_trained()
@@ -266,8 +266,9 @@ class SparkSearcher:
             normalize=False,
             p=self.p,
             score_scale=score_scale,
-            # "blocked" = broadcast-corpus GEMM path for large query sets
-            # (knn_join docstring); "catalyst" = pure-plan default.
+            # "auto" scores cos/ip/l2 with a BLAS GEMM kernel picked from
+            # the corpus size estimate and keeps the catalyst plan for the
+            # other metrics (knn_join docstring)
             strategy=strategy,
             # tuning knobs forwarded to the chosen kernel (e.g. the grid
             # strategy's n_query_blocks / n_item_shards)
@@ -281,7 +282,7 @@ class SparkSearcher:
             # semantics: every search uses the built index). Refuse a
             # conflicting explicit strategy rather than silently ignore
             # it; score_scale still applies to the returned scores.
-            if strategy != "catalyst" or strategy_kwargs:
+            if strategy != "auto" or strategy_kwargs:
                 raise ValueError(
                     f"strategy={strategy!r} conflicts with index_param="
                     f"{self.index_param!r} — an indexed searcher routes "
@@ -348,11 +349,17 @@ class SparkSearcher:
         targets become a DataFrame (queries are data, not driver-side
         state — the reference's primary form), the encoder/raw-vector
         branch picks the text column, and the encoded frame reduces to
-        ``(source_item, _VEC)``."""
+        ``(source_item, _VEC)``.
+
+        A list target's text is its query id, so a repeated text is the
+        same query and is searched once: every strategy then returns k
+        rows per distinct target (the kernels rank each query ROW, the
+        catalyst plan each id, so repeated ids would split them)."""
         spark = corpus.sparkSession
         if not isinstance(target, DataFrame):
             target = spark.createDataFrame(
-                [(str(t),) for t in target], "source_item string")
+                [(t,) for t in dict.fromkeys(map(str, target))],
+                "source_item string")
             q_text, q_vec = "source_item", None
         elif self.encoder is not None:
             q_text, q_vec = (self.item_col

@@ -24,3 +24,19 @@ def test_compact_line_keeps_every_leg():
     assert set(compact["queries"]) == set(detail["queries"])
     assert len(compact["queries"]) == 68
     assert compact["value"] == detail["value"]
+
+
+def test_persistent_rdds_counts_cached_frames(spark):
+    # the clean-exit record bench.py writes after its final memo close
+    persistent_rdds = _bench().persistent_rdds
+    sc = spark.sparkContext
+    before = persistent_rdds(sc)
+    df = spark.range(10)
+    df.createOrReplaceTempView("bench_exit_probe")
+    spark.catalog.cacheTable("bench_exit_probe")
+    df.count()
+    cached = persistent_rdds(sc)
+    assert cached["count"] == before["count"] + 1
+    assert "In-memory table bench_exit_probe" in cached["names"]
+    df.unpersist(blocking=True)
+    assert persistent_rdds(sc) == before

@@ -113,9 +113,15 @@ class TestMineBitext:
             broadcast_exchange_subtrees)
 
         src, tgt = _corpora(embeddings)
-        hinted = mine_bitext(src, tgt, k=4, threshold=0.0, score_scale=4)
+        # the catalyst knn plan: its cross-join row estimates are far past
+        # autoBroadcastJoinThreshold, so a broadcast of the avg frame can
+        # only come from the hint. (The GEMM kernels' mapInPandas output
+        # is estimated at its true small size, and Catalyst may then
+        # broadcast the avg frame by size, hint or not.)
+        hinted = mine_bitext(src, tgt, k=4, threshold=0.0, score_scale=4,
+                             strategy="catalyst")
         capped = mine_bitext(src, tgt, k=4, threshold=0.0, score_scale=4,
-                             avg_broadcast_cap_bytes=0)
+                             avg_broadcast_cap_bytes=0, strategy="catalyst")
         # the avg subtree aggregates sim_val — above the cap no broadcast
         # may carry it (knn's own broadcasts never touch that column)
         assert any("sim_val" in s

@@ -253,16 +253,73 @@ class TestCombinedKwargs:
 
 
 class TestAutoStrategyThroughSearcher:
+    """search() defaults to strategy='auto': exact cos/ip/l2 searches are
+    scored by a BLAS GEMM kernel, every other metric by the catalyst
+    plan, and the result is the catalyst plan's either way."""
+
+    QUERIES = ["spark join merge", "vector search index", "the",
+               "spark join merge"]   # a repeated target is one query
+
     def test_search_with_auto_strategy(self, doc_searcher):
-        """strategy='auto' flows through the facade: encoded query frames
-        have no usable size estimate (Python UDF stage), so auto must
-        still resolve to a working kernel and match the default path."""
-        a = doc_searcher.search(["spark join merge"], topK=3,
-                                keep_rank_no=True, score_scale=4)
-        b = doc_searcher.search(["spark join merge"], topK=3,
-                                keep_rank_no=True, score_scale=4,
-                                strategy="auto")
-        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+        from faisssearcher_spark.plans import inspect
+
+        plan = inspect.executed_plan(doc_searcher.search(self.QUERIES, topK=3))
+        assert "MapInPandas" in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+
+    def test_default_equals_catalyst_with_ties(self, doc_searcher):
+        # 8 hashed dims rounded to 4 decimals: plenty of score ties, so
+        # the (score, key) tie-break decides rank_no and membership
+        kwargs = dict(topK=5, keep_rank_no=True, score_scale=4)
+        auto = doc_searcher.search(self.QUERIES, **kwargs).collect()
+        plan = doc_searcher.search(self.QUERIES, strategy="catalyst",
+                                   **kwargs).collect()
+        assert sorted(map(tuple, auto)) == sorted(map(tuple, plan))
+        # k distinct rows per distinct target on both paths
+        assert len(auto) == 5 * len(set(self.QUERIES))
+        assert len({(r["source_item"], r["sim_item"]) for r in auto}) \
+            == len(auto)
+
+    def test_default_equals_catalyst_l2_unscaled(self, embeddings):
+        # the kernel scores l2 as |q|^2 - 2q.x + |x|^2, the plan sums
+        # (q - x)^2: same ranking here, values equal up to rounding
+        s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
+                          measurement="l2").train()
+        q = embeddings.filter(F.col("vec_id") < 6)
+        key = lambda r: (r["source_item"], r["rank_no"])
+        auto = sorted(s.search(q, topK=5, keep_rank_no=True).collect(),
+                      key=key)
+        plan = sorted(s.search(q, topK=5, keep_rank_no=True,
+                               strategy="catalyst").collect(), key=key)
+        s.close()
+        assert len(auto) == len(plan) == 30
+        for a, b in zip(auto, plan):
+            assert (a["source_item"], a["sim_item"], a["rank_no"]) \
+                == (b["source_item"], b["sim_item"], b["rank_no"])
+            assert a["sim_val"] == pytest.approx(b["sim_val"], rel=1e-9,
+                                                 abs=1e-9)
+
+    @pytest.mark.parametrize("measurement", ["l1", "canberra"])
+    def test_non_gemm_metric_keeps_catalyst(self, embeddings, measurement):
+        from faisssearcher_spark.plans import inspect
+
+        s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
+                          measurement=measurement).train()
+        q = embeddings.filter(F.col("vec_id") < 3)
+        res = s.search(q, topK=4, keep_rank_no=True, score_scale=4)
+        assert "InPandas" not in inspect.executed_plan(res)   # no kernel
+        plan = s.search(q, topK=4, keep_rank_no=True, score_scale=4,
+                        strategy="catalyst")
+        assert sorted(map(tuple, res.collect())) \
+            == sorted(map(tuple, plan.collect()))
+        s.close()
+
+    def test_indexed_searcher_refuses_explicit_catalyst(self, embeddings):
+        s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
+                          measurement="cos", index_param="IVF8").train()
+        with pytest.raises(ValueError, match="conflicts with index_param"):
+            s.search(embeddings.limit(1), topK=2, strategy="catalyst")
+        s.close()
 
 
 class TestIndexParam:

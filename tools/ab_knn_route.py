@@ -1,0 +1,129 @@
+"""Small-query-set routing probe for ``knn_join(strategy="auto")``.
+
+Times one facade search of a small query set (raw-vector cosine
+``SparkSearcher``, the ``flat_search`` shape) against corpora of
+growing size, for each exact strategy named, in alternating order
+within one Spark session, and checks every result against a numpy
+top-k. Prints one JSON line per corpus size with the corpus's Catalyst
+size estimate (the number ``_auto_strategy`` sees), the per-strategy
+median and quartiles in seconds, and how many rounds each strategy won.
+
+    PYTHONPATH=. SPARK_GRAFT_CPUS=3 python tools/ab_knn_route.py \\
+        --items 4096,32768,131072 --strategies blocked,sharded --rounds 10
+
+``catalyst`` (the plan the facade used before its default became
+``auto``) scores in the interpreter: keep it to small ``--items``.
+"""
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import shutil
+import sys
+import tempfile
+import time
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+K = 10
+
+
+def write_vectors(path: str, keys: np.ndarray, mat: np.ndarray) -> None:
+    vec = pa.FixedSizeListArray.from_arrays(
+        pa.array(mat.ravel(), pa.float32()), mat.shape[1])
+    pq.write_table(pa.table({"key": keys, "vec": vec.cast(
+        pa.list_(pa.float32()))}), path)
+
+
+def oracle_topk(qmat: np.ndarray, mat: np.ndarray, keys: np.ndarray):
+    """Per query, the K keys of highest cosine, ties by smaller key."""
+    def unit(m):
+        m = m.astype(np.float64)
+        n = np.linalg.norm(m, axis=1, keepdims=True)
+        return m / np.where(n == 0, 1.0, n)
+
+    sims = unit(qmat) @ unit(mat).T
+    order = np.lexsort((np.broadcast_to(keys, sims.shape), -sims), axis=1)
+    return [keys[row[:K]].tolist() for row in order]
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--items", default="4096,32768,131072",
+                    help="comma-separated corpus row counts")
+    ap.add_argument("--queries", type=int, default=64)
+    ap.add_argument("--dim", type=int, default=64)
+    ap.add_argument("--strategies", default="blocked,sharded")
+    ap.add_argument("--rounds", type=int, default=10)
+    ap.add_argument("--seed", type=int, default=7)
+    args = ap.parse_args()
+    strategies = args.strategies.split(",")
+
+    from faisssearcher_spark import SparkSearcher
+    from faisssearcher_spark.operators.knn import _plan_size_bytes
+    from faisssearcher_spark.session import get_spark
+
+    spark = get_spark("ab_knn_route")
+    spark.sparkContext.setLogLevel("ERROR")
+    tmp = tempfile.mkdtemp(prefix="ab_knn_route_")
+    try:
+        for n in (int(x) for x in args.items.split(",")):
+            rng = np.random.default_rng(args.seed + n)
+            mat = rng.standard_normal((n, args.dim), dtype=np.float32)
+            keys = np.arange(n, dtype=np.int64)
+            qmat = rng.standard_normal((args.queries, args.dim),
+                                       dtype=np.float32)
+            qkeys = np.arange(n, n + args.queries, dtype=np.int64)
+            cpath = os.path.join(tmp, f"corpus_{n}.parquet")
+            qpath = os.path.join(tmp, f"queries_{n}.parquet")
+            write_vectors(cpath, keys, mat)
+            write_vectors(qpath, qkeys, qmat)
+            truth = oracle_topk(qmat, mat, keys)
+
+            searcher = SparkSearcher(spark.read.parquet(cpath), vec_col="vec",
+                                     key_col="key", measurement="cos").train()
+            for frame in searcher._cached_state():
+                frame.count()
+            target = spark.read.parquet(qpath).select("key", "vec")
+            times: dict = {s: [] for s in strategies}
+            wrong: dict = {s: 0 for s in strategies}
+            wins: dict = {s: 0 for s in strategies}
+            for r in range(args.rounds + 1):  # round 0 warms up
+                order = strategies if r % 2 else strategies[::-1]
+                lap = {}
+                for s in order:
+                    t0 = time.perf_counter()
+                    rows = searcher.search(target, topK=K, strategy=s).select(
+                        "source_item", "sim_item", "sim_val").collect()
+                    lap[s] = time.perf_counter() - t0
+                    got: dict = {}
+                    for row in sorted(rows, key=lambda x: (-x["sim_val"],
+                                                           x["sim_item"])):
+                        got.setdefault(row["source_item"], []).append(
+                            row["sim_item"])
+                    wrong[s] += sum(got.get(int(q), []) != t
+                                    for q, t in zip(qkeys, truth))
+                if r:
+                    for s, v in lap.items():
+                        times[s].append(v)
+                    wins[min(lap, key=lap.get)] += 1
+            print(json.dumps({
+                "items": n, "queries": args.queries, "dim": args.dim,
+                "corpus_estimate_bytes": _plan_size_bytes(searcher.corpus),
+                "median_s": {s: round(float(np.median(v)), 4)
+                             for s, v in times.items()},
+                "quartiles_s": {s: [round(float(x), 4) for x in
+                                    np.percentile(v, [25, 75])]
+                                for s, v in times.items()},
+                "wins": wins, "wrong_queries": wrong}), flush=True)
+            searcher.close()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+        spark.stop()
+
+
+if __name__ == "__main__":
+    sys.exit(main())
