@@ -81,16 +81,26 @@ def validate_vectors(df: DataFrame, col: str, dim: int | None = None) -> int:
         F.max(F.size(F.col(col))).alias("dmax"),
         F.sum(F.when(F.col(col).isNull(), 1).otherwise(0)).alias("nulls"),
     ).first()
-    if stats is None or stats["dmin"] is None:
+    return check_vector_stats(col, stats["nulls"], stats["dmin"],
+                              stats["dmax"], dim)
+
+
+def check_vector_stats(col: str, nulls: int | None, dmin: int | None,
+                       dmax: int | None, dim: int | None = None) -> int:
+    """The checks behind :func:`validate_vectors`, on its three statistics
+    (NULL count, min and max size over the non-NULL vectors; ``dmin`` is
+    None when there are none). Shared with driver-side validation of a
+    collected vector column, so both raise the same errors."""
+    if dmin is None:
         raise ValueError(f"no vectors found in column {col!r}")
-    if stats["nulls"]:
-        raise ValueError(f"{stats['nulls']} NULL vectors in column {col!r}")
-    if stats["dmin"] != stats["dmax"]:
+    if nulls:
+        raise ValueError(f"{nulls} NULL vectors in column {col!r}")
+    if dmin != dmax:
         raise ValueError(
-            f"ragged vector column {col!r}: dims in [{stats['dmin']}, {stats['dmax']}]")
-    if dim is not None and stats["dmin"] != dim:
-        raise ValueError(f"expected dim {dim}, found {stats['dmin']} in {col!r}")
-    return stats["dmin"]
+            f"ragged vector column {col!r}: dims in [{dmin}, {dmax}]")
+    if dim is not None and dmin != dim:
+        raise ValueError(f"expected dim {dim}, found {dmin} in {col!r}")
+    return dmin
 
 
 def is_vector_column(df: DataFrame, col: str) -> bool:

@@ -30,6 +30,13 @@ Scale design (the part FAISS cannot do):
   therefore scores ``cos`` / ``ip`` / ``l2`` with BLAS in the blocked,
   sharded or grid kernel below and keeps this plan for every metric a
   GEMM cannot express.
+- **A trained corpus is collected once.** The blocked kernel is split
+  into its corpus handle (:class:`BlockedCorpus`: the key-sorted float64
+  matrix, keys and squared norms, broadcast) and its ranking function
+  (:func:`blocked_rank`). ``knn_join(strategy="blocked")`` builds a handle
+  per call; a trained flat ``SparkSearcher`` whose corpus ``"auto"`` would
+  hand to blocked builds it in ``train()`` and keeps it, so its searches
+  run no corpus collect and no job until the result is read.
 - Skewed query_ids can't occur (each query id appears exactly n times by
   construction) so no salting is needed; AQE handles partition sizing.
 
@@ -40,7 +47,7 @@ Determinism: FAISS breaks distance ties by index order; we order by
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping, Sequence
+from typing import Callable, Iterable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -96,11 +103,11 @@ def _auto_strategy(q_bytes: int | None, i_bytes: int | None, *,
     the only risk of guessing big is extra shuffle — guessing small risks
     an OOM wherever a side is collected or broadcast.
 
-    Blocked collects and broadcasts the corpus on every call, sharded
-    only the query matrix, so for a small query set blocked wins only
-    while the corpus is small. Measured through the facade
-    (``tools/ab_knn_route.py``: raw-vector cosine, 64 queries × 64 dims,
-    k=10, ten alternating rounds, oracle-checked, ``local[3]`` on 4
+    A one-shot blocked call collects and broadcasts the corpus every
+    time, sharded only the query matrix, so for a small query set blocked
+    wins only while the corpus is small. Measured per search through the
+    facade (``tools/ab_knn_route.py``: raw-vector cosine, 64 queries × 64
+    dims, k=10, ten alternating rounds, oracle-checked, ``local[3]`` on 4
     cores), median s blocked / sharded by corpus rows (Catalyst estimate):
     4,096 (2.3 MB) 0.36 / 0.41, 8,192 (4.6 MB) 0.33 / 0.41, 12,288
     (6.9 MB) 0.45 / 0.50 and 14,336 (8.0 MB) 0.49 / 0.53, blocked 10/10
@@ -113,8 +120,25 @@ def _auto_strategy(q_bytes: int | None, i_bytes: int | None, *,
     --workload flat_search --seconds 12`` (4,096 × 64 corpus, ten
     alternating pairs) the blocked pick took the median ``query_p50_s``
     from 1.72 s (quartiles 1.59-1.81) to 0.42 s (0.41-0.48); a sharded
-    pick measured 0.50-0.52 s. The catalyst plan stays the fallback for
-    calls no kernel can serve (see :func:`_gemm_servable`)."""
+    pick measured 0.50-0.52 s.
+
+    A trained ``SparkSearcher`` whose corpus this rule hands to blocked
+    holds the matrix instead (:class:`BlockedCorpus`, built in
+    ``train()``), so it pays the collect once per train, not per search.
+    Timed as train + S searches per round (``ab_knn_route.py
+    --strategies held,sharded --searches S``, six alternating rounds,
+    same shape and host), median s held / sharded by corpus rows (the
+    estimate of the filled cache): with S=1, 4,096 (2.3 MB) 0.76 / 0.92
+    and 16,384 (9.2 MB) 1.02 / 1.07, held 6/6 each; 32,768 (18 MB) 1.55
+    / 1.53, held 2/6; 131,072 (73 MB) 5.12 / 3.89, sharded 6/6. With
+    S=8: 2.04 / 3.17, 2.99 / 4.30 and 4.78 / 5.88, held 6/6 each;
+    131,072 15.65 / 15.14, held 2/6 (one task scores the 64 queries
+    against the whole held matrix, where sharded spreads the corpus over
+    every slot). Holding thus moves the crossover from between 9 and
+    18 MB at one search per train to between 18 and 73 MB at eight; the
+    8 MB split stays, since moving it is a claim of its own. The
+    catalyst plan stays the fallback for calls no kernel can serve (see
+    :func:`_gemm_servable`)."""
     if i_bytes is not None and i_bytes <= BLOCKED_SMALL_QUERY_ITEMS_BYTES:
         return "blocked"
     if q_bytes is not None and q_bytes <= query_cap:
@@ -689,6 +713,178 @@ def _empty_result(queries: DataFrame, items: DataFrame, *,
     return items.sparkSession.createDataFrame([], T.StructType(fields))
 
 
+def _unit_rows(mat):
+    """Rows scaled to unit L2 norm; a zero row stays zero."""
+    import numpy as np
+
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    return mat / np.where(norms == 0, 1.0, norms)
+
+
+def _collect_vectors(items: DataFrame, key_col: str, vec_col: str, *,
+                     dim: int | None = None, held: bool = False):
+    """``(keys, float64 matrix)`` of ``items`` in collection order, from
+    one Arrow collect of the two columns, checked on the driver with the
+    same errors :func:`~faisssearcher_spark.functions.vector.validate_vectors`
+    raises (NULL, ragged, wrong dim; all-NULL is "no vectors"). No rows
+    gives empty arrays and no error: the caller decides what an empty
+    corpus means. ``held=True`` checks the rows as an increment to
+    vectors already validated at ``dim``, as validating the union would."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    from faisssearcher_spark.functions.vector import check_vector_stats
+
+    tbl = items.select(key_col, vec_col).toArrow()
+    if not tbl.num_rows:
+        return np.empty(0), np.empty((0, dim or 0))
+    vecs = tbl.column(vec_col).combine_chunks()
+    bounds = pc.min_max(pc.list_value_length(vecs))
+    dmin, dmax = bounds["min"].as_py(), bounds["max"].as_py()
+    if held:
+        dmin = dim if dmin is None else min(dmin, dim)
+        dmax = dim if dmax is None else max(dmax, dim)
+    d = check_vector_stats(vec_col, vecs.null_count, dmin, dmax, dim)
+    mat = vecs.flatten().to_numpy(zero_copy_only=False)
+    return (tbl.column(key_col).to_numpy(),
+            mat.astype(np.float64).reshape(len(vecs), d))
+
+
+class BlockedCorpus:
+    """The blocked kernel's corpus side, built once on the driver: the
+    float64 item matrix in KEY order, its keys and (``l2`` only) the
+    rows' squared norms, each broadcast to the executors.
+
+    ``knn_join(strategy="blocked")`` builds one per call. A trained flat
+    ``SparkSearcher`` holds one from ``train()`` to ``close()`` — the
+    FAISS ``IndexFlat`` the reference keeps in the driver
+    (faiss_searcher.py:116-125) — so each of its searches is one
+    :func:`blocked_rank` with no corpus round trip. Key order is what
+    makes the kernel's stable argsorts break score ties by the smallest
+    key (the catalyst window's ``(score, key)`` order); sorting once here
+    spares every task its own argsort and an n×d matrix copy."""
+
+    def __init__(self, spark, keys, mat, *, metric: str, key_type: str,
+                 normalize: bool):
+        import numpy as np
+
+        self.metric, self.key_type, self.normalize = metric, key_type, normalize
+        order = np.argsort(keys, kind="stable")
+        self.keys, self.mat = keys[order], mat[order]
+        sc = spark.sparkContext
+        self._spark = spark
+        self.b_mat = sc.broadcast(self.mat)
+        self.b_keys = sc.broadcast(self.keys)
+        # squared norms are only read by the l2 decomposition — no
+        # broadcast at all for cos/ip
+        self.b_sq = (sc.broadcast((self.mat * self.mat).sum(axis=1))
+                     if metric == "l2" else None)
+
+    @classmethod
+    def collect(cls, items: DataFrame, *, item_key_col: str,
+                item_vec_col: str, metric: str, normalize: bool,
+                dim: int | None = None) -> "BlockedCorpus | None":
+        """One Arrow collect of ``items`` into a handle, validated on the
+        driver (see :func:`_collect_vectors`); None for an empty frame."""
+        keys, mat = _collect_vectors(items, item_key_col, item_vec_col,
+                                     dim=dim)
+        if not len(keys):
+            return None
+        return cls(items.sparkSession, keys,
+                   _unit_rows(mat) if normalize else mat, metric=metric,
+                   key_type=items.schema[item_key_col].dataType
+                   .simpleString(), normalize=normalize)
+
+    @property
+    def dim(self) -> int:
+        return self.mat.shape[1]
+
+    def add(self, items: DataFrame, *, item_key_col: str,
+            item_vec_col: str) -> "BlockedCorpus":
+        """A new handle over these rows plus ``items``'s, collecting only
+        the new rows; ``self`` when there are none. The new rows are
+        checked as an increment at this handle's dim before anything is
+        built, so a bad batch raises and leaves this handle usable."""
+        import numpy as np
+
+        keys, mat = _collect_vectors(items, item_key_col, item_vec_col,
+                                     dim=self.dim, held=True)
+        if not len(keys):
+            return self
+        if self.normalize:
+            mat = _unit_rows(mat)
+        # held rows first: the stable key sort keeps them ahead of new
+        # rows with an equal key, the order a collect of the union gives
+        return BlockedCorpus(
+            self._spark, np.concatenate([self.keys, keys]),
+            np.concatenate([self.mat, mat]), metric=self.metric,
+            key_type=self.key_type, normalize=self.normalize)
+
+    def destroy(self) -> None:
+        """Remove the broadcasts from the driver and every executor."""
+        for b in (self.b_mat, self.b_keys, self.b_sq):
+            if b is not None:
+                b.destroy()
+
+
+def blocked_rank(queries: DataFrame, corpus: BlockedCorpus,
+                 items: DataFrame, *, k: int, query_vec_col: str,
+                 query_item_col: str, item_key_col: str,
+                 payload_cols: Sequence[str], keep_rank_no: bool,
+                 score_scale: int | None) -> DataFrame:
+    """The blocked kernel's ranking half: ``mapInPandas`` over the
+    queries, one bounded-scratch numpy GEMM per Arrow batch against the
+    broadcast ``corpus`` (:func:`_gemm_topk`), k rows per query ROW, with
+    ``payload_cols`` re-attached from ``items`` (the frame ``corpus`` was
+    collected from). Building the frame launches no job; running it reads
+    the broadcasts, so run it before ``corpus`` is destroyed."""
+    import numpy as np
+    import pandas as pd
+
+    b_mat, b_keys, b_sq = corpus.b_mat, corpus.b_keys, corpus.b_sq
+    met, kk, nrm, scale = corpus.metric, k, corpus.normalize, score_scale
+    higher_is_closer = met in ("cos", "ip")
+
+    def _score(batches):
+        # full/fkeys/fsq arrive KEY-ORDERED from the driver: column
+        # position == key rank, so the stable argsorts below reproduce
+        # the catalyst window's (score, key) tie-break directly
+        full_o, fkeys = b_mat.value, b_keys.value
+        fsq_o = b_sq.value if b_sq is not None else None
+        n_items = full_o.shape[0]
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            q = np.array(pdf["__qv"].to_list(), dtype=np.float64)
+            if nrm:
+                q = _unit_rows(q)
+            kc = min(kk, n_items)
+            # bounded-scratch block merge (see _gemm_topk: the r12
+            # knn_self_similar investigation found the uncapped m=n
+            # GEMM materializing multi-GB scratch per Arrow batch)
+            top_pos, top_val = _gemm_topk(
+                q, full_o, fsq_o, metric=met, kc=kc, scale=scale,
+                higher_is_closer=higher_is_closer)
+            yield pd.DataFrame({
+                "source_item": np.repeat(pdf["__qid"].to_numpy(), kc),
+                "sim_item": fkeys[top_pos.ravel()],
+                "sim_val": top_val.ravel(),
+                "rank_no": np.tile(np.arange(kc, dtype=np.int32), len(q)),
+            })
+
+    q_type = queries.schema[query_item_col].dataType.simpleString()
+    out_schema = (f"source_item {q_type}, sim_item {corpus.key_type}, "
+                  "sim_val double, rank_no int")
+    ranked = queries.select(
+        F.col(query_item_col).alias("__qid"),
+        F.col(query_vec_col).cast("array<double>").alias("__qv"),
+    ).mapInPandas(_score, out_schema)
+    ranked = _attach_payload(ranked, items, item_key_col=item_key_col,
+                             payload_cols=payload_cols,
+                             broadcast_side="payload")
+    return ranked if keep_rank_no else ranked.drop("rank_no")
+
+
 def _knn_join_blocked(
     queries: DataFrame,
     items: DataFrame,
@@ -706,15 +902,10 @@ def _knn_join_blocked(
 ) -> DataFrame:
     """Block-matmul exact top-k: broadcast corpus matrix, one numpy GEMM
     per Arrow batch of queries. See ``knn_join(strategy="blocked")``."""
-    import numpy as np
-    import pandas as pd
-
     if metric not in ("cos", "ip", "l2"):
         raise ValueError("blocked strategy supports metrics 'cos', 'ip', 'l2'")
     if normalize is None:
         normalize = metric == "cos"
-    higher_is_closer = metric in ("cos", "ip")
-
     if query_item_col is None:
         raise ValueError("blocked strategy needs query_item_col (no implicit "
                          "positional ids across executors)")
@@ -722,82 +913,21 @@ def _knn_join_blocked(
         payload_cols = [c for c in items.columns
                         if c not in (item_vec_col, item_key_col)]
 
-    spark = items.sparkSession
-    item_pdf = items.select(item_key_col, item_vec_col).toPandas()
-    if not len(item_pdf):
+    corpus = BlockedCorpus.collect(
+        items, item_key_col=item_key_col, item_vec_col=item_vec_col,
+        metric=metric, normalize=normalize)
+    if corpus is None:
         # top-k of an empty corpus is an empty result, same as catalyst —
-        # without the guard the kernel's (0,)-shaped matrix breaks axis
-        # math before any task runs
+        # the kernel's (0,)-shaped matrix would break axis math
         return _empty_result(queries, items, query_item_col=query_item_col,
                              item_key_col=item_key_col,
                              payload_cols=payload_cols,
                              keep_rank_no=keep_rank_no)
-    mat = np.array(item_pdf[item_vec_col].to_list(), dtype=np.float64)
-    if normalize:
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        mat = mat / np.where(norms == 0, 1.0, norms)  # keep 0-vec rows zero
-    keys = item_pdf[item_key_col].to_numpy()
-    # key-sort ONCE on the driver so equal scores resolve to the
-    # smallest key in the kernel's stable argsorts: broadcasting the
-    # pre-ordered matrix spares every task its own argsort AND an n×d
-    # matrix copy (a per-worker corpus duplicate at the materialization
-    # cap — review catch on the block-merge rewrite)
-    order = np.argsort(keys, kind="stable")
-    mat = mat[order]
-    keys = keys[order]
-    b_mat = spark.sparkContext.broadcast(mat)
-    b_keys = spark.sparkContext.broadcast(keys)
-    # squared norms are only read by the l2 decomposition — no broadcast
-    # at all for cos/ip
-    b_sq = (spark.sparkContext.broadcast((mat * mat).sum(axis=1))
-            if metric == "l2" else None)
-
-    met, kk, nrm, scale = metric, k, normalize, score_scale
-
-    def _score(batches):
-        # full/fkeys/fsq arrive KEY-ORDERED from the driver: column
-        # position == key rank, so the stable argsorts below reproduce
-        # the catalyst window's (score, key) tie-break directly
-        full_o, fkeys = b_mat.value, b_keys.value
-        fsq_o = b_sq.value if b_sq is not None else None
-        n_items = full_o.shape[0]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.array(pdf["__qv"].to_list(), dtype=np.float64)
-            if nrm:
-                qn = np.linalg.norm(q, axis=1, keepdims=True)
-                q = q / np.where(qn == 0, 1.0, qn)
-            kc = min(kk, n_items)
-            # bounded-scratch block merge (see _gemm_topk: the r12
-            # knn_self_similar investigation found the uncapped m=n
-            # GEMM materializing multi-GB scratch per Arrow batch)
-            top_pos, top_val = _gemm_topk(
-                q, full_o, fsq_o, metric=met, kc=kc, scale=scale,
-                higher_is_closer=higher_is_closer)
-            yield pd.DataFrame({
-                "source_item": np.repeat(pdf["__qid"].to_numpy(), kc),
-                "sim_item": fkeys[top_pos.ravel()],
-                "sim_val": top_val.ravel(),
-                "rank_no": np.tile(np.arange(kc, dtype=np.int32), len(q)),
-            })
-
-    key_field = items.schema[item_key_col]
-    q_key_field = queries.schema[query_item_col]
-    out_schema = (f"source_item {q_key_field.dataType.simpleString()}, "
-                  f"sim_item {key_field.dataType.simpleString()}, "
-                  "sim_val double, rank_no int")
-    ranked = queries.select(
-        F.col(query_item_col).alias("__qid"),
-        F.col(query_vec_col).cast("array<double>").alias("__qv"),
-    ).mapInPandas(_score, out_schema)
-
-    ranked = _attach_payload(ranked, items, item_key_col=item_key_col,
-                             payload_cols=payload_cols,
-                             broadcast_side="payload")
-    if not keep_rank_no:
-        ranked = ranked.drop("rank_no")
-    return ranked
+    return blocked_rank(queries, corpus, items, k=k,
+                        query_vec_col=query_vec_col,
+                        query_item_col=query_item_col,
+                        item_key_col=item_key_col, payload_cols=payload_cols,
+                        keep_rank_no=keep_rank_no, score_scale=score_scale)
 
 
 def _knn_join_sharded(
@@ -1045,11 +1175,18 @@ def knn_join_multi_k(
     searches once at ``max(topK)`` and slices per K. Here the ranked frame is
     cached and each K is a filter over it — compute-once / filter-many.
     """
+    kwargs["keep_rank_no"] = True
+    return multi_k(lambda k: knn_join(queries, items, k=k, **kwargs), ks)
+
+
+def multi_k(rank_at: Callable[[int], DataFrame],
+            ks: Iterable[int]) -> Mapping[int, DataFrame]:
+    """``{k: top-k}`` from one cached ``rank_at(max(ks))`` frame (which
+    must carry ``rank_no``), each k a filter over it."""
     ks = sorted(set(int(k) for k in ks))
     if not ks:
         raise ValueError("ks must be non-empty")
-    kwargs["keep_rank_no"] = True
-    ranked = knn_join(queries, items, k=ks[-1], **kwargs).cache()
+    ranked = rank_at(ks[-1]).cache()
     return {k: ranked.filter(F.col("rank_no") < k) for k in ks}
 
 

@@ -13,9 +13,16 @@ constructor keeps the reference's two modes:
    already has a vector column; ``item_list`` becomes an explicit key column
    (``vec_col`` + ``key_col``) instead of positional alignment.
 
-``train()`` materializes the encoded/normalized corpus (the analog of FAISS
-train+add, faiss_searcher.py:116-125); ``search()`` answers batched top-K
-queries (faiss_searcher.py:161-187) including the multi-K dict form;
+``train()`` materializes the encoded/normalized corpus and builds the index
+(the analog of FAISS train+add, faiss_searcher.py:116-125). For an exact
+(flat) ``cos`` / ``ip`` / ``l2`` searcher whose filled corpus cache Spark
+measures within ``knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES`` — where
+``strategy="auto"`` picks the blocked GEMM kernel anyway — the flat index
+is the kernel's key-sorted corpus matrix, collected once (validating the
+vectors on the driver) and broadcast, held until ``close()`` like FAISS's
+``IndexFlat``; ``add_items`` merges new rows into it. ``search()`` answers batched top-K
+queries (faiss_searcher.py:161-187) including the multi-K dict form, on a
+holding searcher with no Spark job until the result is read;
 ``cal_sim()`` is exact pairwise scoring (faiss_searcher.py:192-198);
 ``save()``/``load()`` replace whole-object pickling (faiss_searcher.py:
 200-208) with Parquet + JSON metadata ("a searcher is data + config").
@@ -23,6 +30,7 @@ queries (faiss_searcher.py:161-187) including the multi-K dict form;
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -35,10 +43,23 @@ from faisssearcher_spark.encoders.base import Encoder, encoder_udf
 from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.functions.vector import (
     l2_normalize, to_float32, validate_vectors)
-from faisssearcher_spark.operators.knn import knn_join, knn_join_multi_k, cal_sim
+from faisssearcher_spark.operators import knn as _knn
+from faisssearcher_spark.operators.knn import (
+    BlockedCorpus, blocked_rank, cal_sim, knn_join, multi_k)
 from faisssearcher_spark.operators.whitening import VecsWhitening
 
 _VEC = "__vec"
+
+
+@functools.cache
+def _storage_steps(norm: bool) -> tuple:
+    """The steps that end every encode: l2-normalize when ``norm``, then
+    the float32 cast (storage parity with faiss_searcher.py:92-94; metric
+    math re-promotes to float64). They depend on nothing else, so they
+    are built once per process: l2_normalize's higher-order expression
+    alone costs about 45 ms of py4j round trips, which every new
+    searcher would otherwise pay in train()."""
+    return ((l2_normalize(_VEC),) if norm else ()) + (to_float32(_VEC),)
 
 
 class SparkSearcher:
@@ -130,6 +151,11 @@ class SparkSearcher:
         else:
             self._index_plan = ("flat",)
         self._index = None
+        #: the key-sorted corpus matrix and its broadcasts (FAISS
+        #: IndexFlat's stored vectors) while the searcher holds one
+        self._held: BlockedCorpus | None = None
+        #: _vectorize's encoder UDF and column expressions, built once
+        self._vec_exprs: tuple | None = None
         self.corpus: DataFrame | None = None
         self.vec_dim: int | None = None
 
@@ -137,28 +163,79 @@ class SparkSearcher:
 
     def _vectorize(self, df: DataFrame, text_col: str | None,
                    vec_col: str | None) -> DataFrame:
-        if self.encoder is not None:
-            udf = encoder_udf(self.encoder)
-            out = df.withColumn(_VEC, udf(F.col(text_col)))
-        else:
-            out = df.withColumn(_VEC, F.col(vec_col))
-        if self.whitening is not None:
-            out = out.withColumn(_VEC, self.whitening.transform_expr(_VEC))
-        if self.norm_vec:
-            out = out.withColumn(_VEC, l2_normalize(_VEC))
-        # float32 storage parity (faiss_searcher.py:92-94); metric math
-        # re-promotes to float64.
-        return out.withColumn(_VEC, to_float32(_VEC))
+        # the encoder UDF and the whitening expression are built on the
+        # first call and reused: each costs py4j round trips that every
+        # search would otherwise pay again
+        if self._vec_exprs is None:
+            steps = ([self.whitening.transform_expr(_VEC)]
+                     if self.whitening is not None else [])
+            udf = (encoder_udf(self.encoder) if self.encoder is not None
+                   else None)
+            self._vec_exprs = (udf,
+                               steps + list(_storage_steps(self.norm_vec)))
+        udf, steps = self._vec_exprs
+        out = df.withColumn(_VEC, udf(F.col(text_col)) if udf is not None
+                            else F.col(vec_col))
+        for step in steps:
+            out = out.withColumn(_VEC, step)
+        return out
 
     # -- train (faiss_searcher.py:116-125) ------------------------------------
 
     def train(self, validate: bool = True) -> "SparkSearcher":
+        # a retrain drops the old matrix without destroying it: results of
+        # earlier searches still read its broadcasts (Spark's
+        # ContextCleaner frees them once no plan does)
+        self._held = None
         self.corpus = self._vectorize(
             self.items, self.item_col, self.vec_col).cache()
-        if validate:
-            self.vec_dim = validate_vectors(self.corpus, _VEC)
-        self._fit_index()
+        self._build_index(validate, dim=None)
         return self
+
+    def _build_index(self, validate: bool, dim: int | None) -> None:
+        """Build what search() ranks against from the cached corpus (FAISS
+        train+add). The first job fills the corpus cache: validate_vectors'
+        aggregate, or a count when ``validate`` is False and the searcher
+        may hold its matrix. The hold check then reads the size Spark
+        measured for the cache, which ``strategy="auto"`` routes on too,
+        not the plan's guess (that takes an encoder's output array for one
+        element). A holdable corpus is collected once into the held matrix
+        (None when empty); the collect checks the vectors on the driver,
+        so NULL / ragged / wrong-dim rows raise even with
+        ``validate=False``: they cannot form a matrix. Then the
+        index_param structure is fitted."""
+        may_hold = self._gemm_flat()
+        if validate:
+            self.vec_dim = validate_vectors(self.corpus, _VEC, dim)
+        elif may_hold:
+            self.corpus.count()
+        if may_hold and self._within_hold_bound(self.corpus):
+            self._held = BlockedCorpus.collect(
+                self.corpus, item_key_col=self.key_col, item_vec_col=_VEC,
+                metric=self._kernel_metric(), normalize=False, dim=dim)
+        if self._held is not None:
+            self.vec_dim = self._held.dim
+        self._fit_index()
+
+    def _kernel_metric(self) -> str:
+        # corpus vectors are normalized at encode time (O3): cosine is
+        # scored as a dot product
+        return "ip" if self.measurement == "cos" else self.measurement
+
+    def _gemm_flat(self) -> bool:
+        """A flat plan with a metric the GEMM kernels compute: the
+        searchers that may hold their corpus matrix."""
+        return (self._index_plan[0] == "flat" and self.p is None
+                and self.measurement in ("cos", "ip", "l2"))
+
+    @staticmethod
+    def _within_hold_bound(corpus: DataFrame) -> bool:
+        """Whether Catalyst's estimate of ``corpus`` is within the bound
+        under which ``strategy="auto"`` picks blocked whatever the query
+        size (knn._auto_strategy). Call it once ``corpus``'s cache is
+        filled: Spark memoizes a frame's estimate on first use."""
+        size = _knn._plan_size_bytes(corpus)
+        return size is not None and size <= _knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES
 
     def _fit_index(self) -> None:
         """Build the ANN structure the index_param spec names (IVF / PQ /
@@ -171,7 +248,7 @@ class SparkSearcher:
             self._index = None
             return
         from faisssearcher_spark.operators import ann
-        metric = "ip" if self.measurement == "cos" else self.measurement
+        metric = self._kernel_metric()
         kw = dict(self.index_kwargs)
         kw.pop("refine_factor", None)   # search-time knob, not a
         # constructor arg (kept in index_kwargs for save/load)
@@ -213,19 +290,55 @@ class SparkSearcher:
         through the identical encode/whiten/normalize pipeline and union
         with the cached corpus; at cluster scale this is a metadata-only
         union (no reshuffle — both sides keep their partitioning), so
-        incremental ingest costs only the encoding of the new rows."""
+        incremental ingest costs only the encoding of the new rows.
+
+        On a searcher that holds its corpus matrix the new rows are
+        encoded once, into a cache that fills the union's (so the hold
+        check reads the union's measured size) and is collected into the
+        merged matrix (checked on the driver whatever ``validate`` says).
+        Once the union passes the hold bound the matrix is dropped and
+        searches go through knn_join. A superseded matrix is dropped, not
+        destroyed: results of earlier searches still read its broadcasts.
+        Rows are validated before anything changes: a batch that raises
+        leaves the searcher as it was."""
         corpus = self._require_trained()
         new = self._vectorize(items, self.item_col, self.vec_col)
         new = new.select(*corpus.columns)
+        # unionByName flattens a corpus that is itself a union into its
+        # inputs, which bypasses its cache; the alias keeps it whole
+        old = corpus.alias("__corpus")
+        held = self._held
+        if held is not None:
+            new = new.cache()
+        union = old.unionByName(new).cache()
+        try:
+            if new.is_cached:
+                # one job encodes the new rows into their cache and fills
+                # the union's from the two; the hold check then reads the
+                # union's measured size
+                union.count()
+                if (union.schema[self.key_col].dataType.simpleString()
+                        == held.key_type and self._within_hold_bound(union)):
+                    held = held.add(new, item_key_col=self.key_col,
+                                    item_vec_col=_VEC)
+                else:
+                    held = None
+            if validate and held is None:
+                self.vec_dim = validate_vectors(union, _VEC, self.vec_dim)
+        except Exception:
+            union.unpersist()
+            if new.is_cached:
+                new.unpersist()
+            raise
+        self._held = held
         self.items = self.items.unionByName(items)
-        self.corpus = corpus.unionByName(new).cache()
+        self.corpus = union
         # release the superseded cache — repeated appends must not pin
-        # every intermediate corpus in executor storage (the union
-        # recomputes its lineage on next materialization, which is the
-        # encode cost of the new rows only at worst).
+        # every intermediate corpus in executor storage (an unfilled union
+        # recomputes its lineage on next materialization).
         corpus.unpersist()
-        if validate:
-            self.vec_dim = validate_vectors(self.corpus, _VEC, self.vec_dim)
+        if new.is_cached:
+            new.unpersist()
         if self._index is not None:
             # FAISS add-after-train parity: the index ingests the new rows
             # without retraining its quantizer (operators/ann.py add_items)
@@ -249,34 +362,17 @@ class SparkSearcher:
         strategy: str = "auto",
         **strategy_kwargs: Any,
     ) -> Union[DataFrame, Mapping[int, DataFrame]]:
+        """Top-``topK`` corpus items per query, ``topK`` an int or a list
+        (one frame per K). On a searcher that holds its corpus matrix,
+        ``"auto"`` and ``"blocked"`` rank against it: the result reads
+        the held broadcasts when it runs, so read it before ``close()``
+        destroys them (``add_items`` and a retrain leave them be)."""
         corpus = self._require_trained()
         queries = self._prepare_queries(target, corpus)
 
         payload = [c for c in self.items.columns
                    if c not in (self.item_col, self.vec_col, self.key_col)]
-        kwargs: dict[str, Any] = dict(
-            metric=self.measurement,
-            query_vec_col=_VEC,
-            item_vec_col=_VEC,
-            query_item_col="source_item",
-            item_key_col=self.key_col,
-            payload_cols=payload,
-            # corpus vectors were already normalized at train time (O3);
-            # don't re-normalize inside the join.
-            normalize=False,
-            p=self.p,
-            score_scale=score_scale,
-            # "auto" scores cos/ip/l2 with a BLAS GEMM kernel picked from
-            # the corpus size estimate and keeps the catalyst plan for the
-            # other metrics (knn_join docstring)
-            strategy=strategy,
-            # tuning knobs forwarded to the chosen kernel (e.g. the grid
-            # strategy's n_query_blocks / n_item_shards)
-            **strategy_kwargs,
-        )
-        if self.measurement == "cos":
-            kwargs["metric"] = "ip"  # normalized at encode time → dot product
-
+        held = self._held
         if self._index is not None or self._index_plan[0] == "faiss":
             # index_param overrides the exact-strategy matrix (reference
             # semantics: every search uses the built index). Refuse a
@@ -287,62 +383,77 @@ class SparkSearcher:
                     f"strategy={strategy!r} conflicts with index_param="
                     f"{self.index_param!r} — an indexed searcher routes "
                     "every search through its index")
-            return self._search_indexed(queries, corpus, topK, keep_rank_no,
-                                        payload, score_scale)
 
-        if isinstance(topK, int):
-            res = knn_join(queries, corpus, k=topK,
-                           keep_rank_no=keep_rank_no, **kwargs)
-            return self._post(res, keep_rank_no)
-        ks = list(topK)
-        multi = knn_join_multi_k(queries, corpus, ks, **kwargs)
-        return {k: self._post(df if keep_rank_no else df.drop("rank_no"),
+            def rank_at(k: int) -> DataFrame:
+                return self._rank_indexed(queries, corpus, k, payload,
+                                          score_scale)
+        elif (held is not None and strategy in ("auto", "blocked")
+                and not strategy_kwargs):
+            # the held matrix is the blocked kernel's corpus side, built
+            # at train(): rank against it, no collect and no job here
+            def rank_at(k: int) -> DataFrame:
+                return blocked_rank(
+                    queries, held, corpus, k=k, query_vec_col=_VEC,
+                    query_item_col="source_item", item_key_col=self.key_col,
+                    payload_cols=payload, keep_rank_no=True,
+                    score_scale=score_scale)
+        else:
+            kwargs: dict[str, Any] = dict(
+                metric=self._kernel_metric(),
+                query_vec_col=_VEC,
+                item_vec_col=_VEC,
+                query_item_col="source_item",
+                item_key_col=self.key_col,
+                payload_cols=payload,
+                # corpus vectors were already normalized at train time
+                # (O3); don't re-normalize inside the join.
+                normalize=False,
+                p=self.p,
+                score_scale=score_scale,
+                # "auto" scores cos/ip/l2 with a BLAS GEMM kernel picked
+                # from the corpus size estimate and keeps the catalyst plan
+                # for the other metrics (knn_join docstring)
+                strategy=strategy,
+                # tuning knobs forwarded to the chosen kernel (e.g. the
+                # grid strategy's n_query_blocks / n_item_shards)
+                **strategy_kwargs,
+            )
+
+            def rank_at(k: int) -> DataFrame:
+                return knn_join(queries, corpus, k=k, keep_rank_no=True,
+                                **kwargs)
+
+        def finish(res: DataFrame) -> DataFrame:
+            return self._post(res if keep_rank_no else res.drop("rank_no"),
                               keep_rank_no)
-                for k, df in multi.items()}
-
-    def _search_indexed(self, queries: DataFrame, corpus: DataFrame,
-                        topK, keep_rank_no: bool, payload: list,
-                        score_scale: int | None = None):
-        """Search through the index_param structure (reference semantics:
-        when an index_param is given, EVERY search uses it,
-        faiss_searcher.py:161-187). Multi-K runs one search at max(K) and
-        slices by rank — the same slice≡direct-search equivalence the
-        exact multi-K path proves (knn_join_multi_k)."""
-        def one(k: int) -> DataFrame:
-            if self._index is not None:
-                extra = ({"refine_factor": self.refine_factor}
-                         if self._refine else {})
-                res = self._index.search(
-                    queries, k=k, query_item_col="source_item",
-                    query_vec_col=_VEC, payload_cols=payload, **extra)
-            else:   # unrecognized spec → real-FAISS pass-through
-                from faisssearcher_spark.operators.ann import faiss_topk
-                metric = "ip" if self.measurement == "cos" \
-                    else self.measurement
-                res = faiss_topk(
-                    queries, corpus, k=k, index_param=self.index_param,
-                    metric=metric, query_item_col="source_item",
-                    item_key_col=self.key_col, query_vec_col=_VEC,
-                    item_vec_col=_VEC, payload_cols=payload)
-            if score_scale is not None:
-                res = res.withColumn("sim_val",
-                                     F.round("sim_val", score_scale))
-            return res
 
         if isinstance(topK, int):
-            res = one(topK)
-            if not keep_rank_no:
-                res = res.drop("rank_no")
-            return self._post(res, keep_rank_no)
-        ks = [int(k) for k in topK]
-        res = one(max(ks))
-        out = {}
-        for k in ks:
-            sliced = res.filter(F.col("rank_no") < k)
-            if not keep_rank_no:
-                sliced = sliced.drop("rank_no")
-            out[k] = self._post(sliced, keep_rank_no)
-        return out
+            return finish(rank_at(topK))
+        # reference O2 (faiss_searcher.py:170-183): rank once at max(K),
+        # each K a filter over that one cached frame
+        return {k: finish(df) for k, df in multi_k(rank_at, topK).items()}
+
+    def _rank_indexed(self, queries: DataFrame, corpus: DataFrame, k: int,
+                      payload: list, score_scale: int | None) -> DataFrame:
+        """Top-k with ``rank_no`` through the index_param structure
+        (reference semantics: when an index_param is given, EVERY search
+        uses it, faiss_searcher.py:161-187)."""
+        if self._index is not None:
+            extra = ({"refine_factor": self.refine_factor}
+                     if self._refine else {})
+            res = self._index.search(
+                queries, k=k, query_item_col="source_item",
+                query_vec_col=_VEC, payload_cols=payload, **extra)
+        else:   # unrecognized spec → real-FAISS pass-through
+            from faisssearcher_spark.operators.ann import faiss_topk
+            res = faiss_topk(
+                queries, corpus, k=k, index_param=self.index_param,
+                metric=self._kernel_metric(), query_item_col="source_item",
+                item_key_col=self.key_col, query_vec_col=_VEC,
+                item_vec_col=_VEC, payload_cols=payload)
+        if score_scale is not None:
+            res = res.withColumn("sim_val", F.round("sim_val", score_scale))
+        return res
 
     def _prepare_queries(self, target, corpus: DataFrame) -> DataFrame:
         """Shared query prep for search()/range_search(): List[str]
@@ -404,9 +515,7 @@ class SparkSearcher:
         queries = self._prepare_queries(target, corpus)
         payload = [c for c in self.items.columns
                    if c not in (self.item_col, self.vec_col, self.key_col)]
-        # corpus vectors normalized at train time (O3): cosine == dot
-        metric = "ip" if self.measurement == "cos" else self.measurement
-        kwargs = dict(metric=metric, query_vec_col=_VEC,
+        kwargs = dict(metric=self._kernel_metric(), query_vec_col=_VEC,
                       item_vec_col=_VEC, query_item_col="source_item",
                       item_key_col=self.key_col, payload_cols=payload,
                       normalize=False, p=self.p, score_scale=score_scale)
@@ -477,7 +586,8 @@ class SparkSearcher:
     def unpersist(self, blocking: bool = False) -> "SparkSearcher":
         """Release the cached encoded corpus (and any fitted ANN state)
         back to executor storage. The searcher stays usable — the corpus
-        recomputes from its encode lineage on the next search."""
+        recomputes from its encode lineage on the next search, and a held
+        corpus matrix stays held."""
         if self.corpus is not None:
             self.corpus.unpersist(blocking)
         if self._index is not None:
@@ -489,6 +599,9 @@ class SparkSearcher:
         closed searcher raises the not-trained guard instead of silently
         re-encoding the corpus."""
         self.unpersist(blocking=True)
+        if self._held is not None:
+            self._held.destroy()
+        self._held = None
         if self._index is not None:
             self._index.close()
         self._index = None
@@ -564,8 +677,8 @@ class SparkSearcher:
         )
         searcher.corpus = corpus.cache()
         searcher.vec_dim = meta["vec_dim"]
-        # the ANN structure rebuilds deterministically from the stored
-        # corpus (seeded k-means / Lloyd) — "data + config" persistence,
-        # same policy as the rest of the searcher
-        searcher._fit_index()
+        # the held matrix and the ANN structure rebuild deterministically
+        # from the stored corpus (seeded k-means / Lloyd) — "data +
+        # config" persistence, same policy as the rest of the searcher
+        searcher._build_index(validate=False, dim=searcher.vec_dim)
         return searcher

@@ -269,6 +269,75 @@ class TestBlockedStrategy:
                      item_key_col="vec_id", strategy="blocked")
 
 
+class TestBlockedCorpus:
+    """The blocked kernel split into its corpus handle (collected,
+    key-sorted, broadcast once) and its ranking function."""
+
+    def test_rank_over_handle_equals_catalyst(self, spark, embeddings):
+        from faisssearcher_spark.operators.knn import (BlockedCorpus,
+                                                       blocked_rank)
+
+        q = embeddings.filter(F.col("vec_id") < 30).select(
+            F.col("vec_id").alias("qid"), "embedding")
+        for metric in ("cos", "l2", "ip"):
+            corpus = BlockedCorpus.collect(
+                embeddings, item_key_col="vec_id", item_vec_col="embedding",
+                metric=metric, normalize=metric == "cos")
+            want = knn_join(q, embeddings, metric=metric, k=4,
+                            query_item_col="qid", item_key_col="vec_id",
+                            payload_cols=["label"], score_scale=4)
+            for k in (4, 9):   # one handle serves any k, any number of times
+                got = blocked_rank(q, corpus, embeddings, k=k,
+                                   query_vec_col="embedding",
+                                   query_item_col="qid",
+                                   item_key_col="vec_id",
+                                   payload_cols=["label"], keep_rank_no=True,
+                                   score_scale=4)
+                assert got.columns == want.columns
+                rows = sorted(map(tuple, got.filter("rank_no < 4").collect()))
+                assert rows == sorted(map(tuple, want.collect())), metric
+            corpus.destroy()
+
+    def test_add_equals_collect_of_union(self, spark, embeddings):
+        import numpy as np
+
+        from faisssearcher_spark.operators.knn import BlockedCorpus
+
+        # interleaved keys, so the merge must re-sort
+        first = embeddings.filter(F.col("vec_id") % 3 == 0)
+        rest = embeddings.filter(F.col("vec_id") % 3 != 0)
+        kw = dict(item_key_col="vec_id", item_vec_col="embedding",
+                  metric="l2", normalize=True)
+        a = BlockedCorpus.collect(first, **kw)
+        grown = a.add(rest, item_key_col="vec_id", item_vec_col="embedding")
+        b = BlockedCorpus.collect(first.unionByName(rest), **kw)
+        assert (grown.keys == b.keys).all()
+        assert np.array_equal(grown.mat, b.mat)
+        assert np.array_equal(grown.b_sq.value, b.b_sq.value)
+        for c in (a, grown, b):
+            c.destroy()
+        assert not a.b_keys._jbroadcast.isValid()
+
+    @pytest.mark.parametrize("rows", [
+        [(0, [1.0, 0.0]), (1, None)],
+        [(0, None)],
+        [(0, [1.0, 0.0]), (1, [1.0])],
+    ], ids=["null", "all_null", "ragged"])
+    def test_collect_errors_equal_validate_vectors(self, spark, rows):
+        from faisssearcher_spark.functions.vector import validate_vectors
+
+        items = spark.createDataFrame(rows, "k long, v array<float>")
+        q = spark.createDataFrame([(9, [1.0, 0.0])],
+                                  "qid long, v array<float>")
+        with pytest.raises(ValueError) as spark_side:
+            validate_vectors(items, "v")
+        with pytest.raises(ValueError) as driver_side:
+            knn_join(q, items, k=1, query_vec_col="v", item_vec_col="v",
+                     query_item_col="qid", item_key_col="k",
+                     strategy="blocked")
+        assert str(driver_side.value) == str(spark_side.value)
+
+
 class TestShardedStrategy:
     """knn_join(strategy='sharded') — per-item-shard local top-k + merge —
     must be indistinguishable from the catalyst plan across shard layouts,

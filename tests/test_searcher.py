@@ -520,3 +520,313 @@ class TestRefineReviewRegressions:
             b = np.array(vecs[r["sim_item"]], dtype=np.float64)
             exact = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
             assert r["sim_val"] == pytest.approx(exact, abs=1e-9)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _last_job_id(spark) -> int:
+    """The highest job id the status tracker has seen, once the listener
+    bus has delivered every event posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+class _CountingEncoder:
+    """HashingEncoder that counts the texts it encodes in an accumulator."""
+
+    def __init__(self, acc, dim: int = 8):
+        self.inner, self.acc, self.dim = HashingEncoder(dim=dim), acc, dim
+
+    def encode(self, items):
+        self.acc.add(len(items))
+        return self.inner.encode(items)
+
+
+class TestHeldCorpus:
+    """A trained flat searcher over a corpus within
+    BLOCKED_SMALL_QUERY_ITEMS_BYTES holds the key-sorted corpus matrix
+    and its broadcasts (knn.BlockedCorpus) from train() to close():
+    search() ranks against it without a Spark job and returns what the
+    catalyst plan returns."""
+
+    KW = dict(keep_rank_no=True, score_scale=4)
+    TEXTS = ["spark join merge", "vector search index", "the",
+             "spark join merge"]   # a repeated target is one query
+
+    def assert_catalyst_parity(self, s, target, topK):
+        held = s.search(target, topK=topK, **self.KW)
+        plan = s.search(target, topK=topK, strategy="catalyst", **self.KW)
+        if isinstance(topK, int):
+            held, plan = {topK: held}, {topK: plan}
+        assert sorted(held) == sorted(plan)
+        for k in plan:
+            assert held[k].columns == plan[k].columns
+            assert _rows(held[k]) == _rows(plan[k]), k
+
+    @pytest.mark.parametrize("measurement", ["cos", "ip", "l2"])
+    def test_vector_targets_equal_catalyst(self, embeddings, measurement):
+        s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
+                          measurement=measurement).train()
+        assert s._held is not None and s.vec_dim == 64
+        q = embeddings.filter(F.col("vec_id") < 6)
+        for topK in (5, [1, 3]):
+            self.assert_catalyst_parity(s, q, topK)
+        assert s.search(q, topK=2).columns == [
+            "source_item", "sim_item", "sim_val", "label"]
+        s.close()
+
+    @pytest.mark.parametrize("measurement", ["cos", "ip", "l2"])
+    def test_text_targets_equal_catalyst(self, documents, measurement):
+        s = SparkSearcher(documents.select("text", "lang", "source"),
+                          encoder=HashingEncoder(dim=8),
+                          measurement=measurement).train()
+        assert s._held is not None
+        for topK in (5, [2, 4]):
+            self.assert_catalyst_parity(s, self.TEXTS, topK)
+        res = s.search(self.TEXTS, topK=5)
+        assert res.columns[-2:] == ["lang", "source"]
+        assert res.count() == 5 * len(set(self.TEXTS))
+        s.close()
+
+    def test_add_items_merges_into_held_matrix(self, embeddings):
+        base = embeddings.filter(F.col("vec_id") < 300)
+        s = SparkSearcher(base, vec_col="embedding", key_col="vec_id",
+                          measurement="cos").train()
+        old = s._held
+        s.add_items(base.limit(0))      # nothing new: the same handle
+        assert s._held is old
+        s.add_items(embeddings.filter(F.col("vec_id") >= 300))
+        assert s._held is not old
+        assert len(s._held.keys) == embeddings.count()
+        q = embeddings.filter(F.col("vec_id") % 97 == 0)
+        self.assert_catalyst_parity(s, q, 5)
+        full = SparkSearcher(embeddings, vec_col="embedding",
+                             key_col="vec_id", measurement="cos").train()
+        assert _rows(s.search(q, topK=5, **self.KW)) \
+            == _rows(full.search(q, topK=5, **self.KW))
+        s.close()
+        full.close()
+
+    def test_results_outlive_add_and_retrain(self, embeddings):
+        """add_items and train() drop the superseded matrix without
+        destroying its broadcasts: a result built before them still
+        reads the rows it was searched against."""
+        base = embeddings.filter(F.col("vec_id") < 300)
+        s = SparkSearcher(base, vec_col="embedding", key_col="vec_id",
+                          measurement="cos").train()
+        q = embeddings.filter(F.col("vec_id") < 3)
+        before = s.search(q, topK=4, **self.KW)
+        multi = s.search(q, topK=[1, 4], **self.KW)
+        expect = _rows(s.search(q, topK=4, strategy="catalyst", **self.KW))
+        old = s._held
+        s.add_items(embeddings.filter(F.col("vec_id") >= 300))
+        s.train()
+        assert s._held is not old and old.b_mat._jbroadcast.isValid()
+        assert _rows(before) == _rows(multi[4]) == expect
+        s.close()
+
+    def test_add_items_encodes_new_rows_once(self, spark, documents):
+        """On a holding encoder searcher, add_items encodes each new row
+        once and the union reuses the corpus cache: neither the add nor
+        the next search encodes a corpus row again."""
+        acc = spark.sparkContext.accumulator(0)
+        doc = F.col("doc_id")
+        s = SparkSearcher(documents.filter(doc % 4 == 1).select("text", "lang"),
+                          encoder=_CountingEncoder(acc)).train()
+        assert s._held is not None
+        texts = ["spark join merge", "vector search index"]
+        for r in range(3):
+            batch = documents.filter((doc % 4 == 0) & (doc % 12 == 4 * r))
+            acc.value = 0
+            s.add_items(batch.select("text", "lang"))
+            s.search(texts, topK=3).collect()
+            assert s._held is not None
+            assert acc.value == batch.count() + len(texts)
+        s.close()
+
+    def test_add_items_past_bound_releases(self, embeddings, monkeypatch):
+        from faisssearcher_spark.operators import knn as knn_mod
+
+        s = SparkSearcher(embeddings.filter(F.col("vec_id") < 300),
+                          vec_col="embedding", key_col="vec_id",
+                          measurement="cos").train()
+        assert s._held is not None
+        monkeypatch.setattr(knn_mod, "_plan_size_bytes",
+                            lambda df: knn_mod.BLOCKED_SMALL_QUERY_ITEMS_BYTES
+                            + 1)
+        s.add_items(embeddings.filter(F.col("vec_id") >= 300))
+        assert s._held is None
+        q = embeddings.filter(F.col("vec_id") % 97 == 0)
+        assert s.search(q, topK=5, **self.KW).count() == 5 * q.count()
+        s.close()
+
+    def test_hold_check_reads_measured_size(self, documents, monkeypatch):
+        """An encoder's output array counts as one element in the plan's
+        estimate, so a corpus of small texts and wide vectors looks small
+        until its cache is filled. The hold check must read the filled
+        cache: here the plan guess is within the bound, the matrix and
+        the measured cache are not."""
+        from faisssearcher_spark.operators import knn as knn_mod
+
+        items = documents.select("text", "lang")
+        bound = items.count() * 512 * 2     # a quarter of the matrix
+        monkeypatch.setattr(knn_mod, "BLOCKED_SMALL_QUERY_ITEMS_BYTES", bound)
+        for validate in (True, False):
+            s = SparkSearcher(items, encoder=HashingEncoder(dim=512))
+            guess = s._vectorize(items, "text", None)
+            assert knn_mod._plan_size_bytes(guess) < bound
+            s.train(validate=validate)
+            assert s._held is None
+            assert knn_mod._plan_size_bytes(s.corpus) > bound
+            s.close()
+
+    def test_save_load_holds(self, spark, embeddings, tmp_path):
+        s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
+                          measurement="l2").train()
+        path = str(tmp_path / "held")
+        s.save(path)
+        loaded = SparkSearcher.load(spark, path)
+        assert loaded._held is not None and loaded.vec_dim == 64
+        q = embeddings.filter(F.col("vec_id") < 5)
+        assert _rows(loaded.search(q, topK=4, **self.KW)) \
+            == _rows(s.search(q, topK=4, **self.KW))
+        self.assert_catalyst_parity(loaded, q, [1, 4])
+        s.close()
+        loaded.close()
+
+    BAD_CORPORA = {
+        "empty": [],
+        "null": [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0])],
+        "all_null": [(0, None)],
+        "ragged": [(0, [1.0, 0.0]), (1, [1.0])],
+    }
+
+    @pytest.mark.parametrize("case", sorted(BAD_CORPORA))
+    def test_train_errors_match_unheld_path(self, spark, monkeypatch, case):
+        """train(validate=False) on a holdable corpus checks the vectors
+        in its driver collect; it must raise exactly what validate_vectors
+        raises (train() on a corpus forced over the bound). An empty
+        corpus holds nothing, and raises only when validated. Local rows
+        have no size estimate (treated as large), so both are forced."""
+        from faisssearcher_spark.operators import knn as knn_mod
+
+        items = spark.createDataFrame(self.BAD_CORPORA[case],
+                                      "k long, v array<float>")
+
+        def train_error(size: int, validate: bool) -> str | None:
+            monkeypatch.setattr(knn_mod, "_plan_size_bytes", lambda df: size)
+            s = SparkSearcher(items, vec_col="v", key_col="k")
+            try:
+                s.train(validate=validate)
+            except ValueError as err:
+                return str(err)
+            assert s._held is None
+            s.close()
+            return None
+
+        over = knn_mod.BLOCKED_SMALL_QUERY_ITEMS_BYTES + 1
+        expected = train_error(over, validate=True)
+        assert expected is not None
+        assert train_error(1 << 10, validate=True) == expected
+        assert train_error(1 << 10, validate=False) == (
+            None if case == "empty" else expected)
+
+    def test_over_bound_keeps_knn_join_routing(self, embeddings,
+                                               monkeypatch):
+        from faisssearcher_spark.operators import knn as knn_mod
+
+        monkeypatch.setattr(knn_mod, "_plan_size_bytes",
+                            lambda df: knn_mod.BLOCKED_SMALL_QUERY_ITEMS_BYTES
+                            + 1)
+        s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
+                          measurement="cos").train()
+        assert s._held is None and s.vec_dim == 64
+        sharded, calls = knn_mod._knn_join_sharded, []
+
+        def spy(*args, **kwargs):
+            calls.append(1)
+            return sharded(*args, **kwargs)
+
+        monkeypatch.setattr(knn_mod, "_knn_join_sharded", spy)
+        q = embeddings.filter(F.col("vec_id") < 4)
+        self.assert_catalyst_parity(s, q, 3)
+        assert calls == [1]      # small queries, corpus "over 8 MB"
+        s.close()
+
+    def test_close_destroys_broadcasts(self, embeddings):
+        s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
+                          measurement="l2").train()
+        held = s._held
+        broadcasts = [held.b_mat, held.b_keys, held.b_sq]
+        assert all(b._jbroadcast.isValid() for b in broadcasts)
+        s.unpersist()
+        assert s._held is held           # unpersist keeps the matrix
+        s.close()
+        assert s._held is None
+        assert not any(b._jbroadcast.isValid() for b in broadcasts)
+        with pytest.raises(RuntimeError, match="not trained"):
+            s.search(embeddings.limit(1), topK=1)
+
+    def test_search_launches_no_job(self, spark, embeddings, documents):
+        vec = SparkSearcher(embeddings, vec_col="embedding",
+                            key_col="vec_id", measurement="cos").train()
+        text = SparkSearcher(documents.select("text", "lang"),
+                             encoder=HashingEncoder(dim=8)).train()
+        q = embeddings.filter(F.col("vec_id") < 4)
+        last = _last_job_id(spark)
+        results = [vec.search(q, topK=3), text.search(self.TEXTS, topK=3),
+                   *vec.search(q, topK=[1, 2]).values()]
+        assert _last_job_id(spark) == last
+        for res in results:
+            res.collect()
+        assert _last_job_id(spark) > last    # the tracker does see jobs
+        vec.close()
+        text.close()
+
+
+class TestAddItemsValidation:
+    """A batch add_items rejects leaves the searcher as it was: corpus,
+    items, held matrix and index all unchanged."""
+
+    BAD = {
+        "null": ([(9001, None, 0)], "NULL vectors"),
+        "ragged": ([(9001, [1.0] * 64, 0), (9002, [1.0] * 63, 0)],
+                   "ragged"),
+        # checked as part of the union, as validate_vectors over it does
+        "wrong_dim": ([(9001, [1.0] * 32, 0)], r"dims in \[32, 64\]"),
+    }
+
+    @pytest.mark.parametrize("case", sorted(BAD))
+    @pytest.mark.parametrize("index_param", [None, "IVF4"],
+                             ids=["held", "indexed"])
+    def test_bad_batch_leaves_searcher_unchanged(self, spark, embeddings,
+                                                 monkeypatch, index_param,
+                                                 case):
+        from faisssearcher_spark.operators import knn as knn_mod
+
+        # local rows have no size estimate: pin one so that the union
+        # stays within the hold bound
+        monkeypatch.setattr(knn_mod, "_plan_size_bytes", lambda df: 1 << 10)
+        base = embeddings.filter(F.col("vec_id") < 200)
+        s = SparkSearcher(base, vec_col="embedding", key_col="vec_id",
+                          measurement="cos", index_param=index_param).train()
+        held = s._held
+        assert (held is not None) == (index_param is None)
+        q = embeddings.filter(F.col("vec_id") < 3)
+        before = _rows(s.search(q, topK=3, keep_rank_no=True,
+                                score_scale=4))
+        rows, msg = self.BAD[case]
+        batch = spark.createDataFrame(
+            rows, "vec_id long, embedding array<float>, label int")
+        with pytest.raises(ValueError, match=msg):
+            s.add_items(batch, validate=True)
+        assert s.corpus.count() == s.items.count() == 200
+        assert s._held is held
+        if held is not None:
+            assert held.b_mat._jbroadcast.isValid()
+        assert _rows(s.search(q, topK=3, keep_rank_no=True,
+                              score_scale=4)) == before
+        s.close()

@@ -1,15 +1,21 @@
 """Small-query-set routing probe for ``knn_join(strategy="auto")``.
 
-Times one facade search of a small query set (raw-vector cosine
-``SparkSearcher``, the ``flat_search`` shape) against corpora of
-growing size, for each exact strategy named, in alternating order
+Times train plus ``--searches`` facade searches of a small query set
+(raw-vector cosine ``SparkSearcher``, the ``flat_search`` shape) against
+corpora of growing size, for each strategy named, in alternating order
 within one Spark session, and checks every result against a numpy
-top-k. Prints one JSON line per corpus size with the corpus's Catalyst
-size estimate (the number ``_auto_strategy`` sees), the per-strategy
-median and quartiles in seconds, and how many rounds each strategy won.
+top-k. ``held`` is the path a searcher within the hold bound takes: its
+``train()`` collects the corpus once into the blocked kernel's matrix
+and every search ranks against it (the tool lifts the bound so every
+size holds); ``blocked`` / ``sharded`` / ``catalyst`` search a searcher
+that holds nothing through ``knn_join`` with that strategy. Prints one
+JSON line per corpus size with the corpus's Catalyst size estimate (the
+number ``_auto_strategy`` and the hold bound see), the per-strategy
+median and quartiles of a round (train + searches) in seconds, and how
+many rounds each strategy won.
 
     PYTHONPATH=. SPARK_GRAFT_CPUS=3 python tools/ab_knn_route.py \\
-        --items 4096,32768,131072 --strategies blocked,sharded --rounds 10
+        --items 4096,32768,131072 --strategies held,sharded --searches 8
 
 ``catalyst`` (the plan the facade used before its default became
 ``auto``) scores in the interpreter: keep it to small ``--items``.
@@ -56,15 +62,37 @@ def main() -> None:
                     help="comma-separated corpus row counts")
     ap.add_argument("--queries", type=int, default=64)
     ap.add_argument("--dim", type=int, default=64)
-    ap.add_argument("--strategies", default="blocked,sharded")
+    ap.add_argument("--strategies", default="held,sharded")
+    ap.add_argument("--searches", type=int, default=1,
+                    help="searches per train in one timed round")
     ap.add_argument("--rounds", type=int, default=10)
     ap.add_argument("--seed", type=int, default=7)
     args = ap.parse_args()
     strategies = args.strategies.split(",")
 
     from faisssearcher_spark import SparkSearcher
-    from faisssearcher_spark.operators.knn import _plan_size_bytes
+    from faisssearcher_spark.operators import knn
     from faisssearcher_spark.session import get_spark
+
+    bound = knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES
+
+    def timed_round(cpath, target, strategy):
+        """Seconds for train + the searches, and each search's rows."""
+        held = strategy == "held"
+        knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES = (
+            knn.ITEMS_MEMORY_CAP_BYTES if held else -1)
+        t0 = time.perf_counter()
+        searcher = SparkSearcher(spark.read.parquet(cpath), vec_col="vec",
+                                 key_col="key", measurement="cos").train()
+        assert (searcher._held is not None) == held
+        results = [searcher.search(
+            target, topK=K, strategy="blocked" if held else strategy)
+            .select("source_item", "sim_item", "sim_val").collect()
+            for _ in range(args.searches)]
+        seconds = time.perf_counter() - t0
+        estimate = knn._plan_size_bytes(searcher.corpus)
+        searcher.close()
+        return seconds, results, estimate
 
     spark = get_spark("ab_knn_route")
     spark.sparkContext.setLogLevel("ERROR")
@@ -83,10 +111,6 @@ def main() -> None:
             write_vectors(qpath, qkeys, qmat)
             truth = oracle_topk(qmat, mat, keys)
 
-            searcher = SparkSearcher(spark.read.parquet(cpath), vec_col="vec",
-                                     key_col="key", measurement="cos").train()
-            for frame in searcher._cached_state():
-                frame.count()
             target = spark.read.parquet(qpath).select("key", "vec")
             times: dict = {s: [] for s in strategies}
             wrong: dict = {s: 0 for s in strategies}
@@ -95,32 +119,31 @@ def main() -> None:
                 order = strategies if r % 2 else strategies[::-1]
                 lap = {}
                 for s in order:
-                    t0 = time.perf_counter()
-                    rows = searcher.search(target, topK=K, strategy=s).select(
-                        "source_item", "sim_item", "sim_val").collect()
-                    lap[s] = time.perf_counter() - t0
-                    got: dict = {}
-                    for row in sorted(rows, key=lambda x: (-x["sim_val"],
-                                                           x["sim_item"])):
-                        got.setdefault(row["source_item"], []).append(
-                            row["sim_item"])
-                    wrong[s] += sum(got.get(int(q), []) != t
-                                    for q, t in zip(qkeys, truth))
+                    lap[s], results, estimate = timed_round(cpath, target, s)
+                    for rows in results:
+                        got: dict = {}
+                        for row in sorted(rows, key=lambda x: (-x["sim_val"],
+                                                               x["sim_item"])):
+                            got.setdefault(row["source_item"], []).append(
+                                row["sim_item"])
+                        wrong[s] += sum(got.get(int(q), []) != t
+                                        for q, t in zip(qkeys, truth))
                 if r:
                     for s, v in lap.items():
                         times[s].append(v)
                     wins[min(lap, key=lap.get)] += 1
             print(json.dumps({
                 "items": n, "queries": args.queries, "dim": args.dim,
-                "corpus_estimate_bytes": _plan_size_bytes(searcher.corpus),
+                "searches_per_train": args.searches,
+                "corpus_estimate_bytes": estimate,
                 "median_s": {s: round(float(np.median(v)), 4)
                              for s, v in times.items()},
                 "quartiles_s": {s: [round(float(x), 4) for x in
                                     np.percentile(v, [25, 75])]
                                 for s, v in times.items()},
                 "wins": wins, "wrong_queries": wrong}), flush=True)
-            searcher.close()
     finally:
+        knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES = bound
         shutil.rmtree(tmp, ignore_errors=True)
         spark.stop()
 

@@ -1,17 +1,31 @@
-"""Dump audited physical plans for the flagship queries into PLANS.md.
+"""Dump audited physical plans for the flagship queries into PLANS.md,
+or the formatted plans of chosen queries into a directory.
 
-Each section shows the formatted plan plus the scale-critical properties
-asserted in tests/test_plans.py, so plan quality is reviewable without
-re-running Spark. Regenerate with: python tools/explain_plans.py
+Without arguments each AUDITS section gets the formatted plan plus the
+scale-critical properties asserted in tests/test_plans.py, so plan quality
+is reviewable without re-running Spark:
+
+    python tools/explain_plans.py
+
+``--queries`` writes ``.explain('formatted')`` of each named registry
+query to ``<out-dir>/<query>_<tag>.txt`` instead. ``--code-root`` selects
+the engine checkout the plans come from, so a before/after pair for a
+change is two runs:
+
+    python tools/explain_plans.py --queries searcher_text_knn,sample_dsir \
+        --out-dir plans/after --tag after
+    python tools/explain_plans.py --code-root /tmp/base \
+        --queries searcher_text_knn,sample_dsir --out-dir plans/before \
+        --tag before
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.01"
 
 AUDITS = {
@@ -259,13 +273,26 @@ AUDITS = {
 }
 
 
-def main() -> None:
-    from faisssearcher_spark import registry
-    from faisssearcher_spark.session import get_spark
+def dump_queries(spark, registry, names, sf_dir, out_dir, tag) -> None:
+    """One formatted-plan file per query; a query that fails to build
+    gets its error in the file and the loop goes on."""
+    os.makedirs(out_dir, exist_ok=True)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
+        .fromString("formatted")
+    for name in names:
+        try:
+            df = registry.ALL_QUERY_FNS[name](spark, sf_dir)
+            plan = df._jdf.queryExecution().explainString(mode)
+        except Exception as exc:  # noqa: BLE001
+            plan = f"<failed to build: {exc!r}>"
+        hdr = (f"== {name} ({tag}) — explain('formatted') at {sf_dir}, "
+               f"engine code: {os.path.dirname(registry.__file__)} ==\n")
+        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
+            fh.write(hdr + "\n" + plan + "\n")
+        print("wrote", name, tag, flush=True)
 
-    spark = get_spark("plans")
-    spark.sparkContext.setLogLevel("ERROR")
 
+def audit(spark, registry) -> None:
     out = ["# Physical plans — flagship queries (sf0.01, regenerated)",
            "",
            "Generated by `tools/explain_plans.py`; the same properties are",
@@ -285,10 +312,34 @@ def main() -> None:
         out.append(plan.strip()[:4000])
         out.append("```")
         out.append("")
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--queries", help="comma-separated registry query "
+                    "names to dump instead of the PLANS.md audit")
+    ap.add_argument("--out-dir", default=os.path.join(REPO, "plans"))
+    ap.add_argument("--tag", default="after",
+                    help="file-name suffix, e.g. before / after")
+    ap.add_argument("--sf", default=SF_DIR, help="scale-factor data dir")
+    ap.add_argument("--code-root", default=REPO,
+                    help="checkout whose engine code builds the plans")
+    args = ap.parse_args()
+    sys.path.insert(0, args.code_root)
+
+    from faisssearcher_spark import registry
+    from faisssearcher_spark.session import get_spark
+
+    spark = get_spark("plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.queries:
+        dump_queries(spark, registry, args.queries.split(","), args.sf,
+                     args.out_dir, args.tag)
+    else:
+        audit(spark, registry)
 
 
 if __name__ == "__main__":
