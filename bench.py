@@ -168,21 +168,16 @@ def persistent_rdds(sc) -> dict:
             "names": sorted(str(r.name()) for r in rdds)}
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from faisssearcher_spark.session import get_spark
-    from faisssearcher_spark import registry
-
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+def warm_session(spark) -> None:
+    """Pay a session's one-time first-use costs before anything is timed,
+    so the first timed query measures the query. Shared by bench.py and
+    the tools that time legs in their own session (tools/profile_leg.py,
+    ab_iso.py, ab_cold.py)."""
+    from pyspark.sql import functions as F
 
     # JVM/codegen warmup (generic — touches no bench table): JIT the
     # codegen'd aggregate/window/HOF paths so the first timed query
     # measures the query, not interpreter-to-JIT transition.
-    from pyspark.sql import functions as F
     warm = spark.range(100_000).select(
         F.col("id"), F.transform(F.sequence(F.lit(1), F.lit(8)),
                                  lambda i: i * F.col("id")).alias("v"))
@@ -195,7 +190,6 @@ def main() -> None:
     warm.limit(1000).toPandas()
     # ...and spawn the Python worker pool (Arrow pandas_udf stages) so the
     # first encoder query measures encoding, not 32 process forks.
-    import pandas as pd  # noqa: F401
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -208,12 +202,29 @@ def main() -> None:
     # ...and MLlib's first-touch class loading (KMeans jars + Breeze init
     # cost ~10 s the first time any estimator fits in a session — measured
     # as dedup_semantic's cold-warm gap; a 2-row fit pays it here so the
-    # timed k-means queries measure clustering, not classloading).
+    # timed k-means fits measure clustering, not classloading). The IVF-PQ
+    # and PQ indexes train on the driver and need none of it; the MLlib
+    # fits left are ann_ivf_recall's IVFIndex (train_mode="mllib") and
+    # the classifier's LogisticRegression (operators/classifier.py).
     from pyspark.ml.clustering import KMeans as _WKM
     from pyspark.ml.functions import array_to_vector as _wav
     _wkf = spark.range(2).select(
         _wav(F.array(F.col("id").cast("double"))).alias("features"))
     _WKM(k=2, maxIter=1).fit(_wkf)
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from faisssearcher_spark.session import get_spark
+    from faisssearcher_spark import registry
+
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+
+    warm_session(spark)
 
     timings: dict[str, float] = {}
     warm: dict[str, float] = {}

@@ -11,13 +11,15 @@ candidate set comes from an equi-join on a derived bucket key:
   ``num_bits``-bit bucket; queries probe their own bucket (+ optional
   multi-probe neighbors at hamming 1). The items⋈queries meeting is an
   equi-join on the bucket key → shuffled hash join, no cross product.
-- :class:`IVFIndex` — the IVF analog: k-means coarse quantizer (MLlib),
-  items assigned to nearest centroid cell, queries probe ``nprobe``
-  nearest cells. Equivalent semantics to FAISS ``IVF<k>,Flat``.
+- :class:`IVFIndex` — the IVF analog: k-means coarse quantizer (MLlib
+  by default, or seeded driver Lloyd on a bounded sample), items
+  assigned to nearest centroid cell, queries probe ``nprobe`` nearest
+  cells. Equivalent semantics to FAISS ``IVF<k>,Flat``.
 - :class:`PQIndex` — product quantization with ADC search: per-subspace
   codebooks, items stored as m codes, query-time LUT accumulation.
   Equivalent semantics to FAISS ``PQ<m>``; no faiss dependency.
 - :class:`IVFPQIndex` — cells + residual PQ (FAISS ``IVF<n>,PQ<m>``):
+  centroids and codebooks train on one driver sample in one Spark job,
   candidate pruning via the cell equi-join, separable inner-product ADC
   (``q·c_cell + Σ LUT``), only m-byte codes shuffle.
 - :class:`SQIndex` — per-dimension scalar quantizer (FAISS ``SQ8``):
@@ -25,6 +27,10 @@ candidate set comes from an equi-join on a derived bucket key:
 - :func:`faiss_topk` — optional real-FAISS path: per-executor search over a
   broadcast serialized index inside ``mapInPandas``; import-gated because
   faiss is not a hard dependency.
+
+The quantizers of PQ, SQ and IVF-PQ (and IVF's ``"sample"`` mode) train
+in the driver on the first ``train_sample`` rows by key, the way the
+reference trains its FAISS index (faiss_searcher.py:116-125).
 
 Recall is validated against the exact path (SURVEY.md §5.4) — the same way
 FAISS validates itself.
@@ -74,6 +80,62 @@ def _read_index_meta(spark, path: str) -> dict:
 
     return json.loads(
         spark.read.parquet(os.path.join(path, "meta")).first()["meta"])
+
+
+#: FAISS trains a coarse quantizer on at most this many sample points per
+#: centroid (ClusteringParameters.max_points_per_centroid); more rows
+#: cost Lloyd time without moving the centroids measurably
+MAX_POINTS_PER_CENTROID = 256
+
+
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; an all-zero row stays zero."""
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    return mat / np.where(norms == 0, 1.0, norms)
+
+
+def _driver_sample(items: DataFrame, key_col: str, vec_col: str,
+                   limit: int, owner: str) -> np.ndarray:
+    """The first ``limit`` rows by key, as a float64 matrix, in one job.
+
+    orderBy(key).limit(n) = per-partition top-n + driver merge
+    (TakeOrdered): DETERMINISTIC given the corpus, unlike a bare limit
+    whose rows depend on partition layout — load()'s rebuild-from-corpus
+    contract needs the same sample anywhere. FAISS trains its quantizers
+    on a bounded sample the same way."""
+    sample = items.select(F.col(key_col).alias("k"),
+                          F.col(vec_col).alias("v")) \
+        .orderBy("k").limit(limit).toPandas()
+    if not len(sample):
+        raise ValueError(f"{owner}.fit needs a non-empty corpus")
+    return np.array(sample["v"].to_list(), dtype=np.float64)
+
+
+def _nearest_cells(mat: np.ndarray, cents: np.ndarray, n: int,
+                   spherical: bool) -> np.ndarray:
+    """(rows, n) int32 ids of each row's ``n`` nearest centroids by L2
+    (on unit rows when ``spherical``). The one assignment routine: the
+    executor-side pandas_udf and the driver-side sample assignment both
+    call it, so training and encoding cannot disagree on a row's cell."""
+    if spherical:
+        mat = _unit_rows(mat)
+    d = (mat * mat).sum(axis=1, keepdims=True) \
+        - 2.0 * (mat @ cents.T) + (cents * cents).sum(axis=1)[None, :]
+    # stable argsort → distance ties break by smallest cell id
+    return np.argsort(d, kind="stable", axis=1)[:, :n].astype("int32")
+
+
+def _cell_residuals(mat: np.ndarray, cents: np.ndarray, normalize: bool
+                    ) -> "tuple[np.ndarray, np.ndarray]":
+    """IVF-PQ's cell assignment: each row's nearest spherical cell (the
+    coarse quantization IVFIndex uses for cos and ip) and its residual
+    x − c_cell, x unit-scaled when ``normalize``. fit() trains the
+    codebooks on the driver sample's residuals and the encode pandas_udf
+    codes the executors' through this one routine."""
+    cells = _nearest_cells(mat, cents, 1, True)[:, 0]
+    if normalize:   # ip scores raw magnitudes (review r5 #1);
+        mat = _unit_rows(mat)   # q·x = q·c + q·(x−c) either way
+    return cells, mat - cents[cells]
 
 
 class SignLSH:
@@ -176,6 +238,24 @@ class _ItemsLifecycleMixin:
         self.unpersist(blocking=True)
         self._items = None
 
+    def _append(self, rows: DataFrame) -> None:
+        """FAISS ``index.add``: union ``rows`` into the cached state.
+        The union's cache fills before the superseded one is released —
+        released first, the next use would recompute the whole old state
+        from its lineage (a re-encode of every corpus row). The alias
+        keeps a union ``old`` whole: unionByName flattens it into its
+        inputs otherwise, bypassing its cache."""
+        old = self._items
+        union = old.alias("__items").unionByName(
+            rows.select(*old.columns)).cache()
+        try:
+            union.count()
+        except Exception:
+            union.unpersist()
+            raise
+        old.unpersist()
+        self._items = union
+
     # context-manager sugar: `with PQIndex(...).fit(items) as idx:`
     # guarantees the executor-storage release on any exit path
     def __enter__(self):
@@ -189,11 +269,25 @@ class IVFIndex(_ItemsLifecycleMixin):
     """IVF-style coarse quantization: k-means cells + nprobe search.
 
     Parity target: FAISS ``index_factory(dim, "IVF<n>,Flat", metric)``
-    (faiss_searcher.py:104). fit() trains MLlib k-means (distributed) and
-    assigns every item to its nearest centroid; search() finds each query's
-    ``nprobe`` nearest centroids (broadcast join against the tiny centroid
-    table) and runs exact scoring *within the probed cells only* — the
+    (faiss_searcher.py:104). fit() trains the centroids and assigns every
+    item to its nearest one; search() finds each query's ``nprobe``
+    nearest centroids (broadcast join against the tiny centroid table)
+    and runs exact scoring *within the probed cells only* — the
     item⋈query meeting is an equi-join on cell id.
+
+    ``train_mode="mllib"`` (the default) fits MLlib k-means over the
+    whole corpus: one Spark job per iteration plus k-means‖ init.
+    ``"sample"`` runs seeded driver Lloyd on one bounded sample, as
+    :class:`IVFPQIndex` always does. The two partition differently.
+    Measured at ``ann_ivf_recall``'s parameters (seed 42, 16 cells,
+    nprobe 10) on the 500-vector sf0.001 / sf0.01 corpora: MLlib's cells
+    hold 1 to 60–67 rows (std 18–21) against 22–40 (std 4) for driver
+    Lloyd, and its k-means objective is worse (445.3 / 447.1 against
+    442.7 / 443.4). Its lopsided cells make a query scan 77–83% of the
+    corpus instead of 62–64%, which is why it reads the higher recall
+    (0.955 / 0.965 against 0.89): more rows scanned, not a better
+    partition. The default stays MLlib because that gate's 0.9 floor is
+    calibrated on it.
     """
 
     def __init__(self, n_cells: int = 64, nprobe: int = 4, seed: int = 42,
@@ -246,22 +340,13 @@ class IVFIndex(_ItemsLifecycleMixin):
         ships to executors once with the task closure.
         """
         cents = np.ascontiguousarray(self.centroids, dtype=np.float64)
-        c_sq = (cents * cents).sum(axis=1)
-        nn = min(n, len(cents))
         spherical = self._spherical
 
         @F.pandas_udf("array<int>")
         def _nearest(batch: pd.Series) -> pd.Series:
             mat = np.array(batch.to_list(), dtype=np.float64)
-            if spherical:
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                mat = mat / np.where(norms == 0, 1.0, norms)
-            d = (mat * mat).sum(axis=1, keepdims=True) \
-                - 2.0 * (mat @ cents.T) + c_sq[None, :]
-            # stable argsort → distance ties break by smallest cell id,
-            # matching the former array_sort((d, cell) struct) order
-            idx = np.argsort(d, kind="stable", axis=1)[:, :nn]
-            return pd.Series([row.tolist() for row in idx.astype("int32")])
+            idx = _nearest_cells(mat, cents, n, spherical)
+            return pd.Series([row.tolist() for row in idx])
 
         return _nearest(M.as_double(vec_col))
 
@@ -272,19 +357,10 @@ class IVFIndex(_ItemsLifecycleMixin):
                              "index would silently overwrite it; rename "
                              "it first")
         if self.train_mode == "sample":
-            # orderBy(key).limit(n) = per-partition top-n + driver merge
-            # (TakeOrdered): DETERMINISTIC given the corpus, unlike a bare
-            # limit whose rows depend on partition layout — load()'s
-            # rebuild-from-corpus contract needs the same sample anywhere
-            sample = items.select(F.col(item_key_col).alias("k"),
-                                  F.col(item_vec_col).alias("v")) \
-                .orderBy("k").limit(self.train_sample).toPandas()
-            if not len(sample):
-                raise ValueError("IVFIndex.fit needs a non-empty corpus")
-            mat = np.array(sample["v"].to_list(), dtype=np.float64)
+            mat = _driver_sample(items, item_key_col, item_vec_col,
+                                 self.train_sample, "IVFIndex")
             if self._spherical:
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                mat = mat / np.where(norms == 0, 1.0, norms)
+                mat = _unit_rows(mat)
             # one-subspace PQ training IS k-means over the full vector
             self.centroids = _train_pq_codebooks(
                 mat, 1, self.n_cells, self.max_iter, self.seed)[0]
@@ -326,16 +402,12 @@ class IVFIndex(_ItemsLifecycleMixin):
         NOT retrained — FAISS semantics) and union them into the fitted
         corpus. Metadata-only union: both sides keep their partitioning,
         so incremental ingest costs one assignment pass over the new
-        rows."""
+        rows (and one job that fills the union's cache)."""
         if self._items is None:
             raise RuntimeError("IVFIndex is not fit; call fit() first")
-        assigned = items.withColumn(
+        self._append(items.withColumn(
             "cell",
-            F.element_at(self._nearest_cells_expr(self._item_vec, 1), 1))
-        old = self._items
-        self._items = old.unionByName(
-            assigned.select(*old.columns)).cache()
-        old.unpersist()
+            F.element_at(self._nearest_cells_expr(self._item_vec, 1), 1)))
         return self
 
     def search(self, queries: DataFrame, *, k: int = 10,
@@ -807,8 +879,7 @@ class PQIndex(_ItemsLifecycleMixin):
         def _enc(batch: pd.Series) -> pd.Series:
             mat = np.array(batch.to_list(), dtype=np.float64)
             if spherical:
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                mat = mat / np.where(norms == 0, 1.0, norms)
+                mat = _unit_rows(mat)
             if rot is not None:   # OPQ: rotate AFTER normalize (the
                 mat = mat @ rot   # rotation was trained on unit vectors)
             codes = np.empty((len(mat), m), dtype=np.int16)
@@ -828,16 +899,10 @@ class PQIndex(_ItemsLifecycleMixin):
             raise ValueError("items already has a '__codes' column — the "
                              "index would silently overwrite it; rename "
                              "it first")
-        # deterministic bounded sample (TakeOrdered) — see IVFIndex.fit
-        sample = items.select(F.col(item_key_col).alias("k"),
-                              F.col(item_vec_col).alias("v")) \
-            .orderBy("k").limit(self.train_sample).toPandas()
-        if not len(sample):
-            raise ValueError("PQIndex.fit needs a non-empty corpus")
-        mat = np.array(sample["v"].to_list(), dtype=np.float64)
+        mat = _driver_sample(items, item_key_col, item_vec_col,
+                             self.train_sample, "PQIndex")
         if self._spherical:
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            mat = mat / np.where(norms == 0, 1.0, norms)
+            mat = _unit_rows(mat)
         if self.opq:
             self.rotation, self.codebooks = _train_opq_rotation(
                 mat, self.m, self.ksub, self.train_iters, self.seed,
@@ -857,10 +922,8 @@ class PQIndex(_ItemsLifecycleMixin):
         encode pass over the new rows; metadata-only union."""
         if self._items is None:
             raise RuntimeError("PQIndex is not fit; call fit() first")
-        coded = items.withColumn("__codes", self._codes_expr(self._vec_col))
-        old = self._items
-        self._items = old.unionByName(coded.select(*old.columns)).cache()
-        old.unpersist()
+        self._append(
+            items.withColumn("__codes", self._codes_expr(self._vec_col)))
         return self
 
     # -- ADC search --------------------------------------------------------
@@ -891,8 +954,7 @@ class PQIndex(_ItemsLifecycleMixin):
                              "(the query LUT tensor is driver-built)")
         qmat = np.array(q_pdf[query_vec_col].to_list(), dtype=np.float64)
         if self._spherical:
-            norms = np.linalg.norm(qmat, axis=1, keepdims=True)
-            qmat = qmat / np.where(norms == 0, 1.0, norms)
+            qmat = _unit_rows(qmat)
         if self.rotation is not None:   # OPQ: same rotation as encode —
             qmat = qmat @ self.rotation  # (Rq)·(Rx) = q·x, exact scores
         books = self.codebooks
@@ -1065,8 +1127,7 @@ class SQIndex(_ItemsLifecycleMixin):
         def _enc(batch: pd.Series) -> pd.Series:
             mat = np.array(batch.to_list(), dtype=np.float64)
             if spherical:
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                mat = mat / np.where(norms == 0, 1.0, norms)
+                mat = _unit_rows(mat)
             codes = np.clip(np.rint((mat - vmin) / scale),
                             0, levels).astype(np.int16)
             return pd.Series(list(codes))
@@ -1079,16 +1140,10 @@ class SQIndex(_ItemsLifecycleMixin):
             raise ValueError("items already has a '__codes' column — the "
                              "index would silently overwrite it; rename "
                              "it first")
-        # deterministic bounded sample (TakeOrdered) — see IVFIndex.fit
-        sample = items.select(F.col(item_key_col).alias("k"),
-                              F.col(item_vec_col).alias("v")) \
-            .orderBy("k").limit(self.train_sample).toPandas()
-        if not len(sample):
-            raise ValueError("SQIndex.fit needs a non-empty corpus")
-        mat = np.array(sample["v"].to_list(), dtype=np.float64)
+        mat = _driver_sample(items, item_key_col, item_vec_col,
+                             self.train_sample, "SQIndex")
         if self._spherical:
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            mat = mat / np.where(norms == 0, 1.0, norms)
+            mat = _unit_rows(mat)
         self.vmin, self.vmax = mat.min(0), mat.max(0)
         self._item_key, self._vec_col = item_key_col, item_vec_col
         self._items = items.withColumn(
@@ -1098,10 +1153,8 @@ class SQIndex(_ItemsLifecycleMixin):
     def add_items(self, items: DataFrame) -> "SQIndex":
         if self._items is None:
             raise RuntimeError("SQIndex is not fit; call fit() first")
-        coded = items.withColumn("__codes", self._codes_expr(self._vec_col))
-        old = self._items
-        self._items = old.unionByName(coded.select(*old.columns)).cache()
-        old.unpersist()
+        self._append(
+            items.withColumn("__codes", self._codes_expr(self._vec_col)))
         return self
 
     def search(self, queries: DataFrame, *, k: int = 10,
@@ -1119,8 +1172,7 @@ class SQIndex(_ItemsLifecycleMixin):
                              "(the query matrix is driver-collected)")
         qmat = np.array(q_pdf[query_vec_col].to_list(), dtype=np.float64)
         if self._spherical:
-            norms = np.linalg.norm(qmat, axis=1, keepdims=True)
-            qmat = qmat / np.where(norms == 0, 1.0, norms)
+            qmat = _unit_rows(qmat)
         spark = queries.sparkSession
         b_q = spark.sparkContext.broadcast(qmat)
         b_qid = spark.sparkContext.broadcast(
@@ -1230,11 +1282,18 @@ class IVFPQIndex(_ItemsLifecycleMixin):
     (index_factory strings the reference forwards verbatim,
     faiss_searcher.py:104), natively in Spark, cosine/inner-product only.
 
-    fit(): spherical k-means cells (:class:`IVFIndex`), then PQ codebooks
-    trained on RESIDUALS (x − assigned centroid) — residuals have far
-    less variance than raw vectors, so the same code budget quantizes
-    finer (the reason FAISS encodes residuals). Items store (cell,
-    m codes): ~m bytes instead of d floats.
+    fit(): one deterministic driver sample (the first ``train_sample``
+    rows by key, one Spark job) trains everything, the way the reference
+    trains its FAISS index in the driver (faiss_searcher.py:116-125):
+    spherical coarse centroids by seeded Lloyd on its first
+    ``MAX_POINTS_PER_CENTROID · n_cells`` rows (FAISS's cap), then the
+    sample's cells — assigned by the same routine the executors use —
+    give the RESIDUALS (x − assigned centroid) the PQ/OPQ codebooks are
+    trained on. Residuals have far less variance than raw vectors, so
+    the same code budget quantizes finer (the reason FAISS encodes
+    residuals). Items store (cell, m codes): ~m bytes instead of d
+    floats, in one cached codes frame built straight from the corpus;
+    the inner :class:`IVFIndex` holds the centroids only.
 
     search(): for inner-product scores the residual decomposition is
     separable — ``q·x ≈ q·c_cell + Σ_j LUT[j, code_j]`` with ONE
@@ -1280,23 +1339,20 @@ class IVFPQIndex(_ItemsLifecycleMixin):
         self._item_key = None
         self._vec_col = None
 
-    def _residual_codes_expr(self, vec_col: str, cell_col: str) -> Column:
+    def _encode_expr(self, vec_col: str) -> Column:
+        """struct<cell, codes>: each row's nearest cell and the PQ codes
+        of its residual, in one pandas_udf pass."""
         books = np.ascontiguousarray(self.codebooks)
         cents = np.ascontiguousarray(self._ivf.centroids)
         m, dsub = self.m, books.shape[2]
         rot = None if self.rotation is None \
             else np.ascontiguousarray(self.rotation)
-
         normalize = self.metric == "cos"
 
-        @F.pandas_udf("array<smallint>")
-        def _enc(vec: pd.Series, cell: pd.Series) -> pd.Series:
-            mat = np.array(vec.to_list(), dtype=np.float64)
-            if normalize:   # ip scores raw magnitudes (review r5 #1);
-                # q·x = q·c + q·(x−c) is exact either way
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                mat = mat / np.where(norms == 0, 1.0, norms)
-            res = mat - cents[cell.to_numpy()]
+        @F.pandas_udf("cell int, codes array<smallint>")
+        def _enc(vec: pd.Series) -> pd.DataFrame:
+            cell, res = _cell_residuals(
+                np.array(vec.to_list(), dtype=np.float64), cents, normalize)
             if rot is not None:   # OPQ: rotate the residual (q·r ==
                 res = res @ rot   # (qR)·(rR) keeps ADC exact)
             codes = np.empty((len(res), m), dtype=np.int16)
@@ -1306,30 +1362,43 @@ class IVFPQIndex(_ItemsLifecycleMixin):
                 d2 = ((sub * sub).sum(1, keepdims=True)
                       - 2.0 * sub @ cb.T + (cb * cb).sum(1)[None, :])
                 codes[:, j] = d2.argmin(1)
-            return pd.Series(list(codes))
+            return pd.DataFrame({"cell": cell, "codes": list(codes)})
 
-        return _enc(M.as_double(vec_col), F.col(cell_col))
+        return _enc(M.as_double(vec_col))
+
+    def _coarse(self, centroids: np.ndarray, item_key_col: str,
+                item_vec_col: str) -> None:
+        """Hold the coarse centroids in an unfitted :class:`IVFIndex`;
+        the codes frame is the index's only cached state."""
+        self._ivf = IVFIndex(self.n_cells, self.nprobe, self.seed,
+                             self.metric, max_iter=self.kmeans_max_iter)
+        self._ivf.centroids = centroids
+        self._ivf._item_key, self._ivf._item_vec = item_key_col, item_vec_col
+        self._item_key, self._vec_col = item_key_col, item_vec_col
+
+    def _coded(self, items: DataFrame) -> DataFrame:
+        """``items`` with its ``cell`` and residual ``__codes`` columns."""
+        return items.withColumn("__enc", self._encode_expr(self._vec_col)) \
+            .select(*items.columns, F.col("__enc.cell").alias("cell"),
+                    F.col("__enc.codes").alias("__codes"))
 
     def fit(self, items: DataFrame, *, item_key_col: str = "item",
             item_vec_col: str = "embedding") -> "IVFPQIndex":
-        if "__codes" in items.columns:   # guard BEFORE the expensive train
-            raise ValueError("items already has a '__codes' column — the "
-                             "index would silently overwrite it; rename "
-                             "it first")
-        self._ivf = IVFIndex(self.n_cells, self.nprobe, self.seed,
-                             self.metric,
-                             max_iter=self.kmeans_max_iter).fit(
-            items, item_key_col=item_key_col, item_vec_col=item_vec_col)
-        assigned = self._ivf.assignments()
-        # deterministic bounded sample (TakeOrdered) — see IVFIndex.fit
-        sample = assigned.select(F.col(item_key_col).alias("k"),
-                                 F.col(item_vec_col).alias("v"), "cell") \
-            .orderBy("k").limit(self.train_sample).toPandas()
-        mat = np.array(sample["v"].to_list(), dtype=np.float64)
-        if self.metric == "cos":
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            mat = mat / np.where(norms == 0, 1.0, norms)
-        residuals = mat - self._ivf.centroids[sample["cell"].to_numpy()]
+        for col in ("cell", "__codes"):   # guard BEFORE the expensive train
+            if col in items.columns:
+                raise ValueError(f"items already has a {col!r} column — "
+                                 "the index would silently overwrite it; "
+                                 "rename it first")
+        mat = _driver_sample(items, item_key_col, item_vec_col,
+                             self.train_sample, "IVFPQIndex")
+        # spherical cells; one-subspace PQ training IS k-means over the
+        # full vector
+        cap = MAX_POINTS_PER_CENTROID * self.n_cells
+        self._coarse(_train_pq_codebooks(
+            _unit_rows(mat[:cap]), 1, self.n_cells, self.kmeans_max_iter,
+            self.seed)[0], item_key_col, item_vec_col)
+        _, residuals = _cell_residuals(mat, self._ivf.centroids,
+                                       self.metric == "cos")
         if self.opq:
             self.rotation, self.codebooks = _train_opq_rotation(
                 residuals, self.m, self.ksub, self.train_iters,
@@ -1337,23 +1406,8 @@ class IVFPQIndex(_ItemsLifecycleMixin):
         else:
             self.codebooks = _train_pq_codebooks(
                 residuals, self.m, self.ksub, self.train_iters, self.seed)
-        self._item_key, self._vec_col = item_key_col, item_vec_col
-        coded = assigned.withColumn(
-            "__codes", self._residual_codes_expr(item_vec_col, "cell"))
-        self._items = coded.cache()
+        self._items = self._coded(items).cache()
         return self
-
-    # The inner IVFIndex pins the cell assignments the codes were built
-    # from; release them with the codes.  Search needs only its centroids.
-    def unpersist(self, blocking: bool = False):
-        if self._ivf is not None:
-            self._ivf.unpersist(blocking)
-        return super().unpersist(blocking)
-
-    def close(self) -> None:
-        super().close()
-        if self._ivf is not None:
-            self._ivf.close()
 
     def add_items(self, items: DataFrame) -> "IVFPQIndex":
         """FAISS ``index.add`` after training: assign new rows to their
@@ -1361,15 +1415,7 @@ class IVFPQIndex(_ItemsLifecycleMixin):
         codebooks (no retrain), union into the code table."""
         if self._items is None:
             raise RuntimeError("IVFPQIndex is not fit; call fit() first")
-        assigned = items.withColumn(
-            "cell",
-            F.element_at(
-                self._ivf._nearest_cells_expr(self._vec_col, 1), 1))
-        coded = assigned.withColumn(
-            "__codes", self._residual_codes_expr(self._vec_col, "cell"))
-        old = self._items
-        self._items = old.unionByName(coded.select(*old.columns)).cache()
-        old.unpersist()
+        self._append(self._coded(items))
         return self
 
     def search(self, queries: DataFrame, *, k: int = 10,
@@ -1393,17 +1439,14 @@ class IVFPQIndex(_ItemsLifecycleMixin):
                              "set (the query LUT tensor is driver-built)")
         qmat = np.array(q_pdf[query_vec_col].to_list(), dtype=np.float64)
         if self.metric == "cos":
-            norms = np.linalg.norm(qmat, axis=1, keepdims=True)
-            qmat = qmat / np.where(norms == 0, 1.0, norms)
+            qmat = _unit_rows(qmat)
         cents = self._ivf.centroids
         books = self.codebooks
         m, dsub = self.m, books.shape[2]
         nprobe = min(self.nprobe, len(cents))
         # nearest cells by L2 on normalized vectors == max inner product
-        # on the unit sphere; stable argsort matches the assignment order
-        d2 = ((qmat * qmat).sum(1, keepdims=True)
-              - 2.0 * qmat @ cents.T + (cents * cents).sum(1)[None, :])
-        probed = np.argsort(d2, kind="stable", axis=1)[:, :nprobe]
+        # on the unit sphere
+        probed = _nearest_cells(qmat, cents, nprobe, False)
         qdotc = np.take_along_axis(qmat @ cents.T, probed, axis=1)
         # OPQ: the LUT half scores rotated residuals, so it uses the
         # rotated query; the q·c half stays in the original space
@@ -1418,7 +1461,7 @@ class IVFPQIndex(_ItemsLifecycleMixin):
             "__qidx": np.repeat(np.arange(len(qmat)), nprobe),
             "source_item": np.repeat(q_pdf[query_item_col].to_numpy(),
                                      nprobe),
-            "cell": probed.ravel().astype("int32"),
+            "cell": probed.ravel(),
             "__qdotc": qdotc.ravel(),
         })
         q_df = spark.createDataFrame(qside)
@@ -1502,13 +1545,8 @@ class IVFPQIndex(_ItemsLifecycleMixin):
             if index.rotation.shape != (d, d):
                 raise ValueError("stored OPQ rotation inconsistent with "
                                  "codebook dimensions — corrupt index?")
-        index._item_key = meta["item_key"]
-        index._vec_col = meta["vec_col"]
-        ivf = IVFIndex(meta["n_cells"], meta["nprobe"], meta["seed"],
-                       meta["metric"], max_iter=meta["kmeans_max_iter"])
-        ivf.centroids = np.array(meta["centroids"])
-        ivf._item_key, ivf._item_vec = meta["item_key"], meta["vec_col"]
-        index._ivf = ivf
+        index._coarse(np.array(meta["centroids"]), meta["item_key"],
+                      meta["vec_col"])
         items = spark.read.parquet(os.path.join(path, "items"))
         stats = items.select(
             F.count("*").alias("n"), F.max("cell").alias("max_cell"),
@@ -1524,7 +1562,6 @@ class IVFPQIndex(_ItemsLifecycleMixin):
             raise ValueError("stored cells/codes inconsistent with the "
                              "quantizers — corrupt index?")
         index._items = items.cache()
-        ivf._items = items
         return index
 
 

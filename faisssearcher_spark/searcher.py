@@ -292,15 +292,18 @@ class SparkSearcher:
         union (no reshuffle — both sides keep their partitioning), so
         incremental ingest costs only the encoding of the new rows.
 
-        On a searcher that holds its corpus matrix the new rows are
-        encoded once, into a cache that fills the union's (so the hold
-        check reads the union's measured size) and is collected into the
-        merged matrix (checked on the driver whatever ``validate`` says).
-        Once the union passes the hold bound the matrix is dropped and
-        searches go through knn_join. A superseded matrix is dropped, not
-        destroyed: results of earlier searches still read its broadcasts.
-        Rows are validated before anything changes: a batch that raises
-        leaves the searcher as it was."""
+        On a searcher that holds its corpus matrix or composes an index
+        the new rows are encoded once, into a cache that fills the
+        union's before the old corpus cache is released (so the hold
+        check reads the union's measured size, and no corpus row is
+        encoded again). The held matrix collects the new rows from that
+        cache (checked on the driver whatever ``validate`` says); the
+        index encodes its codes from it. Once the union passes the hold
+        bound the matrix is dropped and searches go through knn_join. A
+        superseded matrix is dropped, not destroyed: results of earlier
+        searches still read its broadcasts. Rows are validated before
+        anything changes: a batch that raises leaves the searcher as it
+        was."""
         corpus = self._require_trained()
         new = self._vectorize(items, self.item_col, self.vec_col)
         new = new.select(*corpus.columns)
@@ -308,7 +311,7 @@ class SparkSearcher:
         # inputs, which bypasses its cache; the alias keeps it whole
         old = corpus.alias("__corpus")
         held = self._held
-        if held is not None:
+        if held is not None or self._index is not None:
             new = new.cache()
         union = old.unionByName(new).cache()
         try:
@@ -317,7 +320,8 @@ class SparkSearcher:
                 # the union's from the two; the hold check then reads the
                 # union's measured size
                 union.count()
-                if (union.schema[self.key_col].dataType.simpleString()
+                if held is not None and (
+                        union.schema[self.key_col].dataType.simpleString()
                         == held.key_type and self._within_hold_bound(union)):
                     held = held.add(new, item_key_col=self.key_col,
                                     item_vec_col=_VEC)
@@ -333,16 +337,17 @@ class SparkSearcher:
         self._held = held
         self.items = self.items.unionByName(items)
         self.corpus = union
-        # release the superseded cache — repeated appends must not pin
-        # every intermediate corpus in executor storage (an unfilled union
-        # recomputes its lineage on next materialization).
+        if self._index is not None:
+            # FAISS add-after-train parity: the index ingests the new rows
+            # without retraining its quantizer (operators/ann.py add_items);
+            # its state may still read the old corpus cache, so it fills
+            # its own union before that cache goes
+            self._index.add_items(new)
+        # release the superseded caches — repeated appends must not pin
+        # every intermediate corpus in executor storage
         corpus.unpersist()
         if new.is_cached:
             new.unpersist()
-        if self._index is not None:
-            # FAISS add-after-train parity: the index ingests the new rows
-            # without retraining its quantizer (operators/ann.py add_items)
-            self._index.add_items(new)
         return self
 
     def _require_trained(self) -> DataFrame:

@@ -50,7 +50,8 @@ def test_unpersist_releases_then_close_bricks(spark, emb_small, queries,
 
 
 def test_ivfpq_close_releases_inner_ivf_cache(spark, emb_small):
-    # the inner IVFIndex's cached cell assignments go with the codes
+    # close() releases every frame the index cached: the codes frame
+    # (the inner IVFIndex holds centroids only and caches nothing)
     emb_small.count()
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()

@@ -6,6 +6,9 @@ improvement on the real corpus, payload carry through the merge, parquet
 save/load roundtrip with load-time validation, and the error surface.
 """
 
+import sys
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -224,6 +227,70 @@ class TestIVFPQ:
             idx.search(embeddings.filter(F.col("vec_id") < 0).select(
                 F.col("vec_id").alias("qid"), "embedding"),
                 query_item_col="qid")
+
+
+class TestIVFPQDriverFit:
+    """fit() trains centroids and codebooks from one deterministic driver
+    sample: one Spark job, no MLlib, the same quantizers at any
+    partitioning (the load() rebuild contract)."""
+
+    @staticmethod
+    def fit(items, **kw):
+        from faisssearcher_spark.operators.ann import IVFPQIndex
+
+        kw = {"n_cells": 8, "nprobe": 4, "m": 8, "seed": 42, **kw}
+        return IVFPQIndex(**kw).fit(items, item_key_col="vec_id",
+                                    item_vec_col="embedding")
+
+    @pytest.mark.parametrize("metric", ["cos", "ip"])
+    def test_sample_cells_match_executor_cells(self, embeddings, metric):
+        from faisssearcher_spark.operators.ann import _cell_residuals
+
+        idx = self.fit(embeddings, metric=metric)
+        pdf = embeddings.select("vec_id", "embedding").toPandas()
+        mat = np.array(pdf["embedding"].to_list(), dtype=np.float64)
+        driver, _ = _cell_residuals(mat, idx._ivf.centroids,
+                                    metric == "cos")
+        # several partitions: the executor side assigns in other batches
+        executor = dict(idx._coded(embeddings.repartition(3))
+                        .select("vec_id", "cell").collect())
+        assert [executor[k] for k in pdf["vec_id"]] == driver.tolist()
+        idx.close()
+
+    @pytest.mark.parametrize("opq", [False, True])
+    def test_partitioning_does_not_move_quantizers(self, embeddings, opq):
+        kw = {"opq": opq, "opq_iters": 2}
+        one = self.fit(embeddings.coalesce(1), **kw)
+        seven = self.fit(embeddings.repartition(7), **kw)
+        assert np.array_equal(one._ivf.centroids, seven._ivf.centroids)
+        assert np.array_equal(one.codebooks, seven.codebooks)
+        if opq:
+            assert np.array_equal(one.rotation, seven.rotation)
+        one.close()
+        seven.close()
+
+    def test_fit_launches_one_job(self, spark, embeddings, monkeypatch):
+        sc = spark.sparkContext
+        embeddings.count()   # the fixture's cache is filled beforehand
+        # no MLlib on this path: importing it would raise
+        monkeypatch.setitem(sys.modules, "pyspark.ml.clustering", None)
+
+        def jobs():
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return set(sc.statusTracker().getJobIdsForGroup(None))
+
+        before = jobs()
+        idx = self.fit(embeddings, kmeans_max_iter=20)
+        assert len(jobs() - before) == 1
+        idx.close()
+
+    def test_empty_corpus_raises_and_caches_nothing(self, spark,
+                                                    embeddings):
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        with pytest.raises(ValueError, match="IVFPQIndex"):
+            self.fit(embeddings.filter(F.col("vec_id") < 0))
+        assert jsc.getPersistentRDDs().size() == before
 
 
 def test_fit_rejects_reserved_column_collisions(spark, lossless):

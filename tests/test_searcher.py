@@ -545,6 +545,31 @@ class _CountingEncoder:
         return self.inner.encode(items)
 
 
+@pytest.mark.parametrize("index_param", ["IVF8,PQ4", "IVF8"])
+def test_indexed_add_items_encodes_new_rows_once(spark, documents,
+                                                 index_param):
+    """On an indexed searcher an add, plus the count of every frame it
+    caches, encodes exactly the batch's rows: the corpus union fills from
+    the old corpus cache before that is released, and the index builds
+    its state from the cached new rows."""
+    acc = spark.sparkContext.accumulator(0)
+    doc = F.col("doc_id")
+    s = SparkSearcher(documents.filter(doc % 4 != 0).select("text", "doc_id"),
+                      encoder=_CountingEncoder(acc), key_col="doc_id",
+                      index_param=index_param).train()
+    for frame in s._cached_state():
+        frame.count()
+    for r in range(3):
+        batch = documents.filter((doc % 4 == 0) & (doc % 12 == 4 * r))
+        acc.value = 0
+        s.add_items(batch.select("text", "doc_id"))
+        for frame in s._cached_state():
+            frame.count()
+        assert acc.value == batch.count()
+    assert s.corpus.count() == documents.count()
+    s.close()
+
+
 class TestHeldCorpus:
     """A trained flat searcher over a corpus within
     BLOCKED_SMALL_QUERY_ITEMS_BYTES holds the key-sorted corpus matrix

@@ -30,33 +30,13 @@ def main() -> None:
 
     import faisssearcher_spark
     from faisssearcher_spark import registry
+    from bench import warm_session
     from faisssearcher_spark.session import get_spark
-    from pyspark.sql import functions as F
 
     spark = get_spark("ab_cold")
     spark.sparkContext.setLogLevel("ERROR")
 
-    warm = spark.range(100_000).select(
-        F.col("id"), F.transform(F.sequence(F.lit(1), F.lit(8)),
-                                 lambda i: i * F.col("id")).alias("v"))
-    warm.select(F.sum(F.aggregate("v", F.lit(0).cast("long"),
-                                  lambda a, x: a + x))).collect()
-    warm.limit(1000).toPandas()
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _wu(s):
-        return s * 1.0
-
-    spark.range(100_000).repartition(
-        int(os.environ.get("SPARK_GRAFT_CPUS", "32"))) \
-        .select(_wu(F.col("id").cast("double"))).write \
-        .mode("overwrite").format("noop").save()
-    from pyspark.ml.clustering import KMeans as _WKM
-    from pyspark.ml.functions import array_to_vector as _wav
-    _wkf = spark.range(2).select(
-        _wav(F.array(F.col("id").cast("double"))).alias("features"))
-    _WKM(k=2, maxIter=1).fit(_wkf)
+    warm_session(spark)
 
     results: dict[str, dict[str, float]] = {}
     out = {"code": os.path.dirname(os.path.dirname(

@@ -32,6 +32,7 @@ def main() -> None:
     runs = int(os.environ.get("AB_RUNS", "2"))
 
     from faisssearcher_spark import registry
+    from bench import warm_session
     from faisssearcher_spark.session import get_spark
 
     for n in names:
@@ -42,29 +43,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
-    # same warmups as bench.py so the first profiled leg is not paying
-    # session-global first-touch costs
-    from pyspark.sql import functions as F
-    warm = spark.range(100_000).select(
-        F.col("id"), F.transform(F.sequence(F.lit(1), F.lit(8)),
-                                 lambda i: i * F.col("id")).alias("v"))
-    warm.select(F.sum(F.aggregate("v", F.lit(0).cast("long"),
-                                  lambda a, x: a + x))).collect()
-    warm.limit(1000).toPandas()
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _wu(s):
-        return s * 1.0
-
-    spark.range(100_000).repartition(
-        int(os.environ.get("SPARK_GRAFT_CPUS", "32"))) \
-        .select(_wu(F.col("id").cast("double"))).write \
-        .mode("overwrite").format("noop").save()
-    from pyspark.ml.clustering import KMeans as _WKM
-    from pyspark.ml.functions import array_to_vector as _wav
-    _WKM(k=2, maxIter=1).fit(spark.range(2).select(
-        _wav(F.array(F.col("id").cast("double"))).alias("features")))
+    warm_session(spark)
 
     out = {}
     for name in names:
