@@ -24,9 +24,9 @@ candidate set comes from an equi-join on a derived bucket key:
   (``q·c_cell + Σ LUT``), only m-byte codes shuffle.
 - :class:`SQIndex` — per-dimension scalar quantizer (FAISS ``SQ8``):
   trained [vmin, vmax] bounds, d-byte codes, decode-and-GEMM search.
-- :func:`faiss_topk` — optional real-FAISS path: per-executor search over a
-  broadcast serialized index inside ``mapInPandas``; import-gated because
-  faiss is not a hard dependency.
+- :func:`parse_index_param` — the reference's ``index_param`` specs
+  (``index_factory`` strings) mapped onto these classes and
+  ``graph.NSWIndex``; a spec none of them covers raises.
 
 The quantizers of PQ, SQ and IVF-PQ (and IVF's ``"sample"`` mode) train
 in the driver on the first ``train_sample`` rows by key, the way the
@@ -38,7 +38,9 @@ FAISS validates itself.
 
 from __future__ import annotations
 
-from typing import Sequence
+import functools
+import re
+from typing import Any, Callable, Mapping, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
@@ -46,7 +48,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from faisssearcher_spark.functions import metrics as M
-from faisssearcher_spark.operators.knn import knn_join
+from faisssearcher_spark.operators.graph import NSWIndex
+from faisssearcher_spark.operators.knn import _fill_cache, knn_join
 
 brute_force_topk = knn_join
 
@@ -249,7 +252,7 @@ class _ItemsLifecycleMixin:
         union = old.alias("__items").unionByName(
             rows.select(*old.columns)).cache()
         try:
-            union.count()
+            _fill_cache(union)
         except Exception:
             union.unpersist()
             raise
@@ -293,6 +296,8 @@ class IVFIndex(_ItemsLifecycleMixin):
     def __init__(self, n_cells: int = 64, nprobe: int = 4, seed: int = 42,
                  metric: str = "cos", max_iter: int = 20,
                  train_mode: str = "mllib", train_sample: int = 100_000):
+        if n_cells < 1:
+            raise ValueError(f"n_cells must be >= 1, got {n_cells}")
         self.n_cells = n_cells
         self.nprobe = nprobe
         self.seed = seed
@@ -821,10 +826,11 @@ class PQIndex(_ItemsLifecycleMixin):
     item vector is ever touched at query time, which is the point: a
     100 TB float corpus becomes an ~m-bytes-per-row code table.
 
-    Scale shape (the ``faiss_topk_sharded`` pattern): the code table stays
-    DISTRIBUTED; the small query LUT tensor broadcasts; each Arrow batch
-    accumulates scores with numpy gathers and emits only its local top-k;
-    a final window merges per-shard candidates (≤ shards·k rows shuffle).
+    Scale shape (the ``knn_join(strategy="sharded")`` pattern): the code
+    table stays DISTRIBUTED; the small query LUT tensor broadcasts; each
+    Arrow batch accumulates scores with numpy gathers and emits only its
+    local top-k; a final window merges per-shard candidates (≤ shards·k
+    rows shuffle).
     Training is one bounded ``limit(train_sample)`` driver collect,
     encoding is one vectorized pandas_udf pass over the corpus.
     """
@@ -1089,9 +1095,9 @@ class SQIndex(_ItemsLifecycleMixin):
     decoded approximately at search time. The simplest of the quantizer
     family: no codebooks, near-lossless at 8 bits, 4× smaller scans.
 
-    Scale shape (the ``faiss_topk_sharded`` pattern): the code table
-    stays distributed; the small query matrix broadcasts; each Arrow
-    batch decodes (one fused multiply-add) and GEMMs against the
+    Scale shape (the ``knn_join(strategy="sharded")`` pattern): the code
+    table stays distributed; the small query matrix broadcasts; each
+    Arrow batch decodes (one fused multiply-add) and GEMMs against the
     queries, emitting its local top-k; a final window merges.
 
     ``add_items`` encodes with the EXISTING bounds (values beyond the
@@ -1318,8 +1324,9 @@ class IVFPQIndex(_ItemsLifecycleMixin):
                 f"decomposition is inner-product algebra), got {metric!r}")
         if not 1 <= nbits <= 8:
             raise ValueError(f"nbits must be in [1, 8], got {nbits}")
-        if m < 1:
-            raise ValueError(f"m must be >= 1, got {m}")
+        if m < 1 or n_cells < 1:
+            raise ValueError(f"m and n_cells must be >= 1, got {m}, "
+                             f"{n_cells}")
         self.n_cells, self.nprobe = n_cells, nprobe
         self.m, self.nbits, self.seed = m, nbits, seed
         self.ksub = 1 << nbits
@@ -1565,231 +1572,103 @@ class IVFPQIndex(_ItemsLifecycleMixin):
         return index
 
 
-def parse_index_param(spec: str):
-    """Map a FAISS ``index_factory`` spec string (the reference's
-    ``index_param``, forwarded verbatim at faiss_searcher.py:104) onto a
-    native engine path:
+class IndexSpec(NamedTuple):
+    """What an ``index_param`` spec builds (:func:`parse_index_param`):
+    the native index class, the constructor arguments the spec sets,
+    the ones it only defaults (``index_kwargs`` may override those), and
+    whether search re-scores a quantized shortlist exactly (``,RFlat``)."""
 
-    - ``"Flat"`` → ``("flat",)`` — exact search, no index;
-    - ``"IVF<n>"`` / ``"IVF<n>,Flat"`` → ``("ivf", n)``;
-    - ``"PQ<m>"`` → ``("pq", m)``;
-    - ``"SQ<b>"`` → ``("sq", b)`` — scalar quantizer, b ∈ {4, 8};
-    - ``"IVF<n>,PQ<m>"`` → ``("ivfpq", n, m)``;
-    - ``"OPQ<m>,PQ<m>"`` → ``("opq_pq", m)`` and
-      ``"OPQ<m>,IVF<n>,PQ<m>"`` → ``("opq_ivfpq", n, m)`` — the OPQ
-      rotation pretransform, native when the OPQ block count equals the
-      PQ block count (the common spec); mismatched counts (FAISS allows
-      ``OPQ<m>_<d'>`` output-dim games) fall through to real FAISS;
-    - ``"HNSW<m>"`` → ``("nsw", m)`` — the native sharded NSW graph
-      (operators/graph.py), covering the reference's IndexHNSWFlat
-      special-case without the faiss import;
-    - anything else (HNSW composites, NSG, …) → ``("faiss", spec)`` —
-      the import-gated real-FAISS pass-through, exactly the reference's
-      fallthrough behavior.
-    """
-    import re as _re
+    cls: type
+    args: dict
+    defaults: dict = {}
+    refine: bool = False
 
-    s = spec.strip()
-    if s.lower() == "flat":
-        return ("flat",)
-    m = _re.fullmatch(r"(?i)IVF(\d+)(?:,Flat)?", s)
-    if m:
-        return ("ivf", int(m.group(1)))
-    m = _re.fullmatch(r"(?i)PQ(\d+)", s)
-    if m:
-        return ("pq", int(m.group(1)))
-    m = _re.fullmatch(r"(?i)SQ([48])", s)
-    if m:
-        return ("sq", int(m.group(1)))
-    m = _re.fullmatch(r"(?i)IVF(\d+),PQ(\d+)", s)
-    if m:
-        return ("ivfpq", int(m.group(1)), int(m.group(2)))
-    m = _re.fullmatch(r"(?i)OPQ(\d+),PQ(\d+)", s)
-    if m and m.group(1) == m.group(2):
-        return ("opq_pq", int(m.group(2)))
-    m = _re.fullmatch(r"(?i)OPQ(\d+),IVF(\d+),PQ(\d+)", s)
-    if m and m.group(1) == m.group(3):
-        return ("opq_ivfpq", int(m.group(2)), int(m.group(3)))
-    m = _re.fullmatch(r"(?i)HNSW(\d+)", s)
-    if m:
-        # round 6: bare HNSW<m> (the reference's IndexHNSWFlat
-        # special-case) now builds the NATIVE sharded NSW graph
-        # (operators/graph.py) — same convention as IVF/PQ specs
-        # mapping to native indexes; composite HNSW specs still fall
-        # through to real FAISS below.
-        return ("nsw", int(m.group(1)))
-    return ("faiss", s)
+    def factory(self, metric: str,
+                index_kwargs: Mapping[str, Any]) -> Callable[[], Any]:
+        """A zero-argument constructor of the unfitted index for
+        ``metric`` and ``index_kwargs``. It builds one index here, so a
+        keyword the class does not take or a value it rejects raises
+        ``ValueError`` before any corpus is encoded, as do a keyword the
+        spec sets and a ``refine_factor`` below 1 or on a spec that does
+        not refine. ``refine_factor`` is a search argument: it stays out
+        of the constructor."""
+        if metric not in ("cos", "ip", "l2"):
+            raise ValueError(
+                f"index_param specs build L2 / inner-product structures: "
+                f"the metric must be cos, ip or l2, got {metric!r}")
+        kw = dict(index_kwargs)
+        factor = kw.pop("refine_factor", None)
+        if factor is not None and not self.refine:
+            raise ValueError("refine_factor only applies to ',RFlat' specs "
+                             "over the PQ family")
+        if factor is not None and int(factor) < 1:
+            raise ValueError(f"refine_factor must be >= 1, got {factor!r}")
+        clash = sorted(set(kw) & {*self.args, "metric"})
+        if clash:
+            raise ValueError(f"index_kwargs {clash} are set by the spec")
+        build = functools.partial(self.cls, metric=metric,
+                                  **{**self.defaults, **kw, **self.args})
+        try:
+            build()
+        except TypeError as e:
+            raise ValueError(f"index_kwargs {kw} do not fit "
+                             f"{self.cls.__name__}: {e}") from None
+        return build
 
 
-def _build_faiss_index(mat: "np.ndarray", index_param: str, faiss_metric):
-    """index_factory wrapper with the reference's HNSW special-case
-    (faiss_searcher.py:100-107): a bare "HNSW<m>" spec maps to
-    IndexHNSWFlat because index_factory would reject the metric combo."""
-    import faiss
-
-    dim = mat.shape[1]
-    if "HNSW" in index_param.upper() and "," not in index_param:
-        index = faiss.IndexHNSWFlat(
-            dim, int(index_param.upper().split("HNSW")[-1]), faiss_metric)
-    else:
-        index = faiss.index_factory(dim, index_param, faiss_metric)
-    index.train(mat)
-    index.add(mat)
-    return index
+def _nsw_spec(m: int) -> IndexSpec:
+    # FAISS's HNSW defaults are efConstruction 40 / efSearch 16; the
+    # wider ones here favour recall on small shards
+    return IndexSpec(NSWIndex, {"m": m}, {"ef_construction": max(48, 2 * m),
+                                          "ef_search": max(64, 2 * m)})
 
 
-def faiss_topk(queries: DataFrame, items: DataFrame, *, k: int = 10,
-               index_param: str = "HNSW32", metric: str = "cos",
-               query_item_col: str = "query_id", item_key_col: str = "item",
-               query_vec_col: str = "embedding", item_vec_col: str = "embedding",
-               payload_cols: "Sequence[str] | None" = None) -> DataFrame:
-    """Real-FAISS approximate path (optional dependency).
+#: the ``index_param`` grammar: each spec (case-insensitive) and the
+#: native index it builds from the spec's numbers. An OPQ rotation has
+#: as many blocks as the PQ it feeds (the ``\1``).
+_GRAMMAR = (
+    (r"IVF(\d+)(?:,Flat)?", lambda n: IndexSpec(IVFIndex, {"n_cells": n})),
+    (r"PQ(\d+)", lambda m: IndexSpec(PQIndex, {"m": m})),
+    (r"SQ([48])", lambda b: IndexSpec(SQIndex, {"nbits": b})),
+    (r"IVF(\d+),PQ(\d+)",
+     lambda n, m: IndexSpec(IVFPQIndex, {"n_cells": n, "m": m})),
+    (r"OPQ(\d+),PQ\1", lambda m: IndexSpec(PQIndex, {"m": m, "opq": True})),
+    (r"OPQ(\d+),IVF(\d+),PQ\1", lambda m, n: IndexSpec(
+        IVFPQIndex, {"n_cells": n, "m": m, "opq": True})),
+    (r"HNSW(\d+)(?:,Flat)?", _nsw_spec),
+)
 
-    Builds the index driver-side from the (collected) item vectors, then
-    broadcasts the serialized blob and searches per query-partition inside
-    ``mapInPandas`` — the Spark translation of the reference's
-    train+search (faiss_searcher.py:116-125, 161-187). Suitable when the
-    *corpus* fits one machine but queries are huge; for corpora beyond one
-    machine use :func:`faiss_topk_sharded` (per-shard index + merge).
-
-    Raises ImportError when faiss is not installed (it is optional; the
-    exact path and SignLSH/IVF need no native deps).
-    """
-    import faiss  # noqa: F401  (import-gated: optional native dep)
-
-    item_pdf = items.select(item_key_col, item_vec_col).toPandas()
-    mat = np.ascontiguousarray(
-        np.array(item_pdf[item_vec_col].to_list(), dtype=np.float32))
-    faiss_metric = (faiss.METRIC_INNER_PRODUCT if metric in ("cos", "ip")
-                    else faiss.METRIC_L2)
-    if metric == "cos":
-        faiss.normalize_L2(mat)
-    index = _build_faiss_index(mat, index_param, faiss_metric)
-    blob = faiss.serialize_index(index)
-    keys = item_pdf[item_key_col].to_numpy()
-    spark = queries.sparkSession
-    b_blob = spark.sparkContext.broadcast(bytes(blob))
-    b_keys = spark.sparkContext.broadcast(keys)
-    normalize = metric == "cos"
-
-    def _search(batches):
-        import faiss as fa
-        import pandas as pd
-        idx = fa.deserialize_index(np.frombuffer(b_blob.value, dtype=np.uint8))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            qmat = np.ascontiguousarray(
-                np.array(pdf[query_vec_col].to_list(), dtype=np.float32))
-            if normalize:
-                fa.normalize_L2(qmat)
-            dist, ind = idx.search(qmat, k)
-            # FAISS pads short result lists with -1 indices (fewer than k
-            # reachable neighbors); mask them out instead of letting -1
-            # wrap to the last corpus key with a garbage distance.
-            valid = ind >= 0
-            n_valid = valid.sum(axis=1)
-            rows = {
-                "source_item": np.repeat(pdf[query_item_col].to_numpy(),
-                                         n_valid),
-                "sim_item": b_keys.value[ind[valid]],
-                "sim_val": dist[valid].astype("float64"),
-                "rank_no": np.concatenate(
-                    [np.arange(c) for c in n_valid]) if len(n_valid)
-                else np.array([], dtype="int64"),
-            }
-            yield pd.DataFrame(rows)
-
-    q_key_field = queries.schema[query_item_col]
-    key_field = items.schema[item_key_col]
-    out_schema = (f"source_item {q_key_field.dataType.simpleString()}, "
-                  f"sim_item {key_field.dataType.simpleString()}, "
-                  "sim_val double, rank_no int")
-    ranked = queries.select(query_item_col, query_vec_col).mapInPandas(
-        _search, out_schema)
-    from faisssearcher_spark.operators.knn import _attach_payload
-    # one-machine bound already implied (the corpus was collected to build
-    # the index), so the payload side broadcasts — same rule as blocked
-    return _attach_payload(ranked, items, item_key_col=item_key_col,
-                           payload_cols=list(payload_cols or []),
-                           broadcast_side="payload")
+_GRAMMAR_HELP = ("Flat, IVF<n>[,Flat], PQ<m>, SQ4, SQ8, IVF<n>,PQ<m>, "
+                 "OPQ<m>,PQ<m>, OPQ<m>,IVF<n>,PQ<m> or HNSW<m>[,Flat], "
+                 "optionally followed by ',RFlat' on a PQ spec (exact "
+                 "re-score) or on Flat / IVF (a no-op: their scores are "
+                 "exact)")
 
 
-def faiss_topk_sharded(queries: DataFrame, items: DataFrame, *, k: int = 10,
-                       index_param: str = "HNSW32", metric: str = "cos",
-                       query_item_col: str = "query_id",
-                       item_key_col: str = "item",
-                       query_vec_col: str = "embedding",
-                       item_vec_col: str = "embedding",
-                       keep_rank_no: bool = True,
-                       payload_cols: "Sequence[str] | None" = None) -> DataFrame:
-    """FAISS over a corpus too big for one machine: the (small) query
-    matrix broadcasts; each item partition builds its OWN index inside
-    ``mapInPandas``, searches the broadcast queries, and emits only its
-    local top-k; a final window merges per-shard candidates into the
-    global top-k (same two-level merge as ``knn_join(strategy="sharded")``,
-    operators/knn.py). The corpus never moves — ``repartition`` the items
-    first to choose the shard count / per-shard index size.
-
-    Per-shard recall composes: the merged result can only be MORE complete
-    than a single index at the same parameters (each shard's graph is
-    smaller and denser). Use per-shard-friendly specs — ``HNSW<m>`` or
-    ``Flat``; an ``IVF<n>`` spec needs enough training rows per shard.
-
-    Raises ImportError when faiss is not installed.
-    """
-    import faiss
-    from faisssearcher_spark.operators.knn import _merge_candidates
-
-    q_pdf = queries.select(query_item_col, query_vec_col).toPandas()
-    if not len(q_pdf):
-        raise ValueError("faiss_topk_sharded needs a non-empty query set "
-                         "(the query matrix is driver-collected)")
-    qmat = np.ascontiguousarray(
-        np.array(q_pdf[query_vec_col].to_list(), dtype=np.float32))
-    normalize = metric == "cos"
-    if normalize:
-        faiss.normalize_L2(qmat)
-    faiss_metric_ip = metric in ("cos", "ip")
-    spark = items.sparkSession
-    b_q = spark.sparkContext.broadcast(qmat)
-    b_qid = spark.sparkContext.broadcast(q_pdf[query_item_col].to_numpy())
-    param, kk, nrm = index_param, k, normalize
-
-    def _local(batches):
-        import faiss as fa
-        import pandas as pd
-        fm = (fa.METRIC_INNER_PRODUCT if faiss_metric_ip else fa.METRIC_L2)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.ascontiguousarray(
-                np.array(pdf[item_vec_col].to_list(), dtype=np.float32))
-            if nrm:
-                fa.normalize_L2(mat)
-            index = _build_faiss_index(mat, param, fm)
-            dist, ind = index.search(b_q.value, min(kk, len(pdf)))
-            valid = ind >= 0  # mask FAISS's -1 "no result" padding
-            n_valid = valid.sum(axis=1)
-            keys = pdf[item_key_col].to_numpy()
-            yield pd.DataFrame({
-                "source_item": np.repeat(b_qid.value, n_valid),
-                "sim_item": keys[ind[valid]],
-                "sim_val": dist[valid].astype("float64"),
-            })
-
-    q_key_field = queries.schema[query_item_col]
-    key_field = items.schema[item_key_col]
-    cand_schema = (f"source_item {q_key_field.dataType.simpleString()}, "
-                   f"sim_item {key_field.dataType.simpleString()}, "
-                   "sim_val double")
-    cand = items.select(item_key_col, item_vec_col).mapInPandas(
-        _local, cand_schema)
-    # payload re-attach broadcasts the <= m*k ranked side, never the
-    # items side (operators/knn._attach_payload) — consistent with this
-    # strategy's corpus-bigger-than-one-machine premise
-    return _merge_candidates(cand, items, k=k,
-                             higher_is_closer=faiss_metric_ip,
-                             item_key_col=item_key_col,
-                             payload_cols=list(payload_cols or []),
-                             keep_rank_no=keep_rank_no)
+def parse_index_param(spec: str | None) -> IndexSpec | None:
+    """Map a FAISS ``index_factory`` spec (the reference's
+    ``index_param``, faiss_searcher.py:30,104) onto the native index it
+    builds; ``None`` for ``None`` / ``"Flat"``, exact search. The one
+    place that knows the grammar (``_GRAMMAR_HELP``): ``HNSW<m>`` is the
+    sharded NSW graph (operators/graph.py), ``IVF<n>,Flat`` and
+    ``HNSW<m>,Flat`` name the same indexes as ``IVF<n>`` and ``HNSW<m>``,
+    and a ``,RFlat`` suffix turns on the exact re-score of the PQ
+    family's shortlist. Any other spec raises ``ValueError``."""
+    if spec is None:
+        return None
+    base = spec.strip()
+    rflat = base.lower().endswith(",rflat")
+    if rflat:
+        base = base[:-len(",rflat")]
+    if base.lower() == "flat":
+        return None
+    for pattern, build in _GRAMMAR:
+        m = re.fullmatch(pattern, base, flags=re.IGNORECASE)
+        if m is not None:
+            out = build(*map(int, m.groups()))
+            refine = out.cls in (PQIndex, IVFPQIndex)
+            if rflat and not refine and out.cls is not IVFIndex:
+                break
+            return out._replace(refine=rflat and refine)
+    raise ValueError(f"index_param={spec!r} is not a spec the engine "
+                     f"builds; accepted: {_GRAMMAR_HELP}")

@@ -6,7 +6,8 @@ with the graph-structured member the reference reaches through FAISS's
 but WITHOUT the faiss import gate: graph build and search are pure
 numpy inside Arrow stages, available everywhere the engine runs.
 
-Spark-first shape (the ``faiss_topk_sharded`` discipline, ann.py):
+Spark-first shape (the ``knn_join(strategy="sharded")`` discipline,
+knn.py):
 
 - **fit** — the corpus partitions into shards; ONE ``mapInPandas`` pass
   builds an independent NSW graph per shard (greedy insertion: each new
@@ -28,8 +29,8 @@ bounds each graph's size (pick ``shards ≈ corpus / 1M``), so layer-0
 search from a fixed entry point stays within a constant factor — and
 per-shard recall composes upward: the merged result can only be more
 complete than one big graph at equal parameters, because every shard
-is searched (no routing misses), exactly the argument documented on
-``faiss_topk_sharded``.
+is searched (no routing misses), exactly the argument behind
+``knn_join(strategy="sharded")``.
 
 Scale notes: graph construction is the expensive one-time pass
 (O(n·ef_construction·m) vectorized scoring per shard, Python-loop
@@ -259,10 +260,9 @@ def _build_shard_graph(mat: np.ndarray, m: int, ef_construction: int,
 
 class NSWIndex:
     """Sharded NSW graph index with the family's fit/search/save/load
-    surface (parity row X1/X2: ``parse_index_param`` keeps routing bare
-    ``HNSW<m>`` specs to real FAISS exactly like the reference's
-    special-case; this class is the native, import-gate-free
-    equivalent)."""
+    surface: what ``ann.parse_index_param`` builds for ``HNSW<m>`` and
+    ``HNSW<m>,Flat`` specs, the reference's ``IndexHNSWFlat``
+    special-case (parity row X1/X2)."""
 
     #: graph-table column order (also the save/load schema contract)
     _COLS = ("shard", "pos", "key", "vector", "neighbors")
@@ -525,8 +525,8 @@ def nsw_topk(queries: DataFrame, items: DataFrame, *, k: int = 10,
              query_vec_col: str = "embedding",
              item_vec_col: str = "embedding",
              keep_rank_no: bool = True) -> DataFrame:
-    """One-shot sharded graph search (the ``faiss_topk_sharded`` twin
-    with the native NSW kernel instead of the faiss import): build
+    """One-shot sharded graph search (the ``knn_join(strategy=
+    "sharded")`` twin with the NSW kernel instead of exact GEMM): build
     per-shard graphs and answer in a single pass — right when the index
     is not reused across query batches. Pick ``n_shards`` deliberately:
     a small parquet corpus reads as ONE split, serializing the whole

@@ -80,6 +80,13 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
     return plan_size_bytes(df)
 
 
+def _fill_cache(df: DataFrame) -> None:
+    """Fill ``df``'s cache in one job: a no-op sink reads every row once,
+    where ``count()`` launches three jobs over a cached union. The size
+    Spark then measures for the cache is the same either way."""
+    df.write.mode("overwrite").format("noop").save()
+
+
 def _auto_strategy(q_bytes: int | None, i_bytes: int | None, *,
                    query_cap: int = QUERY_BROADCAST_CAP_BYTES,
                    items_cap: int = ITEMS_MEMORY_CAP_BYTES) -> str:
@@ -624,10 +631,10 @@ def _attach_payload(ranked: DataFrame, items: DataFrame, *,
     """Re-attach item payload columns to a ranked (source_item, sim_item,
     sim_val[, rank_no]) frame by key.
 
-    ``broadcast_side="ranked"`` — the scale contract for sharded/grid (and
-    ``faiss_topk_sharded``): those strategies exist for corpora LARGER
-    than one machine, so the |items|-row payload frame must never be
-    broadcast or globally pre-shuffled here (r3 verdict #1 — it was, an
+    ``broadcast_side="ranked"`` — the scale contract for sharded/grid:
+    those strategies exist for corpora LARGER than one machine, so the
+    |items|-row payload frame must never be broadcast or globally
+    pre-shuffled here (r3 verdict #1 — it was, an
     OOM at exactly the scale those strategies advertise). The ranked
     candidate frame is the provably small side (≤ m·k rows after the merge
     window), so it is the broadcast build side: payload streams through a

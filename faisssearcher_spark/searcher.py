@@ -44,6 +44,7 @@ from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.functions.vector import (
     l2_normalize, to_float32, validate_vectors)
 from faisssearcher_spark.operators import knn as _knn
+from faisssearcher_spark.operators.ann import parse_index_param
 from faisssearcher_spark.operators.knn import (
     BlockedCorpus, blocked_rank, cal_sim, knn_join, multi_k)
 from faisssearcher_spark.operators.whitening import VecsWhitening
@@ -103,53 +104,24 @@ class SparkSearcher:
         # feature-sep kwargs only apply in encoder mode (faiss_searcher.py:60-61)
         self.query_feature_sep = query_feature_sep if encoder else None
         self.doc_feature_sep = doc_feature_sep if encoder else None
-        # FAISS index_factory spec, forwarded like the reference does
-        # (faiss_searcher.py:30,104): IVF/PQ/IVFPQ specs map to the
-        # native Spark indexes at train(); unrecognized specs fall through
-        # to the import-gated real-FAISS path at search(). None/"Flat" =
-        # exact (the engine's default and the reference's too).
+        # the FAISS index_factory spec (faiss_searcher.py:30,104), built
+        # natively at train(): ann.parse_index_param holds the grammar and
+        # raises on a spec no native index covers. None / "Flat" = exact
+        # search (the engine's default and the reference's too).
+        # refine_factor (",RFlat" specs) stays IN index_kwargs so that
+        # save()/load() keep it; it is a search argument, not a
+        # constructor one.
         self.index_param = index_param
         self.index_kwargs = dict(index_kwargs or {})
-        # FAISS ",RFlat" suffix (IndexRefineFlat): quantized shortlist,
-        # exact re-score. Native for the PQ family (PQ / OPQ,PQ / IVF,PQ
-        # variants — refine_factor knob via index_kwargs, default 4);
-        # a no-op for IVF/Flat (their candidate scores are already
-        # exact); anything else keeps the full spec for the real-FAISS
-        # pass-through.
-        # NB: refine_factor stays IN index_kwargs (it must survive
-        # save()/load() round-trips — popping it here silently reloaded
-        # saved searchers with the default); _fit_index strips it before
-        # constructing the index.
+        spec = parse_index_param(index_param)
+        if spec is None and self.index_kwargs:
+            raise ValueError(f"index_kwargs apply to an index_param spec; "
+                             f"index_param={index_param!r} builds no index")
+        #: builds the unfitted index; None for exact search
+        self._new_index = (None if spec is None else spec.factory(
+            self._kernel_metric(), self.index_kwargs))
+        self._refine = spec is not None and spec.refine
         self.refine_factor = int(self.index_kwargs.get("refine_factor", 4))
-        self._refine = False
-        spec = index_param
-        if spec is not None:
-            stripped = spec.strip()
-            if stripped.lower().endswith(",rflat"):
-                base = stripped[:-len(",rflat")]
-                from faisssearcher_spark.operators.ann import \
-                    parse_index_param
-                kind = parse_index_param(base)[0]
-                if kind in ("pq", "opq_pq", "ivfpq", "opq_ivfpq",
-                            "ivf", "flat"):
-                    self._refine = kind in ("pq", "opq_pq", "ivfpq",
-                                            "opq_ivfpq")
-                    spec = base
-        if "refine_factor" in self.index_kwargs and not self._refine:
-            raise ValueError(
-                "refine_factor only applies to ',RFlat' specs over the "
-                f"PQ family (got index_param={index_param!r})")
-        if spec is not None:
-            from faisssearcher_spark.operators.ann import parse_index_param
-            self._index_plan = parse_index_param(spec)
-            if self._index_plan[0] != "faiss" and measurement not in (
-                    "cos", "ip", "l2"):
-                raise ValueError(
-                    f"index_param={index_param!r} supports cos/ip/l2 "
-                    f"measurements only (FAISS quantizers are L2/IP "
-                    f"structures), got {measurement!r}")
-        else:
-            self._index_plan = ("flat",)
         self._index = None
         #: the key-sorted corpus matrix and its broadcasts (FAISS
         #: IndexFlat's stored vectors) while the searcher holds one
@@ -208,7 +180,7 @@ class SparkSearcher:
         if validate:
             self.vec_dim = validate_vectors(self.corpus, _VEC, dim)
         elif may_hold:
-            self.corpus.count()
+            _knn._fill_cache(self.corpus)
         if may_hold and self._within_hold_bound(self.corpus):
             self._held = BlockedCorpus.collect(
                 self.corpus, item_key_col=self.key_col, item_vec_col=_VEC,
@@ -225,7 +197,7 @@ class SparkSearcher:
     def _gemm_flat(self) -> bool:
         """A flat plan with a metric the GEMM kernels compute: the
         searchers that may hold their corpus matrix."""
-        return (self._index_plan[0] == "flat" and self.p is None
+        return (self._new_index is None and self.p is None
                 and self.measurement in ("cos", "ip", "l2"))
 
     @staticmethod
@@ -238,51 +210,13 @@ class SparkSearcher:
         return size is not None and size <= _knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES
 
     def _fit_index(self) -> None:
-        """Build the ANN structure the index_param spec names (IVF / PQ /
-        IVFPQ natively; FAISS specs defer to search time, where the
-        import-gated kernel builds per call like the exact strategies).
-        Corpus vectors are already normalized/whitened (_vectorize), so
-        the index metric is 'ip' for cosine — same rewrite search() does."""
-        kind = self._index_plan[0]
-        if kind in ("flat", "faiss"):
-            self._index = None
-            return
-        from faisssearcher_spark.operators import ann
-        metric = self._kernel_metric()
-        kw = dict(self.index_kwargs)
-        kw.pop("refine_factor", None)   # search-time knob, not a
-        # constructor arg (kept in index_kwargs for save/load)
-        if kind == "ivf":
-            idx = ann.IVFIndex(n_cells=self._index_plan[1],
-                               metric=metric, **kw)
-        elif kind == "pq":
-            idx = ann.PQIndex(m=self._index_plan[1], metric=metric, **kw)
-        elif kind == "opq_pq":
-            idx = ann.PQIndex(m=self._index_plan[1], metric=metric,
-                              opq=True, **kw)
-        elif kind == "sq":
-            idx = ann.SQIndex(nbits=self._index_plan[1], metric=metric,
-                              **kw)
-        elif kind == "nsw":
-            # bare HNSW<m> → the native sharded NSW graph
-            # (operators/graph.py); FAISS's defaults are efConstruction
-            # 40 / efSearch 16 — the wider defaults here favor recall on
-            # small shards and stay overridable via index kwargs
-            from faisssearcher_spark.operators.graph import NSWIndex
-            m_links = self._index_plan[1]
-            kw.setdefault("ef_construction", max(48, 2 * m_links))
-            kw.setdefault("ef_search", max(64, 2 * m_links))
-            idx = NSWIndex(m=m_links, metric=metric, **kw)
-        elif kind == "opq_ivfpq":
-            idx = ann.IVFPQIndex(n_cells=self._index_plan[1],
-                                 m=self._index_plan[2], metric=metric,
-                                 opq=True, **kw)
-        else:   # ivfpq
-            idx = ann.IVFPQIndex(n_cells=self._index_plan[1],
-                                 m=self._index_plan[2], metric=metric,
-                                 **kw)
-        self._index = idx.fit(self.corpus, item_key_col=self.key_col,
-                              item_vec_col=_VEC)
+        """Fit the structure the index_param spec names over the cached
+        corpus. Its vectors are already normalized / whitened
+        (_vectorize), so the index metric is 'ip' for cosine, the same
+        rewrite search() does."""
+        if self._new_index is not None:
+            self._index = self._new_index().fit(
+                self.corpus, item_key_col=self.key_col, item_vec_col=_VEC)
 
     def add_items(self, items: DataFrame, validate: bool = False) -> "SparkSearcher":
         """Append new items to a trained corpus — the analog of FAISS
@@ -319,7 +253,7 @@ class SparkSearcher:
                 # one job encodes the new rows into their cache and fills
                 # the union's from the two; the hold check then reads the
                 # union's measured size
-                union.count()
+                _knn._fill_cache(union)
                 if held is not None and (
                         union.schema[self.key_col].dataType.simpleString()
                         == held.key_type and self._within_hold_bound(union)):
@@ -378,7 +312,7 @@ class SparkSearcher:
         payload = [c for c in self.items.columns
                    if c not in (self.item_col, self.vec_col, self.key_col)]
         held = self._held
-        if self._index is not None or self._index_plan[0] == "faiss":
+        if self._index is not None:
             # index_param overrides the exact-strategy matrix (reference
             # semantics: every search uses the built index). Refuse a
             # conflicting explicit strategy rather than silently ignore
@@ -390,8 +324,7 @@ class SparkSearcher:
                     "every search through its index")
 
             def rank_at(k: int) -> DataFrame:
-                return self._rank_indexed(queries, corpus, k, payload,
-                                          score_scale)
+                return self._rank_indexed(queries, k, payload, score_scale)
         elif (held is not None and strategy in ("auto", "blocked")
                 and not strategy_kwargs):
             # the held matrix is the blocked kernel's corpus side, built
@@ -438,24 +371,15 @@ class SparkSearcher:
         # each K a filter over that one cached frame
         return {k: finish(df) for k, df in multi_k(rank_at, topK).items()}
 
-    def _rank_indexed(self, queries: DataFrame, corpus: DataFrame, k: int,
-                      payload: list, score_scale: int | None) -> DataFrame:
+    def _rank_indexed(self, queries: DataFrame, k: int, payload: list,
+                      score_scale: int | None) -> DataFrame:
         """Top-k with ``rank_no`` through the index_param structure
         (reference semantics: when an index_param is given, EVERY search
         uses it, faiss_searcher.py:161-187)."""
-        if self._index is not None:
-            extra = ({"refine_factor": self.refine_factor}
-                     if self._refine else {})
-            res = self._index.search(
-                queries, k=k, query_item_col="source_item",
-                query_vec_col=_VEC, payload_cols=payload, **extra)
-        else:   # unrecognized spec → real-FAISS pass-through
-            from faisssearcher_spark.operators.ann import faiss_topk
-            res = faiss_topk(
-                queries, corpus, k=k, index_param=self.index_param,
-                metric=self._kernel_metric(), query_item_col="source_item",
-                item_key_col=self.key_col, query_vec_col=_VEC,
-                item_vec_col=_VEC, payload_cols=payload)
+        extra = {"refine_factor": self.refine_factor} if self._refine else {}
+        res = self._index.search(
+            queries, k=k, query_item_col="source_item", query_vec_col=_VEC,
+            payload_cols=payload, **extra)
         if score_scale is not None:
             res = res.withColumn("sim_val", F.round("sim_val", score_scale))
         return res

@@ -183,14 +183,16 @@ def test_opq_ivfpq_save_load_roundtrip(spark, embeddings, tmp_path):
 
 
 def test_parse_opq_specs():
-    assert parse_index_param("OPQ8,PQ8") == ("opq_pq", 8)
-    assert parse_index_param("opq16,pq16") == ("opq_pq", 16)
-    assert parse_index_param("OPQ16,IVF64,PQ16") == ("opq_ivfpq", 64, 16)
-    # mismatched block counts (or output-dim suffixes) defer to FAISS
-    assert parse_index_param("OPQ8,PQ16") == ("faiss", "OPQ8,PQ16")
-    assert parse_index_param("OPQ16_64,PQ16") == ("faiss", "OPQ16_64,PQ16")
-    assert parse_index_param("OPQ8,IVF32,PQ16") == \
-        ("faiss", "OPQ8,IVF32,PQ16")
+    assert parse_index_param("OPQ8,PQ8") == (PQIndex, {"m": 8, "opq": True},
+                                             {}, False)
+    assert parse_index_param("opq16,pq16").args == {"m": 16, "opq": True}
+    spec = parse_index_param("OPQ16,IVF64,PQ16")
+    assert spec.cls is IVFPQIndex
+    assert spec.args == {"n_cells": 64, "m": 16, "opq": True}
+    # mismatched block counts (or output-dim suffixes) build nothing
+    for bad in ("OPQ8,PQ16", "OPQ16_64,PQ16", "OPQ8,IVF32,PQ16"):
+        with pytest.raises(ValueError, match=bad):
+            parse_index_param(bad)
 
 
 def test_searcher_routes_opq_spec(spark, embeddings):

@@ -1,10 +1,13 @@
 """SparkSearcher facade: reference API parity (modes, result shapes,
 feature-sep splits, persistence) — SURVEY.md §3."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from faisssearcher_spark.encoders import HashingEncoder
+from faisssearcher_spark.operators import ann
 from faisssearcher_spark.searcher import SparkSearcher
 
 
@@ -408,17 +411,71 @@ class TestIndexParam:
         r0 = [r for r in rows if r["rank_no"] == 0][0]
         assert r0["sim_item"] == r0["source_item"]   # self at rank 0
 
-    def test_unknown_spec_defers_to_faiss(self, embeddings):
-        s = SparkSearcher(embeddings, vec_col="embedding",
-                          key_col="vec_id", measurement="cos",
-                          index_param="NSG32").train()
-        try:
-            import faiss  # noqa: F401
-        except ImportError:
-            with pytest.raises(ImportError):
-                s.search(embeddings.limit(1), topK=3)
+    #: (spec, the index class it builds or ValueError, refine on)
+    GRAMMAR = [
+        ("Flat", None, False), (" flat ", None, False),
+        ("IVF8", "IVFIndex", False), ("IVF8,Flat", "IVFIndex", False),
+        ("PQ8", "PQIndex", False), ("SQ4", "SQIndex", False),
+        ("SQ8", "SQIndex", False), ("IVF8,PQ4", "IVFPQIndex", False),
+        ("OPQ4,PQ4", "PQIndex", False),
+        ("OPQ4,IVF8,PQ4", "IVFPQIndex", False),
+        ("HNSW12", "NSWIndex", False), ("HNSW12,Flat", "NSWIndex", False),
+        ("PQ8,RFlat", "PQIndex", True),
+        ("IVF8,PQ4,RFlat", "IVFPQIndex", True),
+        ("IVF8,RFlat", "IVFIndex", False),   # IVF scores are exact
+        ("NSG32", ValueError, None), ("PCA32,Flat", ValueError, None),
+        ("OPQ8,PQ16", ValueError, None), ("OPQ16_64,PQ16", ValueError, None),
+        ("OPQ8,IVF32,PQ16", ValueError, None),
+        ("IVF8,SQ8", ValueError, None), ("SQ8,RFlat", ValueError, None),
+        ("LSH", ValueError, None),
+    ]
+
+    @pytest.mark.parametrize("spec,built,refine", GRAMMAR,
+                             ids=[row[0] for row in GRAMMAR])
+    def test_spec_grammar(self, spark, embeddings, spec, built, refine):
+        """Every spec either names the native index it builds or raises
+        in the constructor, naming the spec, before any job runs."""
+        before = _last_job_id(spark)
+        kw = dict(vec_col="embedding", key_col="vec_id", index_param=spec)
+        if built is ValueError:
+            with pytest.raises(ValueError, match=re.escape(repr(spec))):
+                SparkSearcher(embeddings, **kw)
         else:
-            assert s.search(embeddings.limit(1), topK=3).count() == 3
+            s = SparkSearcher(embeddings, **kw)
+            index = s._new_index and type(s._new_index()).__name__
+            assert (index, s._refine) == (built, refine)
+        assert _last_job_id(spark) == before
+
+    def test_flat_spec_is_exact_search(self, embeddings):
+        """index_param="Flat" is the same searcher as None, also for a
+        measurement no quantizer or graph takes."""
+        q = embeddings.filter(F.col("vec_id") < 3)
+        got = {}
+        for spec in (None, "Flat"):
+            s = SparkSearcher(embeddings, vec_col="embedding",
+                              key_col="vec_id", measurement="canberra",
+                              index_param=spec).train()
+            got[spec] = _rows(s.search(q, topK=4, keep_rank_no=True))
+            s.close()
+        assert got[None] == got["Flat"] and len(got[None]) == 12
+
+    @pytest.mark.parametrize("spec,kwargs,match", [
+        ("IVF8", {"nprobee": 3}, "nprobee"),
+        ("IVF8", {"n_cells": 4}, "set by the spec"),
+        ("PQ8,RFlat", {"refine_factor": 0}, "refine_factor must be >= 1"),
+        ("Flat", {"nprobe": 3}, "builds no index"),
+        ("IVF0", {}, "n_cells must be >= 1"),
+        ("IVF0,PQ4", {}, "n_cells must be >= 1"),
+    ], ids=["misspelled", "spec-set", "refine-0", "flat", "IVF0", "IVF0,PQ4"])
+    def test_bad_index_kwargs_raise_at_construction(self, spark, embeddings,
+                                                    spec, kwargs, match):
+        """Arguments the index would reject only after the corpus is
+        encoded raise in the constructor, before any job."""
+        before = _last_job_id(spark)
+        with pytest.raises(ValueError, match=match):
+            SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
+                          index_param=spec, index_kwargs=kwargs)
+        assert _last_job_id(spark) == before
 
     def test_unsupported_measurement_rejected(self, embeddings):
         with pytest.raises(ValueError):
@@ -455,19 +512,6 @@ class TestRefineSpec:
         g = {(r["source_item"], r["rank_no"]): r["sim_item"]
              for r in refined.collect()}
         assert e == g
-
-    def test_spec_routing(self, spark):
-        from faisssearcher_spark.searcher import SparkSearcher
-        corpus = self._corpus(spark)
-        s = SparkSearcher(corpus, vec_col="embedding", key_col="vec_id",
-                          index_param="IVF8,PQ8,RFlat")
-        assert s._index_plan[0] == "ivfpq" and s._refine
-        s2 = SparkSearcher(corpus, vec_col="embedding", key_col="vec_id",
-                           index_param="IVF8,RFlat")
-        assert s2._index_plan[0] == "ivf" and not s2._refine  # already exact
-        s3 = SparkSearcher(corpus, vec_col="embedding", key_col="vec_id",
-                           index_param="SQ8,RFlat")
-        assert s3._index_plan[0] == "faiss"   # real-FAISS pass-through
 
 
 class TestRefineReviewRegressions:
@@ -568,6 +612,38 @@ def test_indexed_add_items_encodes_new_rows_once(spark, documents,
         assert acc.value == batch.count()
     assert s.corpus.count() == documents.count()
     s.close()
+
+
+@pytest.mark.parametrize("index_param", [None, "IVF8"])
+def test_add_items_fills_each_cache_in_one_job(spark, embeddings,
+                                               index_param):
+    """An add fills the corpus union's cache in one job (a no-op sink;
+    count() takes three over a cached union), then either collects the
+    new rows into the held matrix or fills the index's own union in one
+    more. The hold check reads the size measured either way."""
+    s = SparkSearcher(embeddings.filter(F.col("vec_id") < 400),
+                      vec_col="embedding", key_col="vec_id",
+                      measurement="cos", index_param=index_param).train()
+    assert (s._held is not None) == (index_param is None)
+    before = _last_job_id(spark)
+    s.add_items(embeddings.filter(F.col("vec_id") >= 400))
+    assert _last_job_id(spark) - before == 2
+    assert (s._held is not None) == (index_param is None)
+    assert s.corpus.count() == embeddings.count()
+    s.close()
+
+
+@pytest.mark.parametrize("index", [
+    lambda: ann.IVFIndex(n_cells=8, train_mode="sample"),
+    lambda: ann.SQIndex()], ids=["IVFIndex", "SQIndex"])
+def test_index_add_items_fills_in_one_job(spark, embeddings, index):
+    idx = index().fit(embeddings.filter(F.col("vec_id") < 400),
+                      item_key_col="vec_id", item_vec_col="embedding")
+    before = _last_job_id(spark)
+    idx.add_items(embeddings.filter(F.col("vec_id") >= 400))
+    assert _last_job_id(spark) - before == 1
+    assert idx._items.count() == embeddings.count()
+    idx.close()
 
 
 class TestHeldCorpus:

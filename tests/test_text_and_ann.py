@@ -417,54 +417,6 @@ class TestANN:
         with pytest.raises(RuntimeError, match="fit"):
             ann.IVFIndex().save(str(tmp_path_factory.mktemp("ivf2")))
 
-    def test_faiss_gated(self, queries, embeddings):
-        try:
-            import faiss  # noqa: F401
-        except ImportError:
-            with pytest.raises(ImportError):
-                ann.faiss_topk(queries, embeddings, k=2,
-                               query_item_col="qid", item_key_col="vec_id")
-            with pytest.raises(ImportError):
-                ann.faiss_topk_sharded(queries, embeddings, k=2,
-                                       query_item_col="qid",
-                                       item_key_col="vec_id")
-
-    def test_faiss_flat_matches_exact(self, queries, embeddings, exact10):
-        """Flat index = brute force → recall 1.0 vs the exact path; also
-        exercises the -1 masking path via k > corpus on a small slice."""
-        faiss = pytest.importorskip("faiss")  # noqa: F841
-        approx = ann.faiss_topk(queries, embeddings, k=10, index_param="Flat",
-                                metric="cos", query_item_col="qid",
-                                item_key_col="vec_id")
-        assert _recall(approx, exact10) == 1.0
-
-    def test_faiss_sharded_flat_matches_exact(self, queries, embeddings,
-                                              exact10):
-        """Per-shard Flat indexes + merge must also be exact (recall 1.0):
-        the two-level merge loses nothing a single index would find."""
-        faiss = pytest.importorskip("faiss")  # noqa: F841
-        approx = ann.faiss_topk_sharded(
-            queries, embeddings.repartition(5), k=10, index_param="Flat",
-            metric="cos", query_item_col="qid", item_key_col="vec_id")
-        assert _recall(approx, exact10) == 1.0
-
-    @pytest.mark.parametrize("fn,extra", [
-        (ann.faiss_topk, {}),
-        (ann.faiss_topk_sharded, {}),
-    ])
-    def test_faiss_payload_carry(self, queries, embeddings, fn, extra):
-        """payload_cols rides the scale-correct re-attach join on both
-        FAISS paths (sharded: ranked side broadcasts, never the corpus)."""
-        faiss = pytest.importorskip("faiss")  # noqa: F841
-        res = fn(queries, embeddings, k=3, index_param="Flat", metric="cos",
-                 query_item_col="qid", item_key_col="vec_id",
-                 payload_cols=["label"], **extra)
-        rows = res.collect()
-        assert rows and all(r["label"] is not None for r in rows)
-        want = {r["vec_id"]: r["label"]
-                for r in embeddings.select("vec_id", "label").collect()}
-        assert all(want[r["sim_item"]] == r["label"] for r in rows)
-
 
 class TestChunkDocuments:
     """Sliding token-window chunking: coverage, overlap, tail, edges."""
