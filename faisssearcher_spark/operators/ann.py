@@ -5,8 +5,6 @@ The reference delegates ANN to FAISS index structures (HNSW / IVF via
 the scale-path equivalents are *partitioned pruning* strategies where the
 candidate set comes from an equi-join on a derived bucket key:
 
-- :func:`brute_force_topk` — the exact baseline (recall 1.0), see
-  operators/knn.py;
 - :class:`SignLSH` — random-hyperplane sign buckets: items hash to a
   ``num_bits``-bit bucket; queries probe their own bucket (+ optional
   multi-probe neighbors at hamming 1). The items⋈queries meeting is an
@@ -49,9 +47,9 @@ from pyspark.sql import functions as F
 
 from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.operators.graph import NSWIndex
-from faisssearcher_spark.operators.knn import _fill_cache, knn_join
-
-brute_force_topk = knn_join
+from faisssearcher_spark.operators.knn import (
+    _collect_vectors, _fill_cache, _gemm_scorer, _merge_candidates,
+    _sharded_scan, _unit_rows)
 
 
 def _rank_topk(scored: DataFrame, k: int, higher_is_closer: bool) -> DataFrame:
@@ -89,12 +87,6 @@ def _read_index_meta(spark, path: str) -> dict:
 #: centroid (ClusteringParameters.max_points_per_centroid); more rows
 #: cost Lloyd time without moving the centroids measurably
 MAX_POINTS_PER_CENTROID = 256
-
-
-def _unit_rows(mat: np.ndarray) -> np.ndarray:
-    """Rows scaled to unit L2 norm; an all-zero row stays zero."""
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    return mat / np.where(norms == 0, 1.0, norms)
 
 
 def _driver_sample(items: DataFrame, key_col: str, vec_col: str,
@@ -630,6 +622,19 @@ def _pq_reconstruct(codes: np.ndarray, books: np.ndarray) -> np.ndarray:
         [books[j][codes[:, j]] for j in range(books.shape[0])], axis=1)
 
 
+def _adc_scorer(lut: np.ndarray, codes: np.ndarray):
+    """PQ's block scorer for the sharded scan's top-k fold: ``score(s,
+    e)`` accumulates ``Σ_j LUT[q, j, code_j]`` for items ``s:e`` of a
+    (n, m) code batch against the (queries, m, ksub) LUT tensor."""
+    def score(s, e):
+        out = np.zeros((lut.shape[0], e - s))
+        for j in range(lut.shape[1]):
+            out += lut[:, j, codes[s:e, j]]
+        return out
+
+    return score
+
+
 def _train_opq_rotation(mat: np.ndarray, m: int, ksub: int, iters: int,
                         seed: int, opq_iters: int = 10
                         ) -> tuple[np.ndarray, np.ndarray]:
@@ -826,11 +831,16 @@ class PQIndex(_ItemsLifecycleMixin):
     item vector is ever touched at query time, which is the point: a
     100 TB float corpus becomes an ~m-bytes-per-row code table.
 
-    Scale shape (the ``knn_join(strategy="sharded")`` pattern): the code
-    table stays DISTRIBUTED; the small query LUT tensor broadcasts; each
-    Arrow batch accumulates scores with numpy gathers and emits only its
-    local top-k; a final window merges per-shard candidates (≤ shards·k
-    rows shuffle).
+    Scale shape: ``knn.py``'s one sharded scan (:func:`~faisssearcher_spark.
+    operators.knn._sharded_scan`, the ``knn_join(strategy="sharded")``
+    kernel with a LUT-gather scorer). The code table stays DISTRIBUTED;
+    the queries are collected and checked against the index's dim on
+    the driver; the small query LUT tensor broadcasts; each key-sorted
+    Arrow batch accumulates scores with numpy gathers under a scratch
+    bound and emits only its local top-k, tied scores resolved to the
+    smallest keys; a final window merges per-shard candidates
+    (≤ shards·k rows shuffle), so results do not depend on how the
+    corpus is partitioned.
     Training is one bounded ``limit(train_sample)`` driver collect,
     encoding is one vectorized pandas_udf pass over the corpus.
     """
@@ -934,6 +944,28 @@ class PQIndex(_ItemsLifecycleMixin):
 
     # -- ADC search --------------------------------------------------------
 
+    def _lut(self, qmat: np.ndarray) -> np.ndarray:
+        """LUT[q, j, c]: the subspace score of query q against centroid
+        c of book j — a dot product for cos / ip, squared-L2 partials
+        (which add up) for l2."""
+        if self._spherical:
+            qmat = _unit_rows(qmat)
+        if self.rotation is not None:   # OPQ: same rotation as encode —
+            qmat = qmat @ self.rotation  # (Rq)·(Rx) = q·x, exact scores
+        books = self.codebooks
+        dsub = books.shape[2]
+        lut = np.empty((len(qmat), self.m, self.ksub))
+        for j in range(self.m):
+            qs = qmat[:, j * dsub:(j + 1) * dsub]
+            cb = books[j]
+            if self._higher:
+                lut[:, j, :] = qs @ cb.T
+            else:
+                lut[:, j, :] = ((qs * qs).sum(1, keepdims=True)
+                                - 2.0 * qs @ cb.T
+                                + (cb * cb).sum(1)[None, :])
+        return lut
+
     def search(self, queries: DataFrame, *, k: int = 10,
                query_item_col: str = "query_id",
                query_vec_col: str = "embedding",
@@ -952,69 +984,16 @@ class PQIndex(_ItemsLifecycleMixin):
             raise RuntimeError("PQIndex is not fit; call fit() first")
         if refine_factor is not None and refine_factor < 1:
             raise ValueError("refine_factor must be >= 1")
-        from faisssearcher_spark.operators.knn import _merge_candidates
-
-        q_pdf = queries.select(query_item_col, query_vec_col).toPandas()
-        if not len(q_pdf):
+        cand = _sharded_scan(
+            queries, self._items, k=k * (refine_factor or 1),
+            query_item_col=query_item_col, query_vec_col=query_vec_col,
+            item_key_col=self._item_key, item_col=F.col("__codes"),
+            higher_is_closer=self._higher, prepare=self._lut,
+            scorer=_adc_scorer,
+            dim=self.codebooks.shape[0] * self.codebooks.shape[2])
+        if cand is None:
             raise ValueError("PQIndex.search needs a non-empty query set "
                              "(the query LUT tensor is driver-built)")
-        qmat = np.array(q_pdf[query_vec_col].to_list(), dtype=np.float64)
-        if self._spherical:
-            qmat = _unit_rows(qmat)
-        if self.rotation is not None:   # OPQ: same rotation as encode —
-            qmat = qmat @ self.rotation  # (Rq)·(Rx) = q·x, exact scores
-        books = self.codebooks
-        m, dsub = self.m, books.shape[2]
-        higher = self._higher
-        # LUT[q, j, c]: subspace score of query q vs centroid c of book j
-        lut = np.empty((len(qmat), m, self.ksub))
-        for j in range(m):
-            qs = qmat[:, j * dsub:(j + 1) * dsub]
-            cb = books[j]
-            if higher:                       # inner product accumulates
-                lut[:, j, :] = qs @ cb.T
-            else:                            # squared-L2 partials add up
-                lut[:, j, :] = ((qs * qs).sum(1, keepdims=True)
-                                - 2.0 * qs @ cb.T
-                                + (cb * cb).sum(1)[None, :])
-        spark = queries.sparkSession
-        b_lut = spark.sparkContext.broadcast(lut)
-        b_qid = spark.sparkContext.broadcast(
-            q_pdf[query_item_col].to_numpy())
-        kk = k * refine_factor if refine_factor else k
-        hi, item_key = higher, self._item_key
-
-        def _local(batches):
-            tbl = b_lut.value
-            qids = b_qid.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                codes = np.array(pdf["__codes"].to_list(), dtype=np.int64)
-                nq, nb = tbl.shape[0], len(codes)
-                scores = np.zeros((nq, nb))
-                for j in range(tbl.shape[1]):
-                    scores += tbl[:, j, codes[:, j]]
-                loc = min(kk, nb)
-                if hi:
-                    top = np.argpartition(-scores, loc - 1, axis=1)[:, :loc]
-                else:
-                    top = np.argpartition(scores, loc - 1, axis=1)[:, :loc]
-                keys = pdf[item_key].to_numpy()
-                yield pd.DataFrame({
-                    "source_item": np.repeat(qids, loc),
-                    "sim_item": keys[top.ravel()],
-                    "sim_val": np.take_along_axis(scores, top, axis=1)
-                               .ravel().astype("float64"),
-                })
-
-        q_key_field = queries.schema[query_item_col]
-        key_field = self._items.schema[self._item_key]
-        cand_schema = (f"source_item {q_key_field.dataType.simpleString()}, "
-                       f"sim_item {key_field.dataType.simpleString()}, "
-                       "sim_val double")
-        cand = self._items.select(self._item_key, "__codes").mapInPandas(
-            _local, cand_schema)
         if refine_factor is not None:
             cand = _exact_rescore(
                 cand.select("source_item", "sim_item"), self._items,
@@ -1022,7 +1001,7 @@ class PQIndex(_ItemsLifecycleMixin):
                 queries=queries, query_item_col=query_item_col,
                 query_vec_col=query_vec_col, metric=self.metric)
         return _merge_candidates(cand, self._items.drop("__codes"), k=k,
-                                 higher_is_closer=higher,
+                                 higher_is_closer=self._higher,
                                  item_key_col=self._item_key,
                                  payload_cols=list(payload_cols or []),
                                  keep_rank_no=keep_rank_no)
@@ -1095,10 +1074,15 @@ class SQIndex(_ItemsLifecycleMixin):
     decoded approximately at search time. The simplest of the quantizer
     family: no codebooks, near-lossless at 8 bits, 4× smaller scans.
 
-    Scale shape (the ``knn_join(strategy="sharded")`` pattern): the code
-    table stays distributed; the small query matrix broadcasts; each
-    Arrow batch decodes (one fused multiply-add) and GEMMs against the
-    queries, emitting its local top-k; a final window merges.
+    Scale shape: ``knn.py``'s one sharded scan (:func:`~faisssearcher_spark.
+    operators.knn._sharded_scan`, the ``knn_join(strategy="sharded")``
+    kernel with a decode step before its GEMM). The code table stays
+    distributed; the queries are collected and checked against the
+    index's dim on the driver; the small query matrix broadcasts; each
+    key-sorted Arrow batch decodes (one fused multiply-add) and GEMMs
+    against the queries under a scratch bound, emitting its local top-k
+    with tied scores resolved to the smallest keys; a final window
+    merges.
 
     ``add_items`` encodes with the EXISTING bounds (values beyond the
     trained range clip — FAISS behavior; retrain if the distribution
@@ -1123,10 +1107,13 @@ class SQIndex(_ItemsLifecycleMixin):
         self._item_key = None
         self._vec_col = None
 
+    def _step(self) -> np.ndarray:
+        """Per-dimension code step; a constant dimension codes to 0."""
+        step = (self.vmax - self.vmin) / self.levels
+        return np.where(step == 0, 1.0, step)
+
     def _codes_expr(self, vec_col: str) -> Column:
-        vmin = self.vmin
-        scale = (self.vmax - self.vmin) / self.levels
-        scale = np.where(scale == 0, 1.0, scale)   # constant dims -> code 0
+        vmin, scale = self.vmin, self._step()
         levels, spherical = self.levels, self._spherical
 
         @F.pandas_udf("array<smallint>")
@@ -1170,60 +1157,22 @@ class SQIndex(_ItemsLifecycleMixin):
                payload_cols: Sequence[str] | None = None) -> DataFrame:
         if self._items is None:
             raise RuntimeError("SQIndex is not fit; call fit() first")
-        from faisssearcher_spark.operators.knn import _merge_candidates
-
-        q_pdf = queries.select(query_item_col, query_vec_col).toPandas()
-        if not len(q_pdf):
+        vmin, step = self.vmin, self._step()
+        # decoded items are not unit rows, so cos scores them by dot
+        metric = "ip" if self._higher else "l2"
+        cand = _sharded_scan(
+            queries, self._items, k=k, query_item_col=query_item_col,
+            query_vec_col=query_vec_col, item_key_col=self._item_key,
+            item_col=F.col("__codes"), higher_is_closer=self._higher,
+            prepare=_unit_rows if self._spherical else np.asarray,
+            scorer=lambda q, codes: _gemm_scorer(q, codes * step + vmin,
+                                                 metric),
+            dim=vmin.size)
+        if cand is None:
             raise ValueError("SQIndex.search needs a non-empty query set "
                              "(the query matrix is driver-collected)")
-        qmat = np.array(q_pdf[query_vec_col].to_list(), dtype=np.float64)
-        if self._spherical:
-            qmat = _unit_rows(qmat)
-        spark = queries.sparkSession
-        b_q = spark.sparkContext.broadcast(qmat)
-        b_qid = spark.sparkContext.broadcast(
-            q_pdf[query_item_col].to_numpy())
-        vmin = self.vmin
-        scale = (self.vmax - self.vmin) / self.levels
-        scale = np.where(scale == 0, 1.0, scale)
-        higher = self._higher
-        kk, item_key = k, self._item_key
-
-        def _local(batches):
-            qm, qids = b_q.value, b_qid.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                codes = np.array(pdf["__codes"].to_list(), dtype=np.float64)
-                mat = codes * scale + vmin            # decode, fused
-                if higher:
-                    scores = qm @ mat.T               # (nq, nb) inner product
-                else:
-                    scores = (((mat * mat).sum(1)[None, :])
-                              - 2.0 * qm @ mat.T
-                              + (qm * qm).sum(1)[:, None])
-                loc = min(kk, scores.shape[1])
-                if higher:
-                    top = np.argpartition(-scores, loc - 1, axis=1)[:, :loc]
-                else:
-                    top = np.argpartition(scores, loc - 1, axis=1)[:, :loc]
-                keys = pdf[item_key].to_numpy()
-                yield pd.DataFrame({
-                    "source_item": np.repeat(qids, loc),
-                    "sim_item": keys[top.ravel()],
-                    "sim_val": np.take_along_axis(scores, top, axis=1)
-                               .ravel().astype("float64"),
-                })
-
-        q_key_field = queries.schema[query_item_col]
-        key_field = self._items.schema[self._item_key]
-        cand_schema = (f"source_item {q_key_field.dataType.simpleString()}, "
-                       f"sim_item {key_field.dataType.simpleString()}, "
-                       "sim_val double")
-        cand = self._items.select(self._item_key, "__codes").mapInPandas(
-            _local, cand_schema)
         return _merge_candidates(cand, self._items.drop("__codes"), k=k,
-                                 higher_is_closer=higher,
+                                 higher_is_closer=self._higher,
                                  item_key_col=self._item_key,
                                  payload_cols=list(payload_cols or []),
                                  keep_rank_no=keep_rank_no)
@@ -1440,14 +1389,14 @@ class IVFPQIndex(_ItemsLifecycleMixin):
         if refine_factor is not None and refine_factor < 1:
             raise ValueError("refine_factor must be >= 1")
         payload = list(payload_cols or [])
-        q_pdf = queries.select(query_item_col, query_vec_col).toPandas()
-        if not len(q_pdf):
+        cents = self._ivf.centroids
+        qids, qmat = _collect_vectors(queries, query_item_col,
+                                      query_vec_col, dim=cents.shape[1])
+        if not len(qids):
             raise ValueError("IVFPQIndex.search needs a non-empty query "
                              "set (the query LUT tensor is driver-built)")
-        qmat = np.array(q_pdf[query_vec_col].to_list(), dtype=np.float64)
         if self.metric == "cos":
             qmat = _unit_rows(qmat)
-        cents = self._ivf.centroids
         books = self.codebooks
         m, dsub = self.m, books.shape[2]
         nprobe = min(self.nprobe, len(cents))
@@ -1466,8 +1415,7 @@ class IVFPQIndex(_ItemsLifecycleMixin):
 
         qside = pd.DataFrame({
             "__qidx": np.repeat(np.arange(len(qmat)), nprobe),
-            "source_item": np.repeat(q_pdf[query_item_col].to_numpy(),
-                                     nprobe),
+            "source_item": np.repeat(qids, nprobe),
             "cell": probed.ravel(),
             "__qdotc": qdotc.ravel(),
         })

@@ -16,7 +16,9 @@ knn.py):
   what materializes is the graph table
   ``(shard, pos, key, vector, neighbors)`` — parquet-persistable
   (the S2/S3 save/load discipline, no pickle).
-- **search** — the (small) query matrix broadcasts; each shard answers
+- **search** — the (small) query matrix, collected and checked against
+  the graph's dim on the driver (``knn._collect_vectors``), broadcasts;
+  each shard answers
   with layer-0 beam search (``ef_search`` frontier) via
   ``groupBy(shard).applyInPandas`` — Spark guarantees the whole shard in
   one call — and only per-shard top-k candidates reach the global
@@ -283,6 +285,7 @@ class NSWIndex:
         self.n_shards = n_shards
         self.graph: DataFrame | None = None
         self.n_items: int | None = None
+        self.dim: int | None = None
         # the fitted source frame + its key column: payload columns
         # re-attach from here (the IVFIndex discipline — broadcast the
         # ≤ m·k ranked side, never the items). A load()ed index has only
@@ -336,10 +339,16 @@ class NSWIndex:
         schema = (f"shard long, pos int, key {key_t}, "
                   "vector array<float>, neighbors array<int>")
         self.graph = src.mapInPandas(_build, schema).persist()
-        self.n_items = self.graph.count()       # materialize the build once
+        # materialize the build once; the dim checks search's queries
+        self.n_items, self.dim = self._size()
         self._items = items
         self._item_key = item_key_col
         return self
+
+    def _size(self) -> "tuple[int, int | None]":
+        """(node count, vector dim) of the graph table, in one job."""
+        row = self.graph.agg(F.count("*"), F.max(F.size("vector"))).first()
+        return row[0], row[1]
 
     def _require_fitted(self) -> DataFrame:
         if self.graph is None:
@@ -357,19 +366,19 @@ class NSWIndex:
         """Global top-k per query: per-shard beam candidates → window
         merge. Output ``(source_item, sim_item, sim_val[, rank_no])`` —
         the family's result shape."""
-        from faisssearcher_spark.operators.knn import _merge_candidates
+        from faisssearcher_spark.operators.knn import (_collect_vectors,
+                                                       _merge_candidates)
 
         graph = self._require_fitted()
         ef = max(int(ef_search or self.ef_search), k)
-        q_pdf = queries.select(query_item_col, query_vec_col).toPandas()
-        if not len(q_pdf):
+        qids, qmat = _collect_vectors(queries, query_item_col,
+                                      query_vec_col, dim=self.dim)
+        if not len(qids):
             raise ValueError("search needs a non-empty query set (the "
                              "query matrix is driver-collected)")
-        qmat = _prep(np.array(q_pdf[query_vec_col].to_list()), self.metric)
         spark = queries.sparkSession
-        b_q = spark.sparkContext.broadcast(qmat)
-        b_qid = spark.sparkContext.broadcast(
-            q_pdf[query_item_col].to_numpy())
+        b_q = spark.sparkContext.broadcast(_prep(qmat, self.metric))
+        b_qid = spark.sparkContext.broadcast(qids)
         metric, kk = self.metric, k
 
         def _shard_search(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -488,7 +497,7 @@ class NSWIndex:
         idx.graph = graph.persist()
         # revalidate like the quantized indexes (S3): row count matches
         # the recorded corpus size, neighbor positions stay in-shard
-        n = graph.count()
+        n, idx.dim = idx._size()
         if n != int(meta["n_items"]):
             raise ValueError(
                 f"stored graph has {n} nodes, meta says {meta['n_items']}"

@@ -697,31 +697,81 @@ class TestInputValidation:
             knn_join(q, embeddings, query_item_col="qid",
                      item_key_col="vec_id", payload_cols=["ghost"])
 
+    def test_sharded_bad_query_vectors(self, spark, embeddings):
+        """strategy="sharded" collects its queries through
+        _collect_vectors: NULL and ragged vectors raise ValueError from
+        knn_join itself (the corpus dim is unknown without a job)."""
+        schema = "qid long, embedding array<double>"
+        for rows, msg in (([(0, [1.0] * 64), (1, [1.0])], "ragged"),
+                          ([(0, [1.0] * 64), (1, None)], "NULL")):
+            with pytest.raises(ValueError, match=msg):
+                knn_join(spark.createDataFrame(rows, schema), embeddings,
+                         k=2, query_item_col="qid", item_key_col="vec_id",
+                         strategy="sharded")
+
 
 class TestGemmTopkHelper:
     def test_running_merge_matches_single_block(self):
         """The bounded running top-k fold must reproduce the one-shot
         full-width (score, key-position) ranking exactly — including
-        ties created by rounding."""
+        ties created by rounding — for every block scorer: the GEMM
+        kernels' and PQ's ADC gather, whose small integer codes tie
+        often."""
         import numpy as np
 
-        from faisssearcher_spark.operators.knn import _gemm_topk
+        from faisssearcher_spark.operators.ann import _adc_scorer
+        from faisssearcher_spark.operators.knn import (_gemm_scorer,
+                                                       _topk_fold)
 
         rng = np.random.default_rng(11)
         q = rng.standard_normal((64, 8))
         # coarse values force many score ties across blocks
         mat = rng.integers(-2, 3, size=(257, 8)).astype(np.float64)
-        for metric in ("ip", "l2"):
-            one_pos, one_val = _gemm_topk(
-                q, mat, metric=metric, kc=7, scale=1,
-                higher_is_closer=metric == "ip",
+        lut = rng.integers(0, 3, size=(64, 2, 4)).astype(np.float64)
+        codes = rng.integers(0, 4, size=(257, 2))
+        scorers = [(f"gemm-{m}", _gemm_scorer(q, mat, m, scale=1), m == "ip")
+                   for m in ("ip", "l2")]
+        scorers += [(f"adc-{hi}", _adc_scorer(lut, codes), hi)
+                    for hi in (True, False)]
+        for name, score, higher in scorers:
+            full = score(0, 257)
+            ref = np.argsort(-full if higher else full, axis=1,
+                             kind="stable")[:, :7]
+            one_pos, one_val = _topk_fold(
+                score, 64, 257, 7, higher_is_closer=higher,
                 scratch_bytes=1 << 40)          # single block
-            many_pos, many_val = _gemm_topk(
-                q, mat, metric=metric, kc=7, scale=1,
-                higher_is_closer=metric == "ip",
+            many_pos, many_val = _topk_fold(
+                score, 64, 257, 7, higher_is_closer=higher,
                 scratch_bytes=8 * 64 * 16)      # 16-wide blocks
-            assert (one_pos == many_pos).all(), metric
-            assert (one_val == many_val).all(), metric
+            assert (one_pos == ref).all(), name
+            assert (one_pos == many_pos).all(), name
+            assert (one_val == many_val).all(), name
+            assert (one_val == np.take_along_axis(full, ref, 1)).all(), name
+
+    def test_partition_select_matches_stable_argsort(self):
+        """The per-block cut is the full stable argsort's first kb
+        columns on every row: heavy ties, ±inf, NaN (sorted last) and
+        signed zeros, kb from 1 to the row width."""
+        import numpy as np
+
+        from faisssearcher_spark.operators.knn import _topk_cut
+
+        rng = np.random.default_rng(5)
+        for case in range(400):
+            rows, n = int(rng.integers(1, 20)), int(rng.integers(1, 60))
+            kb = int(rng.integers(1, n + 1))
+            kind = case % 4
+            key = (rng.standard_normal((rows, n)) if kind == 0 else
+                   rng.integers(-2, 3, size=(rows, n)).astype(np.float64))
+            if kind >= 2:
+                u = rng.random((rows, n))
+                key[u < 0.15] = np.nan
+                key[(u >= 0.15) & (u < 0.25)] = np.inf
+                key[(u >= 0.25) & (u < 0.35)] = -np.inf
+            if kind == 3:
+                key[rng.random((rows, n)) < 0.2] = -0.0
+            ref = np.argsort(key, axis=1, kind="stable")[:, :kb]
+            assert (_topk_cut(key, kb) == ref).all(), (case, kb)
 
     def test_np_round_exact_matches_numpy(self):
         import numpy as np

@@ -501,3 +501,95 @@ class TestIVFPQRefine:
                                       "embedding")
         with pytest.raises(ValueError, match="refine_factor"):
             idx.search(q, k=2, query_item_col="query_id", refine_factor=0)
+
+
+@pytest.fixture(scope="module")
+def copies(spark):
+    """40 random vectors in R^8, each stored under 5 distinct scattered
+    keys, so every quantized (and exact) score ties at least five ways."""
+    rng = np.random.default_rng(7)
+    vecs = rng.standard_normal((40, 8))
+    keys = rng.choice(10_000_000, size=200, replace=False)
+    return spark.createDataFrame(
+        [(int(keys[i]), vecs[i % 40].tolist()) for i in range(200)],
+        "vec_id long, embedding array<double>")
+
+
+class TestTiesFollowKeyOrder:
+    """Quantized scores that tie resolve to the smallest keys, however
+    the corpus is partitioned: the sharded scan key-sorts each batch and
+    cuts it with the stable top-k fold (an argpartition cut picked tied
+    rows by batch layout)."""
+
+    @staticmethod
+    def _search(make, items, queries, k, **kw):
+        idx = make().fit(items, item_key_col="vec_id",
+                         item_vec_col="embedding")
+        try:
+            return sorted(
+                (r["source_item"], r["rank_no"], r["sim_item"], r["sim_val"])
+                for r in idx.search(queries, k=k, query_item_col="qid",
+                                    **kw).collect())
+        finally:
+            idx.close()
+
+    @staticmethod
+    def _queries(spark, copies):
+        """The vectors of the three smallest-key rows, as queries 0-2."""
+        rows = sorted(copies.collect(), key=lambda r: r["vec_id"])[:3]
+        return spark.createDataFrame(
+            [(q, list(r["embedding"])) for q, r in enumerate(rows)],
+            "qid long, embedding array<double>")
+
+    @pytest.mark.parametrize("kind,kw", [("pq", {}), ("sq8", {}),
+                                         ("pq", {"refine_factor": 10})],
+                             ids=["pq", "sq8", "pq-refine"])
+    def test_quantized_ties_pick_smallest_keys(self, spark, copies, kind,
+                                               kw):
+        from faisssearcher_spark.operators.ann import SQIndex
+
+        make = ((lambda: PQIndex(m=2, nbits=4, seed=1)) if kind == "pq"
+                else (lambda: SQIndex(nbits=8)))
+        q = self._queries(spark, copies)
+        one = self._search(make, copies.coalesce(1), q, 3, **kw)
+        seven = self._search(make, copies.repartition(7), q, 3, **kw)
+        assert [r[:3] for r in one] == [r[:3] for r in seven]
+        assert [r[3] for r in one] == pytest.approx(
+            [r[3] for r in seven], abs=1e-12)
+        # k = corpus size keeps every item: the merge window alone ranks
+        # them by (score, key) — the order the cut must agree with
+        full = self._search(make, copies.coalesce(1), q, 200, **kw)
+        assert [r[:3] for r in one] == [r[:3] for r in full if r[1] < 3]
+        by_q = {}
+        for r in full:
+            by_q.setdefault(r[0], []).append(r[3])
+        # the cut at k=3 falls inside a tie group for every query
+        assert all(v[2] == v[3] for v in by_q.values())
+
+
+class TestQueriesCheckedOnDriver:
+    """The indexes collect their queries through knn._collect_vectors:
+    NULL, ragged and wrong-dim query vectors raise ValueError from
+    search() itself, before any scan is planned."""
+
+    def test_index_queries_checked_against_dim(self, spark, lossless):
+        from faisssearcher_spark.operators.ann import IVFPQIndex, SQIndex
+        from faisssearcher_spark.operators.graph import NSWIndex
+
+        schema = "qid long, embedding array<double>"
+        bad = [(spark.createDataFrame([(0, [1.0] * 16)], schema),
+                "expected dim 8, found 16"),
+               (spark.createDataFrame([(0, [1.0] * 8), (1, [1.0] * 4)],
+                                      schema), "ragged"),
+               (spark.createDataFrame([(0, [1.0] * 8), (1, None)], schema),
+                "NULL")]
+        for idx in (PQIndex(m=2, seed=1), SQIndex(),
+                    IVFPQIndex(n_cells=2, m=2, seed=1), NSWIndex(m=4)):
+            idx.fit(lossless, item_key_col="vec_id",
+                    item_vec_col="embedding")
+            try:
+                for q, msg in bad:
+                    with pytest.raises(ValueError, match=msg):
+                        idx.search(q, k=3, query_item_col="qid")
+            finally:
+                idx.close()
