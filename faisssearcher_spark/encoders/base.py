@@ -63,9 +63,16 @@ def encoder_udf(encoder: Encoder) -> Callable[..., Column]:
 
     @F.pandas_udf(ArrayType(FloatType()))
     def _encode(texts: pd.Series) -> pd.Series:
-        mat = np.asarray(encoder.encode(texts), dtype=np.float32)
-        if mat.ndim != 2:
-            raise ValueError(f"encoder returned shape {mat.shape}, want (n, dim)")
-        return pd.Series(list(mat))
+        return pd.Series(list(encode_batch(encoder, texts)))
 
     return _encode
+
+
+def encode_batch(encoder: Encoder, texts) -> np.ndarray:
+    """``encoder.encode(texts)`` as a float32 ``(n, dim)`` matrix; any
+    other shape raises. The one encode step of :func:`encoder_udf` and
+    of a searcher's driver-side query encode, so the two cannot drift."""
+    mat = np.asarray(encoder.encode(texts), dtype=np.float32)
+    if mat.ndim != 2:
+        raise ValueError(f"encoder returned shape {mat.shape}, want (n, dim)")
+    return mat

@@ -22,9 +22,12 @@ from faisssearcher_spark.functions.metrics import ColumnOrName, _col, as_double
 def l2_normalize(c: ColumnOrName, zero_norm_nan: bool = True) -> Column:
     """L2-normalize an array<float|double> column.
 
-    ``zero_norm_nan=True`` reproduces the reference's behavior on the zero
-    vector — division by zero yielding NaN (faiss_searcher.py:96-98).
-    With ``False`` the zero vector is passed through unchanged.
+    ``zero_norm_nan=True`` divides the zero vector by its zero norm, as
+    the reference does (faiss_searcher.py:96-98, where numpy yields NaN).
+    Here that yields NaN only with ``spark.sql.ansi.enabled=false``:
+    under Spark 4's default ANSI mode the division raises
+    ``DIVIDE_BY_ZERO`` when the column is computed. With ``False`` the
+    zero vector is passed through unchanged.
     """
     v = as_double(c)
     norm = F.sqrt(F.aggregate(F.zip_with(v, v, lambda x, y: x * y),

@@ -48,8 +48,8 @@ from pyspark.sql import functions as F
 from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.operators.graph import NSWIndex
 from faisssearcher_spark.operators.knn import (
-    _collect_vectors, _fill_cache, _gemm_scorer, _merge_candidates,
-    _sharded_scan, _unit_rows)
+    DriverQueries, _fill_cache, _gemm_scorer, _merge_candidates,
+    _query_frame, _query_vectors, _sharded_scan, _unit_rows)
 
 
 def _rank_topk(scored: DataFrame, k: int, higher_is_closer: bool) -> DataFrame:
@@ -407,7 +407,7 @@ class IVFIndex(_ItemsLifecycleMixin):
             F.element_at(self._nearest_cells_expr(self._item_vec, 1), 1)))
         return self
 
-    def search(self, queries: DataFrame, *, k: int = 10,
+    def search(self, queries: DataFrame | DriverQueries, *, k: int = 10,
                query_item_col: str = "query_id",
                query_vec_col: str = "embedding",
                payload_cols: Sequence[str] | None = None) -> DataFrame:
@@ -420,7 +420,8 @@ class IVFIndex(_ItemsLifecycleMixin):
         return _rank_topk(scored, k, higher).select(
             "source_item", "sim_item", "sim_val", "rank_no", *payload)
 
-    def _probe_scored(self, queries: DataFrame, query_item_col: str,
+    def _probe_scored(self, queries: DataFrame | DriverQueries,
+                      query_item_col: str,
                       query_vec_col: str,
                       payload_cols: Sequence[str] | None
                       ) -> "tuple[DataFrame, bool, list]":
@@ -432,6 +433,8 @@ class IVFIndex(_ItemsLifecycleMixin):
             raise RuntimeError("IVFIndex is not fit; call fit() first")
         payload = list(payload_cols or [])
         metric_fn, higher = M.resolve_metric(self.metric)
+        queries = _query_frame(queries, self._items.sparkSession,
+                               query_item_col, query_vec_col)
         q = queries.select(
             F.col(query_item_col).alias("source_item"),
             F.col(query_vec_col).alias("__q_vec"),
@@ -445,7 +448,8 @@ class IVFIndex(_ItemsLifecycleMixin):
             "sim_val", metric_fn(F.col("__q_vec"), F.col("__i_vec")))
         return scored, higher, payload
 
-    def range_search(self, queries: DataFrame, *, radius: float,
+    def range_search(self, queries: DataFrame | DriverQueries, *,
+                     radius: float,
                      query_item_col: str = "query_id",
                      query_vec_col: str = "embedding",
                      payload_cols: Sequence[str] | None = None
@@ -686,7 +690,7 @@ def _train_opq_rotation(mat: np.ndarray, m: int, ksub: int, iters: int,
 
 def _exact_rescore(shortlist: DataFrame, items: DataFrame, *,
                    item_key_col: str, item_vec_col: str,
-                   queries: DataFrame, query_item_col: str,
+                   queries: DataFrame | DriverQueries, query_item_col: str,
                    query_vec_col: str, metric: str) -> DataFrame:
     """IndexRefineFlat exact re-scoring shared by PQ/IVFPQ searches:
     join the quantized shortlist (``source_item, sim_item`` + riders)
@@ -700,6 +704,8 @@ def _exact_rescore(shortlist: DataFrame, items: DataFrame, *,
     fn, _ = resolve_metric(metric)
     item_vecs = items.select(F.col(item_key_col).alias("sim_item"),
                              F.col(item_vec_col).alias("__ivec"))
+    queries = _query_frame(queries, items.sparkSession, query_item_col,
+                           query_vec_col)
     qvecs = queries.select(F.col(query_item_col).alias("source_item"),
                            F.col(query_vec_col).alias("__qvec"))
     return (shortlist
@@ -966,7 +972,7 @@ class PQIndex(_ItemsLifecycleMixin):
                                 + (cb * cb).sum(1)[None, :])
         return lut
 
-    def search(self, queries: DataFrame, *, k: int = 10,
+    def search(self, queries: DataFrame | DriverQueries, *, k: int = 10,
                query_item_col: str = "query_id",
                query_vec_col: str = "embedding",
                keep_rank_no: bool = True,
@@ -1150,7 +1156,7 @@ class SQIndex(_ItemsLifecycleMixin):
             items.withColumn("__codes", self._codes_expr(self._vec_col)))
         return self
 
-    def search(self, queries: DataFrame, *, k: int = 10,
+    def search(self, queries: DataFrame | DriverQueries, *, k: int = 10,
                query_item_col: str = "query_id",
                query_vec_col: str = "embedding",
                keep_rank_no: bool = True,
@@ -1374,7 +1380,7 @@ class IVFPQIndex(_ItemsLifecycleMixin):
         self._append(self._coded(items))
         return self
 
-    def search(self, queries: DataFrame, *, k: int = 10,
+    def search(self, queries: DataFrame | DriverQueries, *, k: int = 10,
                query_item_col: str = "query_id",
                query_vec_col: str = "embedding",
                payload_cols: Sequence[str] | None = None,
@@ -1390,8 +1396,8 @@ class IVFPQIndex(_ItemsLifecycleMixin):
             raise ValueError("refine_factor must be >= 1")
         payload = list(payload_cols or [])
         cents = self._ivf.centroids
-        qids, qmat = _collect_vectors(queries, query_item_col,
-                                      query_vec_col, dim=cents.shape[1])
+        qids, qmat = _query_vectors(queries, query_item_col,
+                                    query_vec_col, dim=cents.shape[1])
         if not len(qids):
             raise ValueError("IVFPQIndex.search needs a non-empty query "
                              "set (the query LUT tensor is driver-built)")
@@ -1410,7 +1416,7 @@ class IVFPQIndex(_ItemsLifecycleMixin):
         lut = np.empty((len(qmat), m, self.ksub))
         for j in range(m):
             lut[:, j, :] = qlut[:, j * dsub:(j + 1) * dsub] @ books[j].T
-        spark = queries.sparkSession
+        spark = self._items.sparkSession
         b_lut = spark.sparkContext.broadcast(lut)
 
         qside = pd.DataFrame({

@@ -16,8 +16,9 @@ knn.py):
   what materializes is the graph table
   ``(shard, pos, key, vector, neighbors)`` — parquet-persistable
   (the S2/S3 save/load discipline, no pickle).
-- **search** — the (small) query matrix, collected and checked against
-  the graph's dim on the driver (``knn._collect_vectors``), broadcasts;
+- **search** — the (small) query matrix, collected (or taken as is from
+  ``knn.DriverQueries``) and checked against the graph's dim on the
+  driver (``knn._query_vectors``), broadcasts;
   each shard answers
   with layer-0 beam search (``ef_search`` frontier) via
   ``groupBy(shard).applyInPandas`` — Spark guarantees the whole shard in
@@ -46,12 +47,15 @@ to the dedup operators, not a graph index.
 from __future__ import annotations
 
 import heapq
-from typing import Iterator, Sequence
+from typing import TYPE_CHECKING, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from faisssearcher_spark.operators.knn import DriverQueries
 
 __all__ = ["NSWIndex", "nsw_topk"]
 
@@ -357,7 +361,7 @@ class NSWIndex:
 
     # -- search ------------------------------------------------------------
 
-    def search(self, queries: DataFrame, *, k: int = 10,
+    def search(self, queries: DataFrame | DriverQueries, *, k: int = 10,
                query_item_col: str = "query_id",
                query_vec_col: str = "embedding",
                ef_search: int | None = None,
@@ -366,17 +370,17 @@ class NSWIndex:
         """Global top-k per query: per-shard beam candidates → window
         merge. Output ``(source_item, sim_item, sim_val[, rank_no])`` —
         the family's result shape."""
-        from faisssearcher_spark.operators.knn import (_collect_vectors,
-                                                       _merge_candidates)
+        from faisssearcher_spark.operators.knn import (
+            _merge_candidates, _query_id_type, _query_vectors)
 
         graph = self._require_fitted()
         ef = max(int(ef_search or self.ef_search), k)
-        qids, qmat = _collect_vectors(queries, query_item_col,
-                                      query_vec_col, dim=self.dim)
+        qids, qmat = _query_vectors(queries, query_item_col,
+                                    query_vec_col, dim=self.dim)
         if not len(qids):
             raise ValueError("search needs a non-empty query set (the "
                              "query matrix is driver-collected)")
-        spark = queries.sparkSession
+        spark = graph.sparkSession
         b_q = spark.sparkContext.broadcast(_prep(qmat, self.metric))
         b_qid = spark.sparkContext.broadcast(qids)
         metric, kk = self.metric, k
@@ -414,7 +418,7 @@ class NSWIndex:
                                  "sim_item": out_item,
                                  "sim_val": out_val})
 
-        q_key_t = queries.schema[query_item_col].dataType.simpleString()
+        q_key_t = _query_id_type(queries, query_item_col)
         key_t = graph.schema["key"].dataType.simpleString()
         cand_schema = (f"source_item {q_key_t}, sim_item {key_t}, "
                        "sim_val double")

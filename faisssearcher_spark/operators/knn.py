@@ -57,7 +57,7 @@ Determinism: FAISS breaks distance ties by index order; we order by
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Mapping, Sequence
+from typing import Callable, Iterable, Mapping, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -773,6 +773,66 @@ def _unit_rows(mat):
     return mat / np.where(norms == 0, 1.0, norms)
 
 
+class DriverQueries(NamedTuple):
+    """A query set already on the driver: one string id per query and
+    the float32 query matrix, one row each. It is what
+    ``SparkSearcher`` encodes a list target into, so a search needs no
+    job to build its queries. The indexes that collect their queries
+    (:func:`_sharded_scan`, IVF-PQ, NSW) read the matrix itself
+    (:func:`_query_vectors`); a plan that needs a frame builds a local
+    one from it (:func:`_query_frame`)."""
+
+    ids: list
+    mat: "np.ndarray"
+
+
+def _query_vectors(queries: DataFrame | DriverQueries, id_col: str,
+                   vec_col: str, *, dim: int | None = None):
+    """``(ids, float64 matrix)`` of a query set: a frame is collected by
+    :func:`_collect_vectors`; :class:`DriverQueries` are read as they
+    are, with the same dim check and no job."""
+    import numpy as np
+
+    from faisssearcher_spark.functions.vector import check_vector_stats
+
+    if isinstance(queries, DataFrame):
+        return _collect_vectors(queries, id_col, vec_col, dim=dim)
+    if not len(queries.ids):
+        return np.empty(0, dtype=object), np.empty((0, dim or 0))
+    d = queries.mat.shape[1]
+    check_vector_stats(vec_col, 0, d, d, dim)
+    return (np.asarray(queries.ids, dtype=object),
+            queries.mat.astype(np.float64))
+
+
+def _query_frame(queries: DataFrame | DriverQueries, spark, id_col: str,
+                 vec_col: str) -> DataFrame:
+    """A frame as it is; :class:`DriverQueries` as a local
+    ``(id_col string, vec_col array<float>)`` frame, built from Arrow on
+    the driver: no Python UDF and no job."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    if isinstance(queries, DataFrame):
+        return queries
+    n, d = len(queries.ids), queries.mat.shape[1]
+    vecs = pa.ListArray.from_arrays(
+        pa.array(np.arange(n + 1, dtype=np.int32) * d),
+        pa.array(np.ascontiguousarray(queries.mat, dtype=np.float32).ravel()))
+    return spark.createDataFrame(
+        pa.table({id_col: pa.array(queries.ids, pa.string()), vec_col: vecs}),
+        T.StructType([T.StructField(id_col, T.StringType()),
+                      T.StructField(vec_col, T.ArrayType(T.FloatType()))]))
+
+
+def _query_id_type(queries: DataFrame | DriverQueries, id_col: str) -> str:
+    """The DDL type of a query set's ids (a string for DriverQueries)."""
+    if isinstance(queries, DataFrame):
+        return queries.schema[id_col].dataType.simpleString()
+    return "string"
+
+
 def _collect_vectors(items: DataFrame, key_col: str, vec_col: str, *,
                      dim: int | None = None, held: bool = False):
     """``(keys, float64 matrix)`` of ``items`` in collection order, from
@@ -935,15 +995,17 @@ def blocked_rank(queries: DataFrame, corpus: BlockedCorpus,
     return ranked if keep_rank_no else ranked.drop("rank_no")
 
 
-def _candidate_schema(queries: DataFrame, query_item_col: str,
-                      items: DataFrame, item_key_col: str) -> str:
+def _candidate_schema(queries: DataFrame | DriverQueries,
+                      query_item_col: str, items: DataFrame,
+                      item_key_col: str) -> str:
     """The ``(source_item, sim_item, sim_val)`` candidate frame's DDL."""
-    q_type = queries.schema[query_item_col].dataType.simpleString()
+    q_type = _query_id_type(queries, query_item_col)
     i_type = items.schema[item_key_col].dataType.simpleString()
     return f"source_item {q_type}, sim_item {i_type}, sim_val double"
 
 
-def _sharded_scan(queries: DataFrame, items: DataFrame, *, k: int,
+def _sharded_scan(queries: DataFrame | DriverQueries, items: DataFrame,
+                  *, k: int,
                   query_item_col: str, query_vec_col: str,
                   item_key_col: str, item_col: Column,
                   higher_is_closer: bool, prepare: Callable, scorer: Callable,
@@ -953,8 +1015,9 @@ def _sharded_scan(queries: DataFrame, items: DataFrame, *, k: int,
     ``SQIndex.search``: the per-shard half of shard-and-merge.
 
     The queries are collected once on the driver and checked there
-    (:func:`_collect_vectors`: NULL, ragged, and — given ``dim`` — wrong
-    dimension raise before any job). ``prepare(qmat)`` turns the float64
+    (:func:`_query_vectors`: NULL, ragged, and — given ``dim`` — wrong
+    dimension raise before any job; :class:`DriverQueries` need no
+    collect). ``prepare(qmat)`` turns the float64
     query matrix into the state every executor needs (the query matrix,
     a PQ LUT tensor), which broadcasts with the query ids. Each Arrow
     batch of ``items`` is sorted by key, its ``item_col`` values stacked
@@ -970,8 +1033,8 @@ def _sharded_scan(queries: DataFrame, items: DataFrame, *, k: int,
     import numpy as np
     import pandas as pd
 
-    qids, qmat = _collect_vectors(queries, query_item_col, query_vec_col,
-                                  dim=dim)
+    qids, qmat = _query_vectors(queries, query_item_col, query_vec_col,
+                                dim=dim)
     if not len(qids):
         return None
     b_state = items.sparkSession.sparkContext.broadcast(

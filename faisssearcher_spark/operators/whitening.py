@@ -16,8 +16,9 @@ Spark-first redesign (SURVEY.md §7 step 5):
   n−1 normalization) and runs the tiny d×d SVD locally. At 100 TB this
   moves O(d²) floats per partition, never O(n·d).
 - **transform** broadcasts kernel/bias (d×k + d doubles — a few KB) and runs
-  one numpy matmul per Arrow batch inside a pandas_udf — ~d× faster than an
-  element-wise SQL matvec.
+  one stacked numpy matmul per Arrow batch inside a pandas_udf — ~d× faster
+  than an element-wise SQL matvec; :meth:`VecsWhitening.apply` is that map,
+  also run on the driver for a searcher's list queries.
 - **persistence** is Parquet, not pickle (S4/S5 in SURVEY.md §2.1).
 - **no hidden auto-fit**: the reference fits on the first encode batch when
   unfitted (bert_encoder.py:159-175) — state mutation inside a read path.
@@ -127,22 +128,36 @@ class VecsWhitening:
 
     # -- transform ------------------------------------------------------------
 
-    def transform_expr(self, vec_col: str = "embedding") -> Column:
-        """Column expression applying ``y = (x + bias) @ kernel`` via an
-        Arrow-vectorized pandas_udf (one numpy matmul per batch)."""
+    def apply(self, mat) -> np.ndarray:
+        """``y = (x + bias) @ kernel`` over the rows of ``mat``, in
+        float64. The one whitening map of :meth:`transform_expr` and of a
+        searcher's driver-side query encode, so the two cannot drift.
+
+        Each row is its own ``(1, d) @ (d, k)`` product: one GEMM over
+        the batch picks its BLAS kernels by the batch's shape and the
+        thread count, which moves the last bit of a row with the batch it
+        arrives in. Per row, a vector whitens to the same bits in any
+        Arrow batch and on the driver, at about 1.5-2x the GEMM's time."""
         if self.kernel is None or self.bias is None:
             raise RuntimeError("whitening model must be fit before transform")
-        kernel, bias = self.kernel, self.bias  # captured → broadcast w/ task
+        mat = np.asarray(mat, dtype=np.float64)
+        if mat.shape[1] != self.kernel.shape[0]:
+            # vecs_whitening.py:49's dim guard
+            raise ValueError(
+                f"input dim {mat.shape[1]} != kernel dim {self.kernel.shape[0]}")
+        return np.matmul((mat + self.bias)[:, None, :], self.kernel)[:, 0]
+
+    def transform_expr(self, vec_col: str = "embedding") -> Column:
+        """Column expression applying :meth:`apply` via an
+        Arrow-vectorized pandas_udf (one numpy call per batch)."""
+        if self.kernel is None or self.bias is None:
+            raise RuntimeError("whitening model must be fit before transform")
+        apply = self.apply  # captured → the model ships with the task
 
         @F.pandas_udf(ArrayType(DoubleType()))
         def _whiten(batch: pd.Series) -> pd.Series:
-            mat = np.array(batch.to_list(), dtype=np.float64)
-            if mat.shape[1] != kernel.shape[0]:
-                # vecs_whitening.py:49's dim guard
-                raise ValueError(
-                    f"input dim {mat.shape[1]} != kernel dim {kernel.shape[0]}")
-            out = (mat + bias) @ kernel
-            return pd.Series(list(out))
+            return pd.Series(list(apply(
+                np.array(batch.to_list(), dtype=np.float64))))
 
         return _whiten(F.col(vec_col))
 

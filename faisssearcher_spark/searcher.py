@@ -22,7 +22,12 @@ is the kernel's key-sorted corpus matrix, collected once (validating the
 vectors on the driver) and broadcast, held until ``close()`` like FAISS's
 ``IndexFlat``; ``add_items`` merges new rows into it. ``search()`` answers batched top-K
 queries (faiss_searcher.py:161-187) including the multi-K dict form, on a
-holding searcher with no Spark job until the result is read;
+holding searcher with no Spark job until the result is read. A list
+target on an encoder searcher is encoded once on the driver, as the
+reference encodes its queries: the same encode / whiten / normalize
+arithmetic as the Spark path, bit for bit, with no query job; an indexed
+search takes that query matrix as it is, so it too launches no job until
+the result is read;
 ``cal_sim()`` is exact pairwise scoring (faiss_searcher.py:192-198);
 ``save()``/``load()`` replace whole-object pickling (faiss_searcher.py:
 200-208) with Parquet + JSON metadata ("a searcher is data + config").
@@ -36,17 +41,19 @@ import os
 import re
 from typing import Any, Iterable, Mapping, Sequence, Union
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from faisssearcher_spark.encoders.base import Encoder, encoder_udf
+from faisssearcher_spark.encoders.base import (Encoder, encode_batch,
+                                               encoder_udf)
 from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.functions.vector import (
     l2_normalize, to_float32, validate_vectors)
 from faisssearcher_spark.operators import knn as _knn
 from faisssearcher_spark.operators.ann import parse_index_param
 from faisssearcher_spark.operators.knn import (
-    BlockedCorpus, blocked_rank, cal_sim, knn_join, multi_k)
+    BlockedCorpus, DriverQueries, blocked_rank, cal_sim, knn_join, multi_k)
 from faisssearcher_spark.operators.whitening import VecsWhitening
 
 _VEC = "__vec"
@@ -307,7 +314,10 @@ class SparkSearcher:
         the held broadcasts when it runs, so read it before ``close()``
         destroys them (``add_items`` and a retrain leave them be)."""
         corpus = self._require_trained()
-        queries = self._prepare_queries(target, corpus)
+        queries = self._prepare_queries(target)
+        if self._index is None:
+            queries = _knn._query_frame(queries, corpus.sparkSession,
+                                        "source_item", _VEC)
 
         payload = [c for c in self.items.columns
                    if c not in (self.item_col, self.vec_col, self.key_col)]
@@ -371,7 +381,8 @@ class SparkSearcher:
         # each K a filter over that one cached frame
         return {k: finish(df) for k, df in multi_k(rank_at, topK).items()}
 
-    def _rank_indexed(self, queries: DataFrame, k: int, payload: list,
+    def _rank_indexed(self, queries: DataFrame | DriverQueries, k: int,
+                      payload: list,
                       score_scale: int | None) -> DataFrame:
         """Top-k with ``rank_no`` through the index_param structure
         (reference semantics: when an index_param is given, EVERY search
@@ -384,24 +395,29 @@ class SparkSearcher:
             res = res.withColumn("sim_val", F.round("sim_val", score_scale))
         return res
 
-    def _prepare_queries(self, target, corpus: DataFrame) -> DataFrame:
-        """Shared query prep for search()/range_search(): List[str]
-        targets become a DataFrame (queries are data, not driver-side
-        state — the reference's primary form), the encoder/raw-vector
-        branch picks the text column, and the encoded frame reduces to
+    def _prepare_queries(self, target) -> DataFrame | DriverQueries:
+        """Shared query prep for search()/range_search(): the queries as
         ``(source_item, _VEC)``.
+
+        A List[str] target on an encoder searcher is encoded on the
+        driver (:meth:`_encode_texts`) into :class:`knn.DriverQueries`:
+        an index takes its matrix as is, and the other plans build a
+        local frame from it (``knn._query_frame``). A raw-vector
+        searcher has no encoder for a list. A DataFrame target goes
+        through :meth:`_vectorize` (queries are data, not driver-side
+        state — the reference's primary form): the encoder/raw-vector
+        branch picks the text column.
 
         A list target's text is its query id, so a repeated text is the
         same query and is searched once: every strategy then returns k
         rows per distinct target (the kernels rank each query ROW, the
         catalyst plan each id, so repeated ids would split them)."""
-        spark = corpus.sparkSession
         if not isinstance(target, DataFrame):
-            target = spark.createDataFrame(
-                [(t,) for t in dict.fromkeys(map(str, target))],
-                "source_item string")
-            q_text, q_vec = "source_item", None
-        elif self.encoder is not None:
+            if self.encoder is None:
+                raise TypeError("a list target needs an encoder; pass a "
+                                "DataFrame with the vector column")
+            return self._encode_texts(list(dict.fromkeys(map(str, target))))
+        if self.encoder is not None:
             q_text, q_vec = (self.item_col
                              if self.item_col in target.columns
                              else target.columns[0]), None
@@ -411,6 +427,31 @@ class SparkSearcher:
         src_col = q_text if q_text is not None else self.key_col
         return queries.select(F.col(src_col).alias("source_item"),
                               F.col(_VEC))
+
+    def _encode_texts(self, texts: list) -> DriverQueries:
+        """:meth:`_vectorize`'s steps on the driver, with its arithmetic:
+        the encoder's float32 batch (``encode_batch``), the whitening map
+        in float64 (``VecsWhitening.apply``), then under ``norm_vec`` the
+        division by the L2 norm, and the float32 rounding. The norm is
+        summed as a left fold, the order of ``l2_normalize``'s Spark
+        ``aggregate``: the last column of ``cumsum`` is that sum bit for
+        bit, where numpy's pairwise ``sum`` is not. A text that encodes
+        to the zero vector has no direction and raises."""
+        if not texts:
+            return DriverQueries([], np.empty((0, 0), dtype=np.float32))
+        mat = encode_batch(self.encoder, texts)
+        if self.whitening is not None:
+            mat = self.whitening.apply(mat)
+        if self.norm_vec:
+            mat = np.asarray(mat, dtype=np.float64)
+            norm = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+            zero = np.flatnonzero(norm == 0)
+            if len(zero):
+                raise ValueError(
+                    f"query {texts[zero[0]]!r} encodes to the zero vector, "
+                    "which cannot be L2-normalized")
+            mat = mat / norm[:, None]
+        return DriverQueries(texts, mat.astype(np.float32))
 
     def range_search(
         self,
@@ -441,7 +482,8 @@ class SparkSearcher:
                                                        radius_join_multi)
 
         corpus = self._require_trained()
-        queries = self._prepare_queries(target, corpus)
+        queries = _knn._query_frame(self._prepare_queries(target),
+                                    corpus.sparkSession, "source_item", _VEC)
         payload = [c for c in self.items.columns
                    if c not in (self.item_col, self.vec_col, self.key_col)]
         kwargs = dict(metric=self._kernel_metric(), query_vec_col=_VEC,

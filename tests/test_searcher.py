@@ -931,3 +931,161 @@ class TestAddItemsValidation:
         assert _rows(s.search(q, topK=3, keep_rank_no=True,
                               score_scale=4)) == before
         s.close()
+
+
+class TestDriverEncodedQueries:
+    """A list target on an encoder searcher is encoded once on the
+    driver (SparkSearcher._encode_texts) into the float32 bits the Spark
+    encode/whiten/normalize columns give; an indexed search takes that
+    matrix without a query job, and every plan returns the rows a
+    DataFrame target of the same texts gets."""
+
+    TEXTS = ["spark join merge", "vector search index", "the",
+             "spark join merge", "a b c d e f"]
+
+    @pytest.fixture(scope="class")
+    def whitening(self, documents):
+        from faisssearcher_spark.encoders.base import encoder_udf
+        from faisssearcher_spark.operators.whitening import VecsWhitening
+
+        encoded = documents.withColumn(
+            "emb", encoder_udf(HashingEncoder(dim=64))(F.col("text")))
+        return VecsWhitening(48).fit(encoded, "emb")
+
+    @staticmethod
+    def _frame(spark, texts):
+        return spark.createDataFrame([(t,) for t in texts], "text string")
+
+    @pytest.mark.parametrize("whiten,kw", [
+        (True, dict(measurement="cos")),
+        (False, dict(measurement="cos")),
+        (True, dict(measurement="ip", norm_vec=False))],
+        ids=["whitened-cos", "cos", "whitened-ip"])
+    def test_driver_vectors_equal_spark_vectors(self, spark, documents,
+                                                whitening, whiten, kw):
+        import numpy as np
+
+        s = SparkSearcher(documents.select("text", "doc_id"),
+                          encoder=HashingEncoder(dim=64),
+                          whitening=whitening if whiten else None, **kw)
+        texts = list(dict.fromkeys(
+            r["text"] for r in documents.select("text").collect()))
+        driver = s._encode_texts(texts)
+        assert driver.ids == texts and driver.mat.dtype == np.float32
+        # the Spark path encodes in Arrow batches of every size
+        for parts in (1, 7):
+            target = self._frame(spark, texts).repartition(parts)
+            got = dict(s._prepare_queries(target).collect())
+            spark_mat = np.array([got[t] for t in texts], dtype=np.float32)
+            assert np.array_equal(driver.mat, spark_mat), parts
+
+    @pytest.mark.parametrize("index_param", [
+        "IVF8,PQ4", "IVF8,PQ4,RFlat", "PQ4,RFlat", "SQ8", "IVF8", "HNSW8",
+        None])
+    def test_list_and_frame_targets_same_rows(self, spark, documents,
+                                              whitening, index_param):
+        s = SparkSearcher(documents.select("text", "doc_id", "lang"),
+                          encoder=HashingEncoder(dim=64), whitening=whitening,
+                          measurement="cos", index_param=index_param).train()
+        frame = self._frame(spark, list(dict.fromkeys(self.TEXTS)))
+        for topK in (5, [1, 3]):
+            by_list = s.search(self.TEXTS, topK=topK, keep_rank_no=True)
+            by_frame = s.search(frame, topK=topK, keep_rank_no=True)
+            if isinstance(topK, int):
+                by_list, by_frame = {topK: by_list}, {topK: by_frame}
+            assert sorted(by_list) == sorted(by_frame)
+            for k in by_frame:
+                assert by_list[k].schema == by_frame[k].schema
+                rows = _rows(by_list[k])
+                assert rows == _rows(by_frame[k]), k
+                # a repeated text is one query: k rows per distinct text
+                assert len(rows) == k * len(set(self.TEXTS))
+        s.close()
+
+    @pytest.mark.parametrize("radius", [0.5, [0.3, 0.6]])
+    def test_range_search_list_equals_frame(self, spark, documents,
+                                            whitening, radius):
+        s = SparkSearcher(documents.select("text", "doc_id"),
+                          encoder=HashingEncoder(dim=64), whitening=whitening,
+                          measurement="cos").train()
+        frame = self._frame(spark, list(dict.fromkeys(self.TEXTS)))
+        by_list = s.range_search(self.TEXTS, radius)
+        by_frame = s.range_search(frame, radius)
+        if not isinstance(radius, list):
+            by_list, by_frame = {radius: by_list}, {radius: by_frame}
+        assert sorted(by_list) == sorted(by_frame)
+        for r in by_frame:
+            assert _rows(by_list[r]) == _rows(by_frame[r]) != []
+        s.close()
+
+    def test_indexed_list_search_launches_no_job(self, spark, documents,
+                                                 whitening):
+        s = SparkSearcher(documents.select("text", "doc_id"),
+                          encoder=HashingEncoder(dim=64), whitening=whitening,
+                          measurement="cos", index_param="IVF8,PQ4").train()
+        for frame in s._cached_state():
+            frame.count()
+        before = _last_job_id(spark)
+        res = s.search(self.TEXTS, topK=3)
+        assert _last_job_id(spark) == before
+        assert res.count() == 3 * len(set(self.TEXTS))
+        assert _last_job_id(spark) > before
+        s.close()
+
+    def test_empty_list(self, documents):
+        flat = SparkSearcher(documents.select("text", "lang"),
+                             encoder=HashingEncoder(dim=8)).train()
+        res = flat.search([], topK=3, keep_rank_no=True)
+        assert res.schema.simpleString() == (
+            "struct<source_item:string,sim_item:string,sim_val:double,"
+            "rank_no:int,lang:string>")
+        assert res.count() == 0
+        flat.close()
+        indexed = SparkSearcher(documents.select("text", "lang"),
+                                encoder=HashingEncoder(dim=8),
+                                index_param="IVF4,PQ2").train()
+        with pytest.raises(ValueError, match="non-empty query set"):
+            indexed.search([], topK=3)
+        indexed.close()
+
+    def test_raw_vector_list_target_raises_before_any_job(self, spark,
+                                                          embeddings):
+        s = SparkSearcher(embeddings, vec_col="embedding",
+                          key_col="vec_id").train()
+        before = _last_job_id(spark)
+        for call in (lambda: s.search(["k1"]),
+                     lambda: s.range_search(["k1"], 0.5)):
+            with pytest.raises(TypeError, match="a list target needs an "
+                                                "encoder"):
+                call()
+        assert _last_job_id(spark) == before
+        s.close()
+
+    def test_zero_norm_list_query_raises_before_any_job(self, spark,
+                                                        documents):
+        s = SparkSearcher(documents.select("text", "lang"),
+                          encoder=HashingEncoder(dim=8)).train()
+        before = _last_job_id(spark)
+        with pytest.raises(ValueError, match="query '' encodes to the zero "
+                                             "vector"):
+            s.search(["spark join merge", ""], topK=3)
+        assert _last_job_id(spark) == before
+        s.close()
+        # without normalization the zero vector is an ordinary query
+        ip = SparkSearcher(documents.select("text", "lang"),
+                           encoder=HashingEncoder(dim=8),
+                           measurement="ip").train()
+        assert ip.search([""], topK=2).count() == 2
+        ip.close()
+
+    def test_non_matrix_encoder_output_raises(self, documents):
+        class Flat:
+            dim = 8
+
+            def encode(self, items):
+                return HashingEncoder(dim=8).encode(items).ravel()
+
+        s = SparkSearcher(documents.select("text", "lang"), encoder=Flat())
+        s.corpus = documents   # train() would fail on the same encoder
+        with pytest.raises(ValueError, match=r"want \(n, dim\)"):
+            s.search(["spark join merge"], topK=2)

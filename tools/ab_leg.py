@@ -50,27 +50,28 @@ def main() -> None:
 
     out: dict = {"leg": leg, "runs": runs,
                  "code": os.path.dirname(faisssearcher_spark.__file__)}
-    tmp = tempfile.mkdtemp(prefix="ab_leg_")
     n_part = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    for f in points:
-        epath, dpath = f"{tmp}/emb_x{f}", f"{tmp}/docs_x{f}"
-        scalebench.scaled_embeddings(emb_base, f).write.parquet(epath)
-        scalebench.scaled_documents(docs_base, f).write.parquet(dpath)
-        emb = spark.read.parquet(epath).repartition(n_part)
-        docs = spark.read.parquet(dpath).repartition(n_part)
-        n_f = emb.count()
-        docs.count()
-        thunks = scalebench._scale_queries(emb, docs, queries, n_f,
-                                           factor=f)
-        if leg not in thunks:
-            raise SystemExit(f"unknown leg {leg!r}; choose from "
-                             f"{sorted(thunks)}")
-        secs = []
-        for _ in range(runs):
-            t0 = time.time()
-            thunks[leg]().write.mode("overwrite").format("noop").save()
-            secs.append(round(time.time() - t0, 3))
-        out[f"sec_x{f}"] = secs
+    # the x<f> parquet copies are removed on every exit path
+    with tempfile.TemporaryDirectory(prefix="ab_leg_") as tmp:
+        for f in points:
+            epath, dpath = f"{tmp}/emb_x{f}", f"{tmp}/docs_x{f}"
+            scalebench.scaled_embeddings(emb_base, f).write.parquet(epath)
+            scalebench.scaled_documents(docs_base, f).write.parquet(dpath)
+            emb = spark.read.parquet(epath).repartition(n_part)
+            docs = spark.read.parquet(dpath).repartition(n_part)
+            n_f = emb.count()
+            docs.count()
+            thunks = scalebench._scale_queries(emb, docs, queries, n_f,
+                                               factor=f)
+            if leg not in thunks:
+                raise SystemExit(f"unknown leg {leg!r}; choose from "
+                                 f"{sorted(thunks)}")
+            secs = []
+            for _ in range(runs):
+                t0 = time.time()
+                thunks[leg]().write.mode("overwrite").format("noop").save()
+                secs.append(round(time.time() - t0, 3))
+            out[f"sec_x{f}"] = secs
     mins = {f: min(out[f"sec_x{f}"]) for f in points}
     for a, b in zip(points, points[1:]):
         out[f"ratio_{a}_{b}"] = round(mins[b] / mins[a], 2)
