@@ -19,7 +19,8 @@ from pyspark.sql.types import ArrayType, FloatType, DoubleType
 from faisssearcher_spark.functions.metrics import ColumnOrName, _col, as_double
 
 
-def l2_normalize(c: ColumnOrName, zero_norm_nan: bool = True) -> Column:
+def l2_normalize(c: ColumnOrName, zero_norm_nan: bool = True,
+                 on_zero: Column | None = None) -> Column:
     """L2-normalize an array<float|double> column.
 
     ``zero_norm_nan=True`` divides the zero vector by its zero norm, as
@@ -27,18 +28,32 @@ def l2_normalize(c: ColumnOrName, zero_norm_nan: bool = True) -> Column:
     Here that yields NaN only with ``spark.sql.ansi.enabled=false``:
     under Spark 4's default ANSI mode the division raises
     ``DIVIDE_BY_ZERO`` when the column is computed. With ``False`` the
-    zero vector is passed through unchanged.
+    zero vector is passed through unchanged. ``on_zero``, when given,
+    is a zero vector's value instead (e.g. an ``F.raise_error`` naming
+    the row).
     """
     v = as_double(c)
-    norm = F.sqrt(F.aggregate(F.zip_with(v, v, lambda x, y: x * y),
-                              F.lit(0.0), lambda acc, x: acc + x))
-    # Catalyst does not CSE inside higher-order lambdas: `transform(v,
-    # x -> x / norm)` would re-run the O(d) norm aggregate per element
-    # (O(d^2) per call, measured ~6x on the knn path). array_repeat
-    # evaluates norm ONCE and zip_with divides element-wise — same IEEE
-    # semantics (x/0.0 -> Inf/NaN) as the per-element division.
-    norm_arr = F.array_repeat(norm, F.size(v))
-    normalized = F.zip_with(v, norm_arr, lambda x, nn: x / nn)
+
+    def divide(norm: Column) -> Column:
+        # Catalyst does not CSE inside higher-order lambdas: `transform(
+        # v, x -> x / norm)` would re-run the O(d) norm aggregate per
+        # element (O(d^2) per call, measured ~6x on the knn path).
+        # array_repeat evaluates norm ONCE and zip_with divides
+        # element-wise — same IEEE semantics (x/0.0 -> Inf/NaN) as the
+        # per-element division.
+        return F.zip_with(v, F.array_repeat(norm, F.size(v)),
+                          lambda x, nn: x / nn)
+
+    squares = F.zip_with(v, v, lambda x, y: x * y)
+    if on_zero is not None:
+        # the squared norm is bound once, as the aggregate's finish
+        # argument, for both the zero test and the division; a NULL
+        # vector stays NULL
+        return F.aggregate(squares, F.lit(0.0), lambda acc, x: acc + x,
+                           lambda ss: F.when(ss == 0.0, on_zero)
+                           .otherwise(divide(F.sqrt(ss))))
+    norm = F.sqrt(F.aggregate(squares, F.lit(0.0), lambda acc, x: acc + x))
+    normalized = divide(norm)
     if zero_norm_nan:
         return normalized
     return F.when(norm != 0.0, normalized).otherwise(v)

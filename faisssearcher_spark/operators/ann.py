@@ -1,9 +1,12 @@
 """Approximate nearest-neighbor search paths.
 
 The reference delegates ANN to FAISS index structures (HNSW / IVF via
-``index_factory``, faiss_searcher.py:100-107). Spark has no resident index;
-the scale-path equivalents are *partitioned pruning* strategies where the
-candidate set comes from an equi-join on a derived bucket key:
+``index_factory``, faiss_searcher.py:100-107) and answers a search with
+one FAISS call. Spark has no resident index; the scale-path equivalents
+prune candidates by a derived bucket or cell key, and the indexes here
+search through ``knn.py``'s one broadcast-queries scan
+(:func:`~faisssearcher_spark.operators.knn._sharded_scan`) with a
+per-index scorer, as FAISS scans probed lists with a per-list scorer:
 
 - :class:`SignLSH` — random-hyperplane sign buckets: items hash to a
   ``num_bits``-bit bucket; queries probe their own bucket (+ optional
@@ -12,14 +15,16 @@ candidate set comes from an equi-join on a derived bucket key:
 - :class:`IVFIndex` — the IVF analog: k-means coarse quantizer (MLlib
   by default, or seeded driver Lloyd on a bounded sample), items
   assigned to nearest centroid cell, queries probe ``nprobe`` nearest
-  cells. Equivalent semantics to FAISS ``IVF<k>,Flat``.
+  cells (computed on the driver). Search is one probed-cell scan: each
+  cell's rows are scored with a GEMM against only the queries that
+  probe it. Equivalent semantics to FAISS ``IVF<k>,Flat``.
 - :class:`PQIndex` — product quantization with ADC search: per-subspace
   codebooks, items stored as m codes, query-time LUT accumulation.
   Equivalent semantics to FAISS ``PQ<m>``; no faiss dependency.
 - :class:`IVFPQIndex` — cells + residual PQ (FAISS ``IVF<n>,PQ<m>``):
-  centroids and codebooks train on one driver sample in one Spark job,
-  candidate pruning via the cell equi-join, separable inner-product ADC
-  (``q·c_cell + Σ LUT``), only m-byte codes shuffle.
+  centroids and codebooks train on one driver sample in one Spark job;
+  search is the same probed-cell scan over the m-byte code table,
+  scoring the separable inner-product ADC ``q·c_cell + Σ LUT``.
 - :class:`SQIndex` — per-dimension scalar quantizer (FAISS ``SQ8``):
   trained [vmin, vmax] bounds, d-byte codes, decode-and-GEMM search.
 - :func:`parse_index_param` — the reference's ``index_param`` specs
@@ -42,23 +47,14 @@ from typing import Any, Callable, Mapping, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.operators.graph import NSWIndex
 from faisssearcher_spark.operators.knn import (
-    DriverQueries, _fill_cache, _gemm_scorer, _merge_candidates,
-    _query_frame, _query_vectors, _sharded_scan, _unit_rows)
-
-
-def _rank_topk(scored: DataFrame, k: int, higher_is_closer: bool) -> DataFrame:
-    order = [F.col("sim_val").desc() if higher_is_closer else F.col("sim_val").asc(),
-             F.col("sim_item").asc()]
-    w = Window.partitionBy("source_item").orderBy(*order)
-    return (scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .withColumn("rank_no", F.col("__rn") - 1).drop("__rn"))
+    DriverQueries, _empty_result, _fill_cache, _gemm_scan, _gemm_scorer,
+    _merge_candidates, _query_frame, _rank_topk, _sharded_scan, _unit_rows)
 
 
 def _write_index_meta(spark, path: str, meta: dict) -> None:
@@ -264,11 +260,15 @@ class IVFIndex(_ItemsLifecycleMixin):
     """IVF-style coarse quantization: k-means cells + nprobe search.
 
     Parity target: FAISS ``index_factory(dim, "IVF<n>,Flat", metric)``
-    (faiss_searcher.py:104). fit() trains the centroids and assigns every
-    item to its nearest one; search() finds each query's ``nprobe``
-    nearest centroids (broadcast join against the tiny centroid table)
-    and runs exact scoring *within the probed cells only* — the
-    item⋈query meeting is an equi-join on cell id.
+    (faiss_searcher.py:104), for the ``cos``, ``ip`` and ``l2`` metrics.
+    fit() trains the centroids and assigns every item to its nearest
+    one; search() finds each query's ``nprobe`` nearest centroids on the
+    driver and scores *within the probed cells only*: one probed-cell
+    scan of the fitted assignment (``knn._sharded_scan``), each cell's
+    rows scored with a GEMM against the queries that probe it, then the
+    one (score, key) rank window. ``range_search`` keeps a Catalyst
+    plan (the cell equi-join), as ``knn.radius_join`` keeps one for
+    exact search.
 
     ``train_mode="mllib"`` (the default) fits MLlib k-means over the
     whole corpus: one Spark job per iteration plus k-means‖ init.
@@ -290,6 +290,10 @@ class IVFIndex(_ItemsLifecycleMixin):
                  train_mode: str = "mllib", train_sample: int = 100_000):
         if n_cells < 1:
             raise ValueError(f"n_cells must be >= 1, got {n_cells}")
+        if metric not in ("cos", "ip", "l2"):
+            raise ValueError("IVFIndex supports 'cos', 'ip' and 'l2' (the "
+                             f"metrics its GEMM scorer computes), got "
+                             f"{metric!r}")
         self.n_cells = n_cells
         self.nprobe = nprobe
         self.seed = seed
@@ -411,24 +415,53 @@ class IVFIndex(_ItemsLifecycleMixin):
                query_item_col: str = "query_id",
                query_vec_col: str = "embedding",
                payload_cols: Sequence[str] | None = None) -> DataFrame:
-        """``payload_cols`` carry item columns into the result inline —
-        they ride the cell equi-join on the fitted assignment (the
-        catalyst knn pattern), so no re-attach join and no broadcast of
-        anything item-sized."""
-        scored, higher, payload = self._probe_scored(
-            queries, query_item_col, query_vec_col, payload_cols)
-        return _rank_topk(scored, k, higher).select(
+        """Exact top-k within each query's ``nprobe`` nearest cells: one
+        probed-cell :func:`~faisssearcher_spark.operators.knn._sharded_scan`
+        of the fitted assignment, each cell's rows scored with a GEMM
+        against the queries that probe it, then the one rank window.
+        The queries are checked on the driver at the index's dim (NULL,
+        ragged or wrong-dim vectors raise ``ValueError`` before any
+        job); an empty query set returns the typed empty frame.
+        ``payload_cols`` ride the scan: each result row carries its own
+        corpus row's payload, and nothing item-sized is joined or
+        broadcast."""
+        if self._items is None:
+            raise RuntimeError("IVFIndex is not fit; call fit() first")
+        payload = list(payload_cols or [])
+        cents, nprobe, spherical = self.centroids, self.nprobe, self._spherical
+        higher = self.metric != "l2"
+        cand = _sharded_scan(
+            queries, self._items, k=k, query_item_col=query_item_col,
+            query_vec_col=query_vec_col, item_key_col=self._item_key,
+            item_col=M.as_double(self._item_vec), higher_is_closer=higher,
+            probe=lambda qmat: _nearest_cells(qmat, cents, nprobe,
+                                              spherical),
+            dim=cents.shape[1], payload_cols=payload,
+            **_gemm_scan(self.metric, self.metric == "cos"))
+        if cand is None:
+            return _empty_result(queries, self._items,
+                                 query_item_col=query_item_col,
+                                 item_key_col=self._item_key,
+                                 payload_cols=payload, keep_rank_no=True)
+        return _rank_topk(cand, k, higher).select(
             "source_item", "sim_item", "sim_val", "rank_no", *payload)
 
-    def _probe_scored(self, queries: DataFrame | DriverQueries,
-                      query_item_col: str,
-                      query_vec_col: str,
-                      payload_cols: Sequence[str] | None
-                      ) -> "tuple[DataFrame, bool, list]":
-        """Shared probe-and-score frame for search()/range_search():
-        nprobe nearest cells per query exploded onto the cell equi-join
-        against the fitted assignment — only the reduction (top-k window
-        vs radius filter) differs between the two callers."""
+    def range_search(self, queries: DataFrame | DriverQueries, *,
+                     radius: float,
+                     query_item_col: str = "query_id",
+                     query_vec_col: str = "embedding",
+                     payload_cols: Sequence[str] | None = None
+                     ) -> DataFrame:
+        """FAISS ``IndexIVF.range_search`` parity: every item within
+        ``radius`` among the ``nprobe`` probed cells — approximate
+        exactly the way FAISS's is (items in unprobed cells are missed;
+        raise ``nprobe`` toward ``n_cells`` for exactness, at which
+        point this equals the exact scan). Strict inequality, squared-l2
+        convention, UNORDERED output — the same contract as
+        ``operators/knn.radius_join``, whose Catalyst plan it keeps:
+        each query's probed cells explode onto a cell equi-join against
+        the fitted assignment, so only the probed fraction of the corpus
+        is scored."""
         if self._items is None:
             raise RuntimeError("IVFIndex is not fit; call fit() first")
         payload = list(payload_cols or [])
@@ -444,32 +477,11 @@ class IVFIndex(_ItemsLifecycleMixin):
             F.col(self._item_key).alias("sim_item"),
             F.col(self._item_vec).alias("__i_vec"), "cell",
             *[F.col(c) for c in payload])
-        scored = q.join(it, "cell").withColumn(
-            "sim_val", metric_fn(F.col("__q_vec"), F.col("__i_vec")))
-        return scored, higher, payload
-
-    def range_search(self, queries: DataFrame | DriverQueries, *,
-                     radius: float,
-                     query_item_col: str = "query_id",
-                     query_vec_col: str = "embedding",
-                     payload_cols: Sequence[str] | None = None
-                     ) -> DataFrame:
-        """FAISS ``IndexIVF.range_search`` parity: every item within
-        ``radius`` among the ``nprobe`` probed cells — approximate
-        exactly the way FAISS's is (items in unprobed cells are missed;
-        raise ``nprobe`` toward ``n_cells`` for exactness, at which
-        point this equals the exact scan). Strict inequality, squared-l2
-        convention, UNORDERED output — the same contract as
-        ``operators/knn.radius_join``, with the scan replaced by the
-        cell equi-join so only the probed fraction of the corpus is
-        scored."""
-        scored, higher, payload = self._probe_scored(
-            queries, query_item_col, query_vec_col, payload_cols)
-        keep = (F.col("sim_val") > radius if higher
-                else F.col("sim_val") < radius)
-        return scored.filter(keep).select(
-            "source_item", "sim_item", "sim_val", *payload)
-
+        sim = metric_fn(F.col("__q_vec"), F.col("__i_vec"))
+        return q.join(it, "cell").withColumn("sim_val", sim) \
+            .filter(F.col("sim_val") > radius if higher
+                    else F.col("sim_val") < radius) \
+            .select("source_item", "sim_item", "sim_val", *payload)
 
     # -- persistence (index lifecycle S2/S3, faiss_searcher.py:109-114,189-190)
 
@@ -626,6 +638,24 @@ def _pq_reconstruct(codes: np.ndarray, books: np.ndarray) -> np.ndarray:
         [books[j][codes[:, j]] for j in range(books.shape[0])], axis=1)
 
 
+def _pq_lut(qmat: np.ndarray, books: np.ndarray,
+            higher: bool) -> np.ndarray:
+    """LUT[q, j, c]: the subspace score of query q against centroid c of
+    book j — a dot product when ``higher``, squared-L2 partials (which
+    add up) otherwise."""
+    m, ksub, dsub = books.shape
+    lut = np.empty((len(qmat), m, ksub))
+    for j in range(m):
+        qs = qmat[:, j * dsub:(j + 1) * dsub]
+        cb = books[j]
+        if higher:
+            lut[:, j, :] = qs @ cb.T
+        else:
+            lut[:, j, :] = ((qs * qs).sum(1, keepdims=True)
+                            - 2.0 * qs @ cb.T + (cb * cb).sum(1)[None, :])
+    return lut
+
+
 def _adc_scorer(lut: np.ndarray, codes: np.ndarray):
     """PQ's block scorer for the sharded scan's top-k fold: ``score(s,
     e)`` accumulates ``Σ_j LUT[q, j, code_j]`` for items ``s:e`` of a
@@ -747,12 +777,9 @@ def b1_rerank_topk(queries: DataFrame, items: DataFrame, *, k: int = 10,
     q = queries.select(F.col(query_item_col).alias("source_item"),
                        quantize_b1(query_vec_col).alias("__q_code"))
     scored = F.broadcast(q).crossJoin(it).withColumn(
-        "__ham", b1_hamming("__q_code", "__i_code"))
-    w = Window.partitionBy("source_item").orderBy(
-        F.col("__ham").asc(), F.col("sim_item").asc())
-    shortlist = (scored.withColumn("__rn", F.row_number().over(w))
-                 .filter(F.col("__rn") <= k * factor)
-                 .select("source_item", "sim_item"))
+        "sim_val", b1_hamming("__q_code", "__i_code"))
+    shortlist = _rank_topk(scored, k * factor, False).select(
+        "source_item", "sim_item")
     exact = _exact_rescore(shortlist, items, item_key_col=item_key_col,
                            item_vec_col=item_vec_col, queries=queries,
                            query_item_col=query_item_col,
@@ -807,12 +834,9 @@ def mrl_rerank_topk(queries: DataFrame, items: DataFrame, *, k: int = 10,
     q = queries.select(F.col(query_item_col).alias("source_item"),
                        mrl_truncate(query_vec_col, dims).alias("__q_mrl"))
     scored = F.broadcast(q).crossJoin(it).withColumn(
-        "__ps", M.inner_product("__q_mrl", "__i_mrl"))
-    w = Window.partitionBy("source_item").orderBy(
-        F.col("__ps").desc(), F.col("sim_item").asc())
-    shortlist = (scored.withColumn("__rn", F.row_number().over(w))
-                 .filter(F.col("__rn") <= k * factor)
-                 .select("source_item", "sim_item"))
+        "sim_val", M.inner_product("__q_mrl", "__i_mrl"))
+    shortlist = _rank_topk(scored, k * factor, True).select(
+        "source_item", "sim_item")
     exact = _exact_rescore(shortlist, items, item_key_col=item_key_col,
                            item_vec_col=item_vec_col, queries=queries,
                            query_item_col=query_item_col,
@@ -951,26 +975,14 @@ class PQIndex(_ItemsLifecycleMixin):
     # -- ADC search --------------------------------------------------------
 
     def _lut(self, qmat: np.ndarray) -> np.ndarray:
-        """LUT[q, j, c]: the subspace score of query q against centroid
-        c of book j — a dot product for cos / ip, squared-L2 partials
-        (which add up) for l2."""
+        """The (queries, m, ksub) ADC lookup table (:func:`_pq_lut`) of
+        the queries as encode sees its rows: unit-scaled for cos, then
+        OPQ-rotated ((Rq)·(Rx) = q·x, exact scores)."""
         if self._spherical:
             qmat = _unit_rows(qmat)
-        if self.rotation is not None:   # OPQ: same rotation as encode —
-            qmat = qmat @ self.rotation  # (Rq)·(Rx) = q·x, exact scores
-        books = self.codebooks
-        dsub = books.shape[2]
-        lut = np.empty((len(qmat), self.m, self.ksub))
-        for j in range(self.m):
-            qs = qmat[:, j * dsub:(j + 1) * dsub]
-            cb = books[j]
-            if self._higher:
-                lut[:, j, :] = qs @ cb.T
-            else:
-                lut[:, j, :] = ((qs * qs).sum(1, keepdims=True)
-                                - 2.0 * qs @ cb.T
-                                + (cb * cb).sum(1)[None, :])
-        return lut
+        if self.rotation is not None:
+            qmat = qmat @ self.rotation
+        return _pq_lut(qmat, self.codebooks, self._higher)
 
     def search(self, queries: DataFrame | DriverQueries, *, k: int = 10,
                query_item_col: str = "query_id",
@@ -979,13 +991,14 @@ class PQIndex(_ItemsLifecycleMixin):
                payload_cols: Sequence[str] | None = None,
                refine_factor: int | None = None) -> DataFrame:
         """ADC top-k search. ``refine_factor`` enables the FAISS
-        ``IndexRefineFlat`` pattern: the quantized scan shortlists
-        ``k × refine_factor`` candidates per query (per shard), which
-        are then EXACTLY re-scored against the stored float vectors —
-        a candidate-sized join + pure-Catalyst metric, so the exact
-        pass touches ~k·factor vectors per query instead of the corpus.
-        Recovers most of the recall PQ loses for a few percent extra
-        cost; final ranking/scores are exact for the survivors."""
+        ``IndexRefineFlat`` pattern: the quantized scan shortlists the
+        top ``k × refine_factor`` candidates per query (ranked by the
+        one window, so the shortlist does not depend on partitioning),
+        which are then EXACTLY re-scored against the stored float
+        vectors — a candidate-sized join + pure-Catalyst metric, so the
+        exact pass touches k·factor vectors per query instead of the
+        corpus. Recovers most of the recall PQ loses for a few percent
+        extra cost; final ranking/scores are exact for the survivors."""
         if self._items is None:
             raise RuntimeError("PQIndex is not fit; call fit() first")
         if refine_factor is not None and refine_factor < 1:
@@ -994,15 +1007,17 @@ class PQIndex(_ItemsLifecycleMixin):
             queries, self._items, k=k * (refine_factor or 1),
             query_item_col=query_item_col, query_vec_col=query_vec_col,
             item_key_col=self._item_key, item_col=F.col("__codes"),
-            higher_is_closer=self._higher, prepare=self._lut,
-            scorer=_adc_scorer,
+            higher_is_closer=self._higher,
+            prepare=lambda qmat: (self._lut(qmat),),
+            scorer=lambda st, codes, _cell: _adc_scorer(st[0], codes),
             dim=self.codebooks.shape[0] * self.codebooks.shape[2])
         if cand is None:
             raise ValueError("PQIndex.search needs a non-empty query set "
                              "(the query LUT tensor is driver-built)")
         if refine_factor is not None:
             cand = _exact_rescore(
-                cand.select("source_item", "sim_item"), self._items,
+                _rank_topk(cand, k * refine_factor, self._higher)
+                .select("source_item", "sim_item"), self._items,
                 item_key_col=self._item_key, item_vec_col=self._vec_col,
                 queries=queries, query_item_col=query_item_col,
                 query_vec_col=query_vec_col, metric=self.metric)
@@ -1170,9 +1185,10 @@ class SQIndex(_ItemsLifecycleMixin):
             queries, self._items, k=k, query_item_col=query_item_col,
             query_vec_col=query_vec_col, item_key_col=self._item_key,
             item_col=F.col("__codes"), higher_is_closer=self._higher,
-            prepare=_unit_rows if self._spherical else np.asarray,
-            scorer=lambda q, codes: _gemm_scorer(q, codes * step + vmin,
-                                                 metric),
+            prepare=lambda qmat: (_unit_rows(qmat) if self._spherical
+                                  else qmat,),
+            scorer=lambda st, codes, _cell: _gemm_scorer(
+                st[0], codes * step + vmin, metric),
             dim=vmin.size)
         if cand is None:
             raise ValueError("SQIndex.search needs a non-empty query set "
@@ -1260,12 +1276,13 @@ class IVFPQIndex(_ItemsLifecycleMixin):
     separable — ``q·x ≈ q·c_cell + Σ_j LUT[j, code_j]`` with ONE
     cell-independent LUT per query — so the plan is: probe nprobe
     nearest cells per query (driver GEMM over the tiny centroid table),
-    broadcast-join the (qidx, cell, q·c) rows against the code table on
-    the CELL equi-join (candidates pruned like IVF; only codes shuffle,
-    never vectors), one vectorized pandas_udf gather adds the LUT sum,
-    and the usual rank window takes top-k. Broadcast state: the LUT
-    tensor (n_queries · m · 2^nbits doubles) — the inherent ADC state,
-    independent of corpus size.
+    then one probed-cell scan of the code table (``knn._sharded_scan``:
+    only rows of probed cells are read, each cell's codes scored against
+    the queries that probe it by the cell's q·c plus the LUT gather),
+    and the one rank window takes top-k. No item vector is read and
+    nothing item-sized is joined or broadcast. Broadcast state: the LUT
+    tensor (n_queries · m · 2^nbits doubles) and the queries' q·c over
+    every cell — the inherent ADC state, independent of corpus size.
     """
 
     def __init__(self, n_cells: int = 64, nprobe: int = 4, m: int = 8,
@@ -1385,78 +1402,58 @@ class IVFPQIndex(_ItemsLifecycleMixin):
                query_vec_col: str = "embedding",
                payload_cols: Sequence[str] | None = None,
                refine_factor: int | None = None) -> DataFrame:
-        """Cell-pruned ADC top-k. ``refine_factor`` shortlists
-        ``k × refine_factor`` by quantized score and re-scores them
-        EXACTLY against the stored vectors (the IndexRefineFlat
-        pattern — see PQIndex.search); compensates both quantization
-        loss and residual approximation."""
+        """Cell-pruned ADC top-k: one probed-cell
+        :func:`~faisssearcher_spark.operators.knn._sharded_scan` of the
+        code table scoring ``q·c_cell + Σ_j LUT[j, code_j]`` (the cell's
+        q·c plus :func:`_adc_scorer`), then the one rank window;
+        ``payload_cols`` ride the scan. ``refine_factor`` shortlists the
+        top ``k × refine_factor`` by quantized score and re-scores them
+        EXACTLY against the stored vectors (the IndexRefineFlat pattern
+        — see PQIndex.search); compensates both quantization loss and
+        residual approximation."""
         if self._items is None:
             raise RuntimeError("IVFPQIndex is not fit; call fit() first")
         if refine_factor is not None and refine_factor < 1:
             raise ValueError("refine_factor must be >= 1")
         payload = list(payload_cols or [])
-        cents = self._ivf.centroids
-        qids, qmat = _query_vectors(queries, query_item_col,
-                                    query_vec_col, dim=cents.shape[1])
-        if not len(qids):
+        cents, books, rot = self._ivf.centroids, self.codebooks, self.rotation
+        nprobe = self.nprobe
+        unit = _unit_rows if self.metric == "cos" else np.asarray
+
+        def prepare(qmat):
+            # OPQ: the LUT half scores rotated residuals, so it uses the
+            # rotated query; the q·c half stays in the original space
+            q = unit(qmat)
+            return (_pq_lut(q if rot is None else q @ rot, books, True),
+                    q @ cents.T)
+
+        def scorer(state, codes, cell):
+            lut, qc = state
+            adc = _adc_scorer(lut, codes)
+            return lambda s, e: qc[:, cell, None] + adc(s, e)
+
+        cand = _sharded_scan(
+            queries, self._items, k=k * (refine_factor or 1),
+            query_item_col=query_item_col, query_vec_col=query_vec_col,
+            item_key_col=self._item_key, item_col=F.col("__codes"),
+            higher_is_closer=True, prepare=prepare, scorer=scorer,
+            # nearest cells by L2 on normalized vectors == max inner
+            # product on the unit sphere
+            probe=lambda qmat: _nearest_cells(unit(qmat), cents, nprobe,
+                                              False),
+            dim=cents.shape[1], payload_cols=payload)
+        if cand is None:
             raise ValueError("IVFPQIndex.search needs a non-empty query "
                              "set (the query LUT tensor is driver-built)")
-        if self.metric == "cos":
-            qmat = _unit_rows(qmat)
-        books = self.codebooks
-        m, dsub = self.m, books.shape[2]
-        nprobe = min(self.nprobe, len(cents))
-        # nearest cells by L2 on normalized vectors == max inner product
-        # on the unit sphere
-        probed = _nearest_cells(qmat, cents, nprobe, False)
-        qdotc = np.take_along_axis(qmat @ cents.T, probed, axis=1)
-        # OPQ: the LUT half scores rotated residuals, so it uses the
-        # rotated query; the q·c half stays in the original space
-        qlut = qmat if self.rotation is None else qmat @ self.rotation
-        lut = np.empty((len(qmat), m, self.ksub))
-        for j in range(m):
-            lut[:, j, :] = qlut[:, j * dsub:(j + 1) * dsub] @ books[j].T
-        spark = self._items.sparkSession
-        b_lut = spark.sparkContext.broadcast(lut)
-
-        qside = pd.DataFrame({
-            "__qidx": np.repeat(np.arange(len(qmat)), nprobe),
-            "source_item": np.repeat(qids, nprobe),
-            "cell": probed.ravel(),
-            "__qdotc": qdotc.ravel(),
-        })
-        q_df = spark.createDataFrame(qside)
-
-        @F.pandas_udf("double")
-        def _adc(qidx: pd.Series, codes: pd.Series) -> pd.Series:
-            tbl = b_lut.value
-            qi = qidx.to_numpy()
-            cd = np.array(codes.to_list(), dtype=np.int64)
-            out = tbl[qi[:, None],
-                      np.arange(tbl.shape[1])[None, :], cd].sum(1)
-            return pd.Series(out)
-
-        it = self._items.select(
-            F.col(self._item_key).alias("sim_item"), "cell", "__codes",
-            *[F.col(c) for c in payload])
-        scored = (it.join(F.broadcast(q_df), "cell")
-                  .withColumn("sim_val",
-                              F.col("__qdotc")
-                              + _adc(F.col("__qidx"), F.col("__codes"))))
         if refine_factor is not None:
-            from faisssearcher_spark.functions.metrics import resolve_metric
-
-            _, higher = resolve_metric(self.metric)
-            shortlist = _rank_topk(scored, k * refine_factor, True)
-            rescored = _exact_rescore(
-                shortlist.select("source_item", "sim_item", *payload),
-                self._items, item_key_col=self._item_key,
-                item_vec_col=self._vec_col, queries=queries,
-                query_item_col=query_item_col,
+            cand = _exact_rescore(
+                _rank_topk(cand, k * refine_factor, True)
+                .select("source_item", "sim_item", *payload), self._items,
+                item_key_col=self._item_key, item_vec_col=self._vec_col,
+                queries=queries, query_item_col=query_item_col,
                 query_vec_col=query_vec_col, metric=self.metric)
-            return _rank_topk(rescored, k, higher).select(
-                "source_item", "sim_item", "sim_val", "rank_no", *payload)
-        return _rank_topk(scored, k, True).select(
+        # cos and ip: higher is closer, quantized or exact
+        return _rank_topk(cand, k, True).select(
             "source_item", "sim_item", "sim_val", "rank_no", *payload)
 
     # -- persistence (S2/S3 parity: data + config as parquet) --------------

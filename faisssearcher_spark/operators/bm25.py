@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from faisssearcher_spark.functions import text as T
-from faisssearcher_spark.operators.ann import _rank_topk
+from faisssearcher_spark.operators.knn import _rank_topk
 
 
 class BM25Index:

@@ -371,7 +371,7 @@ class NSWIndex:
         merge. Output ``(source_item, sim_item, sim_val[, rank_no])`` —
         the family's result shape."""
         from faisssearcher_spark.operators.knn import (
-            _merge_candidates, _query_id_type, _query_vectors)
+            _candidate_schema, _merge_candidates, _query_vectors)
 
         graph = self._require_fitted()
         ef = max(int(ef_search or self.ef_search), k)
@@ -418,12 +418,9 @@ class NSWIndex:
                                  "sim_item": out_item,
                                  "sim_val": out_val})
 
-        q_key_t = _query_id_type(queries, query_item_col)
-        key_t = graph.schema["key"].dataType.simpleString()
-        cand_schema = (f"source_item {q_key_t}, sim_item {key_t}, "
-                       "sim_val double")
-        cand = graph.groupBy("shard").applyInPandas(_shard_search,
-                                                    cand_schema)
+        cand = graph.groupBy("shard").applyInPandas(
+            _shard_search,
+            _candidate_schema(queries, query_item_col, graph, "key"))
         payloads = list(payload_cols or [])
         if payloads and self._items is None:
             raise ValueError(

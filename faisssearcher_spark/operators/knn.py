@@ -43,10 +43,14 @@ Scale design (the part FAISS cannot do):
   is an exact partition-select (:func:`_topk_cut`) that keeps the
   smallest keys among tied scores. :func:`_sharded_scan` is the one
   broadcast-queries scan over a distributed item table (queries
-  collected and checked on the driver, each Arrow batch key-sorted and
-  folded): ``strategy="sharded"`` scores it with a GEMM, ``PQIndex``
-  with its LUT gather and ``SQIndex`` with its decode step (ann.py), so
-  all three break ties the way the catalyst window does.
+  collected and checked on the driver, each Arrow batch sorted by
+  (cell, key) and each cell folded against the queries that probe it;
+  a flat scan is one cell every query probes): ``strategy="sharded"``
+  scores it with a GEMM, and in ann.py ``PQIndex`` with its LUT
+  gather, ``SQIndex`` with its decode step, ``IVFIndex`` with a GEMM
+  per probed cell and ``IVFPQIndex`` with the cell's q·c plus the LUT
+  gather, so all of them break ties the way the catalyst window does.
+  :func:`_rank_topk` is the one (score, key) rank window.
 - Skewed query_ids can't occur (each query id appears exactly n times by
   construction) so no salting is needed; AQE handles partition sizing.
 
@@ -66,7 +70,6 @@ from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.functions.vector import l2_normalize
 
 _Q_VEC = "__q_vec"
-_Q_ID = "__q_id"
 _SRC = "source_item"
 
 #: default cap on broadcasting the query side (catalyst strategy) — the
@@ -175,6 +178,37 @@ def _gemm_servable(metric: str, p: float | None, normalize: bool | None,
             and query_item_col is not None)
 
 
+def _check_columns(queries: DataFrame, items: DataFrame,
+                   query_vec_col: str, item_vec_col: str, item_key_col: str,
+                   query_item_col: str | None,
+                   payload_cols: Sequence[str] | None) -> None:
+    """Raise ``ValueError`` for a named column missing from its frame
+    (:func:`knn_join` and :func:`radius_join`)."""
+    named = [(query_vec_col, queries, "queries"),
+             (item_vec_col, items, "items"), (item_key_col, items, "items")]
+    for col, df, side in named:
+        if col not in df.columns:
+            raise ValueError(f"column {col!r} not found in {side} frame "
+                             f"(columns: {df.columns})")
+    if query_item_col is not None and query_item_col not in queries.columns:
+        raise ValueError(
+            f"query_item_col {query_item_col!r} not found in queries "
+            f"frame (columns: {queries.columns})")
+    missing_payload = [c for c in (payload_cols or [])
+                       if c not in items.columns]
+    if missing_payload:
+        raise ValueError(
+            f"payload_cols {missing_payload} not found in items frame "
+            f"(columns: {items.columns})")
+
+
+def _pair_metric(metric: str, normalize: bool, p: float | None):
+    """``(Catalyst metric, higher_is_closer)`` that score a pair; cosine
+    on normalized vectors is their dot product (reference O3)."""
+    return M.resolve_metric("ip" if metric == "cos" and normalize
+                            else metric, p=p)
+
+
 def knn_join(
     queries: DataFrame,
     items: DataFrame,
@@ -274,22 +308,8 @@ def knn_join(
       either total size. Same metrics and exact tie-deterministic
       ranking as "blocked"/"sharded".
     """
-    for col, df, side in ((query_vec_col, queries, "queries"),
-                          (item_vec_col, items, "items"),
-                          (item_key_col, items, "items")):
-        if col not in df.columns:
-            raise ValueError(
-                f"column {col!r} not found in {side} frame "
-                f"(columns: {df.columns})")
-    if query_item_col is not None and query_item_col not in queries.columns:
-        raise ValueError(
-            f"query_item_col {query_item_col!r} not found in queries "
-            f"frame (columns: {queries.columns})")
-    missing_payload = [c for c in (payload_cols or []) if c not in items.columns]
-    if missing_payload:
-        raise ValueError(
-            f"payload_cols {missing_payload} not found in items frame "
-            f"(columns: {items.columns})")
+    _check_columns(queries, items, query_vec_col, item_vec_col,
+                   item_key_col, query_item_col, payload_cols)
     if query_item_col is None and item_key_col in queries.columns:
         query_item_col = item_key_col
     if normalize is None:
@@ -323,12 +343,7 @@ def knn_join(
     if strategy != "catalyst":
         raise ValueError("strategy must be 'auto', 'catalyst', 'blocked', "
                          "'sharded' or 'grid'")
-    score_metric = metric
-    if metric == "cos" and normalize:
-        score_metric = "ip"  # O3: cosine == dot product on normalized vectors
-    metric_fn, higher_is_closer = M.resolve_metric(score_metric, p=p)
-    if metric == "cos":
-        higher_is_closer = True
+    metric_fn, higher_is_closer = _pair_metric(metric, normalize, p)
 
     q_vec: Column = F.col(query_vec_col)
     i_vec: Column = F.col(item_vec_col)
@@ -345,7 +360,7 @@ def knn_join(
         q_src = F.col(query_item_col)
     else:  # positional identity, like the reference's raw-vector mode
         q_src = F.monotonically_increasing_id()
-    q = queries.select(q_src.alias(_Q_ID), q_vec.alias(_Q_VEC))
+    q = queries.select(q_src.alias(_SRC), q_vec.alias(_Q_VEC))
 
     it_cols = [i_vec.alias("__i_vec"), F.col(item_key_col).alias("sim_item")]
     it_cols += [F.col(c) for c in payload_cols]
@@ -365,25 +380,9 @@ def knn_join(
     if score_scale is not None:
         score = F.round(score, score_scale)
     scored = joined.withColumn("sim_val", score)
-
-    order = [F.col("sim_val").desc() if higher_is_closer else F.col("sim_val").asc(),
-             F.col("sim_item").asc()]
-    w = Window.partitionBy(_Q_ID).orderBy(*order)
-    # Filter on the raw row_number so Catalyst's WindowGroupLimit rewrite
-    # fires (it pattern-matches `rank <= k`): a partial top-k then runs
-    # *below* the exchange and each map task ships at most m·k rows into
-    # the shuffle instead of m·n. rank_no (0-based, reference parity with
-    # faiss_searcher.py:141's enumerate) is derived afterwards.
-    ranked = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-    )
-
-    out = [F.col(_Q_ID).alias(_SRC), F.col("sim_item"), F.col("sim_val")]
-    if keep_rank_no:
-        out.append((F.col("__rn") - 1).alias("rank_no"))
-    out += [F.col(c) for c in payload_cols]
-    return ranked.select(*out)
+    out = [_SRC, "sim_item", "sim_val", *(["rank_no"] if keep_rank_no else [])]
+    return _rank_topk(scored, k, higher_is_closer).select(
+        *out, *[F.col(c) for c in payload_cols])
 
 
 def radius_join(
@@ -420,31 +419,11 @@ def radius_join(
     half the corpus — radius search is the operator where the USER
     bounds the output, not the engine.
     """
-    for col, df, side in ((query_vec_col, queries, "queries"),
-                          (item_vec_col, items, "items"),
-                          (item_key_col, items, "items")):
-        if col not in df.columns:
-            raise ValueError(
-                f"column {col!r} not found in {side} frame "
-                f"(columns: {df.columns})")
-    if query_item_col is not None and query_item_col not in queries.columns:
-        raise ValueError(
-            f"query_item_col {query_item_col!r} not found in queries "
-            f"frame (columns: {queries.columns})")
-    missing_payload = [c for c in (payload_cols or [])
-                       if c not in items.columns]
-    if missing_payload:
-        raise ValueError(
-            f"payload_cols {missing_payload} not found in items frame "
-            f"(columns: {items.columns})")
+    _check_columns(queries, items, query_vec_col, item_vec_col,
+                   item_key_col, query_item_col, payload_cols)
     if normalize is None:
         normalize = metric == "cos"
-    score_metric = metric
-    if metric == "cos" and normalize:
-        score_metric = "ip"   # O3: cosine == dot on normalized vectors
-    metric_fn, higher_is_closer = M.resolve_metric(score_metric, p=p)
-    if metric == "cos":
-        higher_is_closer = True
+    metric_fn, higher_is_closer = _pair_metric(metric, normalize, p)
 
     if query_item_col is None:
         query_item_col = (item_key_col if item_key_col in queries.columns
@@ -526,22 +505,14 @@ def radius_join_multi(
     # resolve the filter direction the same way radius_join will
     metric = kwargs.get("metric", "cos")
     normalize = kwargs.get("normalize")
-    if normalize is None:
-        normalize = metric == "cos"
-    score_metric = ("ip" if metric == "cos" and normalize else metric)
-    _, higher_is_closer = M.resolve_metric(score_metric,
-                                           p=kwargs.get("p"))
-    if metric == "cos":
-        higher_is_closer = True
-    loosest = radii[0] if higher_is_closer else radii[-1]
+    _, higher = _pair_metric(metric, metric == "cos" if normalize is None
+                             else normalize, kwargs.get("p"))
+    loosest = radii[0] if higher else radii[-1]
     base = radius_join(queries, items, radius=loosest, **kwargs).cache()
-    if higher_is_closer:
-        frames = {r: base if r == loosest
-                  else base.filter(F.col("sim_val") > r) for r in radii}
-    else:
-        frames = {r: base if r == loosest
-                  else base.filter(F.col("sim_val") < r) for r in radii}
-    return RadiusFrames(frames, base)
+    return RadiusFrames(
+        {r: base if r == loosest else base.filter(
+            F.col("sim_val") > r if higher else F.col("sim_val") < r)
+         for r in radii}, base)
 
 
 
@@ -599,31 +570,56 @@ def _topk_cut(key, kb: int):
     return np.take_along_axis(idx, order, axis=1)
 
 
-def _gemm_scorer(q, mat, metric: str, *, scale=None, mat_sq=None,
-                 q_sq=None):
+def _gemm_scorer(q, mat, metric: str, *, scale=None, mat_sq=None):
     """The GEMM kernels' block scorer for :func:`_topk_fold`:
     ``score(s, e)`` is the (len(q) × (e − s)) matrix of ``q`` against
     rows ``s:e`` of ``mat`` — a dot product for cos / ip, the FAISS
     squared L2 ||q||² − 2q·x + ||x||² (clamped at 0) for ``l2`` —
-    rounded to ``scale`` decimals when given. ``mat_sq`` / ``q_sq``
-    (the rows' squared norms, read only for ``l2``) may be passed
-    precomputed; they are derived once here otherwise."""
+    rounded to ``scale`` decimals when given. ``mat_sq`` (the rows'
+    squared norms, read only for ``l2``) may be passed precomputed; it
+    is derived once here otherwise.
+
+    A row's dot products do not depend on the block it is scored in:
+    BLAS computes a last partial tile of rows with other code, whose
+    last bit can differ (two copies of one vector then scored unequal
+    at 1 and at 7 partitions), so a block whose row count is not a
+    multiple of 16 is padded with zero rows."""
     import numpy as np
 
     if metric == "l2":
         if mat_sq is None:
             mat_sq = (mat * mat).sum(axis=1)
-        q_sq = ((q * q).sum(axis=1) if q_sq is None else q_sq)[:, None]
+        q_sq = (q * q).sum(axis=1)[:, None]
+
+    def dot(s, e):
+        rows = mat[s:e]
+        pad = -len(rows) % 16
+        if pad:
+            rows = np.concatenate(
+                [rows, np.zeros((pad, rows.shape[1]), rows.dtype)])
+        return (q @ rows.T)[:, :e - s]
 
     def score(s, e):
         if metric == "l2":
-            sims = np.maximum(
-                q_sq - 2.0 * (q @ mat[s:e].T) + mat_sq[None, s:e], 0.0)
+            sims = np.maximum(q_sq - 2.0 * dot(s, e) + mat_sq[None, s:e],
+                              0.0)
         else:
-            sims = q @ mat[s:e].T
+            sims = dot(s, e)
         return sims if scale is None else _np_round_exact(sims, scale)
 
     return score
+
+
+def _gemm_scan(metric: str, normalize: bool, scale: int | None = None):
+    """The ``prepare`` / ``scorer`` pair of a GEMM :func:`_sharded_scan`
+    (sharded exact search, IVF): queries and rows unit-scaled when
+    ``normalize``, scored by :func:`_gemm_scorer`."""
+    def unit(mat):
+        return _unit_rows(mat) if normalize else mat
+
+    return {"prepare": lambda qmat: (unit(qmat),),
+            "scorer": lambda st, mat, _cell: _gemm_scorer(
+                st[0], unit(mat), metric, scale=scale)}
 
 
 def _topk_fold(score, n_rows: int, n_items: int, kc: int, *,
@@ -727,27 +723,41 @@ def _attach_payload(ranked: DataFrame, items: DataFrame, *,
                 *[F.col("__p").getField(c).alias(c) for c in payload_cols]))
 
 
+def _rank_topk(scored: DataFrame, k: int,
+               higher_is_closer: bool) -> DataFrame:
+    """The one top-k window: ``row_number()`` per ``source_item`` over
+    (``sim_val`` best first, ``sim_item`` ascending), the first ``k``
+    rows kept with a 0-based ``rank_no`` (reference parity with
+    faiss_searcher.py:141's enumerate); every other column passes
+    through. The filter sits on the raw row number so Catalyst's
+    WindowGroupLimit rewrite fires (it pattern-matches ``rank <= k``):
+    a partial top-k runs below the exchange, and each map task ships at
+    most m·k rows into the shuffle instead of m·n."""
+    order = [F.col("sim_val").desc() if higher_is_closer
+             else F.col("sim_val").asc(), F.col("sim_item").asc()]
+    w = Window.partitionBy("source_item").orderBy(*order)
+    return (scored.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= k)
+            .withColumn("rank_no", F.col("__rn") - 1).drop("__rn"))
+
+
 def _merge_candidates(cand: DataFrame, items: DataFrame, *, k: int,
                       higher_is_closer: bool, item_key_col: str,
                       payload_cols: Sequence[str],
                       keep_rank_no: bool) -> DataFrame:
-    """Global top-k merge of per-shard/per-cell candidates: one window over
-    (score, sim_item) — ≤ m·k rows per source shard ever reach the shuffle."""
-    order = [F.col("sim_val").desc() if higher_is_closer else F.col("sim_val").asc(),
-             F.col("sim_item").asc()]
-    w = Window.partitionBy("source_item").orderBy(*order)
-    ranked = (cand.withColumn("__rn", F.row_number().over(w))
-              .filter(F.col("__rn") <= k))
-    out = [F.col("source_item"), F.col("sim_item"), F.col("sim_val")]
-    if keep_rank_no:
-        out.append((F.col("__rn") - 1).alias("rank_no"))
-    ranked = ranked.select(*out)
+    """Global top-k merge of per-shard/per-cell candidates through
+    :func:`_rank_topk` (≤ m·k rows per source shard ever reach the
+    shuffle), with ``payload_cols`` re-attached from ``items`` by key."""
+    ranked = _rank_topk(cand.select("source_item", "sim_item", "sim_val"),
+                        k, higher_is_closer)
+    if not keep_rank_no:
+        ranked = ranked.drop("rank_no")
     return _attach_payload(ranked, items, item_key_col=item_key_col,
                            payload_cols=payload_cols)
 
 
-def _empty_result(queries: DataFrame, items: DataFrame, *,
-                  query_item_col: str, item_key_col: str,
+def _empty_result(queries: DataFrame | DriverQueries, items: DataFrame,
+                  *, query_item_col: str, item_key_col: str,
                   payload_cols: Sequence[str],
                   keep_rank_no: bool) -> DataFrame:
     """The typed ``(source_item, sim_item, sim_val[, rank_no], *payload)``
@@ -755,10 +765,8 @@ def _empty_result(queries: DataFrame, items: DataFrame, *,
     is empty, built from the two schemas without running a job."""
     from pyspark.sql import types as T
 
-    fields = [T.StructField("source_item",
-                            queries.schema[query_item_col].dataType),
-              T.StructField("sim_item", items.schema[item_key_col].dataType),
-              T.StructField("sim_val", T.DoubleType())]
+    fields = _candidate_schema(queries, query_item_col, items,
+                               item_key_col).fields
     if keep_rank_no:
         fields.append(T.StructField("rank_no", T.IntegerType()))
     fields += [items.schema[c] for c in payload_cols]
@@ -826,11 +834,21 @@ def _query_frame(queries: DataFrame | DriverQueries, spark, id_col: str,
                       T.StructField(vec_col, T.ArrayType(T.FloatType()))]))
 
 
-def _query_id_type(queries: DataFrame | DriverQueries, id_col: str) -> str:
-    """The DDL type of a query set's ids (a string for DriverQueries)."""
-    if isinstance(queries, DataFrame):
-        return queries.schema[id_col].dataType.simpleString()
-    return "string"
+def _candidate_schema(queries: DataFrame | DriverQueries,
+                      query_item_col: str, items: DataFrame,
+                      item_key_col: str, payload_cols: Sequence[str] = ()):
+    """The ``(source_item, sim_item, sim_val, *payload_cols)`` candidate
+    frame's schema: the query id's type (a string for DriverQueries),
+    then the item key's and the payload columns' types in ``items``."""
+    from pyspark.sql import types as T
+
+    q_type = (queries.schema[query_item_col].dataType
+              if isinstance(queries, DataFrame) else T.StringType())
+    return T.StructType([
+        T.StructField("source_item", q_type),
+        T.StructField("sim_item", items.schema[item_key_col].dataType),
+        T.StructField("sim_val", T.DoubleType()),
+        *[items.schema[c] for c in payload_cols]])
 
 
 def _collect_vectors(items: DataFrame, key_col: str, vec_col: str, *,
@@ -995,41 +1013,48 @@ def blocked_rank(queries: DataFrame, corpus: BlockedCorpus,
     return ranked if keep_rank_no else ranked.drop("rank_no")
 
 
-def _candidate_schema(queries: DataFrame | DriverQueries,
-                      query_item_col: str, items: DataFrame,
-                      item_key_col: str) -> str:
-    """The ``(source_item, sim_item, sim_val)`` candidate frame's DDL."""
-    q_type = _query_id_type(queries, query_item_col)
-    i_type = items.schema[item_key_col].dataType.simpleString()
-    return f"source_item {q_type}, sim_item {i_type}, sim_val double"
-
-
 def _sharded_scan(queries: DataFrame | DriverQueries, items: DataFrame,
                   *, k: int,
                   query_item_col: str, query_vec_col: str,
                   item_key_col: str, item_col: Column,
                   higher_is_closer: bool, prepare: Callable, scorer: Callable,
-                  dim: int | None = None) -> "DataFrame | None":
+                  dim: int | None = None, probe: Callable | None = None,
+                  payload_cols: Sequence[str] = ()) -> "DataFrame | None":
     """The broadcast-queries scan over a distributed item table, shared
-    by ``knn_join(strategy="sharded")``, ``PQIndex.search`` and
-    ``SQIndex.search``: the per-shard half of shard-and-merge.
+    by ``knn_join(strategy="sharded")`` and the PQ, SQ, IVF and IVF-PQ
+    searches (ann.py): the per-shard half of shard-and-merge.
 
     The queries are collected once on the driver and checked there
     (:func:`_query_vectors`: NULL, ragged, and — given ``dim`` — wrong
     dimension raise before any job; :class:`DriverQueries` need no
-    collect). ``prepare(qmat)`` turns the float64
-    query matrix into the state every executor needs (the query matrix,
-    a PQ LUT tensor), which broadcasts with the query ids. Each Arrow
-    batch of ``items`` is sorted by key, its ``item_col`` values stacked
-    into one array, and ``scorer(state, batch)`` returns the block
-    scorer :func:`_topk_fold` ranks under a 64 MB scratch bound; the
-    batch emits its local top-k per query. Merge the candidates with
-    :func:`_merge_candidates`.
+    collect). ``prepare(qmat)`` turns the float64 query matrix into the
+    state every executor needs: a tuple of arrays with one row per query
+    (the query matrix, a PQ LUT tensor) or None, broadcast with the
+    query ids.
 
-    Returns the ``(source_item, sim_item, sim_val)`` candidate frame,
-    or None when ``queries`` has no rows (the caller decides what an
-    empty query set means). ``scorer`` ships to the executors: it must
-    close over arrays, not over a DataFrame or an index."""
+    ``probe`` makes the scan cell-aware (IVF): ``probe(qmat)`` gives
+    each query's probed cells, a (queries × nprobe) int array computed
+    on the driver, and ``items`` has an int ``cell`` column; only rows
+    of probed cells are read. A flat scan (``probe=None``) is the case
+    of one cell that every query probes.
+
+    Each Arrow batch is sorted by key and its ``item_col`` values
+    stacked into one array. ``scorer(state, rows, cell)`` returns the
+    block scorer of ``rows`` (one cell's, ``state`` cut to the queries
+    that probe it, under :func:`_cell_scorer`; the whole batch with
+    ``cell=None`` in a flat scan) and :func:`_topk_fold` ranks the
+    batch under a 64 MB scratch bound, so ties resolve to the smallest
+    key. The batch emits each query's local top-k among the rows it
+    probes, with the ``payload_cols`` of the rows it emits: the payload
+    of a result row is its own corpus row's. Rank the candidates with
+    :func:`_rank_topk`, or with :func:`_merge_candidates` to attach
+    payload by key instead.
+
+    Returns the ``(source_item, sim_item, sim_val, *payload_cols)``
+    candidate frame, or None when ``queries`` has no rows (the caller
+    decides what an empty query set means). ``scorer`` ships to the
+    executors: it must close over arrays, not over a DataFrame or an
+    index."""
     import numpy as np
     import pandas as pd
 
@@ -1037,34 +1062,81 @@ def _sharded_scan(queries: DataFrame | DriverQueries, items: DataFrame,
                                 dim=dim)
     if not len(qids):
         return None
+    cols = [F.col(item_key_col).alias("__ik"), item_col.alias("__iv")]
+    probes = None
+    if probe is not None:
+        probed = probe(qmat)
+        # each probed cell and the queries that probe it, ascending
+        probes = {int(c): np.flatnonzero((probed == c).any(axis=1))
+                  for c in np.unique(probed)}
+        # array_contains over an array literal, not isin: Spark compiles
+        # an int isin's values into the generated code (a switch), so
+        # every new set of probed cells would compile a new stage
+        items = items.where(F.array_contains(F.lit(sorted(probes)),
+                                             F.col("cell")))
+        cols.append(F.col("cell").alias("__ic"))
+    payload = list(payload_cols)
     b_state = items.sparkSession.sparkContext.broadcast(
-        (qids, prepare(qmat)))
+        (qids, prepare(qmat), probes))
+
+    # a (query, row) pair whose cell the query does not probe
+    worst = -np.inf if higher_is_closer else np.inf
 
     def _local(batches):
-        qids, state = b_state.value
+        qids, state, probes = b_state.value
         for pdf in batches:
             if not len(pdf):
                 continue
             keys = pdf["__ik"].to_numpy()
-            # columns in key order: the fold's position tie-break is the
-            # merge window's (score, key) order
+            # key order: the fold's position tie-break is the rank
+            # window's (score, key) order
             order = np.argsort(keys, kind="stable")
             keys = keys[order]
-            batch = np.array(pdf["__iv"].to_list())[order]
+            rows = np.array(pdf["__iv"].to_list())[order]
+            score = (scorer(state, rows, None) if probes is None else
+                     _cell_scorer(scorer, state, len(qids), probes, rows,
+                                  pdf["__ic"].to_numpy()[order], worst))
             kc = min(k, len(keys))
             top_pos, top_val = _topk_fold(
-                scorer(state, batch), len(qids), len(keys), kc,
+                score, len(qids), len(keys), kc,
                 higher_is_closer=higher_is_closer, scratch_bytes=64 << 20)
-            yield pd.DataFrame({
-                "source_item": np.repeat(qids, kc),
-                "sim_item": keys[top_pos.ravel()],
-                "sim_val": top_val.ravel(),
-            })
+            hit = slice(None) if probes is None else top_val.ravel() != worst
+            pos = top_pos.ravel()[hit]
+            out = pd.DataFrame({"source_item": np.repeat(qids, kc)[hit],
+                                "sim_item": keys[pos],
+                                "sim_val": top_val.ravel()[hit]})
+            if payload:
+                out = pd.concat([out, pdf[payload].iloc[order[pos]]
+                                 .reset_index(drop=True)], axis=1)
+            yield out
 
-    return items.select(F.col(item_key_col).alias("__ik"),
-                        item_col.alias("__iv")).mapInPandas(
+    return items.select(*cols, *payload).mapInPandas(
         _local, _candidate_schema(queries, query_item_col, items,
-                                  item_key_col))
+                                  item_key_col, payload))
+
+
+def _cell_scorer(scorer, state, n_q: int, probes: dict, rows, cells,
+                 worst: float):
+    """The block scorer of a cell-aware :func:`_sharded_scan` batch:
+    each cell's rows among ``s:e`` scored by ``scorer`` against only the
+    ``n_q`` queries that probe the cell (``probes[cell]``, ``state`` cut
+    to them), every other (query, row) pair ``worst``."""
+    import numpy as np
+
+    def score(s, e):
+        c = cells[s:e]
+        out = np.full((n_q, e - s), worst)
+        by_cell = np.argsort(c, kind="stable")
+        cuts = np.flatnonzero(np.diff(c[by_cell])) + 1
+        for idx in np.split(by_cell, cuts):
+            cell = int(c[idx[0]])
+            qi = probes[cell]
+            st = tuple(a if a is None else a[qi] for a in state)
+            out[np.ix_(qi, idx)] = scorer(st, rows[s + idx], cell)(
+                0, len(idx))
+        return out
+
+    return score
 
 
 def _knn_join_blocked(queries: DataFrame, items: DataFrame, *, metric: str,
@@ -1098,23 +1170,13 @@ def _knn_join_sharded(queries: DataFrame, items: DataFrame, *, metric: str,
                       normalize: bool, score_scale: int | None) -> DataFrame:
     """Shard-and-merge exact top-k: :func:`_sharded_scan` with a GEMM
     scorer, global candidate merge. See ``knn_join(strategy="sharded")``."""
-    def prepare(qmat):
-        q = _unit_rows(qmat) if normalize else qmat
-        # query squared norms: computed ONCE on the driver and broadcast,
-        # not per item batch; l2 only
-        return q, (q * q).sum(axis=1) if metric == "l2" else None
-
-    def scorer(state, mat):
-        q, q_sq = state
-        return _gemm_scorer(q, _unit_rows(mat) if normalize else mat,
-                            metric, scale=score_scale, q_sq=q_sq)
-
     higher = metric in ("cos", "ip")
     cand = _sharded_scan(
         queries, items, k=k, query_item_col=query_item_col,
         query_vec_col=query_vec_col, item_key_col=item_key_col,
         item_col=F.col(item_vec_col).cast("array<double>"),
-        higher_is_closer=higher, prepare=prepare, scorer=scorer)
+        higher_is_closer=higher,
+        **_gemm_scan(metric, normalize, score_scale))
     if cand is None:
         # no queries, no rows — there is no query matrix to broadcast
         return _empty_result(queries, items, query_item_col=query_item_col,

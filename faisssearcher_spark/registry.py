@@ -6056,8 +6056,9 @@ def q_ann_mrl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bench-only: IVF16,PQ16 residual ADC end-to-end (k-means cells +
-    residual codebooks + cell-pruned broadcast join + vectorized LUT
-    gather); the ann_ivf_recall gate carries the recall-contract twin."""
+    residual codebooks + one probed-cell scan of the code table scoring
+    q·c + the LUT gather, then the rank window); the ann_ivf_recall gate
+    carries the recall-contract twin."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), "embedding")

@@ -35,6 +35,7 @@ the result is read;
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
@@ -42,6 +43,7 @@ import re
 from typing import Any, Iterable, Mapping, Sequence, Union
 
 import numpy as np
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,15 +61,41 @@ from faisssearcher_spark.operators.whitening import VecsWhitening
 _VEC = "__vec"
 
 
+#: how a row that encodes to the zero vector is reported under norm_vec
+_ZERO_NORM = "encodes to the zero vector, which cannot be L2-normalized"
+
+
 @functools.cache
-def _storage_steps(norm: bool) -> tuple:
+def _storage_steps(norm: bool, id_col: str, role: str) -> tuple:
     """The steps that end every encode: l2-normalize when ``norm``, then
     the float32 cast (storage parity with faiss_searcher.py:92-94; metric
-    math re-promotes to float64). They depend on nothing else, so they
-    are built once per process: l2_normalize's higher-order expression
-    alone costs about 45 ms of py4j round trips, which every new
-    searcher would otherwise pay in train()."""
-    return ((l2_normalize(_VEC),) if norm else ()) + (to_float32(_VEC),)
+    math re-promotes to float64). A row that encodes to the zero vector
+    has no direction: the normalize step raises for it, naming the row's
+    ``id_col`` value as the ``role`` ("item" or "query"), in whatever job
+    first computes the column (:func:`_zero_rows_named` turns that into
+    a ``ValueError``). The steps depend on nothing else, so they are
+    built once per process and id column: l2_normalize's higher-order
+    expression alone costs about 45 ms of py4j round trips, which every
+    new searcher would otherwise pay in train()."""
+    zero = F.raise_error(F.concat(F.lit(f"{role} '"),
+                                  F.col(id_col).cast("string"),
+                                  F.lit(f"' {_ZERO_NORM}")))
+    return (((l2_normalize(_VEC, on_zero=zero),) if norm else ())
+            + (to_float32(_VEC),))
+
+
+@contextlib.contextmanager
+def _zero_rows_named():
+    """Re-raise the normalize step's error for a zero vector (see
+    :func:`_storage_steps`) as the ``ValueError`` it stands for."""
+    try:
+        yield
+    except PySparkException as e:
+        msg = (e.getMessageParameters() or {}).get("errorMessage", "")
+        if e.getCondition() != "USER_RAISED_EXCEPTION" \
+                or not msg.endswith(_ZERO_NORM):
+            raise
+        raise ValueError(msg) from None
 
 
 class SparkSearcher:
@@ -141,7 +169,11 @@ class SparkSearcher:
     # -- encode pipeline (get_vecs, faiss_searcher.py:63-73) -----------------
 
     def _vectorize(self, df: DataFrame, text_col: str | None,
-                   vec_col: str | None) -> DataFrame:
+                   vec_col: str | None, id_col: str | None = None,
+                   role: str = "item") -> DataFrame:
+        """``df`` with its ``_VEC`` column; ``id_col`` (the key column by
+        default) names a row that cannot be normalized (see
+        :func:`_storage_steps`)."""
         # the encoder UDF and the whitening expression are built on the
         # first call and reused: each costs py4j round trips that every
         # search would otherwise pay again
@@ -150,12 +182,12 @@ class SparkSearcher:
                      if self.whitening is not None else [])
             udf = (encoder_udf(self.encoder) if self.encoder is not None
                    else None)
-            self._vec_exprs = (udf,
-                               steps + list(_storage_steps(self.norm_vec)))
+            self._vec_exprs = (udf, steps)
         udf, steps = self._vec_exprs
         out = df.withColumn(_VEC, udf(F.col(text_col)) if udf is not None
                             else F.col(vec_col))
-        for step in steps:
+        for step in steps + list(_storage_steps(
+                self.norm_vec, id_col or self.key_col, role)):
             out = out.withColumn(_VEC, step)
         return out
 
@@ -168,7 +200,8 @@ class SparkSearcher:
         self._held = None
         self.corpus = self._vectorize(
             self.items, self.item_col, self.vec_col).cache()
-        self._build_index(validate, dim=None)
+        with _zero_rows_named():
+            self._build_index(validate, dim=None)
         return self
 
     def _build_index(self, validate: bool, dim: int | None) -> None:
@@ -388,9 +421,10 @@ class SparkSearcher:
         (reference semantics: when an index_param is given, EVERY search
         uses it, faiss_searcher.py:161-187)."""
         extra = {"refine_factor": self.refine_factor} if self._refine else {}
-        res = self._index.search(
-            queries, k=k, query_item_col="source_item", query_vec_col=_VEC,
-            payload_cols=payload, **extra)
+        with _zero_rows_named():   # the index collects the query vectors
+            res = self._index.search(
+                queries, k=k, query_item_col="source_item",
+                query_vec_col=_VEC, payload_cols=payload, **extra)
         if score_scale is not None:
             res = res.withColumn("sim_val", F.round("sim_val", score_scale))
         return res
@@ -423,8 +457,8 @@ class SparkSearcher:
                              else target.columns[0]), None
         else:
             q_text, q_vec = None, self.vec_col
-        queries = self._vectorize(target, q_text, q_vec)
         src_col = q_text if q_text is not None else self.key_col
+        queries = self._vectorize(target, q_text, q_vec, src_col, "query")
         return queries.select(F.col(src_col).alias("source_item"),
                               F.col(_VEC))
 

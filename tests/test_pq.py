@@ -204,11 +204,12 @@ class TestIVFPQ:
         assert {r["rank_no"] for r in rows} == {0, 1, 2, 3, 4}
         assert all(r["label"] is not None for r in rows)
         plan = inspect.executed_plan(res)
-        # the only broadcast is the tiny (qidx, cell, qdotc) query side;
-        # candidates meet through the cell equi-join, codes via one
-        # vectorized ADC gather
+        # one probed-cell scan scores the code table (the query state is
+        # a broadcast variable, not a broadcast join); the encode UDF
+        # only shows under the cached code table
         assert "CartesianProduct" not in plan
-        assert "ArrowEvalPython" in plan
+        assert "MapInPandas" in plan
+        assert "BroadcastHashJoin" not in plan
 
     def test_error_surface(self, spark, embeddings):
         from faisssearcher_spark.operators.ann import IVFPQIndex
@@ -542,14 +543,22 @@ class TestTiesFollowKeyOrder:
             "qid long, embedding array<double>")
 
     @pytest.mark.parametrize("kind,kw", [("pq", {}), ("sq8", {}),
-                                         ("pq", {"refine_factor": 10})],
-                             ids=["pq", "sq8", "pq-refine"])
+                                         ("pq", {"refine_factor": 10}),
+                                         ("ivf", {}), ("ivfpq", {}),
+                                         ("ivfpq", {"refine_factor": 10})],
+                             ids=["pq", "sq8", "pq-refine", "ivf", "ivfpq",
+                                  "ivfpq-refine"])
     def test_quantized_ties_pick_smallest_keys(self, spark, copies, kind,
                                                kw):
-        from faisssearcher_spark.operators.ann import SQIndex
+        from faisssearcher_spark.operators.ann import (IVFIndex, IVFPQIndex,
+                                                       SQIndex)
 
-        make = ((lambda: PQIndex(m=2, nbits=4, seed=1)) if kind == "pq"
-                else (lambda: SQIndex(nbits=8)))
+        make = {"pq": lambda: PQIndex(m=2, nbits=4, seed=1),
+                "sq8": lambda: SQIndex(nbits=8),
+                "ivf": lambda: IVFIndex(n_cells=4, nprobe=4,
+                                        train_mode="sample"),
+                "ivfpq": lambda: IVFPQIndex(n_cells=4, nprobe=4, m=2,
+                                            nbits=4, seed=1)}[kind]
         q = self._queries(spark, copies)
         one = self._search(make, copies.coalesce(1), q, 3, **kw)
         seven = self._search(make, copies.repartition(7), q, 3, **kw)
@@ -593,3 +602,143 @@ class TestQueriesCheckedOnDriver:
                         idx.search(q, k=3, query_item_col="qid")
             finally:
                 idx.close()
+
+
+def _ivf_indexes():
+    from faisssearcher_spark.operators.ann import IVFIndex, IVFPQIndex
+
+    return {
+        "ivf-cos": (lambda: IVFIndex(n_cells=8, nprobe=3, seed=5,
+                                     train_mode="sample"), {}),
+        "ivf-l2": (lambda: IVFIndex(n_cells=8, nprobe=3, seed=5,
+                                    metric="l2", train_mode="sample"), {}),
+        "ivfpq": (lambda: IVFPQIndex(n_cells=8, nprobe=3, m=8, seed=5),
+                  {}),
+        "ivfpq-refine": (lambda: IVFPQIndex(n_cells=8, nprobe=3, m=8,
+                                            seed=5),
+                         {"refine_factor": 3}),
+    }
+
+
+class TestProbedCellScan:
+    """IVF and IVF-PQ search through knn._sharded_scan with the probed
+    cells: results do not depend on how the corpus is partitioned, and
+    each result row carries its own corpus row's payload."""
+
+    @pytest.mark.parametrize("name", list(_ivf_indexes()))
+    def test_one_and_seven_partitions_identical(self, embeddings, name):
+        make, kw = _ivf_indexes()[name]
+        q = embeddings.filter(F.col("vec_id") < 12).select(
+            F.col("vec_id").alias("qid"), "embedding")
+        got = []
+        for items in (embeddings.coalesce(1), embeddings.repartition(7)):
+            idx = make().fit(items, item_key_col="vec_id",
+                             item_vec_col="embedding")
+            try:
+                got.append(sorted(
+                    tuple(r) for r in idx.search(
+                        q, k=10, query_item_col="qid",
+                        payload_cols=["label"], **kw).collect()))
+            finally:
+                idx.close()
+        one, seven = got
+        assert len(one) == 120
+        assert one == seven
+
+    @pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+    def test_payload_carried_per_corpus_row(self, spark, lossless, kind):
+        from faisssearcher_spark.operators.ann import IVFIndex, IVFPQIndex
+
+        # every cell probed: both rows of key 3 reach every query
+        make = ((lambda: IVFIndex(n_cells=2, nprobe=2, train_mode="sample"))
+                if kind == "ivf" else
+                (lambda: IVFPQIndex(n_cells=2, nprobe=2, m=2, seed=1)))
+        # key 3 stored twice: its own vector with label 100, and the
+        # vector of key 4 with label -1; a key-level re-attach would
+        # give both rows one label
+        rows = [(r["vec_id"], list(r["embedding"]),
+                 100 if r["vec_id"] == 3 else r["label"])
+                for r in lossless.collect()]
+        rows.append((3, rows[4][1], -1))
+        items = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>, label int")
+        q = spark.createDataFrame([(0, rows[3][1]), (1, rows[4][1])],
+                                  "qid long, embedding array<double>")
+        idx = make().fit(items, item_key_col="vec_id",
+                         item_vec_col="embedding")
+        try:
+            res = idx.search(q, k=30, query_item_col="qid",
+                             payload_cols=["label"]).collect()
+        finally:
+            idx.close()
+        labels = {}
+        for r in res:
+            labels.setdefault((r["source_item"], r["sim_item"]),
+                              []).append((r["sim_val"], r["label"]))
+        # each query's best key-3 row is the one whose vector it is
+        assert max(labels[(0, 3)])[1] == 100
+        assert max(labels[(1, 3)])[1] == -1
+        assert sorted(lb for _, lb in labels[(0, 3)]) == [-1, 100]
+
+    @pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+    def test_new_probed_cells_compile_no_code(self, spark, embeddings, kind):
+        from faisssearcher_spark.operators.ann import IVFIndex, IVFPQIndex
+
+        idx = (IVFIndex(n_cells=16, nprobe=1, seed=5, train_mode="sample")
+               if kind == "ivf" else
+               IVFPQIndex(n_cells=16, nprobe=1, m=8, seed=5)).fit(
+            embeddings, item_key_col="vec_id", item_vec_col="embedding")
+        metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source \
+            .CodegenMetrics
+        try:
+            by_cell = {}
+            for r in idx._items.select("cell", "embedding").collect():
+                by_cell.setdefault(r["cell"], []).append(list(r["embedding"]))
+            a, b = sorted(by_cell)[:2]
+
+            def search(cell):
+                q = spark.createDataFrame(
+                    list(enumerate(by_cell[cell][:3])),
+                    "qid long, embedding array<double>")
+                idx.search(q, k=5, query_item_col="qid").collect()
+
+            search(a)
+            search(a)
+            before = metrics.METRIC_COMPILATION_TIME().getCount()
+            search(b)
+            # another probed-cell set runs the same generated code
+            assert metrics.METRIC_COMPILATION_TIME().getCount() == before
+        finally:
+            idx.close()
+
+
+class TestIVFInputChecks:
+    def test_metric_outside_gemm_scorer_raises(self):
+        from faisssearcher_spark.operators.ann import IVFIndex
+
+        with pytest.raises(ValueError, match="'l1'"):
+            IVFIndex(metric="l1")
+
+    def test_queries_checked_against_dim(self, spark, lossless):
+        from faisssearcher_spark.operators.ann import IVFIndex
+
+        schema = "qid long, embedding array<double>"
+        idx = IVFIndex(n_cells=2, nprobe=1, train_mode="sample").fit(
+            lossless, item_key_col="vec_id", item_vec_col="embedding")
+        try:
+            for rows, msg in (([(0, [1.0] * 16)], "expected dim 8, found 16"),
+                              ([(0, [1.0] * 8), (1, [1.0] * 4)], "ragged"),
+                              ([(0, [1.0] * 8), (1, None)], "NULL")):
+                with pytest.raises(ValueError, match=msg):
+                    idx.search(spark.createDataFrame(rows, schema), k=3,
+                               query_item_col="qid")
+            empty = idx.search(spark.createDataFrame([], schema), k=3,
+                               query_item_col="qid", payload_cols=["label"])
+            assert empty.collect() == []
+            assert [(f.name, f.dataType.simpleString())
+                    for f in empty.schema] == [
+                ("source_item", "bigint"), ("sim_item", "bigint"),
+                ("sim_val", "double"), ("rank_no", "int"),
+                ("label", "int")]
+        finally:
+            idx.close()

@@ -1089,3 +1089,49 @@ class TestDriverEncodedQueries:
         s.corpus = documents   # train() would fail on the same encoder
         with pytest.raises(ValueError, match=r"want \(n, dim\)"):
             s.search(["spark join merge"], topK=2)
+
+
+class TestZeroNormRows:
+    """Under cos (norm_vec) a text that encodes to the zero vector has no
+    direction: the normalize step names its row in whatever job first
+    computes the vectors, where it used to fail with Spark's unnamed
+    DIVIDE_BY_ZERO."""
+
+    @staticmethod
+    def _docs(documents):
+        return documents.select("text", F.col("doc_id").cast("long")) \
+            .filter(F.col("doc_id") < 40)
+
+    @pytest.mark.parametrize("validate,index_param",
+                             [(True, None), (False, None),
+                              (False, "IVF8,PQ4")],
+                             ids=["validate", "no-validate", "indexed"])
+    def test_train_names_the_item(self, spark, documents, validate,
+                                  index_param):
+        corpus = self._docs(documents).unionByName(spark.createDataFrame(
+            [("", 10_000)], "text string, doc_id long"))
+        s = SparkSearcher(corpus, encoder=HashingEncoder(dim=8),
+                          key_col="doc_id", index_param=index_param)
+        try:
+            with pytest.raises(ValueError, match="item '10000' encodes to "
+                                                 "the zero vector"):
+                s.train(validate=validate)
+        finally:
+            s.close()
+
+    @pytest.mark.parametrize("index_param", [None, "IVF8,PQ4"])
+    def test_frame_target_names_the_query(self, spark, documents,
+                                          index_param):
+        s = SparkSearcher(self._docs(documents),
+                          encoder=HashingEncoder(dim=8), key_col="doc_id",
+                          index_param=index_param).train()
+        target = spark.createDataFrame([("spark join",), ("",)],
+                                       "text string")
+        # an index collects the target's vectors in search(); a flat
+        # plan computes them when its result is read
+        try:
+            with pytest.raises(ValueError if index_param else Exception,
+                               match="query '' encodes to the zero vector"):
+                s.search(target, topK=3).collect()
+        finally:
+            s.close()

@@ -92,12 +92,15 @@ AUDITS = {
         ("CartesianProduct", False, "no pair blowup"),
     ],
     "ann_ivfpq_topk": [
-        ("BroadcastHashJoin", True,
-         "the tiny (qidx, cell, q·c) query rows broadcast; candidates "
-         "prune through the cell equi-join — only codes shuffle, never "
-         "vectors"),
-        ("ArrowEvalPython", True,
-         "one vectorized LUT-gather pandas_udf adds the residual ADC sum"),
+        ("MapInPandas", True,
+         "one probed-cell scan of the code table: each cell's codes score "
+         "q·c + the LUT gather against the queries that probe it"),
+        ("WindowGroupLimit", True,
+         "per-batch per-cell candidates merge through the bounded rank "
+         "window"),
+        ("BroadcastHashJoin", False,
+         "no join against the item table: the query state is a broadcast "
+         "variable and the payload rides the scan"),
         ("CartesianProduct", False, "no pair blowup"),
     ],
     "ann_sq_topk": [
