@@ -19,18 +19,17 @@ from pyspark.sql.types import ArrayType, FloatType, DoubleType
 from faisssearcher_spark.functions.metrics import ColumnOrName, _col, as_double
 
 
-def l2_normalize(c: ColumnOrName, zero_norm_nan: bool = True,
-                 on_zero: Column | None = None) -> Column:
+def l2_normalize(c: ColumnOrName, on_zero: Column | None = None) -> Column:
     """L2-normalize an array<float|double> column.
 
-    ``zero_norm_nan=True`` divides the zero vector by its zero norm, as
-    the reference does (faiss_searcher.py:96-98, where numpy yields NaN).
-    Here that yields NaN only with ``spark.sql.ansi.enabled=false``:
+    Without ``on_zero`` the zero vector is divided by its zero norm, as
+    the reference does (faiss_searcher.py:96-98, where numpy yields
+    NaN). Here that yields NaN only with ``spark.sql.ansi.enabled=false``:
     under Spark 4's default ANSI mode the division raises
-    ``DIVIDE_BY_ZERO`` when the column is computed. With ``False`` the
-    zero vector is passed through unchanged. ``on_zero``, when given,
-    is a zero vector's value instead (e.g. an ``F.raise_error`` naming
-    the row).
+    ``DIVIDE_BY_ZERO`` when the column is computed. ``on_zero``, when
+    given, is a zero vector's value instead: the vector itself passes it
+    through unchanged, an ``F.raise_error`` names the row. A NULL vector
+    stays NULL.
     """
     v = as_double(c)
 
@@ -45,18 +44,14 @@ def l2_normalize(c: ColumnOrName, zero_norm_nan: bool = True,
                           lambda x, nn: x / nn)
 
     squares = F.zip_with(v, v, lambda x, y: x * y)
-    if on_zero is not None:
-        # the squared norm is bound once, as the aggregate's finish
-        # argument, for both the zero test and the division; a NULL
-        # vector stays NULL
-        return F.aggregate(squares, F.lit(0.0), lambda acc, x: acc + x,
-                           lambda ss: F.when(ss == 0.0, on_zero)
-                           .otherwise(divide(F.sqrt(ss))))
-    norm = F.sqrt(F.aggregate(squares, F.lit(0.0), lambda acc, x: acc + x))
-    normalized = divide(norm)
-    if zero_norm_nan:
-        return normalized
-    return F.when(norm != 0.0, normalized).otherwise(v)
+    if on_zero is None:
+        return divide(F.sqrt(F.aggregate(squares, F.lit(0.0),
+                                         lambda acc, x: acc + x)))
+    # the squared norm is bound once, as the aggregate's finish argument,
+    # for both the zero test and the division
+    return F.aggregate(squares, F.lit(0.0), lambda acc, x: acc + x,
+                       lambda ss: F.when(ss == 0.0, on_zero)
+                       .otherwise(divide(F.sqrt(ss))))
 
 
 def to_float32(c: ColumnOrName) -> Column:

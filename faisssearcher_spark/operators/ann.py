@@ -31,9 +31,18 @@ per-index scorer, as FAISS scans probed lists with a per-list scorer:
   (``index_factory`` strings) mapped onto these classes and
   ``graph.NSWIndex``; a spec none of them covers raises.
 
-The quantizers of PQ, SQ and IVF-PQ (and IVF's ``"sample"`` mode) train
-in the driver on the first ``train_sample`` rows by key, the way the
-reference trains its FAISS index (faiss_searcher.py:116-125).
+IVF, PQ, SQ and IVF-PQ share one lifecycle, :class:`_CodedIndex`, as
+FAISS drives every index through ``train`` / ``add`` / ``search`` /
+``write_index`` / ``read_index``: fit (train, then encode and cache the
+corpus rows with their codes), add_items, search (one scan, an exact
+re-score of a shortlist when refining, the rank window; payload rides
+the scan, so each result row carries its own corpus row's), save and
+load. Each class supplies only its quantizer: trained arrays and
+trainer, the columns its encode adds, its scan parts and the checks on
+its stored table. The quantizers of PQ, SQ and IVF-PQ (and IVF's
+``"sample"`` mode) train in the driver on the first ``train_sample``
+rows by key, the way the reference trains its FAISS index
+(faiss_searcher.py:116-125).
 
 Recall is validated against the exact path (SURVEY.md §5.4) — the same way
 FAISS validates itself.
@@ -42,6 +51,8 @@ FAISS validates itself.
 from __future__ import annotations
 
 import functools
+import json
+import os
 import re
 from typing import Any, Callable, Mapping, NamedTuple, Sequence
 
@@ -54,27 +65,19 @@ from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.operators.graph import NSWIndex
 from faisssearcher_spark.operators.knn import (
     DriverQueries, _empty_result, _fill_cache, _gemm_scan, _gemm_scorer,
-    _merge_candidates, _query_frame, _rank_topk, _sharded_scan, _unit_rows)
+    _query_frame, _rank_topk, _sharded_scan, _unit_rows)
 
 
 def _write_index_meta(spark, path: str, meta: dict) -> None:
     """One-row JSON-in-parquet config blob — the index family's shared
-    persistence idiom ("data + config as parquet", no pickle). Single-
-    sourced so the five family members (IVF/PQ/SQ/IVFPQ/NSW) cannot
-    diverge on the meta layout (review catch: the block was copy-pasted
-    per class)."""
-    import json
-    import os
-
+    persistence idiom ("data + config as parquet", no pickle), written
+    by :meth:`_CodedIndex.save` and ``graph.NSWIndex.save``."""
     spark.createDataFrame([(json.dumps(meta),)], "meta string") \
         .coalesce(1).write.mode("overwrite") \
         .parquet(os.path.join(path, "meta"))
 
 
 def _read_index_meta(spark, path: str) -> dict:
-    import json
-    import os
-
     return json.loads(
         spark.read.parquet(os.path.join(path, "meta")).first()["meta"])
 
@@ -196,28 +199,217 @@ class SignLSH:
             "source_item", "sim_item", "sim_val", "rank_no")
 
 
-class _ItemsLifecycleMixin:
-    """FAISS free/reset analogue for the Spark cache layer. The reference
-    releases an index by dropping the Python object
-    (faiss_searcher.py:189-190 rebuilds in place); a Spark index pins its
-    encoded state in executor storage via ``.cache()``, which outlives the
-    Python reference until the session garbage-collects it — a long-lived
-    service rotating many indexes needs the explicit handle.
+def _batch_udf(fn: Callable, fields: Mapping[str, str]) -> Callable:
+    """The index family's one Arrow-batch wrapper: a struct
+    ``pandas_udf`` of ``fields`` (name → Spark type) over an array
+    column. Each batch is stacked into one float64 matrix and
+    ``fn(matrix)`` gives every field as an array with one row per
+    vector (an (n, w) array for an array field).
 
-    ``unpersist()`` hands executor storage back but keeps the index
-    usable: the encoded state recomputes lazily from its lineage on the
-    next search (one re-encode pass at worst). ``close()`` is terminal —
-    it also drops the state reference, so a closed index raises the
-    existing not-fitted guard instead of silently re-encoding a 100 TB
-    corpus nobody asked for."""
+    ``fn`` ships with the task closure, so it holds numpy state only
+    (centroids, codebooks, bounds) and the plan stays O(1) whatever the
+    index shape: n_cells×dim centroid literals in the plan would explode
+    its size and Janino compilation (IVF4096 × 768-dim ≈ 3M literals),
+    and a broadcast centroid join would replicate every row n_cells
+    times and shuffle for the per-row top-n."""
+    ddl = ", ".join(f"{name} {kind}" for name, kind in fields.items())
 
-    _items: "DataFrame | None"
+    @F.pandas_udf(ddl)
+    def _apply(batch: pd.Series) -> pd.DataFrame:
+        out = fn(np.array(batch.to_list(), dtype=np.float64))
+        return pd.DataFrame({c: list(a) if a.ndim > 1 else a
+                             for c, a in out.items()})
+
+    return lambda vec: _apply(M.as_double(vec))
+
+
+class _CodedIndex:
+    """The index lifecycle IVF, PQ, SQ and IVF-PQ share: FAISS's
+    ``train`` / ``add`` / ``search`` / ``write_index`` / ``read_index``
+    (faiss_searcher.py:100-125, 161-187), written once over a cached
+    table of the corpus rows and their codes. An index supplies only its
+    quantizer:
+
+    - ``_CONFIG``, its constructor arguments, and ``_ARRAYS``, its
+      trained arrays, which ``_train(items)`` sets (both go into the
+      saved meta);
+    - ``_ENCODED``, the columns its encode adds to every corpus row,
+      and ``_encoder()``, the numpy batch function computing them
+      (run through :func:`_batch_udf`);
+    - ``_scan()``, its parts of the one
+      :func:`~faisssearcher_spark.operators.knn._sharded_scan`: item
+      column, ``prepare``, ``scorer``, ``probe`` and ``dim``;
+    - ``_table_checks()``, aggregate flags that are true on a stored
+      table its quantizer cannot have written.
+
+    The coded table pins executor storage via ``.cache()``, which
+    outlives the Python reference until the session garbage-collects
+    it; the reference releases an index by dropping the object
+    (faiss_searcher.py:189-190). ``unpersist()`` hands the storage back
+    but keeps the index usable: the table recomputes lazily from its
+    lineage on the next search (one re-encode pass at worst).
+    ``close()`` is terminal: it also drops the table, so a closed index
+    raises the not-fitted guard instead of silently re-encoding a
+    100 TB corpus nobody asked for."""
+
+    _CONFIG: "tuple[str, ...]" = ()
+    _ARRAYS: "tuple[str, ...]" = ()
+    _ENCODED: "dict[str, str]" = {}
+    #: an empty query set returns the typed empty frame instead of raising
+    _EMPTY_QUERIES_OK = False
+    metric: str
+    train_sample: int
+    _items: "DataFrame | None" = None
+    _item_key: "str | None" = None
+    _vec_col: "str | None" = None
+
+    @property
+    def _higher(self) -> bool:
+        return self.metric in ("cos", "ip")
+
+    def _fitted(self) -> DataFrame:
+        if self._items is None:
+            raise RuntimeError(f"{type(self).__name__} is not fit; call "
+                               "fit() first")
+        return self._items
+
+    def _sample(self, items: DataFrame) -> np.ndarray:
+        return _driver_sample(items, self._item_key, self._vec_col,
+                              self.train_sample, type(self).__name__)
+
+    def _coded(self, items: DataFrame) -> DataFrame:
+        """``items`` with the columns its encode adds (``_ENCODED``)."""
+        enc = _batch_udf(self._encoder(), self._ENCODED)(self._vec_col)
+        return items.withColumn("__enc", enc).select("*", "__enc.*") \
+            .drop("__enc")
+
+    def fit(self, items: DataFrame, *, item_key_col: str = "item",
+            item_vec_col: str = "embedding"):
+        """Train the quantizer, then encode and cache the corpus (FAISS
+        ``train`` + ``add``, faiss_searcher.py:116-125). The columns the
+        encode adds must not be in ``items``: that is checked before
+        the (expensive) train."""
+        for col in self._ENCODED:
+            if col in items.columns:
+                raise ValueError(f"items already has a {col!r} column — "
+                                 "the index would silently overwrite it; "
+                                 "rename it first")
+        self._item_key, self._vec_col = item_key_col, item_vec_col
+        self._train(items)
+        self._items = self._coded(items).cache()
+        return self
+
+    def add_items(self, items: DataFrame):
+        """FAISS ``index.add`` after training (faiss_searcher.py:124):
+        encode the new rows with the EXISTING quantizer (no retrain —
+        FAISS semantics) and union them into the cached table: one
+        encode pass over the new rows, and one job that fills the
+        union's cache."""
+        self._fitted()
+        self._append(self._coded(items))
+        return self
+
+    def search(self, queries: DataFrame | DriverQueries, *, k: int = 10,
+               query_item_col: str = "query_id",
+               query_vec_col: str = "embedding",
+               payload_cols: Sequence[str] | None = None) -> DataFrame:
+        """Top-k of each query: one
+        :func:`~faisssearcher_spark.operators.knn._sharded_scan` of the
+        coded table with the index's scorer (reading only the probed
+        cells of an IVF index), then the one (score, key) rank window.
+        The queries are checked on the driver at the index's dim (NULL,
+        ragged or wrong-dim vectors raise ``ValueError`` before any
+        job). ``payload_cols`` ride the scan: each result row carries
+        its own corpus row's payload, and nothing item-sized is joined
+        or broadcast. Returns ``(source_item, sim_item, sim_val,
+        rank_no, *payload_cols)``."""
+        return self._search_refined(
+            queries, k=k, query_item_col=query_item_col,
+            query_vec_col=query_vec_col, payload_cols=payload_cols)
+
+    def _search_refined(self, queries: DataFrame | DriverQueries, *,
+                        k: int = 10, query_item_col: str = "query_id",
+                        query_vec_col: str = "embedding",
+                        payload_cols: Sequence[str] | None = None,
+                        refine_factor: int | None = None) -> DataFrame:
+        """:meth:`search`, with the FAISS ``IndexRefineFlat`` pattern
+        when ``refine_factor`` is given: the quantized scan shortlists
+        the top ``k × refine_factor`` candidates per query (ranked by the
+        one window, so the shortlist does not depend on partitioning),
+        which are then EXACTLY re-scored against the stored float
+        vectors (:func:`_exact_rescore`, a candidate-sized join), so the
+        survivors' ranking and scores are exact."""
+        items, higher = self._fitted(), self._higher
+        if refine_factor is not None and refine_factor < 1:
+            raise ValueError("refine_factor must be >= 1")
+        payload = list(payload_cols or [])
+        cand = _sharded_scan(
+            queries, items, k=k * (refine_factor or 1),
+            query_item_col=query_item_col, query_vec_col=query_vec_col,
+            item_key_col=self._item_key, higher_is_closer=higher,
+            payload_cols=payload, **self._scan())
+        if cand is None and self._EMPTY_QUERIES_OK:
+            return _empty_result(queries, items,
+                                 query_item_col=query_item_col,
+                                 item_key_col=self._item_key,
+                                 payload_cols=payload, keep_rank_no=True)
+        if cand is None:
+            raise ValueError(f"{type(self).__name__}.search needs a "
+                             "non-empty query set (the query state is "
+                             "driver-built)")
+        if refine_factor is not None:
+            cand = _exact_rescore(
+                _rank_topk(cand, k * refine_factor, higher)
+                .select("source_item", "sim_item", *payload), items,
+                item_key_col=self._item_key, item_vec_col=self._vec_col,
+                queries=queries, query_item_col=query_item_col,
+                query_vec_col=query_vec_col, metric=self.metric)
+        return _rank_topk(cand, k, higher).select(
+            "source_item", "sim_item", "sim_val", "rank_no", *payload)
+
+    # -- persistence (faiss_searcher.py:109-114; data + config as parquet)
+
+    def save(self, path: str) -> None:
+        """The coded table as parquet plus one meta row: the constructor
+        config, the key and vector column names and the trained
+        arrays (replaces ``faiss.write_index``; no pickle)."""
+        items = self._fitted()
+        items.write.mode("overwrite").parquet(os.path.join(path, "items"))
+        arrays = {a: getattr(self, a) for a in self._ARRAYS}
+        _write_index_meta(items.sparkSession, path, {
+            "config": {a: getattr(self, a) for a in self._CONFIG},
+            "item_key": self._item_key, "vec_col": self._vec_col,
+            "arrays": {a: None if v is None else v.tolist()
+                       for a, v in arrays.items()}})
+
+    @classmethod
+    def load(cls, spark, path: str):
+        """The index :meth:`save` wrote, revalidated as the reference
+        asserts on load (faiss_searcher.py:112-114): one aggregate job
+        checks that the stored table is non-empty and that none of the
+        quantizer's ``_table_checks`` holds, then the table is cached."""
+        meta = _read_index_meta(spark, path)
+        index = cls(**meta["config"])
+        for name, value in meta["arrays"].items():
+            setattr(index, name, None if value is None else np.array(value))
+        index._item_key, index._vec_col = meta["item_key"], meta["vec_col"]
+        items = spark.read.parquet(os.path.join(path, "items"))
+        n, *bad = items.select(F.count("*"), *index._table_checks()).first()
+        if not n:
+            raise ValueError(f"loaded {cls.__name__} has an empty corpus")
+        if any(bad):
+            raise ValueError(f"stored table inconsistent with the "
+                             f"{cls.__name__} quantizer — corrupt index?")
+        index._items = items.cache()
+        return index
+
+    # -- executor storage (the lifecycle the bench memo and SparkSearcher
+    # drive; BM25Index and NSWIndex implement it over their own frames)
 
     def _cached_state(self):
         """The frames this index pins in executor storage — the generic
         hook the bench memo re-registers after a session clearCache()
-        and close() releases (BM25Index/SparkSearcher implement the same
-        protocol over their own state frames)."""
+        and close() releases."""
         return [] if self._items is None else [self._items]
 
     def unpersist(self, blocking: bool = False):
@@ -256,7 +448,21 @@ class _ItemsLifecycleMixin:
         self.close()
 
 
-class IVFIndex(_ItemsLifecycleMixin):
+def _cell_flags(n_cells: int) -> list:
+    """Load checks of a stored ``cell`` column: every id in range."""
+    return [F.min("cell") < 0, F.max("cell") >= n_cells]
+
+
+def _code_flags(width: int, top: int) -> list:
+    """Load checks of a stored ``__codes`` column: ``width`` codes in
+    ``[0, top]`` on every row."""
+    size = F.size("__codes")
+    return [F.min(size) != width, F.max(size) != width,
+            F.min(F.array_min("__codes")) < 0,
+            F.max(F.array_max("__codes")) > top]
+
+
+class IVFIndex(_CodedIndex):
     """IVF-style coarse quantization: k-means cells + nprobe search.
 
     Parity target: FAISS ``index_factory(dim, "IVF<n>,Flat", metric)``
@@ -266,9 +472,9 @@ class IVFIndex(_ItemsLifecycleMixin):
     driver and scores *within the probed cells only*: one probed-cell
     scan of the fitted assignment (``knn._sharded_scan``), each cell's
     rows scored with a GEMM against the queries that probe it, then the
-    one (score, key) rank window. ``range_search`` keeps a Catalyst
-    plan (the cell equi-join), as ``knn.radius_join`` keeps one for
-    exact search.
+    one (score, key) rank window. An empty query set returns the typed
+    empty frame. ``range_search`` keeps a Catalyst plan (the cell
+    equi-join), as ``knn.radius_join`` keeps one for exact search.
 
     ``train_mode="mllib"`` (the default) fits MLlib k-means over the
     whole corpus: one Spark job per iteration plus k-means‖ init.
@@ -284,6 +490,12 @@ class IVFIndex(_ItemsLifecycleMixin):
     partition. The default stays MLlib because that gate's 0.9 floor is
     calibrated on it.
     """
+
+    _CONFIG = ("n_cells", "nprobe", "seed", "metric", "max_iter",
+               "train_mode", "train_sample")
+    _ARRAYS = ("centroids",)
+    _ENCODED = {"cell": "int"}
+    _EMPTY_QUERIES_OK = True
 
     def __init__(self, n_cells: int = 64, nprobe: int = 4, seed: int = 42,
                  metric: str = "cos", max_iter: int = 20,
@@ -323,128 +535,51 @@ class IVFIndex(_ItemsLifecycleMixin):
         # gives ≥0.9 at the same nprobe.
         self._spherical = metric in ("cos", "ip")
         self.centroids: np.ndarray | None = None
-        self._items: DataFrame | None = None
-        self._item_key = None
-        self._item_vec = None
 
-    def _nearest_cells_expr(self, vec_col: str, n: int) -> Column:
-        """array<int> of the ``n`` nearest cell ids by L2, via one numpy
-        GEMM per Arrow batch against the closure-captured centroid matrix.
-
-        Deliberately NOT a Catalyst expression: embedding n_cells×dim
-        centroid literals in the plan explodes plan size and Janino
-        compilation at realistic index shapes (IVF4096 × 768-dim ≈ 3M
-        literals — the r2 verdict's plan-bloat finding), and a broadcast
-        centroid *join* would replicate every row n_cells times and pay a
-        shuffle for the per-row top-n. The pandas_udf keeps the plan O(1),
-        never shuffles, and the centroid matrix (n_cells×dim doubles)
-        ships to executors once with the task closure.
-        """
-        cents = np.ascontiguousarray(self.centroids, dtype=np.float64)
-        spherical = self._spherical
-
-        @F.pandas_udf("array<int>")
-        def _nearest(batch: pd.Series) -> pd.Series:
-            mat = np.array(batch.to_list(), dtype=np.float64)
-            idx = _nearest_cells(mat, cents, n, spherical)
-            return pd.Series([row.tolist() for row in idx])
-
-        return _nearest(M.as_double(vec_col))
-
-    def fit(self, items: DataFrame, *, item_key_col: str = "item",
-            item_vec_col: str = "embedding") -> "IVFIndex":
-        if "cell" in items.columns:   # guard BEFORE the expensive train
-            raise ValueError("items already has a 'cell' column — the "
-                             "index would silently overwrite it; rename "
-                             "it first")
+    def _train(self, items: DataFrame) -> None:
         if self.train_mode == "sample":
-            mat = _driver_sample(items, item_key_col, item_vec_col,
-                                 self.train_sample, "IVFIndex")
+            mat = self._sample(items)
             if self._spherical:
                 mat = _unit_rows(mat)
             # one-subspace PQ training IS k-means over the full vector
             self.centroids = _train_pq_codebooks(
                 mat, 1, self.n_cells, self.max_iter, self.seed)[0]
-        else:
-            from pyspark.ml.clustering import KMeans
-            from pyspark.ml.functions import array_to_vector
+            return
+        from pyspark.ml.clustering import KMeans
+        from pyspark.ml.functions import array_to_vector
 
-            vec = F.col(item_vec_col).cast("array<double>")
-            if self._spherical:
-                from faisssearcher_spark.functions.vector import l2_normalize
-                vec = l2_normalize(vec, zero_norm_nan=False)
-            feats = items.select(
-                F.col(item_key_col).alias("__key"),
-                array_to_vector(vec).alias("features"))
-            km = KMeans(k=self.n_cells, seed=self.seed,
-                        maxIter=self.max_iter)
-            model = km.fit(feats)
-            self.centroids = np.array(
-                [np.asarray(c) for c in model.clusterCenters()])
-        self._item_key, self._item_vec = item_key_col, item_vec_col
-        # assign once; persist the assignment like FAISS's add()
-        assigned = items.withColumn(
-            "cell", F.element_at(self._nearest_cells_expr(item_vec_col, 1), 1))
-        self._items = assigned.cache()
-        return self
+        vec = M.as_double(self._vec_col)
+        if self._spherical:
+            from faisssearcher_spark.functions.vector import l2_normalize
+            vec = l2_normalize(vec, on_zero=vec)
+        feats = items.select(F.col(self._item_key).alias("__key"),
+                             array_to_vector(vec).alias("features"))
+        model = KMeans(k=self.n_cells, seed=self.seed,
+                       maxIter=self.max_iter).fit(feats)
+        self.centroids = np.array(
+            [np.asarray(c) for c in model.clusterCenters()])
+
+    def _encoder(self) -> Callable:
+        cents, spherical = self.centroids, self._spherical
+        return lambda mat: {
+            "cell": _nearest_cells(mat, cents, 1, spherical)[:, 0]}
+
+    def _scan(self) -> dict:
+        cents, nprobe, spherical = self.centroids, self.nprobe, self._spherical
+        return dict(item_col=M.as_double(self._vec_col), dim=cents.shape[1],
+                    probe=lambda qmat: _nearest_cells(qmat, cents, nprobe,
+                                                      spherical),
+                    **_gemm_scan(self.metric, self.metric == "cos"))
+
+    def _table_checks(self) -> list:
+        return _cell_flags(self.n_cells)
 
     def assignments(self) -> DataFrame:
         """The fitted corpus with its ``cell`` assignment column — the
         coarse-quantization partition itself, reusable beyond search
         (e.g. SemDeDup's within-cell near-dup candidates,
         operators/dedup.py:semantic_cell_pairs)."""
-        if self._items is None:
-            raise RuntimeError("IVFIndex is not fit; call fit() first")
-        return self._items
-
-    def add_items(self, items: DataFrame) -> "IVFIndex":
-        """FAISS ``index.add`` after training (faiss_searcher.py:124):
-        assign new rows to their nearest existing cell (the quantizer is
-        NOT retrained — FAISS semantics) and union them into the fitted
-        corpus. Metadata-only union: both sides keep their partitioning,
-        so incremental ingest costs one assignment pass over the new
-        rows (and one job that fills the union's cache)."""
-        if self._items is None:
-            raise RuntimeError("IVFIndex is not fit; call fit() first")
-        self._append(items.withColumn(
-            "cell",
-            F.element_at(self._nearest_cells_expr(self._item_vec, 1), 1)))
-        return self
-
-    def search(self, queries: DataFrame | DriverQueries, *, k: int = 10,
-               query_item_col: str = "query_id",
-               query_vec_col: str = "embedding",
-               payload_cols: Sequence[str] | None = None) -> DataFrame:
-        """Exact top-k within each query's ``nprobe`` nearest cells: one
-        probed-cell :func:`~faisssearcher_spark.operators.knn._sharded_scan`
-        of the fitted assignment, each cell's rows scored with a GEMM
-        against the queries that probe it, then the one rank window.
-        The queries are checked on the driver at the index's dim (NULL,
-        ragged or wrong-dim vectors raise ``ValueError`` before any
-        job); an empty query set returns the typed empty frame.
-        ``payload_cols`` ride the scan: each result row carries its own
-        corpus row's payload, and nothing item-sized is joined or
-        broadcast."""
-        if self._items is None:
-            raise RuntimeError("IVFIndex is not fit; call fit() first")
-        payload = list(payload_cols or [])
-        cents, nprobe, spherical = self.centroids, self.nprobe, self._spherical
-        higher = self.metric != "l2"
-        cand = _sharded_scan(
-            queries, self._items, k=k, query_item_col=query_item_col,
-            query_vec_col=query_vec_col, item_key_col=self._item_key,
-            item_col=M.as_double(self._item_vec), higher_is_closer=higher,
-            probe=lambda qmat: _nearest_cells(qmat, cents, nprobe,
-                                              spherical),
-            dim=cents.shape[1], payload_cols=payload,
-            **_gemm_scan(self.metric, self.metric == "cos"))
-        if cand is None:
-            return _empty_result(queries, self._items,
-                                 query_item_col=query_item_col,
-                                 item_key_col=self._item_key,
-                                 payload_cols=payload, keep_rank_no=True)
-        return _rank_topk(cand, k, higher).select(
-            "source_item", "sim_item", "sim_val", "rank_no", *payload)
+        return self._fitted()
 
     def range_search(self, queries: DataFrame | DriverQueries, *,
                      radius: float,
@@ -462,68 +597,27 @@ class IVFIndex(_ItemsLifecycleMixin):
         each query's probed cells explode onto a cell equi-join against
         the fitted assignment, so only the probed fraction of the corpus
         is scored."""
-        if self._items is None:
-            raise RuntimeError("IVFIndex is not fit; call fit() first")
+        items = self._fitted()
         payload = list(payload_cols or [])
         metric_fn, higher = M.resolve_metric(self.metric)
-        queries = _query_frame(queries, self._items.sparkSession,
+        queries = _query_frame(queries, items.sparkSession,
                                query_item_col, query_vec_col)
+        cents, nprobe, spherical = self.centroids, self.nprobe, self._spherical
+        probed = _batch_udf(lambda mat: {"cells": _nearest_cells(
+            mat, cents, nprobe, spherical)}, {"cells": "array<int>"})
         q = queries.select(
             F.col(query_item_col).alias("source_item"),
             F.col(query_vec_col).alias("__q_vec"),
-            F.explode(self._nearest_cells_expr(query_vec_col, self.nprobe))
-            .alias("cell"))
-        it = self._items.select(
+            F.explode(probed(query_vec_col)["cells"]).alias("cell"))
+        it = items.select(
             F.col(self._item_key).alias("sim_item"),
-            F.col(self._item_vec).alias("__i_vec"), "cell",
+            F.col(self._vec_col).alias("__i_vec"), "cell",
             *[F.col(c) for c in payload])
         sim = metric_fn(F.col("__q_vec"), F.col("__i_vec"))
         return q.join(it, "cell").withColumn("sim_val", sim) \
             .filter(F.col("sim_val") > radius if higher
                     else F.col("sim_val") < radius) \
             .select("source_item", "sim_item", "sim_val", *payload)
-
-    # -- persistence (index lifecycle S2/S3, faiss_searcher.py:109-114,189-190)
-
-    def save(self, path: str) -> None:
-        """Persist centroids + cell-assigned corpus as Parquet (replaces
-        faiss.write_index; an IVF 'index' here is data + config)."""
-        if self._items is None or self.centroids is None:
-            raise RuntimeError("IVFIndex is not fit; nothing to save")
-        import os
-
-        spark = self._items.sparkSession
-        self._items.write.mode("overwrite").parquet(os.path.join(path, "items"))
-        meta = {
-            "n_cells": self.n_cells, "nprobe": self.nprobe,
-            "seed": self.seed, "metric": self.metric,
-            "item_key": self._item_key, "item_vec": self._item_vec,
-            "centroids": [[float(x) for x in c] for c in self.centroids],
-        }
-        _write_index_meta(spark, path, meta)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IVFIndex":
-        """Load + revalidate (the reference asserts ntotal/dim/is_trained on
-        load, faiss_searcher.py:112-114; here: corpus non-empty and cell ids
-        within range)."""
-        import os
-
-        meta = _read_index_meta(spark, path)
-        index = cls(meta["n_cells"], meta["nprobe"], meta["seed"], meta["metric"])
-        index.centroids = np.array(meta["centroids"])
-        index._item_key, index._item_vec = meta["item_key"], meta["item_vec"]
-        items = spark.read.parquet(os.path.join(path, "items"))
-        stats = items.select(
-            F.count("*").alias("n"), F.max("cell").alias("max_cell")).first()
-        if not stats["n"]:
-            raise ValueError("loaded IVF index has an empty corpus")
-        if stats["max_cell"] >= meta["n_cells"]:
-            raise ValueError(
-                f"cell id {stats['max_cell']} out of range for "
-                f"{meta['n_cells']} cells — corrupt index?")
-        index._items = items.cache()
-        return index
 
 
 def _train_pq_codebooks(mat: np.ndarray, m: int, ksub: int,
@@ -609,9 +703,9 @@ def _train_pq_codebooks(mat: np.ndarray, m: int, ksub: int,
 
 
 def _pq_assign(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
-    """(n, m) nearest-centroid codes of ``mat`` under ``books`` —
-    the driver-side twin of the encode pandas_udf (shared by OPQ
-    training, which needs encode/decode inside its alternation).
+    """(n, m) nearest-centroid codes of ``mat`` under ``books`` — the
+    one PQ encoder: OPQ training's encode/decode alternation, and the
+    PQ and IVF-PQ encode on the executors (:func:`_pq_codes`).
     Batched over subspaces like :func:`_train_pq_codebooks`; chunked
     so the (m, chunk, ksub) score tensor stays ≲256 MB."""
     m, ksub, dsub = books.shape
@@ -846,12 +940,43 @@ def mrl_rerank_topk(queries: DataFrame, items: DataFrame, *, k: int = 10,
         "source_item", "sim_item", "sim_val", "rank_no")
 
 
-class PQIndex(_ItemsLifecycleMixin):
+def _train_pq(mat: np.ndarray,
+              index) -> "tuple[np.ndarray | None, np.ndarray]":
+    """``(rotation, codebooks)`` of a PQ or IVF-PQ ``index`` trained on
+    ``mat``: the OPQ-NP alternation when ``index.opq``
+    (:func:`_train_opq_rotation`), plain codebooks and no rotation
+    otherwise."""
+    if index.opq:
+        return _train_opq_rotation(mat, index.m, index.ksub,
+                                   index.train_iters, index.seed,
+                                   index.opq_iters)
+    return None, _train_pq_codebooks(mat, index.m, index.ksub,
+                                     index.train_iters, index.seed)
+
+
+def _pq_codes(mat: np.ndarray, rot: "np.ndarray | None",
+              books: np.ndarray) -> np.ndarray:
+    """The stored (n, m) int16 codes of ``mat``: OPQ-rotated when
+    ``rot`` is given, then :func:`_pq_assign`."""
+    return _pq_assign(mat if rot is None else mat @ rot,
+                      books).astype(np.int16)
+
+
+def _pq_flags(index) -> list:
+    """Load checks of a PQ or IVF-PQ code table: m codes below ksub on
+    every row, and codebooks and rotation of one shape."""
+    books, rot = index.codebooks, index.rotation
+    d = books.shape[0] * books.shape[2]
+    return [*_code_flags(index.m, index.ksub - 1),
+            F.lit(books.shape[:2] != (index.m, index.ksub)
+                  or (rot is not None and rot.shape != (d, d)))]
+
+
+class PQIndex(_CodedIndex):
     """Product quantization with asymmetric-distance (ADC) search — the
-    native-Spark analog of FAISS ``PQ<m>`` (and the PQ half of
-    ``IVF<n>,PQ<m>``: compose with :class:`IVFIndex` cells upstream),
-    index_factory strings the reference forwards verbatim
-    (faiss_searcher.py:104). No faiss dependency.
+    native-Spark analog of FAISS ``PQ<m>``, an index_factory string the
+    reference forwards verbatim (faiss_searcher.py:104). No faiss
+    dependency.
 
     Vectors split into ``m`` subspaces; each subspace gets a ``2**nbits``-
     centroid codebook (seeded Lloyd on a bounded driver sample — FAISS
@@ -861,19 +986,21 @@ class PQIndex(_ItemsLifecycleMixin):
     item vector is ever touched at query time, which is the point: a
     100 TB float corpus becomes an ~m-bytes-per-row code table.
 
-    Scale shape: ``knn.py``'s one sharded scan (:func:`~faisssearcher_spark.
-    operators.knn._sharded_scan`, the ``knn_join(strategy="sharded")``
-    kernel with a LUT-gather scorer). The code table stays DISTRIBUTED;
-    the queries are collected and checked against the index's dim on
-    the driver; the small query LUT tensor broadcasts; each key-sorted
+    Scale shape: the one sharded scan of the code table with a
+    LUT-gather scorer (:meth:`_CodedIndex.search`). The code table stays
+    DISTRIBUTED; the small query LUT tensor broadcasts; each key-sorted
     Arrow batch accumulates scores with numpy gathers under a scratch
-    bound and emits only its local top-k, tied scores resolved to the
-    smallest keys; a final window merges per-shard candidates
-    (≤ shards·k rows shuffle), so results do not depend on how the
-    corpus is partitioned.
-    Training is one bounded ``limit(train_sample)`` driver collect,
-    encoding is one vectorized pandas_udf pass over the corpus.
+    bound and emits its local top-k with each row's own payload, tied
+    scores resolved to the smallest keys; the rank window merges
+    per-shard candidates (≤ shards·k rows shuffle). ``refine_factor``
+    re-scores a shortlist exactly (FAISS ``IndexRefineFlat``). An empty
+    query set raises ``ValueError``.
     """
+
+    _CONFIG = ("m", "nbits", "seed", "metric", "train_sample",
+               "train_iters", "opq", "opq_iters")
+    _ARRAYS = ("codebooks", "rotation")
+    _ENCODED = {"__codes": "array<smallint>"}
 
     def __init__(self, m: int = 8, nbits: int = 8, seed: int = 42,
                  metric: str = "cos", train_sample: int = 100_000,
@@ -899,195 +1026,45 @@ class PQIndex(_ItemsLifecycleMixin):
         # into cos (review r5 finding #1). Scoring DIRECTION is a
         # separate flag: ip still ranks descending.
         self._spherical = metric == "cos"
-        self._higher = metric in ("cos", "ip")
         self.codebooks: np.ndarray | None = None   # (m, ksub, dsub)
-        self._items: DataFrame | None = None
-        self._item_key = None
-        self._vec_col = None
 
-    # -- training (driver-side Lloyd on a bounded sample) ------------------
+    search = _CodedIndex._search_refined
 
-    def _train_codebooks(self, mat: np.ndarray) -> np.ndarray:
-        return _train_pq_codebooks(mat, self.m, self.ksub,
-                                   self.train_iters, self.seed)
-
-    def _codes_expr(self, vec_col: str) -> Column:
-        """array<smallint> of per-subspace nearest-centroid codes — one
-        numpy GEMM per subspace per Arrow batch (the IVF assignment
-        pattern; codebooks ride the task closure, the plan stays O(1))."""
-        books = np.ascontiguousarray(self.codebooks)
-        m, spherical = self.m, self._spherical
-        dsub = books.shape[2]
-        rot = None if self.rotation is None \
-            else np.ascontiguousarray(self.rotation)
-
-        @F.pandas_udf("array<smallint>")
-        def _enc(batch: pd.Series) -> pd.Series:
-            mat = np.array(batch.to_list(), dtype=np.float64)
-            if spherical:
-                mat = _unit_rows(mat)
-            if rot is not None:   # OPQ: rotate AFTER normalize (the
-                mat = mat @ rot   # rotation was trained on unit vectors)
-            codes = np.empty((len(mat), m), dtype=np.int16)
-            for j in range(m):
-                sub = mat[:, j * dsub:(j + 1) * dsub]
-                cb = books[j]
-                d2 = ((sub * sub).sum(1, keepdims=True)
-                      - 2.0 * sub @ cb.T + (cb * cb).sum(1)[None, :])
-                codes[:, j] = d2.argmin(1)
-            return pd.Series(list(codes))
-
-        return _enc(M.as_double(vec_col))
-
-    def fit(self, items: DataFrame, *, item_key_col: str = "item",
-            item_vec_col: str = "embedding") -> "PQIndex":
-        if "__codes" in items.columns:   # guard BEFORE the expensive train
-            raise ValueError("items already has a '__codes' column — the "
-                             "index would silently overwrite it; rename "
-                             "it first")
-        mat = _driver_sample(items, item_key_col, item_vec_col,
-                             self.train_sample, "PQIndex")
+    def _train(self, items: DataFrame) -> None:
+        mat = self._sample(items)
         if self._spherical:
             mat = _unit_rows(mat)
-        if self.opq:
-            self.rotation, self.codebooks = _train_opq_rotation(
-                mat, self.m, self.ksub, self.train_iters, self.seed,
-                self.opq_iters)
-        else:
-            self.codebooks = self._train_codebooks(mat)
-        self._item_key = item_key_col
-        self._vec_col = item_vec_col
-        coded = items.withColumn("__codes", self._codes_expr(item_vec_col))
-        self._items = coded.cache()
-        return self
+        self.rotation, self.codebooks = _train_pq(mat, self)
 
-    def add_items(self, items: DataFrame) -> "PQIndex":
-        """FAISS ``index.add`` after training (faiss_searcher.py:124):
-        encode new rows with the EXISTING codebooks (no retrain — FAISS
-        semantics) and union them into the code table. One vectorized
-        encode pass over the new rows; metadata-only union."""
-        if self._items is None:
-            raise RuntimeError("PQIndex is not fit; call fit() first")
-        self._append(
-            items.withColumn("__codes", self._codes_expr(self._vec_col)))
-        return self
+    def _encoder(self) -> Callable:
+        # OPQ rotates AFTER normalize: the rotation was trained on unit
+        # vectors
+        books, rot, spherical = self.codebooks, self.rotation, self._spherical
+        return lambda mat: {"__codes": _pq_codes(
+            _unit_rows(mat) if spherical else mat, rot, books)}
 
-    # -- ADC search --------------------------------------------------------
+    def _scan(self) -> dict:
+        books, rot, spherical = self.codebooks, self.rotation, self._spherical
+        higher = self._higher
 
-    def _lut(self, qmat: np.ndarray) -> np.ndarray:
-        """The (queries, m, ksub) ADC lookup table (:func:`_pq_lut`) of
-        the queries as encode sees its rows: unit-scaled for cos, then
-        OPQ-rotated ((Rq)·(Rx) = q·x, exact scores)."""
-        if self._spherical:
-            qmat = _unit_rows(qmat)
-        if self.rotation is not None:
-            qmat = qmat @ self.rotation
-        return _pq_lut(qmat, self.codebooks, self._higher)
+        def prepare(qmat):
+            # the (queries, m, ksub) LUT of the queries as encode sees
+            # its rows: unit-scaled for cos, then OPQ-rotated
+            if spherical:
+                qmat = _unit_rows(qmat)
+            if rot is not None:
+                qmat = qmat @ rot
+            return (_pq_lut(qmat, books, higher),)
 
-    def search(self, queries: DataFrame | DriverQueries, *, k: int = 10,
-               query_item_col: str = "query_id",
-               query_vec_col: str = "embedding",
-               keep_rank_no: bool = True,
-               payload_cols: Sequence[str] | None = None,
-               refine_factor: int | None = None) -> DataFrame:
-        """ADC top-k search. ``refine_factor`` enables the FAISS
-        ``IndexRefineFlat`` pattern: the quantized scan shortlists the
-        top ``k × refine_factor`` candidates per query (ranked by the
-        one window, so the shortlist does not depend on partitioning),
-        which are then EXACTLY re-scored against the stored float
-        vectors — a candidate-sized join + pure-Catalyst metric, so the
-        exact pass touches k·factor vectors per query instead of the
-        corpus. Recovers most of the recall PQ loses for a few percent
-        extra cost; final ranking/scores are exact for the survivors."""
-        if self._items is None:
-            raise RuntimeError("PQIndex is not fit; call fit() first")
-        if refine_factor is not None and refine_factor < 1:
-            raise ValueError("refine_factor must be >= 1")
-        cand = _sharded_scan(
-            queries, self._items, k=k * (refine_factor or 1),
-            query_item_col=query_item_col, query_vec_col=query_vec_col,
-            item_key_col=self._item_key, item_col=F.col("__codes"),
-            higher_is_closer=self._higher,
-            prepare=lambda qmat: (self._lut(qmat),),
-            scorer=lambda st, codes, _cell: _adc_scorer(st[0], codes),
-            dim=self.codebooks.shape[0] * self.codebooks.shape[2])
-        if cand is None:
-            raise ValueError("PQIndex.search needs a non-empty query set "
-                             "(the query LUT tensor is driver-built)")
-        if refine_factor is not None:
-            cand = _exact_rescore(
-                _rank_topk(cand, k * refine_factor, self._higher)
-                .select("source_item", "sim_item"), self._items,
-                item_key_col=self._item_key, item_vec_col=self._vec_col,
-                queries=queries, query_item_col=query_item_col,
-                query_vec_col=query_vec_col, metric=self.metric)
-        return _merge_candidates(cand, self._items.drop("__codes"), k=k,
-                                 higher_is_closer=self._higher,
-                                 item_key_col=self._item_key,
-                                 payload_cols=list(payload_cols or []),
-                                 keep_rank_no=keep_rank_no)
+        return dict(item_col=F.col("__codes"), prepare=prepare,
+                    scorer=lambda st, codes, _cell: _adc_scorer(st[0], codes),
+                    dim=books.shape[0] * books.shape[2])
 
-    # -- persistence (S2/S3 parity: data + config as parquet) --------------
-
-    def save(self, path: str) -> None:
-        if self._items is None or self.codebooks is None:
-            raise RuntimeError("PQIndex is not fit; nothing to save")
-        import os
-
-        spark = self._items.sparkSession
-        self._items.write.mode("overwrite").parquet(
-            os.path.join(path, "items"))
-        meta = {
-            "m": self.m, "nbits": self.nbits, "seed": self.seed,
-            "metric": self.metric, "train_sample": self.train_sample,
-            "train_iters": self.train_iters, "item_key": self._item_key,
-            "vec_col": self._vec_col,
-            "opq": self.opq, "opq_iters": self.opq_iters,
-            "rotation": None if self.rotation is None else
-                        [[float(x) for x in row] for row in self.rotation],
-            "codebooks": [[[float(x) for x in c] for c in book]
-                          for book in self.codebooks],
-        }
-        _write_index_meta(spark, path, meta)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "PQIndex":
-        """Load + revalidate (reference asserts on load,
-        faiss_searcher.py:112-114): corpus non-empty, every code within
-        the codebook range."""
-        import os
-
-        meta = _read_index_meta(spark, path)
-        index = cls(meta["m"], meta["nbits"], meta["seed"], meta["metric"],
-                    meta["train_sample"], meta["train_iters"],
-                    opq=meta.get("opq", False),
-                    opq_iters=meta.get("opq_iters", 10))
-        index.codebooks = np.array(meta["codebooks"])
-        if meta.get("rotation") is not None:
-            index.rotation = np.array(meta["rotation"])
-            d = index.codebooks.shape[0] * index.codebooks.shape[2]
-            if index.rotation.shape != (d, d):
-                raise ValueError("stored OPQ rotation inconsistent with "
-                                 "codebook dimensions — corrupt index?")
-        index._item_key = meta["item_key"]
-        index._vec_col = meta.get("vec_col")
-        items = spark.read.parquet(os.path.join(path, "items"))
-        stats = items.select(
-            F.count("*").alias("n"),
-            F.max(F.array_max("__codes")).alias("max_code"),
-            F.min(F.size("__codes")).alias("min_m"),
-            F.max(F.size("__codes")).alias("max_m")).first()
-        if not stats["n"]:
-            raise ValueError("loaded PQ index has an empty corpus")
-        if stats["min_m"] != meta["m"] or stats["max_m"] != meta["m"] \
-                or stats["max_code"] >= index.ksub:
-            raise ValueError("stored codes inconsistent with codebooks — "
-                             "corrupt index?")
-        index._items = items.cache()
-        return index
+    def _table_checks(self) -> list:
+        return _pq_flags(self)
 
 
-class SQIndex(_ItemsLifecycleMixin):
+class SQIndex(_CodedIndex):
     """Scalar quantization (FAISS ``SQ8``/``SQ4`` via index_factory,
     faiss_searcher.py:104): a per-DIMENSION linear quantizer — trained
     ``[vmin, vmax]`` bounds on a bounded driver sample — stores each
@@ -1095,20 +1072,21 @@ class SQIndex(_ItemsLifecycleMixin):
     decoded approximately at search time. The simplest of the quantizer
     family: no codebooks, near-lossless at 8 bits, 4× smaller scans.
 
-    Scale shape: ``knn.py``'s one sharded scan (:func:`~faisssearcher_spark.
-    operators.knn._sharded_scan`, the ``knn_join(strategy="sharded")``
-    kernel with a decode step before its GEMM). The code table stays
-    distributed; the queries are collected and checked against the
-    index's dim on the driver; the small query matrix broadcasts; each
-    key-sorted Arrow batch decodes (one fused multiply-add) and GEMMs
-    against the queries under a scratch bound, emitting its local top-k
-    with tied scores resolved to the smallest keys; a final window
-    merges.
+    Scale shape: the one sharded scan of the code table with a decode
+    step before its GEMM (:meth:`_CodedIndex.search`): the small query
+    matrix broadcasts; each key-sorted Arrow batch decodes (one fused
+    multiply-add) and GEMMs against the queries under a scratch bound,
+    emitting its local top-k with each row's own payload; the rank
+    window merges. An empty query set raises ``ValueError``.
 
     ``add_items`` encodes with the EXISTING bounds (values beyond the
     trained range clip — FAISS behavior; retrain if the distribution
     drifts).
     """
+
+    _CONFIG = ("nbits", "metric", "train_sample")
+    _ARRAYS = ("vmin", "vmax")
+    _ENCODED = {"__codes": "array<smallint>"}
 
     def __init__(self, nbits: int = 8, metric: str = "cos",
                  train_sample: int = 100_000):
@@ -1121,140 +1099,49 @@ class SQIndex(_ItemsLifecycleMixin):
         # normalize only for cosine (ip scores raw magnitudes); ip still
         # ranks descending — direction is a separate flag
         self._spherical = metric == "cos"
-        self._higher = metric in ("cos", "ip")
         self.vmin: np.ndarray | None = None
         self.vmax: np.ndarray | None = None
-        self._items: DataFrame | None = None
-        self._item_key = None
-        self._vec_col = None
 
     def _step(self) -> np.ndarray:
         """Per-dimension code step; a constant dimension codes to 0."""
         step = (self.vmax - self.vmin) / self.levels
         return np.where(step == 0, 1.0, step)
 
-    def _codes_expr(self, vec_col: str) -> Column:
-        vmin, scale = self.vmin, self._step()
-        levels, spherical = self.levels, self._spherical
-
-        @F.pandas_udf("array<smallint>")
-        def _enc(batch: pd.Series) -> pd.Series:
-            mat = np.array(batch.to_list(), dtype=np.float64)
-            if spherical:
-                mat = _unit_rows(mat)
-            codes = np.clip(np.rint((mat - vmin) / scale),
-                            0, levels).astype(np.int16)
-            return pd.Series(list(codes))
-
-        return _enc(M.as_double(vec_col))
-
-    def fit(self, items: DataFrame, *, item_key_col: str = "item",
-            item_vec_col: str = "embedding") -> "SQIndex":
-        if "__codes" in items.columns:   # guard BEFORE the sample collect
-            raise ValueError("items already has a '__codes' column — the "
-                             "index would silently overwrite it; rename "
-                             "it first")
-        mat = _driver_sample(items, item_key_col, item_vec_col,
-                             self.train_sample, "SQIndex")
+    def _train(self, items: DataFrame) -> None:
+        mat = self._sample(items)
         if self._spherical:
             mat = _unit_rows(mat)
         self.vmin, self.vmax = mat.min(0), mat.max(0)
-        self._item_key, self._vec_col = item_key_col, item_vec_col
-        self._items = items.withColumn(
-            "__codes", self._codes_expr(item_vec_col)).cache()
-        return self
 
-    def add_items(self, items: DataFrame) -> "SQIndex":
-        if self._items is None:
-            raise RuntimeError("SQIndex is not fit; call fit() first")
-        self._append(
-            items.withColumn("__codes", self._codes_expr(self._vec_col)))
-        return self
-
-    def search(self, queries: DataFrame | DriverQueries, *, k: int = 10,
-               query_item_col: str = "query_id",
-               query_vec_col: str = "embedding",
-               keep_rank_no: bool = True,
-               payload_cols: Sequence[str] | None = None) -> DataFrame:
-        if self._items is None:
-            raise RuntimeError("SQIndex is not fit; call fit() first")
+    def _encoder(self) -> Callable:
         vmin, step = self.vmin, self._step()
+        levels, spherical = self.levels, self._spherical
+
+        def encode(mat):
+            if spherical:
+                mat = _unit_rows(mat)
+            return {"__codes": np.clip(np.rint((mat - vmin) / step),
+                                       0, levels).astype(np.int16)}
+
+        return encode
+
+    def _scan(self) -> dict:
+        vmin, step, spherical = self.vmin, self._step(), self._spherical
         # decoded items are not unit rows, so cos scores them by dot
         metric = "ip" if self._higher else "l2"
-        cand = _sharded_scan(
-            queries, self._items, k=k, query_item_col=query_item_col,
-            query_vec_col=query_vec_col, item_key_col=self._item_key,
-            item_col=F.col("__codes"), higher_is_closer=self._higher,
-            prepare=lambda qmat: (_unit_rows(qmat) if self._spherical
-                                  else qmat,),
-            scorer=lambda st, codes, _cell: _gemm_scorer(
-                st[0], codes * step + vmin, metric),
-            dim=vmin.size)
-        if cand is None:
-            raise ValueError("SQIndex.search needs a non-empty query set "
-                             "(the query matrix is driver-collected)")
-        return _merge_candidates(cand, self._items.drop("__codes"), k=k,
-                                 higher_is_closer=self._higher,
-                                 item_key_col=self._item_key,
-                                 payload_cols=list(payload_cols or []),
-                                 keep_rank_no=keep_rank_no)
+        return dict(item_col=F.col("__codes"), dim=vmin.size,
+                    prepare=lambda qmat: (_unit_rows(qmat) if spherical
+                                          else qmat,),
+                    scorer=lambda st, codes, _cell: _gemm_scorer(
+                        st[0], codes * step + vmin, metric))
 
-    # -- persistence (S2/S3 parity: data + config as parquet; the last
-    # family member to gain it — PQ/IVF/IVFPQ/NSW had theirs) -------------
-
-    def save(self, path: str) -> None:
-        if self._items is None or self.vmin is None:
-            raise RuntimeError("SQIndex is not fit; nothing to save")
-        import os
-
-        spark = self._items.sparkSession
-        self._items.write.mode("overwrite").parquet(
-            os.path.join(path, "items"))
-        meta = {
-            "nbits": self.nbits, "metric": self.metric,
-            "train_sample": self.train_sample,
-            "item_key": self._item_key, "vec_col": self._vec_col,
-            "vmin": [float(x) for x in self.vmin],
-            "vmax": [float(x) for x in self.vmax],
-        }
-        _write_index_meta(spark, path, meta)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "SQIndex":
-        """Load + revalidate (reference asserts on load,
-        faiss_searcher.py:112-114): corpus non-empty, every code within
-        the level range, code width equal to the trained dimension."""
-        import os
-
-        meta = _read_index_meta(spark, path)
-        index = cls(meta["nbits"], meta["metric"], meta["train_sample"])
-        index.vmin = np.array(meta["vmin"], dtype=np.float64)
-        index.vmax = np.array(meta["vmax"], dtype=np.float64)
-        if index.vmin.shape != index.vmax.shape or not index.vmin.size:
-            raise ValueError("stored SQ bounds inconsistent — corrupt "
-                             "index?")
-        index._item_key = meta["item_key"]
-        index._vec_col = meta.get("vec_col")
-        items = spark.read.parquet(os.path.join(path, "items"))
-        stats = items.select(
-            F.count("*").alias("n"),
-            F.max(F.array_max("__codes")).alias("max_code"),
-            F.min(F.array_min("__codes")).alias("min_code"),
-            F.min(F.size("__codes")).alias("min_d"),
-            F.max(F.size("__codes")).alias("max_d")).first()
-        if not stats["n"]:
-            raise ValueError("loaded SQ index has an empty corpus")
-        if (stats["min_d"] != index.vmin.size
-                or stats["max_d"] != index.vmin.size
-                or stats["min_code"] < 0
-                or stats["max_code"] > index.levels):
-            raise ValueError("stored codes inconsistent with bounds — "
-                             "corrupt index?")
-        index._items = items.cache()
-        return index
+    def _table_checks(self) -> list:
+        return [*_code_flags(self.vmin.size, self.levels),
+                F.lit(self.vmin.shape != self.vmax.shape
+                      or not self.vmin.size)]
 
 
-class IVFPQIndex(_ItemsLifecycleMixin):
+class IVFPQIndex(_CodedIndex):
     """IVF + residual PQ — the FAISS workhorse ``IVF<n>,PQ<m>``
     (index_factory strings the reference forwards verbatim,
     faiss_searcher.py:104), natively in Spark, cosine/inner-product only.
@@ -1269,8 +1156,8 @@ class IVFPQIndex(_ItemsLifecycleMixin):
     trained on. Residuals have far less variance than raw vectors, so
     the same code budget quantizes finer (the reason FAISS encodes
     residuals). Items store (cell, m codes): ~m bytes instead of d
-    floats, in one cached codes frame built straight from the corpus;
-    the inner :class:`IVFIndex` holds the centroids only.
+    floats, in one cached code table built straight from the corpus;
+    the inner :class:`IVFIndex` (``_ivf``) holds the centroids only.
 
     search(): for inner-product scores the residual decomposition is
     separable — ``q·x ≈ q·c_cell + Σ_j LUT[j, code_j]`` with ONE
@@ -1280,10 +1167,19 @@ class IVFPQIndex(_ItemsLifecycleMixin):
     only rows of probed cells are read, each cell's codes scored against
     the queries that probe it by the cell's q·c plus the LUT gather),
     and the one rank window takes top-k. No item vector is read and
-    nothing item-sized is joined or broadcast. Broadcast state: the LUT
-    tensor (n_queries · m · 2^nbits doubles) and the queries' q·c over
-    every cell — the inherent ADC state, independent of corpus size.
+    nothing item-sized is joined or broadcast; payload rides the scan.
+    Broadcast state: the LUT tensor (n_queries · m · 2^nbits doubles)
+    and the queries' q·c over every cell — the inherent ADC state,
+    independent of corpus size. ``refine_factor`` re-scores a shortlist
+    exactly, which compensates both quantization loss and residual
+    approximation. An empty query set raises ``ValueError``.
     """
+
+    _CONFIG = ("n_cells", "nprobe", "m", "nbits", "seed", "metric",
+               "train_sample", "train_iters", "kmeans_max_iter", "opq",
+               "opq_iters")
+    _ARRAYS = ("centroids", "codebooks", "rotation")
+    _ENCODED = {"cell": "int", "__codes": "array<smallint>"}
 
     def __init__(self, n_cells: int = 64, nprobe: int = 4, m: int = 8,
                  nbits: int = 8, seed: int = 42, metric: str = "cos",
@@ -1312,111 +1208,53 @@ class IVFPQIndex(_ItemsLifecycleMixin):
         # q·c + (qR)·(rR) keeps the separable ADC algebra exact.
         self.opq, self.opq_iters = opq, opq_iters
         self.rotation: np.ndarray | None = None
-        self._ivf: IVFIndex | None = None
         self.codebooks: np.ndarray | None = None
-        self._items: DataFrame | None = None
-        self._item_key = None
-        self._vec_col = None
+        # the coarse quantizer: an unfitted IVFIndex holding the
+        # centroids (the code table is the only cached state)
+        self._ivf = IVFIndex(n_cells, nprobe, seed, metric,
+                             max_iter=kmeans_max_iter)
 
-    def _encode_expr(self, vec_col: str) -> Column:
-        """struct<cell, codes>: each row's nearest cell and the PQ codes
-        of its residual, in one pandas_udf pass."""
-        books = np.ascontiguousarray(self.codebooks)
-        cents = np.ascontiguousarray(self._ivf.centroids)
-        m, dsub = self.m, books.shape[2]
-        rot = None if self.rotation is None \
-            else np.ascontiguousarray(self.rotation)
-        normalize = self.metric == "cos"
+    @property
+    def centroids(self) -> "np.ndarray | None":
+        return self._ivf.centroids
 
-        @F.pandas_udf("cell int, codes array<smallint>")
-        def _enc(vec: pd.Series) -> pd.DataFrame:
-            cell, res = _cell_residuals(
-                np.array(vec.to_list(), dtype=np.float64), cents, normalize)
-            if rot is not None:   # OPQ: rotate the residual (q·r ==
-                res = res @ rot   # (qR)·(rR) keeps ADC exact)
-            codes = np.empty((len(res), m), dtype=np.int16)
-            for j in range(m):
-                sub = res[:, j * dsub:(j + 1) * dsub]
-                cb = books[j]
-                d2 = ((sub * sub).sum(1, keepdims=True)
-                      - 2.0 * sub @ cb.T + (cb * cb).sum(1)[None, :])
-                codes[:, j] = d2.argmin(1)
-            return pd.DataFrame({"cell": cell, "codes": list(codes)})
+    @centroids.setter
+    def centroids(self, value: "np.ndarray | None") -> None:
+        self._ivf.centroids = value
 
-        return _enc(M.as_double(vec_col))
+    # the lifecycle is _CodedIndex's; these names are bound in the class
+    # itself so that tracing, which wraps a class's own attributes
+    # (perfbench/spans.py), finds them
+    fit = _CodedIndex.fit
+    add_items = _CodedIndex.add_items
+    search = _CodedIndex._search_refined
 
-    def _coarse(self, centroids: np.ndarray, item_key_col: str,
-                item_vec_col: str) -> None:
-        """Hold the coarse centroids in an unfitted :class:`IVFIndex`;
-        the codes frame is the index's only cached state."""
-        self._ivf = IVFIndex(self.n_cells, self.nprobe, self.seed,
-                             self.metric, max_iter=self.kmeans_max_iter)
-        self._ivf.centroids = centroids
-        self._ivf._item_key, self._ivf._item_vec = item_key_col, item_vec_col
-        self._item_key, self._vec_col = item_key_col, item_vec_col
-
-    def _coded(self, items: DataFrame) -> DataFrame:
-        """``items`` with its ``cell`` and residual ``__codes`` columns."""
-        return items.withColumn("__enc", self._encode_expr(self._vec_col)) \
-            .select(*items.columns, F.col("__enc.cell").alias("cell"),
-                    F.col("__enc.codes").alias("__codes"))
-
-    def fit(self, items: DataFrame, *, item_key_col: str = "item",
-            item_vec_col: str = "embedding") -> "IVFPQIndex":
-        for col in ("cell", "__codes"):   # guard BEFORE the expensive train
-            if col in items.columns:
-                raise ValueError(f"items already has a {col!r} column — "
-                                 "the index would silently overwrite it; "
-                                 "rename it first")
-        mat = _driver_sample(items, item_key_col, item_vec_col,
-                             self.train_sample, "IVFPQIndex")
+    def _train(self, items: DataFrame) -> None:
+        mat = self._sample(items)
         # spherical cells; one-subspace PQ training IS k-means over the
         # full vector
         cap = MAX_POINTS_PER_CENTROID * self.n_cells
-        self._coarse(_train_pq_codebooks(
+        self.centroids = _train_pq_codebooks(
             _unit_rows(mat[:cap]), 1, self.n_cells, self.kmeans_max_iter,
-            self.seed)[0], item_key_col, item_vec_col)
-        _, residuals = _cell_residuals(mat, self._ivf.centroids,
+            self.seed)[0]
+        _, residuals = _cell_residuals(mat, self.centroids,
                                        self.metric == "cos")
-        if self.opq:
-            self.rotation, self.codebooks = _train_opq_rotation(
-                residuals, self.m, self.ksub, self.train_iters,
-                self.seed, self.opq_iters)
-        else:
-            self.codebooks = _train_pq_codebooks(
-                residuals, self.m, self.ksub, self.train_iters, self.seed)
-        self._items = self._coded(items).cache()
-        return self
+        self.rotation, self.codebooks = _train_pq(residuals, self)
 
-    def add_items(self, items: DataFrame) -> "IVFPQIndex":
-        """FAISS ``index.add`` after training: assign new rows to their
-        nearest existing cell, encode residuals with the existing
-        codebooks (no retrain), union into the code table."""
-        if self._items is None:
-            raise RuntimeError("IVFPQIndex is not fit; call fit() first")
-        self._append(self._coded(items))
-        return self
+    def _encoder(self) -> Callable:
+        cents, books, rot = self.centroids, self.codebooks, self.rotation
+        normalize = self.metric == "cos"
 
-    def search(self, queries: DataFrame | DriverQueries, *, k: int = 10,
-               query_item_col: str = "query_id",
-               query_vec_col: str = "embedding",
-               payload_cols: Sequence[str] | None = None,
-               refine_factor: int | None = None) -> DataFrame:
-        """Cell-pruned ADC top-k: one probed-cell
-        :func:`~faisssearcher_spark.operators.knn._sharded_scan` of the
-        code table scoring ``q·c_cell + Σ_j LUT[j, code_j]`` (the cell's
-        q·c plus :func:`_adc_scorer`), then the one rank window;
-        ``payload_cols`` ride the scan. ``refine_factor`` shortlists the
-        top ``k × refine_factor`` by quantized score and re-scores them
-        EXACTLY against the stored vectors (the IndexRefineFlat pattern
-        — see PQIndex.search); compensates both quantization loss and
-        residual approximation."""
-        if self._items is None:
-            raise RuntimeError("IVFPQIndex is not fit; call fit() first")
-        if refine_factor is not None and refine_factor < 1:
-            raise ValueError("refine_factor must be >= 1")
-        payload = list(payload_cols or [])
-        cents, books, rot = self._ivf.centroids, self.codebooks, self.rotation
+        def encode(mat):
+            # OPQ rotates the residual: q·r == (qR)·(rR) keeps ADC exact
+            cells, residuals = _cell_residuals(mat, cents, normalize)
+            return {"cell": cells,
+                    "__codes": _pq_codes(residuals, rot, books)}
+
+        return encode
+
+    def _scan(self) -> dict:
+        cents, books, rot = self.centroids, self.codebooks, self.rotation
         nprobe = self.nprobe
         unit = _unit_rows if self.metric == "cos" else np.asarray
 
@@ -1432,95 +1270,15 @@ class IVFPQIndex(_ItemsLifecycleMixin):
             adc = _adc_scorer(lut, codes)
             return lambda s, e: qc[:, cell, None] + adc(s, e)
 
-        cand = _sharded_scan(
-            queries, self._items, k=k * (refine_factor or 1),
-            query_item_col=query_item_col, query_vec_col=query_vec_col,
-            item_key_col=self._item_key, item_col=F.col("__codes"),
-            higher_is_closer=True, prepare=prepare, scorer=scorer,
-            # nearest cells by L2 on normalized vectors == max inner
-            # product on the unit sphere
-            probe=lambda qmat: _nearest_cells(unit(qmat), cents, nprobe,
-                                              False),
-            dim=cents.shape[1], payload_cols=payload)
-        if cand is None:
-            raise ValueError("IVFPQIndex.search needs a non-empty query "
-                             "set (the query LUT tensor is driver-built)")
-        if refine_factor is not None:
-            cand = _exact_rescore(
-                _rank_topk(cand, k * refine_factor, True)
-                .select("source_item", "sim_item", *payload), self._items,
-                item_key_col=self._item_key, item_vec_col=self._vec_col,
-                queries=queries, query_item_col=query_item_col,
-                query_vec_col=query_vec_col, metric=self.metric)
-        # cos and ip: higher is closer, quantized or exact
-        return _rank_topk(cand, k, True).select(
-            "source_item", "sim_item", "sim_val", "rank_no", *payload)
+        # nearest cells by L2 on normalized vectors == max inner product
+        # on the unit sphere
+        return dict(item_col=F.col("__codes"), prepare=prepare,
+                    scorer=scorer, dim=cents.shape[1],
+                    probe=lambda qmat: _nearest_cells(unit(qmat), cents,
+                                                      nprobe, False))
 
-    # -- persistence (S2/S3 parity: data + config as parquet) --------------
-
-    def save(self, path: str) -> None:
-        if self._items is None or self.codebooks is None:
-            raise RuntimeError("IVFPQIndex is not fit; nothing to save")
-        import os
-
-        spark = self._items.sparkSession
-        self._items.write.mode("overwrite").parquet(
-            os.path.join(path, "items"))
-        meta = {
-            "n_cells": self.n_cells, "nprobe": self.nprobe,
-            "m": self.m, "nbits": self.nbits, "seed": self.seed,
-            "metric": self.metric, "train_sample": self.train_sample,
-            "train_iters": self.train_iters,
-            "kmeans_max_iter": self.kmeans_max_iter,
-            "item_key": self._item_key, "vec_col": self._vec_col,
-            "opq": self.opq, "opq_iters": self.opq_iters,
-            "rotation": None if self.rotation is None else
-                        [[float(x) for x in row] for row in self.rotation],
-            "centroids": [[float(x) for x in c]
-                          for c in self._ivf.centroids],
-            "codebooks": [[[float(x) for x in c] for c in book]
-                          for book in self.codebooks],
-        }
-        _write_index_meta(spark, path, meta)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IVFPQIndex":
-        """Load + revalidate: corpus non-empty, cells and codes in
-        range (reference asserts on load, faiss_searcher.py:112-114)."""
-        import os
-
-        meta = _read_index_meta(spark, path)
-        index = cls(meta["n_cells"], meta["nprobe"], meta["m"],
-                    meta["nbits"], meta["seed"], meta["metric"],
-                    meta["train_sample"], meta["train_iters"],
-                    meta["kmeans_max_iter"],
-                    opq=meta.get("opq", False),
-                    opq_iters=meta.get("opq_iters", 10))
-        index.codebooks = np.array(meta["codebooks"])
-        if meta.get("rotation") is not None:
-            index.rotation = np.array(meta["rotation"])
-            d = index.codebooks.shape[0] * index.codebooks.shape[2]
-            if index.rotation.shape != (d, d):
-                raise ValueError("stored OPQ rotation inconsistent with "
-                                 "codebook dimensions — corrupt index?")
-        index._coarse(np.array(meta["centroids"]), meta["item_key"],
-                      meta["vec_col"])
-        items = spark.read.parquet(os.path.join(path, "items"))
-        stats = items.select(
-            F.count("*").alias("n"), F.max("cell").alias("max_cell"),
-            F.max(F.array_max("__codes")).alias("max_code"),
-            F.min(F.size("__codes")).alias("min_m"),
-            F.max(F.size("__codes")).alias("max_m")).first()
-        if not stats["n"]:
-            raise ValueError("loaded IVFPQ index has an empty corpus")
-        if stats["max_cell"] >= meta["n_cells"] \
-                or stats["min_m"] != meta["m"] \
-                or stats["max_m"] != meta["m"] \
-                or stats["max_code"] >= index.ksub:
-            raise ValueError("stored cells/codes inconsistent with the "
-                             "quantizers — corrupt index?")
-        index._items = items.cache()
-        return index
+    def _table_checks(self) -> list:
+        return [*_cell_flags(self.n_cells), *_pq_flags(self)]
 
 
 class IndexSpec(NamedTuple):

@@ -177,7 +177,7 @@ class BM25Index:
                              "rank_no", *payload)
 
 
-    # -- lifecycle (the ann.py _ItemsLifecycleMixin contract; BM25 pins
+    # -- lifecycle (the ann.py _CodedIndex storage contract; BM25 pins
     # TWO frames — the postings and the frozen fit-time idf table) ---------
 
     def _cached_state(self):

@@ -1208,7 +1208,7 @@ def _embedding_pairs_lsh(df: DataFrame, *, id_col: str, vec_col: str,
         .distinct()
     )
     nrm = df.select(F.col(id_col).alias("id"),
-                    l2_normalize(v, zero_norm_nan=False).alias("v"))
+                    l2_normalize(v, on_zero=v).alias("v"))
     score = M.inner_product(F.col("v_a"), F.col("v_b"))
     if score_scale is not None:
         score = F.round(score, score_scale)
@@ -1386,7 +1386,7 @@ def semantic_cell_pairs(df: DataFrame, *, id_col: str = "vec_id",
         df, item_key_col=id_col, item_vec_col=vec_col)
     assigned = idx.assignments().select(
         "cell", F.col(id_col).alias("__id"),
-        l2_normalize(vec_col, zero_norm_nan=False).alias("__v"))
+        l2_normalize(vec_col, on_zero=M.as_double(vec_col)).alias("__v"))
     a = assigned.select("cell", F.col("__id").alias("id_a"),
                         F.col("__v").alias("__va"))
     b = assigned.select("cell", F.col("__id").alias("id_b"),

@@ -291,8 +291,8 @@ class NSWIndex:
         self.n_items: int | None = None
         self.dim: int | None = None
         # the fitted source frame + its key column: payload columns
-        # re-attach from here (the IVFIndex discipline — broadcast the
-        # ≤ m·k ranked side, never the items). A load()ed index has only
+        # re-attach from here (knn._attach_payload's discipline —
+        # broadcast the ≤ m·k ranked side, never the items). A load()ed index has only
         # the graph table, so payload requests there raise; join payloads
         # onto the result frame instead.
         self._items: DataFrame | None = None
@@ -436,7 +436,7 @@ class NSWIndex:
                                  payload_cols=payloads,
                                  keep_rank_no=keep_rank_no)
 
-    # -- lifecycle (the ann.py _ItemsLifecycleMixin contract; the NSW
+    # -- lifecycle (the ann.py _CodedIndex storage contract; the NSW
     # state is the persisted GRAPH table, not an encoded-items cache) ------
 
     def _cached_state(self):

@@ -348,13 +348,13 @@ def knn_join(
     q_vec: Column = F.col(query_vec_col)
     i_vec: Column = F.col(item_vec_col)
     if normalize:
-        # zero_norm_nan=False: a zero-norm vector stays zero (score 0)
+        # on_zero passes the vector: a zero-norm one stays zero (score 0)
         # instead of becoming NaN — Spark sorts NaN above every double in a
         # descending order, so a single zero vector would otherwise rank
         # first for every query; the numpy kernels (blocked/sharded/grid)
         # already keep zero vectors zero, and this aligns all strategies.
-        q_vec = l2_normalize(q_vec, zero_norm_nan=False)
-        i_vec = l2_normalize(i_vec, zero_norm_nan=False)
+        q_vec = l2_normalize(q_vec, on_zero=M.as_double(q_vec))
+        i_vec = l2_normalize(i_vec, on_zero=M.as_double(i_vec))
 
     if query_item_col is not None:
         q_src = F.col(query_item_col)
@@ -431,8 +431,8 @@ def radius_join(
     q_vec: Column = F.col(query_vec_col)
     i_vec: Column = F.col(item_vec_col)
     if normalize:
-        q_vec = l2_normalize(q_vec, zero_norm_nan=False)
-        i_vec = l2_normalize(i_vec, zero_norm_nan=False)
+        q_vec = l2_normalize(q_vec, on_zero=M.as_double(q_vec))
+        i_vec = l2_normalize(i_vec, on_zero=M.as_double(i_vec))
     q_src = (F.col(query_item_col) if query_item_col is not None
              else F.monotonically_increasing_id())
     q = queries.select(q_src.alias("source_item"), q_vec.alias(_Q_VEC))
@@ -1047,8 +1047,10 @@ def _sharded_scan(queries: DataFrame | DriverQueries, items: DataFrame,
     key. The batch emits each query's local top-k among the rows it
     probes, with the ``payload_cols`` of the rows it emits: the payload
     of a result row is its own corpus row's. Rank the candidates with
-    :func:`_rank_topk`, or with :func:`_merge_candidates` to attach
-    payload by key instead.
+    :func:`_rank_topk` (the ann.py indexes), or with
+    :func:`_merge_candidates` to attach payload by key instead,
+    deduplicated per key (``strategy="sharded"``, as the grid kernel and
+    NSW do).
 
     Returns the ``(source_item, sim_item, sim_val, *payload_cols)``
     candidate frame, or None when ``queries`` has no rows (the caller

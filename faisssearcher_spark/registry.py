@@ -46,7 +46,7 @@ from faisssearcher_spark.sources.catalog import load_table_parallel
 
 # L2-normalized double vector for DuckDB (column `embedding`). The CASE
 # guards the zero norm the same way the Spark side does
-# (l2_normalize(zero_norm_nan=False), operators/knn.py): a zero vector
+# (l2_normalize(on_zero=vec), operators/knn.py): a zero vector
 # stays zero (score 0) instead of dividing to NaN — DuckDB sorts NaN
 # greatest, so an unguarded oracle would rank a zero vector FIRST while
 # Spark ranks it last (r2 ADVICE divergence).

@@ -781,3 +781,38 @@ class TestGemmTopkHelper:
         a = np.random.default_rng(3).standard_normal((100, 40)) * 1e3
         for s in (-2, 0, 2, 4, 6):
             assert (_np_round_exact(a, s) == np.round(a, s)).all(), s
+
+
+class TestNormalizeOnce:
+    """``l2_normalize(v, on_zero=v)``, the zero-passing normalize of the
+    catalyst plans, binds the squared norm once for the zero test and
+    the division."""
+
+    def test_one_norm_aggregate_per_normalized_side(self, spark, embeddings):
+        q = embeddings.limit(3).select(F.col("vec_id").alias("qid"),
+                                       "embedding")
+
+        def aggregates(metric):
+            res = knn_join(q, embeddings, metric=metric, k=2,
+                           query_item_col="qid", item_key_col="vec_id",
+                           strategy="catalyst")
+            return res._jdf.queryExecution().analyzed().toString() \
+                .count("aggregate(")
+
+        # cos scores the normalized vectors with ip's one dot aggregate
+        assert aggregates("cos") - aggregates("ip") == 2
+
+    def test_values_zero_and_null(self, spark):
+        from faisssearcher_spark.functions.vector import l2_normalize
+
+        df = spark.createDataFrame(
+            [(0, [3.0, 4.0, 1e-3]), (1, [0.0, 0.0, 0.0]), (2, None),
+             (3, [-0.1, 0.7, 2.5])], "id int, v array<double>")
+        got = {r["id"]: r["n"] for r in df.select(
+            "id", l2_normalize("v", on_zero=F.col("v")).alias("n"))
+            .collect()}
+        plain = {r["id"]: r["n"] for r in df.filter("id in (0, 3)").select(
+            "id", l2_normalize("v").alias("n")).collect()}
+        assert got[0] == plain[0] and got[3] == plain[3]   # bit for bit
+        assert got[1] == [0.0, 0.0, 0.0]
+        assert got[2] is None

@@ -156,6 +156,30 @@ def test_add_items_matches_full_fit(spark, lossless):
         PQIndex(m=2).add_items(extra)
 
 
+def test_pq_codes_match_the_per_subspace_loop():
+    """_pq_codes (through _pq_assign, the one PQ encoder) picks in each
+    subspace a centroid at the least squared distance of the
+    per-subspace loop the encode once ran (to 1e-9), and the loop's own
+    code wherever no two centroids tie within that bound."""
+    from faisssearcher_spark.operators.ann import (_pq_codes,
+                                                   _train_pq_codebooks)
+
+    rng = np.random.default_rng(3)
+    mat = rng.standard_normal((3000, 16))
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    books = _train_pq_codebooks(mat[:1000], 4, 64, 5, 3)
+    codes = _pq_codes(mat, None, books)
+    assert codes.dtype == np.int16 and codes.shape == (3000, 4)
+    for j in range(4):
+        sub, cb = mat[:, 4 * j:4 * j + 4], books[j]
+        d2 = ((sub * sub).sum(1, keepdims=True) - 2.0 * sub @ cb.T
+              + (cb * cb).sum(1)[None, :])
+        best = d2.min(1)
+        assert np.all(d2[np.arange(len(d2)), codes[:, j]] <= best + 1e-9)
+        clear = np.sort(d2, axis=1)[:, 1] - best > 1e-9
+        assert np.array_equal(codes[clear, j], d2.argmin(1)[clear])
+
+
 class TestIVFPQ:
     def test_recall_composition(self, embeddings):
         """IVF16,PQ16 at nprobe=8: recall ~= ivf-pruning x pq-quantization
@@ -399,7 +423,7 @@ class TestSQ:
         meta_dir = str(tmp_path / "sq" / "meta")
         meta = json.loads(
             spark.read.parquet(meta_dir).first()["meta"])
-        meta["vmin"] = meta["vmin"][:-1]
+        meta["arrays"]["vmin"] = meta["arrays"]["vmin"][:-1]
         spark.createDataFrame([(json.dumps(meta),)], "meta string") \
             .coalesce(1).write.mode("overwrite").parquet(meta_dir)
         with pytest.raises(ValueError, match="inconsistent"):
@@ -604,8 +628,9 @@ class TestQueriesCheckedOnDriver:
                 idx.close()
 
 
-def _ivf_indexes():
-    from faisssearcher_spark.operators.ann import IVFIndex, IVFPQIndex
+def _scan_indexes():
+    from faisssearcher_spark.operators.ann import (IVFIndex, IVFPQIndex,
+                                                   SQIndex)
 
     return {
         "ivf-cos": (lambda: IVFIndex(n_cells=8, nprobe=3, seed=5,
@@ -617,17 +642,20 @@ def _ivf_indexes():
         "ivfpq-refine": (lambda: IVFPQIndex(n_cells=8, nprobe=3, m=8,
                                             seed=5),
                          {"refine_factor": 3}),
+        "pq": (lambda: PQIndex(m=8, seed=5), {}),
+        "sq": (lambda: SQIndex(nbits=8), {}),
     }
 
 
 class TestProbedCellScan:
-    """IVF and IVF-PQ search through knn._sharded_scan with the probed
-    cells: results do not depend on how the corpus is partitioned, and
-    each result row carries its own corpus row's payload."""
+    """The indexes search through knn._sharded_scan (IVF and IVF-PQ with
+    the probed cells): results do not depend on how the corpus is
+    partitioned, and each result row carries its own corpus row's
+    payload."""
 
-    @pytest.mark.parametrize("name", list(_ivf_indexes()))
+    @pytest.mark.parametrize("name", list(_scan_indexes()))
     def test_one_and_seven_partitions_identical(self, embeddings, name):
-        make, kw = _ivf_indexes()[name]
+        make, kw = _scan_indexes()[name]
         q = embeddings.filter(F.col("vec_id") < 12).select(
             F.col("vec_id").alias("qid"), "embedding")
         got = []
@@ -645,14 +673,18 @@ class TestProbedCellScan:
         assert len(one) == 120
         assert one == seven
 
-    @pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+    @pytest.mark.parametrize("kind", ["ivf", "ivfpq", "pq", "sq"])
     def test_payload_carried_per_corpus_row(self, spark, lossless, kind):
-        from faisssearcher_spark.operators.ann import IVFIndex, IVFPQIndex
+        from faisssearcher_spark.operators.ann import (IVFIndex, IVFPQIndex,
+                                                       SQIndex)
 
         # every cell probed: both rows of key 3 reach every query
-        make = ((lambda: IVFIndex(n_cells=2, nprobe=2, train_mode="sample"))
-                if kind == "ivf" else
-                (lambda: IVFPQIndex(n_cells=2, nprobe=2, m=2, seed=1)))
+        make = {"ivf": lambda: IVFIndex(n_cells=2, nprobe=2,
+                                        train_mode="sample"),
+                "ivfpq": lambda: IVFPQIndex(n_cells=2, nprobe=2, m=2,
+                                            seed=1),
+                "pq": lambda: PQIndex(m=2, seed=1),
+                "sq": lambda: SQIndex(nbits=8)}[kind]
         # key 3 stored twice: its own vector with label 100, and the
         # vector of key 4 with label -1; a key-level re-attach would
         # give both rows one label
@@ -740,5 +772,121 @@ class TestIVFInputChecks:
                 ("source_item", "bigint"), ("sim_item", "bigint"),
                 ("sim_val", "double"), ("rank_no", "int"),
                 ("label", "int")]
+        finally:
+            idx.close()
+
+
+def _core_indexes():
+    from faisssearcher_spark.operators.ann import (IVFIndex, IVFPQIndex,
+                                                   SQIndex)
+
+    return {
+        "ivf": lambda: IVFIndex(n_cells=8, nprobe=3, seed=5,
+                                train_mode="sample"),
+        "pq": lambda: PQIndex(m=8, seed=5),
+        "opq": lambda: PQIndex(m=8, seed=5, opq=True, opq_iters=2),
+        "sq": lambda: SQIndex(nbits=8),
+        "ivfpq": lambda: IVFPQIndex(n_cells=8, nprobe=3, m=8, seed=5),
+        "opq-ivfpq": lambda: IVFPQIndex(n_cells=8, nprobe=3, m=8, seed=5,
+                                        opq=True, opq_iters=2),
+    }
+
+
+def _copy_corrupted(spark, src, dst, col, value):
+    """The index saved at ``src`` copied to ``dst`` with ``col`` of its
+    smallest-key stored row replaced by ``value``."""
+    import os
+
+    items = spark.read.parquet(os.path.join(src, "items"))
+    first = items.agg(F.min("vec_id")).first()[0]
+    items.withColumn(col, F.when(F.col("vec_id") == first, value)
+                     .otherwise(F.col(col))) \
+        .write.parquet(os.path.join(dst, "items"))
+    spark.read.parquet(os.path.join(src, "meta")) \
+        .write.parquet(os.path.join(dst, "meta"))
+
+
+class TestCodedIndexCore:
+    """fit, add_items, search, save and load are written once
+    (ann._CodedIndex) for IVF, PQ, SQ and IVF-PQ."""
+
+    @pytest.mark.parametrize("name", list(_core_indexes()))
+    def test_save_load_search_identical(self, spark, embeddings, tmp_path,
+                                        name):
+        q = embeddings.filter(F.col("vec_id") < 6).select(
+            F.col("vec_id").alias("qid"), "embedding")
+        idx = _core_indexes()[name]().fit(
+            embeddings, item_key_col="vec_id", item_vec_col="embedding")
+        path = str(tmp_path / name)
+        try:
+            before = sorted(tuple(r) for r in idx.search(
+                q, k=5, query_item_col="qid",
+                payload_cols=["label"]).collect())
+            idx.save(path)
+        finally:
+            idx.close()
+        loaded = type(idx).load(spark, path)
+        try:
+            after = sorted(tuple(r) for r in loaded.search(
+                q, k=5, query_item_col="qid",
+                payload_cols=["label"]).collect())
+            for a in type(idx)._ARRAYS:
+                want, got = getattr(idx, a), getattr(loaded, a)
+                assert (want is None and got is None) \
+                    or np.array_equal(want, got), a
+        finally:
+            loaded.close()
+        assert len(before) == 30
+        assert after == before   # pairs, sim_val, rank_no and payload
+
+    @pytest.mark.parametrize("name,col,value", [
+        ("ivf", "cell", lambda: F.lit(8)),
+        ("ivf", "cell", lambda: F.lit(-1)),
+        ("pq", "__codes", lambda: F.concat(
+            F.array(F.lit(256).cast("smallint")), F.slice("__codes", 2, 7))),
+        ("pq", "__codes", lambda: F.slice("__codes", 1, 7)),
+        ("sq", "__codes", lambda: F.slice("__codes", 1, 7)),
+        ("ivfpq", "cell", lambda: F.lit(8)),
+    ], ids=["ivf-cell-above", "ivf-cell-negative", "pq-code-above-ksub",
+            "pq-width", "sq-width", "ivfpq-cell-above"])
+    def test_corrupt_stored_table_raises_on_load(self, spark, embeddings,
+                                                 tmp_path, name, col, value):
+        idx = _core_indexes()[name]().fit(
+            embeddings, item_key_col="vec_id", item_vec_col="embedding")
+        src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+        try:
+            idx.save(src)
+        finally:
+            idx.close()
+        type(idx).load(spark, src).close()   # the intact copy loads
+        _copy_corrupted(spark, src, dst, col, value())
+        with pytest.raises(ValueError, match="inconsistent"):
+            type(idx).load(spark, dst)
+
+    @pytest.mark.parametrize("name", ["pq", "sq"])
+    def test_payload_adds_no_job(self, spark, embeddings, name):
+        """Payload rides the scan: a search with payload_cols runs no
+        more Spark jobs than the same search without."""
+        from faisssearcher_spark.operators.knn import _fill_cache
+
+        sc = spark.sparkContext
+        q = embeddings.filter(F.col("vec_id") < 20).select(
+            F.col("vec_id").alias("qid"), "embedding")
+        idx = _core_indexes()[name]().fit(
+            embeddings, item_key_col="vec_id", item_vec_col="embedding")
+
+        def jobs(**kw):
+            def ids():
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                return set(sc.statusTracker().getJobIdsForGroup(None))
+
+            before = ids()
+            rows = idx.search(q, k=10, query_item_col="qid", **kw).collect()
+            assert len(rows) == 200
+            return len(ids() - before)
+
+        try:
+            _fill_cache(idx._items)
+            assert jobs(payload_cols=["label"]) <= jobs()
         finally:
             idx.close()

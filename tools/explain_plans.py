@@ -89,6 +89,8 @@ AUDITS = {
          "query time"),
         ("WindowGroupLimit", True,
          "per-shard local top-k merges through the bounded rank window"),
+        ("BroadcastHashJoin", False,
+         "no join against the item table: the payload rides the scan"),
         ("CartesianProduct", False, "no pair blowup"),
     ],
     "ann_ivfpq_topk": [
@@ -107,6 +109,10 @@ AUDITS = {
         ("MapInPandas", True,
          "decode (one fused multiply-add) + GEMM per Arrow batch over "
          "d-byte codes — 4× smaller scans than float32 vectors"),
+        ("WindowGroupLimit", True,
+         "per-shard local top-k merges through the bounded rank window"),
+        ("BroadcastHashJoin", False,
+         "no join against the item table: the payload rides the scan"),
         ("CartesianProduct", False, "no pair blowup"),
     ],
     "ann_mrl_topk": [
@@ -209,6 +215,8 @@ AUDITS = {
          "distributed plan is byte-identical to plain PQ"),
         ("WindowGroupLimit", True,
          "per-shard local top-k merges through the bounded rank window"),
+        ("BroadcastHashJoin", False,
+         "no join against the item table: the payload rides the scan"),
         ("CartesianProduct", False, "no pair blowup"),
     ],
     "layout_zorder": [
