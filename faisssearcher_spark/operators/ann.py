@@ -707,7 +707,7 @@ def _pq_assign(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
     one PQ encoder: OPQ training's encode/decode alternation, and the
     PQ and IVF-PQ encode on the executors (:func:`_pq_codes`).
     Batched over subspaces like :func:`_train_pq_codebooks`; chunked
-    so the (m, chunk, ksub) score tensor stays ≲256 MB."""
+    so the (m, chunk, ksub) score tensor stays ≲32 MB."""
     m, ksub, dsub = books.shape
     n = len(mat)
     subs = np.ascontiguousarray(
@@ -715,7 +715,7 @@ def _pq_assign(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
     half = 0.5 * (books * books).sum(2)              # (m, ksub)
     bt = np.ascontiguousarray(books.transpose(0, 2, 1))
     codes = np.empty((n, m), dtype=np.int64)
-    chunk = min(n, max(1024, int(256e6 / (m * ksub * 8))))
+    chunk = min(n, max(1024, int(32e6 / (m * ksub * 8))))
     scores = np.empty((m, chunk, ksub))
     for s in range(0, n, chunk):
         e = min(n, s + chunk)

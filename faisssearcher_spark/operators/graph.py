@@ -14,17 +14,19 @@ knn.py):
   node beam-searches the inserted prefix and links to its ``m`` nearest;
   reverse edges trim to ``2m``). The corpus never leaves its executors;
   what materializes is the graph table
-  ``(shard, pos, key, vector, neighbors)`` — parquet-persistable
-  (the S2/S3 save/load discipline, no pickle).
+  ``(shard, pos, key, vector, neighbors, *the items' other columns)``
+  — parquet-persistable (the S2/S3 save/load discipline, no pickle).
 - **search** — the (small) query matrix, collected (or taken as is from
   ``knn.DriverQueries``) and checked against the graph's dim on the
   driver (``knn._query_vectors``), broadcasts;
   each shard answers
   with layer-0 beam search (``ef_search`` frontier) via
   ``groupBy(shard).applyInPandas`` — Spark guarantees the whole shard in
-  one call — and only per-shard top-k candidates reach the global
-  window merge (``knn._merge_candidates``, the same two-level merge as
-  ``knn_join(strategy="sharded")``).
+  one call — and only per-shard top-k candidates, each with its own
+  graph row's payload columns, reach the one rank window
+  (``knn._top_rows``, the same two-level merge as
+  ``knn_join(strategy="sharded")``). Payload is stored with the graph,
+  so a loaded index serves it too.
 
 Single-layer NSW, not hierarchical: HNSW's upper layers buy log(n)
 entry-point routing once a graph holds ≫10⁶ nodes; here the SHARDING
@@ -53,6 +55,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 if TYPE_CHECKING:
     from faisssearcher_spark.operators.knn import DriverQueries
@@ -287,23 +290,28 @@ class NSWIndex:
         self.ef_search = ef_search
         self.metric = metric
         self.n_shards = n_shards
+        # the graph table: one row per fitted item, its _COLS and then
+        # the item's other columns, which search carries as payload
         self.graph: DataFrame | None = None
         self.n_items: int | None = None
         self.dim: int | None = None
-        # the fitted source frame + its key column: payload columns
-        # re-attach from here (knn._attach_payload's discipline —
-        # broadcast the ≤ m·k ranked side, never the items). A load()ed index has only
-        # the graph table, so payload requests there raise; join payloads
-        # onto the result frame instead.
-        self._items: DataFrame | None = None
-        self._item_key = "key"
 
     # -- fit ---------------------------------------------------------------
 
     def fit(self, items: DataFrame, *, item_key_col: str = "item",
             item_vec_col: str = "embedding") -> "NSWIndex":
+        """Build one graph per shard. The items' columns other than the
+        key and the vector are kept in the graph table, so a search (of
+        a loaded index too) can carry them as payload; none of them may
+        be named like a graph column (``ValueError``)."""
+        payload = [c for c in items.columns
+                   if c not in (item_key_col, item_vec_col)]
+        clash = [c for c in payload if c in self._COLS]
+        if clash:
+            raise ValueError(f"items column(s) {clash} clash with the graph "
+                             f"table's {list(self._COLS)}; rename them first")
         src = items.select(F.col(item_key_col).alias("key"),
-                           F.col(item_vec_col).alias("vector"))
+                           F.col(item_vec_col).alias("vector"), *payload)
         if self.n_shards is not None:
             src = src.repartition(self.n_shards)
         m, efc, metric = self.m, self.ef_construction, self.metric
@@ -330,23 +338,25 @@ class NSWIndex:
             nbrs, counts = _build_shard_graph(mat, m, efc, metric)
             ctx = TaskContext.get()
             shard = int(ctx.partitionId()) if ctx is not None else 0
-            yield pd.DataFrame({
+            yield pd.concat([pd.DataFrame({
                 "shard": shard,
                 "pos": np.arange(len(pdf), dtype=np.int32),
                 "key": pdf["key"].to_numpy(),
                 "vector": [v.astype(np.float32) for v in mat],
                 "neighbors": [nbrs[j, :counts[j]].astype(np.int32)
                               for j in range(len(pdf))],
-            })
+            }), pdf[payload].reset_index(drop=True)], axis=1)
 
-        key_t = items.schema[item_key_col].dataType.simpleString()
-        schema = (f"shard long, pos int, key {key_t}, "
-                  "vector array<float>, neighbors array<int>")
+        schema = T.StructType([
+            T.StructField("shard", T.LongType()),
+            T.StructField("pos", T.IntegerType()),
+            T.StructField("key", items.schema[item_key_col].dataType),
+            T.StructField("vector", T.ArrayType(T.FloatType())),
+            T.StructField("neighbors", T.ArrayType(T.IntegerType())),
+            *[items.schema[c] for c in payload]])
         self.graph = src.mapInPandas(_build, schema).persist()
         # materialize the build once; the dim checks search's queries
         self.n_items, self.dim = self._size()
-        self._items = items
-        self._item_key = item_key_col
         return self
 
     def _size(self) -> "tuple[int, int | None]":
@@ -365,15 +375,22 @@ class NSWIndex:
                query_item_col: str = "query_id",
                query_vec_col: str = "embedding",
                ef_search: int | None = None,
-               payload_cols: Sequence[str] | None = None,
-               keep_rank_no: bool = True) -> DataFrame:
-        """Global top-k per query: per-shard beam candidates → window
-        merge. Output ``(source_item, sim_item, sim_val[, rank_no])`` —
-        the family's result shape."""
+               payload_cols: Sequence[str] | None = None) -> DataFrame:
+        """Global top-k per query: per-shard beam candidates, each with
+        its own graph row's ``payload_cols``, then the one rank window.
+        Output ``(source_item, sim_item, sim_val, rank_no,
+        *payload_cols)`` — the family's result shape. A payload column
+        the graph table lacks (a graph saved before it kept the items'
+        columns has none) raises ``ValueError`` naming it."""
         from faisssearcher_spark.operators.knn import (
-            _candidate_schema, _merge_candidates, _query_vectors)
+            _candidate_schema, _query_vectors, _top_rows)
 
         graph = self._require_fitted()
+        payloads = list(payload_cols or [])
+        missing = [c for c in payloads if c not in graph.columns]
+        if missing:
+            raise ValueError(f"payload_cols {missing} not found in the "
+                             f"graph table (columns: {graph.columns})")
         ef = max(int(ef_search or self.ef_search), k)
         qids, qmat = _query_vectors(queries, query_item_col,
                                     query_vec_col, dim=self.dim)
@@ -404,37 +421,26 @@ class NSWIndex:
                 nbrs[j, :len(nb)] = nb
                 counts[j] = len(nb)
             keys = pdf["key"].to_numpy()
-            out_src, out_item, out_val = [], [], []
+            out_src, out_pos, out_val = [], [], []
             for qi, q in enumerate(b_q.value):
                 found = _beam_search(mat, nbrs, counts, q, ef, metric)
-                for s, pos in found[:kk]:
+                for s, p in found[:kk]:
                     out_src.append(b_qid.value[qi])
-                    out_item.append(keys[pos])
+                    out_pos.append(p)
                     # l2 reports the squared distance (the family's
                     # FAISS convention), not the internal negated sim
                     out_val.append(float(s) if metric != "l2"
                                    else float(-s))
-            return pd.DataFrame({"source_item": out_src,
-                                 "sim_item": out_item,
-                                 "sim_val": out_val})
+            return pd.concat([
+                pd.DataFrame({"source_item": out_src,
+                              "sim_item": keys[out_pos],
+                              "sim_val": out_val}),
+                pdf[payloads].iloc[out_pos].reset_index(drop=True)], axis=1)
 
-        cand = graph.groupBy("shard").applyInPandas(
-            _shard_search,
-            _candidate_schema(queries, query_item_col, graph, "key"))
-        payloads = list(payload_cols or [])
-        if payloads and self._items is None:
-            raise ValueError(
-                "a load()ed NSWIndex carries no payload columns — join "
-                "them onto the ≤ m·k result rows afterwards (the "
-                "broadcast-ranked re-attach pattern, operators/knn.py)")
-        items_view = (self._items if self._items is not None
-                      else graph.select(F.col("key")))
-        item_key = self._item_key if self._items is not None else "key"
-        return _merge_candidates(cand, items_view, k=kk,
-                                 higher_is_closer=self.metric != "l2",
-                                 item_key_col=item_key,
-                                 payload_cols=payloads,
-                                 keep_rank_no=keep_rank_no)
+        cand = graph.select(*self._COLS, *payloads).groupBy("shard") \
+            .applyInPandas(_shard_search, _candidate_schema(
+                queries, query_item_col, graph, "key", payloads))
+        return _top_rows(cand, kk, self.metric != "l2", payloads)
 
     # -- lifecycle (the ann.py _CodedIndex storage contract; the NSW
     # state is the persisted GRAPH table, not an encoded-items cache) ------
@@ -460,7 +466,6 @@ class NSWIndex:
         self.unpersist(blocking=True)
         self.graph = None
         self.n_items = None
-        self._items = None
 
     def __enter__(self) -> "NSWIndex":
         return self
@@ -533,8 +538,7 @@ def nsw_topk(queries: DataFrame, items: DataFrame, *, k: int = 10,
              query_item_col: str = "query_id",
              item_key_col: str = "item",
              query_vec_col: str = "embedding",
-             item_vec_col: str = "embedding",
-             keep_rank_no: bool = True) -> DataFrame:
+             item_vec_col: str = "embedding") -> DataFrame:
     """One-shot sharded graph search (the ``knn_join(strategy=
     "sharded")`` twin with the NSW kernel instead of exact GEMM): build
     per-shard graphs and answer in a single pass — right when the index
@@ -548,5 +552,4 @@ def nsw_topk(queries: DataFrame, items: DataFrame, *, k: int = 10,
                    n_shards=n_shards)
     idx.fit(items, item_key_col=item_key_col, item_vec_col=item_vec_col)
     return idx.search(queries, k=k, query_item_col=query_item_col,
-                      query_vec_col=query_vec_col,
-                      keep_rank_no=keep_rank_no)
+                      query_vec_col=query_vec_col)

@@ -48,9 +48,8 @@ def broadcast_exchange_subtrees(df: DataFrame) -> list[str]:
     """The plan subtree under each BroadcastExchange node.
 
     Lets tests assert *what* is being broadcast, not merely that a
-    broadcast exists — e.g. the sharded/grid knn payload join must
-    broadcast the ≤ m·k ranked candidates, never the |items|-row payload
-    projection. Subtrees are cut by the tree-drawing indentation of
+    broadcast exists — e.g. the grid knn kernel may broadcast its
+    replication range, never the |items|-row corpus. Subtrees are cut by the tree-drawing indentation of
     ``toString`` (children are indented past their parent's ``+-``/``:-``
     marker).
     """

@@ -18,8 +18,9 @@ constructor keeps the reference's two modes:
 (flat) ``cos`` / ``ip`` / ``l2`` searcher whose filled corpus cache Spark
 measures within ``knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES`` — where
 ``strategy="auto"`` picks the blocked GEMM kernel anyway — the flat index
-is the kernel's key-sorted corpus matrix, collected once (validating the
-vectors on the driver) and broadcast, held until ``close()`` like FAISS's
+is the kernel's key-sorted corpus matrix and payload columns, collected
+once (validating the vectors on the driver) and broadcast, held until
+``close()`` like FAISS's
 ``IndexFlat``; ``add_items`` merges new rows into it. ``search()`` answers batched top-K
 queries (faiss_searcher.py:161-187) including the multi-K dict form, on a
 holding searcher with no Spark job until the result is read. A list
@@ -224,10 +225,17 @@ class SparkSearcher:
         if may_hold and self._within_hold_bound(self.corpus):
             self._held = BlockedCorpus.collect(
                 self.corpus, item_key_col=self.key_col, item_vec_col=_VEC,
-                metric=self._kernel_metric(), normalize=False, dim=dim)
+                metric=self._kernel_metric(), normalize=False, dim=dim,
+                payload_cols=self._payload_cols())
         if self._held is not None:
             self.vec_dim = self._held.dim
         self._fit_index()
+
+    def _payload_cols(self) -> list:
+        """The item columns a result carries: all but the text, the
+        vector and the key."""
+        return [c for c in self.items.columns
+                if c not in (self.item_col, self.vec_col, self.key_col)]
 
     def _kernel_metric(self) -> str:
         # corpus vectors are normalized at encode time (O3): cosine is
@@ -342,18 +350,20 @@ class SparkSearcher:
         **strategy_kwargs: Any,
     ) -> Union[DataFrame, Mapping[int, DataFrame]]:
         """Top-``topK`` corpus items per query, ``topK`` an int or a list
-        (one frame per K). On a searcher that holds its corpus matrix,
-        ``"auto"`` and ``"blocked"`` rank against it: the result reads
-        the held broadcasts when it runs, so read it before ``close()``
-        destroys them (``add_items`` and a retrain leave them be)."""
+        (one frame per K). Each result row carries its own corpus row's
+        payload columns. On a searcher that holds its corpus matrix,
+        ``"auto"`` and ``"blocked"`` rank against it, payload included
+        (it is held with the matrix): building the result launches no
+        Spark job and reading it runs one. The result reads the held
+        broadcasts when it runs, so read it before ``close()`` destroys
+        them (``add_items`` and a retrain leave them be)."""
         corpus = self._require_trained()
         queries = self._prepare_queries(target)
         if self._index is None:
             queries = _knn._query_frame(queries, corpus.sparkSession,
                                         "source_item", _VEC)
 
-        payload = [c for c in self.items.columns
-                   if c not in (self.item_col, self.vec_col, self.key_col)]
+        payload = self._payload_cols()
         held = self._held
         if self._index is not None:
             # index_param overrides the exact-strategy matrix (reference
@@ -371,12 +381,12 @@ class SparkSearcher:
         elif (held is not None and strategy in ("auto", "blocked")
                 and not strategy_kwargs):
             # the held matrix is the blocked kernel's corpus side, built
-            # at train(): rank against it, no collect and no job here
+            # at train() with its payload: rank against it, no collect,
+            # no join and no job here
             def rank_at(k: int) -> DataFrame:
                 return blocked_rank(
-                    queries, held, corpus, k=k, query_vec_col=_VEC,
-                    query_item_col="source_item", item_key_col=self.key_col,
-                    payload_cols=payload, keep_rank_no=True,
+                    queries, held, k=k, query_vec_col=_VEC,
+                    query_item_col="source_item", keep_rank_no=True,
                     score_scale=score_scale)
         else:
             kwargs: dict[str, Any] = dict(
@@ -518,8 +528,7 @@ class SparkSearcher:
         corpus = self._require_trained()
         queries = _knn._query_frame(self._prepare_queries(target),
                                     corpus.sparkSession, "source_item", _VEC)
-        payload = [c for c in self.items.columns
-                   if c not in (self.item_col, self.vec_col, self.key_col)]
+        payload = self._payload_cols()
         kwargs = dict(metric=self._kernel_metric(), query_vec_col=_VEC,
                       item_vec_col=_VEC, query_item_col="source_item",
                       item_key_col=self.key_col, payload_cols=payload,

@@ -9,10 +9,12 @@ knn kernel, no serving stack.
 Why the blocked strategy and not the catalyst plan: per-query ranking
 needs `row_number() over (partition by query)`, and non-time windows are
 unsupported on streams. The blocked kernel ranks INSIDE `mapInPandas`
-(numpy GEMM + stable argsort per Arrow batch), which streams fine — each
+(numpy GEMM + top-k fold per Arrow batch), which streams fine — each
 micro-batch of queries scores against the broadcast corpus matrix and
-emits its own top-K rows independently, so the operator is stateless:
-nothing to watermark, state size zero, output mode append.
+emits its own top-K rows independently, each with its own corpus row's
+payload (broadcast with the matrix, so no stream-static join follows),
+so the operator is stateless: nothing to watermark, state size zero,
+output mode append.
 """
 
 from __future__ import annotations

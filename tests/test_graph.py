@@ -163,6 +163,60 @@ class TestIndex:
                        .collect()))
         assert a == b
 
+    def test_save_load_keeps_payload(self, spark, embeddings, fitted,
+                                     tmp_path_factory):
+        """The graph table keeps the fitted items' other columns, so a
+        loaded index serves payload: the same rows as before the save."""
+        path = str(tmp_path_factory.mktemp("nsw_payload"))
+        fitted.save(path)
+        loaded = NSWIndex.load(spark, path)
+        q = embeddings.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("qid"), "embedding")
+
+        def rows(idx):
+            res = idx.search(q, k=4, query_item_col="qid",
+                             payload_cols=["label"])
+            assert res.columns == ["source_item", "sim_item", "sim_val",
+                                   "rank_no", "label"]
+            return sorted(map(tuple, res.collect()))
+
+        before = rows(fitted)
+        labels = {r["vec_id"]: r["label"] for r in
+                  embeddings.select("vec_id", "label").collect()}
+        assert all(r[4] == labels[r[1]] for r in before)
+        assert rows(loaded) == before
+        loaded.close()
+
+    def test_graph_without_payload_loads(self, spark, embeddings, fitted,
+                                         tmp_path_factory):
+        """A graph table of only the graph columns (as saved before the
+        table kept the items' columns) still loads and searches; asking
+        it for a payload column raises naming the column."""
+        import os
+        path = str(tmp_path_factory.mktemp("nsw_bare"))
+        fitted.save(path)
+        g = spark.read.parquet(os.path.join(path, "graph"))
+        g.select(*NSWIndex._COLS).write.mode("overwrite").parquet(
+            os.path.join(path, "graph_bare"))
+        spark.read.parquet(os.path.join(path, "graph_bare")).write \
+            .mode("overwrite").parquet(os.path.join(path, "graph"))
+        loaded = NSWIndex.load(spark, path)
+        q = embeddings.filter(F.col("vec_id") < 3).select(
+            F.col("vec_id").alias("qid"), "embedding")
+        assert loaded.search(q, k=3, query_item_col="qid").count() == 9
+        with pytest.raises(ValueError, match="label"):
+            loaded.search(q, k=3, query_item_col="qid",
+                          payload_cols=["label"])
+        loaded.close()
+
+    def test_fit_rejects_clashing_column(self, spark):
+        df = spark.createDataFrame([(0, [1.0, 0.0], 7)],
+                                   "vec_id long, embedding array<double>, "
+                                   "pos int")
+        with pytest.raises(ValueError, match="pos"):
+            NSWIndex(m=2, ef_construction=4).fit(
+                df, item_key_col="vec_id", item_vec_col="embedding")
+
     def test_load_rejects_duplicate_shard_pos(self, spark, embeddings,
                                               fitted, tmp_path_factory):
         """Two graphs written under ONE shard id (the r6 ADVICE crc32-

@@ -282,16 +282,15 @@ class TestBlockedCorpus:
         for metric in ("cos", "l2", "ip"):
             corpus = BlockedCorpus.collect(
                 embeddings, item_key_col="vec_id", item_vec_col="embedding",
-                metric=metric, normalize=metric == "cos")
+                metric=metric, normalize=metric == "cos",
+                payload_cols=["label"])
             want = knn_join(q, embeddings, metric=metric, k=4,
                             query_item_col="qid", item_key_col="vec_id",
                             payload_cols=["label"], score_scale=4)
             for k in (4, 9):   # one handle serves any k, any number of times
-                got = blocked_rank(q, corpus, embeddings, k=k,
+                got = blocked_rank(q, corpus, k=k,
                                    query_vec_col="embedding",
-                                   query_item_col="qid",
-                                   item_key_col="vec_id",
-                                   payload_cols=["label"], keep_rank_no=True,
+                                   query_item_col="qid", keep_rank_no=True,
                                    score_scale=4)
                 assert got.columns == want.columns
                 rows = sorted(map(tuple, got.filter("rank_no < 4").collect()))
@@ -307,12 +306,13 @@ class TestBlockedCorpus:
         first = embeddings.filter(F.col("vec_id") % 3 == 0)
         rest = embeddings.filter(F.col("vec_id") % 3 != 0)
         kw = dict(item_key_col="vec_id", item_vec_col="embedding",
-                  metric="l2", normalize=True)
+                  metric="l2", normalize=True, payload_cols=["label"])
         a = BlockedCorpus.collect(first, **kw)
         grown = a.add(rest, item_key_col="vec_id", item_vec_col="embedding")
         b = BlockedCorpus.collect(first.unionByName(rest), **kw)
         assert (grown.keys == b.keys).all()
         assert np.array_equal(grown.mat, b.mat)
+        assert grown.payload.equals(b.payload)
         assert np.array_equal(grown.b_sq.value, b.b_sq.value)
         for c in (a, grown, b):
             c.destroy()
@@ -582,29 +582,103 @@ class TestAutoStrategy:
         assert res.count() == 6  # still exact
 
 
-class TestPayloadDedupe:
-    """Kernel strategies re-attach payload via an equi-join on the item
-    key; duplicate keys must not multiply result rows (r1/r2 ADVICE)."""
+class TestPayloadPerRow:
+    """Payload attaches by corpus row on every top-k path, as the
+    catalyst plan (and the reference's ``items.iloc[sim_ind]``) does:
+    two corpus rows with one key keep their own payloads."""
 
-    @pytest.mark.parametrize("strategy", ["blocked", "sharded", "grid"])
-    def test_duplicate_payload_keys_do_not_multiply(self, spark, strategy):
+    ROWS = [(0, [1.0, 0.0], "a"), (1, [0.0, 1.0], "b"),
+            (1, [0.0, 1.0], "c"), (2, [1.0, 1.0], "d")]
+
+    @staticmethod
+    def _rows(df):
+        return sorted((r["sim_item"], r["label"], round(r["sim_val"], 4))
+                      for r in df.collect())
+
+    @pytest.mark.parametrize("path", ["blocked", "sharded", "grid", "held",
+                                      "nsw"])
+    def test_duplicate_keys_match_catalyst(self, spark, path):
+        from faisssearcher_spark import SparkSearcher
+        from faisssearcher_spark.operators.graph import NSWIndex
+
         # vid 1 appears twice with identical vectors but different labels
-        rows = [(0, [1.0, 0.0], "a"), (1, [0.0, 1.0], "b"),
-                (1, [0.0, 1.0], "c"), (2, [1.0, 1.0], "d")]
         items = spark.createDataFrame(
-            rows, "vid long, embedding array<double>, label string")
+            self.ROWS, "vid long, embedding array<double>, label string")
         q = spark.createDataFrame([(100, [0.0, 1.0])],
                                   "qid long, embedding array<double>")
-        res = knn_join(q, items, metric="cos", k=2, query_item_col="qid",
-                       item_key_col="vid", payload_cols=["label"],
-                       score_scale=4, strategy=strategy).collect()
-        # catalyst scores both vid-1 corpus rows (rank 0 and 1); the kernel
-        # paths rank per corpus row too, but payload attaches exactly once
-        # per ranked row — never a row-multiplying join.
-        assert len(res) == 2
-        # deterministic survivor: min payload struct → label "b"
-        labels = {r["sim_item"]: r["label"] for r in res}
-        assert labels[1] == "b"
+        kw = dict(metric="cos", k=2, query_item_col="qid",
+                  item_key_col="vid", payload_cols=["label"], score_scale=4)
+        expected = self._rows(knn_join(q, items, strategy="catalyst", **kw))
+        assert expected == [(1, "b", 1.0), (1, "c", 1.0)]
+        if path == "held":
+            s = SparkSearcher(items, vec_col="embedding", key_col="vid",
+                              measurement="cos").train()
+            assert s._held is not None
+            res = s.search(q.withColumnRenamed("qid", "vid"), topK=2,
+                           score_scale=4)
+        elif path == "nsw":
+            res = NSWIndex(m=2, ef_construction=4).fit(
+                items, item_key_col="vid", item_vec_col="embedding").search(
+                q, k=2, query_item_col="qid", payload_cols=["label"])
+        else:
+            res = knn_join(q, items.repartition(7) if path == "sharded"
+                           else items, strategy=path, **kw)
+        assert self._rows(res) == expected
+        if path == "held":
+            s.close()
+
+    @pytest.mark.parametrize("path", ["held", "blocked", "sharded", "grid",
+                                      "nsw"])
+    def test_payload_adds_no_job(self, spark, embeddings, path):
+        """Payload rides every kernel: a search with payload_cols, plus
+        its collect, runs no more Spark jobs than the same search
+        without."""
+        from faisssearcher_spark import SparkSearcher
+        from faisssearcher_spark.operators.graph import NSWIndex
+
+        sc = spark.sparkContext
+        q = embeddings.filter(F.col("vec_id") < 20).select(
+            F.col("vec_id").alias("qid"), "embedding")
+        if path == "held":
+            with_label = SparkSearcher(
+                embeddings, vec_col="embedding", key_col="vec_id").train()
+            bare = SparkSearcher(
+                embeddings.drop("label"), vec_col="embedding",
+                key_col="vec_id").train()
+            assert with_label._held is not None and bare._held is not None
+            qv = q.withColumnRenamed("qid", "vec_id")
+            searches = {"label": lambda: with_label.search(qv, topK=10),
+                        None: lambda: bare.search(qv, topK=10)}
+            closers = [with_label.close, bare.close]
+        elif path == "nsw":
+            idx = NSWIndex(m=4, ef_construction=8, n_shards=3).fit(
+                embeddings, item_key_col="vec_id", item_vec_col="embedding")
+            searches = {p: lambda p=p: idx.search(
+                q, k=10, query_item_col="qid", payload_cols=[p] if p else [])
+                for p in ("label", None)}
+            closers = [idx.close]
+        else:
+            searches = {p: lambda p=p: knn_join(
+                q, embeddings, metric="cos", k=10, query_item_col="qid",
+                item_key_col="vec_id", payload_cols=[p] if p else [],
+                strategy=path) for p in ("label", None)}
+            closers = []
+
+        def jobs(search):
+            def ids():
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                return set(sc.statusTracker().getJobIdsForGroup(None))
+
+            before = ids()
+            res = search()
+            assert len(res.collect()) == 200
+            return len(ids() - before)
+
+        try:
+            assert jobs(searches["label"]) <= jobs(searches[None])
+        finally:
+            for close in closers:
+                close()
 
 
 class TestEmptyInputs:

@@ -180,6 +180,40 @@ def test_pq_codes_match_the_per_subspace_loop():
         assert np.array_equal(codes[clear, j], d2.argmin(1)[clear])
 
 
+class TestPqAssignBound:
+    """_pq_assign encodes one Arrow batch (10,000 rows) per call on the
+    executors, chunked under a 32 MB score-tensor bound."""
+
+    @staticmethod
+    def _books(m, ksub=256, dsub=4, seed=0):
+        return np.random.default_rng(seed).standard_normal((m, ksub, dsub))
+
+    def test_codes_do_not_depend_on_chunking(self):
+        from faisssearcher_spark.operators.ann import _pq_assign
+
+        books = self._books(16)
+        mat = np.random.default_rng(1).standard_normal((10_000, 64))
+        whole = _pq_assign(mat, books)
+        parts = np.concatenate([_pq_assign(mat[s:s + 1000], books)
+                                for s in range(0, 10_000, 1000)])
+        assert np.array_equal(whole, parts)
+
+    def test_batch_peak_memory(self):
+        import tracemalloc
+
+        from faisssearcher_spark.operators.ann import _pq_assign
+
+        books = self._books(16)
+        mat = np.random.default_rng(2).standard_normal((10_000, 64))
+        tracemalloc.start()
+        try:
+            _pq_assign(mat, books)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 100 << 20, f"{peak / 2**20:.0f} MB"
+
+
 class TestIVFPQ:
     def test_recall_composition(self, embeddings):
         """IVF16,PQ16 at nprobe=8: recall ~= ivf-pruning x pq-quantization

@@ -649,9 +649,9 @@ def test_index_add_items_fills_in_one_job(spark, embeddings, index):
 class TestHeldCorpus:
     """A trained flat searcher over a corpus within
     BLOCKED_SMALL_QUERY_ITEMS_BYTES holds the key-sorted corpus matrix
-    and its broadcasts (knn.BlockedCorpus) from train() to close():
-    search() ranks against it without a Spark job and returns what the
-    catalyst plan returns."""
+    and payload and their broadcasts (knn.BlockedCorpus) from train() to
+    close(): search() ranks against it without a Spark job, payload
+    columns included, and returns what the catalyst plan returns."""
 
     KW = dict(keep_rank_no=True, score_scale=4)
     TEXTS = ["spark join merge", "vector search index", "the",

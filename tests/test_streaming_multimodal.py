@@ -365,6 +365,40 @@ class TestStreamingKnn:
             strategy="blocked").collect()))
         assert got == expected and len(got) == 30
 
+    def test_payload_per_corpus_row_on_duplicate_keys(self, spark,
+                                                      tmp_path_factory):
+        """Two corpus rows with one key keep their own payloads in the
+        stream's results, as in the catalyst plan's."""
+        from faisssearcher_spark.operators.knn import knn_join
+        from faisssearcher_spark.streaming.knn import streaming_knn_search
+
+        items = spark.createDataFrame(
+            [(0, [1.0, 0.0], "a"), (1, [0.0, 1.0], "b"),
+             (1, [0.0, 1.0], "c"), (2, [1.0, 1.0], "d")],
+            "vid long, embedding array<double>, label string")
+        queries = spark.createDataFrame(
+            [(100, [0.0, 1.0]), (101, [1.0, 0.1])],
+            "qid long, embedding array<double>")
+        path = str(tmp_path_factory.mktemp("stream_dup_q"))
+        queries.write.mode("overwrite").parquet(path)
+        stream = spark.readStream.schema(queries.schema).parquet(path)
+        out = streaming_knn_search(stream, items, k=2, query_item_col="qid",
+                                   item_key_col="vid", payload_cols=["label"],
+                                   score_scale=4)
+        q = (out.writeStream.format("memory").queryName("stream_knn_dup")
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination()
+
+        def rows(df):
+            return sorted((r["source_item"], r["sim_item"], r["label"],
+                           r["sim_val"]) for r in df.collect())
+
+        got = rows(spark.table("stream_knn_dup"))
+        assert got == rows(knn_join(
+            queries, items, k=2, query_item_col="qid", item_key_col="vid",
+            payload_cols=["label"], score_scale=4))
+        assert [r[2] for r in got if r[0] == 100] == ["b", "c"]
+
     def test_rejects_batch_input(self, spark, sf_dir):
         import pytest
         from pyspark.sql import functions as F

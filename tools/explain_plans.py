@@ -149,6 +149,16 @@ AUDITS = {
          "distributed"),
         ("WindowGroupLimit", True,
          "two-level merge: per-cell top-k then rank<=k below the exchange"),
+        ("BroadcastHashJoin", False,
+         "payload rides the scan: the cogroup's item side carries it, so "
+         "no join attaches it back by key"),
+    ],
+    "knn_blocked_cos_top5": [
+        ("MapInPandas", True,
+         "per-query-batch GEMM against the broadcast corpus matrix"),
+        ("BroadcastHashJoin", False,
+         "payload rides the scan: broadcast with the matrix, emitted per "
+         "corpus row, no join"),
     ],
     "sample_documents_hash": [
         # (the bernoulli half alone is shuffle-free — pinned in
@@ -190,6 +200,9 @@ AUDITS = {
          "per-item-shard GEMM kernel — the corpus scores in place"),
         ("WindowGroupLimit", True,
          "candidate merge keeps rank<=k below the exchange"),
+        ("BroadcastHashJoin", False,
+         "payload rides the scan: each shard emits its rows' payload, so "
+         "no join attaches it back by key"),
     ],
     "events_asof_forward": [
         ("CartesianProduct", False,
