@@ -32,12 +32,16 @@ Scale design (the part FAISS cannot do):
   GEMM cannot express.
 - **A trained corpus is collected once.** The blocked kernel is split
   into its corpus handle (:class:`BlockedCorpus`: the key-sorted float64
-  matrix, keys, payload and squared norms, broadcast) and its ranking
-  function
-  (:func:`blocked_rank`). ``knn_join(strategy="blocked")`` builds a handle
-  per call; a trained flat ``SparkSearcher`` whose corpus ``"auto"`` would
-  hand to blocked builds it in ``train()`` and keeps it, so its searches
-  run no corpus collect and no job until the result is read.
+  matrix, keys, payload and squared norms, broadcast) and one ranking
+  body (:func:`_rank_rows`), run per Arrow batch of queries on the
+  executors (:func:`blocked_rank`) or once on the driver
+  (:func:`driver_rank`). ``knn_join(strategy="blocked")`` builds a
+  handle per call; a trained flat ``SparkSearcher`` whose corpus
+  ``"auto"`` would hand to blocked builds it in ``train()`` and keeps
+  it. Its searches run no corpus collect: a small target is collected
+  (one job, or none for a list), ranked on the driver and returned as
+  a local frame, as the reference returns a pandas frame; a larger one
+  or a stream ranks in Spark against the broadcasts.
 - **One top-k fold, one sharded scan.** Every numpy kernel ranks
   through :func:`_topk_fold`: a caller's per-block scorer streams
   key-ordered item blocks under a scratch bound, and each block's cut
@@ -578,6 +582,15 @@ def _topk_cut(key, kb: int):
     return np.take_along_axis(idx, order, axis=1)
 
 
+def _pad16(rows):
+    """``rows`` with zero rows appended up to a multiple of 16."""
+    import numpy as np
+
+    pad = -len(rows) % 16
+    return (np.concatenate([rows, np.zeros((pad, rows.shape[1]), rows.dtype)])
+            if pad else rows)
+
+
 def _gemm_scorer(q, mat, metric: str, *, scale=None, mat_sq=None):
     """The GEMM kernels' block scorer for :func:`_topk_fold`:
     ``score(s, e)`` is the (len(q) × (e − s)) matrix of ``q`` against
@@ -587,25 +600,23 @@ def _gemm_scorer(q, mat, metric: str, *, scale=None, mat_sq=None):
     squared norms, read only for ``l2``) may be passed precomputed; it
     is derived once here otherwise.
 
-    A row's dot products do not depend on the block it is scored in:
-    BLAS computes a last partial tile of rows with other code, whose
-    last bit can differ (two copies of one vector then scored unequal
-    at 1 and at 7 partitions), so a block whose row count is not a
-    multiple of 16 is padded with zero rows."""
+    A (query, row) product does not depend on the batch of queries or
+    the block of rows it is scored in: BLAS computes a last partial
+    tile with other code, whose last bit can differ (one query then
+    scored unequal at 1 and at 7 partitions, or on the driver and on an
+    executor), so both sides are padded with zero rows to a multiple of
+    16 and the product is cut back to the real ones."""
     import numpy as np
 
+    m = len(q)
     if metric == "l2":
         if mat_sq is None:
             mat_sq = (mat * mat).sum(axis=1)
         q_sq = (q * q).sum(axis=1)[:, None]
+    q = _pad16(q)
 
     def dot(s, e):
-        rows = mat[s:e]
-        pad = -len(rows) % 16
-        if pad:
-            rows = np.concatenate(
-                [rows, np.zeros((pad, rows.shape[1]), rows.dtype)])
-        return (q @ rows.T)[:, :e - s]
+        return (q @ _pad16(mat[s:e]).T)[:m, :e - s]
 
     def score(s, e):
         if metric == "l2":
@@ -753,13 +764,14 @@ def _unit_rows(mat):
 
 
 class DriverQueries(NamedTuple):
-    """A query set already on the driver: one string id per query and
-    the float32 query matrix, one row each. It is what
-    ``SparkSearcher`` encodes a list target into, so a search needs no
-    job to build its queries. The indexes that collect their queries
-    (:func:`_sharded_scan`, IVF-PQ, NSW) read the matrix itself
-    (:func:`_query_vectors`); a plan that needs a frame builds a local
-    one from it (:func:`_query_frame`)."""
+    """A query set already on the driver: one id per query and the
+    float32 query matrix, one row each. It is what ``SparkSearcher``
+    encodes a list target into (string ids), so a search needs no job
+    to build its queries, and what a holding searcher collects a small
+    frame target into for :func:`driver_rank` (the frame's ids). The
+    indexes that collect their queries (:func:`_sharded_scan`, IVF-PQ,
+    NSW) read the matrix itself (:func:`_query_vectors`); a plan that
+    needs a frame builds a local one from it (:func:`_query_frame`)."""
 
     ids: list
     mat: "np.ndarray"
@@ -822,6 +834,14 @@ def _candidate_schema(queries: DataFrame | DriverQueries,
         *[items.schema[c] for c in payload_cols]])
 
 
+def _project(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """``df.select(*cols)`` (repeats dropped), or ``df`` itself when it
+    already is that projection: a ``select`` costs a plan analysis in
+    the JVM, several ms of a search ranked on the driver."""
+    cols = list(dict.fromkeys(cols))
+    return df if df.columns == cols else df.select(*cols)
+
+
 def _collect_vectors(items: DataFrame, key_col: str, vec_col: str, *,
                      dim: int | None = None, held: bool = False,
                      payload_cols: Sequence[str] = ()):
@@ -839,8 +859,7 @@ def _collect_vectors(items: DataFrame, key_col: str, vec_col: str, *,
 
     from faisssearcher_spark.functions.vector import check_vector_stats
 
-    tbl = items.select(*dict.fromkeys([key_col, vec_col, *payload_cols])) \
-        .toArrow()
+    tbl = _project(items, [key_col, vec_col, *payload_cols]).toArrow()
     if not tbl.num_rows:
         return np.empty(0), np.empty((0, dim or 0)), None
     vecs = tbl.column(vec_col).combine_chunks()
@@ -861,14 +880,16 @@ class BlockedCorpus:
     """The blocked kernel's corpus side, built once on the driver: the
     float64 item matrix in KEY order, its keys, the payload columns
     (a pandas frame, rows in the same order) and (``l2`` only) the
-    rows' squared norms, each broadcast to the executors. ``fields``
-    are the Spark fields of the key and the payload columns.
+    rows' squared norms (``sq``), kept on the driver and each broadcast
+    to the executors. ``fields`` are the Spark fields of the key and the
+    payload columns.
 
     ``knn_join(strategy="blocked")`` builds one per call. A trained flat
     ``SparkSearcher`` holds one from ``train()`` to ``close()`` — the
     FAISS ``IndexFlat`` the reference keeps in the driver
     (faiss_searcher.py:116-125) — so each of its searches is one
-    :func:`blocked_rank` with no corpus round trip. Key order is what
+    :func:`driver_rank` (or, for a large target, :func:`blocked_rank`)
+    with no corpus round trip. Key order is what
     makes the kernel's stable argsorts break score ties by the smallest
     key (the catalyst window's ``(score, key)`` order); sorting once here
     spares every task its own argsort and an n×d matrix copy."""
@@ -888,10 +909,11 @@ class BlockedCorpus:
         self.b_keys = sc.broadcast(self.keys)
         self.b_payload = (None if payload is None
                           else sc.broadcast(self.payload))
-        # squared norms are only read by the l2 decomposition — no
-        # broadcast at all for cos/ip
-        self.b_sq = (sc.broadcast((self.mat * self.mat).sum(axis=1))
-                     if metric == "l2" else None)
+        # squared norms are only read by the l2 decomposition — none at
+        # all for cos/ip
+        self.sq = ((self.mat * self.mat).sum(axis=1) if metric == "l2"
+                   else None)
+        self.b_sq = None if self.sq is None else sc.broadcast(self.sq)
 
     @classmethod
     def collect(cls, items: DataFrame, *, item_key_col: str,
@@ -952,57 +974,109 @@ class BlockedCorpus:
                 b.destroy()
 
 
+def _rank_rows(qids, q, mat, keys, payload, sq, *, metric: str, k: int,
+               scale: int | None, normalize: bool, rank_no: bool):
+    """The blocked kernel's ranking body, written once for an Arrow
+    batch of queries on an executor (:func:`blocked_rank`) and for a
+    query set on the driver (:func:`driver_rank`): the top-``k`` of the
+    float64 queries ``q`` (unit-scaled first when ``normalize``) over
+    the KEY-ORDERED corpus arrays — matrix, keys, payload frame (or
+    None) and, for ``l2``, squared norms — as :func:`_emit`'s pandas
+    frame. Column position is key rank, so the fold's tie-break by
+    position is the catalyst window's (score, key) tie-break."""
+    if normalize:
+        q = _unit_rows(q)
+    top_pos, top_val = _topk_fold(
+        _gemm_scorer(q, mat, metric, scale=scale, mat_sq=sq), len(q),
+        len(mat), min(k, len(mat)), higher_is_closer=metric in ("cos", "ip"))
+    return _emit(qids, keys, top_pos, top_val, payload, rank_no=rank_no)
+
+
+def _ranked_schema(query_type, corpus: BlockedCorpus, keep_rank_no: bool):
+    """``(source_item, sim_item, sim_val[, rank_no], *payload)`` with the
+    query id's Spark type and ``corpus``'s key and payload fields."""
+    from pyspark.sql import types as T
+
+    key, *payload = corpus.fields
+    return T.StructType([
+        T.StructField("source_item", query_type),
+        T.StructField("sim_item", key.dataType),
+        T.StructField("sim_val", T.DoubleType()),
+        *([T.StructField("rank_no", T.IntegerType())] if keep_rank_no
+          else []), *payload])
+
+
 def blocked_rank(queries: DataFrame, corpus: BlockedCorpus, *, k: int,
                  query_vec_col: str, query_item_col: str,
                  keep_rank_no: bool, score_scale: int | None) -> DataFrame:
     """The blocked kernel's ranking half: ``mapInPandas`` over the
     queries, one bounded-scratch numpy GEMM fold per Arrow batch against
-    the broadcast ``corpus`` (:func:`_topk_fold`), k rows per query ROW,
+    the broadcast ``corpus`` (:func:`_rank_rows`), k rows per query ROW,
     each with its own corpus row's payload (``corpus``'s payload
     columns), so no join follows and a query stream can ride it.
     Building the frame launches no job; running it reads the
     broadcasts, so run it before ``corpus`` is destroyed."""
     import numpy as np
-    from pyspark.sql import types as T
 
     b_mat, b_keys, b_sq = corpus.b_mat, corpus.b_keys, corpus.b_sq
     b_payload = corpus.b_payload
     met, kk, nrm, scale = corpus.metric, k, corpus.normalize, score_scale
-    higher_is_closer = met in ("cos", "ip")
 
     def _score(batches):
-        # full/fkeys/fsq arrive KEY-ORDERED from the driver: column
-        # position == key rank, so the fold's tie-break by position is
-        # the catalyst window's (score, key) tie-break
-        full_o, fkeys = b_mat.value, b_keys.value
-        fsq_o = b_sq.value if b_sq is not None else None
+        mat, keys = b_mat.value, b_keys.value
+        sq = b_sq.value if b_sq is not None else None
         payload = b_payload.value if b_payload is not None else None
-        n_items = full_o.shape[0]
-        kc = min(kk, n_items)
         for pdf in batches:
             if not len(pdf):
                 continue
-            q = np.array(pdf["__qv"].to_list(), dtype=np.float64)
-            if nrm:
-                q = _unit_rows(q)
-            top_pos, top_val = _topk_fold(
-                _gemm_scorer(q, full_o, met, scale=scale, mat_sq=fsq_o),
-                len(q), n_items, kc, higher_is_closer=higher_is_closer)
-            yield _emit(pdf["__qid"].to_numpy(), fkeys, top_pos, top_val,
-                        payload, rank_no=keep_rank_no)
+            yield _rank_rows(
+                pdf["__qid"].to_numpy(),
+                np.array(pdf["__qv"].to_list(), dtype=np.float64), mat,
+                keys, payload, sq, metric=met, k=kk, scale=scale,
+                normalize=nrm, rank_no=keep_rank_no)
 
-    key, *payload = corpus.fields
-    out_schema = T.StructType([
-        T.StructField("source_item",
-                      queries.schema[query_item_col].dataType),
-        T.StructField("sim_item", key.dataType),
-        T.StructField("sim_val", T.DoubleType()),
-        *([T.StructField("rank_no", T.IntegerType())] if keep_rank_no
-          else []), *payload])
     return queries.select(
         F.col(query_item_col).alias("__qid"),
         F.col(query_vec_col).cast("array<double>").alias("__qv"),
-    ).mapInPandas(_score, out_schema)
+    ).mapInPandas(_score, _ranked_schema(
+        queries.schema[query_item_col].dataType, corpus, keep_rank_no))
+
+
+def driver_rank(queries: DriverQueries, corpus: BlockedCorpus, *,
+                ks: Iterable[int], query_type, keep_rank_no: bool,
+                score_scale: int | None) -> dict:
+    """:func:`blocked_rank` on the driver, as the reference answers a
+    search with one BLAS call in its own process
+    (faiss_searcher.py:161-187): ``queries`` ranked once at the largest
+    of ``ks`` against ``corpus``'s own matrix (:func:`_rank_rows`, the
+    executors' arithmetic bit for bit), each k a filter of that one
+    pandas frame. Returns ``{k: local frame}``, each built from Arrow on
+    the driver (a LocalTableScan: reading it runs no job) with the
+    ``query_type`` query ids and ``corpus``'s key and payload fields;
+    it reads no broadcast, so it outlives ``corpus``."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    ks = _sorted_ks(ks)
+    n, ids = len(queries.ids), queries.ids
+    ranked = _rank_rows(
+        ids if isinstance(ids, np.ndarray) else np.asarray(ids, dtype=object),
+        np.asarray(queries.mat, dtype=np.float64).reshape(n, corpus.dim),
+        corpus.mat, corpus.keys, corpus.payload, corpus.sq,
+        metric=corpus.metric, k=ks[-1], scale=score_scale,
+        normalize=corpus.normalize, rank_no=True)
+    schema = _ranked_schema(query_type, corpus, keep_rank_no)
+    arrow = to_arrow_schema(schema)
+    out = {}
+    for k in ks:
+        pdf = ranked[ranked["rank_no"] < k] if k < ks[-1] else ranked
+        if not keep_rank_no:
+            pdf = pdf.drop(columns="rank_no")
+        out[k] = corpus._spark.createDataFrame(
+            pa.Table.from_pandas(pdf, schema=arrow, preserve_index=False),
+            schema)
+    return out
 
 
 def _sharded_scan(queries: DataFrame | DriverQueries, items: DataFrame,
@@ -1274,13 +1348,19 @@ def knn_join_multi_k(
     return multi_k(lambda k: knn_join(queries, items, k=k, **kwargs), ks)
 
 
+def _sorted_ks(ks: Iterable[int]) -> list:
+    """The distinct ks of a multi-K search, ascending; none raises."""
+    ks = sorted(set(int(k) for k in ks))
+    if not ks:
+        raise ValueError("ks must be non-empty")
+    return ks
+
+
 def multi_k(rank_at: Callable[[int], DataFrame],
             ks: Iterable[int]) -> Mapping[int, DataFrame]:
     """``{k: top-k}`` from one cached ``rank_at(max(ks))`` frame (which
     must carry ``rank_no``), each k a filter over it."""
-    ks = sorted(set(int(k) for k in ks))
-    if not ks:
-        raise ValueError("ks must be non-empty")
+    ks = _sorted_ks(ks)
     ranked = rank_at(ks[-1]).cache()
     return {k: ranked.filter(F.col("rank_no") < k) for k in ks}
 

@@ -22,12 +22,13 @@ is the kernel's key-sorted corpus matrix and payload columns, collected
 once (validating the vectors on the driver) and broadcast, held until
 ``close()`` like FAISS's
 ``IndexFlat``; ``add_items`` merges new rows into it. ``search()`` answers batched top-K
-queries (faiss_searcher.py:161-187) including the multi-K dict form, on a
-holding searcher with no Spark job until the result is read. A list
-target on an encoder searcher is encoded once on the driver, as the
+queries (faiss_searcher.py:161-187) including the multi-K dict form; a
+holding searcher ranks a small search on the driver against that matrix
+and returns a local frame, as the reference returns a pandas frame. A
+list target on an encoder searcher is encoded once on the driver, as the
 reference encodes its queries: the same encode / whiten / normalize
 arithmetic as the Spark path, bit for bit, with no query job; an indexed
-search takes that query matrix as it is, so it too launches no job until
+search takes that query matrix as it is, so it launches no job until
 the result is read;
 ``cal_sim()`` is exact pairwise scoring (faiss_searcher.py:192-198);
 ``save()``/``load()`` replace whole-object pickling (faiss_searcher.py:
@@ -47,6 +48,7 @@ import numpy as np
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from faisssearcher_spark.encoders.base import (Encoder, encode_batch,
                                                encoder_udf)
@@ -56,7 +58,8 @@ from faisssearcher_spark.functions.vector import (
 from faisssearcher_spark.operators import knn as _knn
 from faisssearcher_spark.operators.ann import parse_index_param
 from faisssearcher_spark.operators.knn import (
-    BlockedCorpus, DriverQueries, blocked_rank, cal_sim, knn_join, multi_k)
+    BlockedCorpus, DriverQueries, blocked_rank, cal_sim, driver_rank,
+    knn_join, multi_k)
 from faisssearcher_spark.operators.whitening import VecsWhitening
 
 _VEC = "__vec"
@@ -351,20 +354,45 @@ class SparkSearcher:
     ) -> Union[DataFrame, Mapping[int, DataFrame]]:
         """Top-``topK`` corpus items per query, ``topK`` an int or a list
         (one frame per K). Each result row carries its own corpus row's
-        payload columns. On a searcher that holds its corpus matrix,
-        ``"auto"`` and ``"blocked"`` rank against it, payload included
-        (it is held with the matrix): building the result launches no
-        Spark job and reading it runs one. The result reads the held
-        broadcasts when it runs, so read it before ``close()`` destroys
-        them (``add_items`` and a retrain leave them be)."""
+        payload columns.
+
+        On a searcher that holds its corpus matrix, ``"auto"`` and
+        ``"blocked"`` rank on the driver, as the reference does
+        (faiss_searcher.py:161-187): a list target, or a batch frame
+        whose size estimate is within ``knn.QUERY_BROADCAST_CAP_BYTES``,
+        is collected (a frame: one Spark job, run here), prepared with
+        the Spark encode's arithmetic and folded against the held
+        matrix, and the result is a local frame — reading it runs no
+        job and reads no broadcast, so it outlives ``close()``. A list
+        ``topK`` ranks once. A larger frame, one of unknown size or a
+        stream ranks in Spark against the held broadcasts instead
+        (``knn.blocked_rank``): building that result runs no job, and it
+        must be read before ``close()`` destroys them (``add_items`` and
+        a retrain leave them be). Bad query vectors (NULL, ragged, wrong
+        dim; under ``cos`` one that normalizes to zero) raise
+        ``ValueError`` inside a driver-ranked search."""
         corpus = self._require_trained()
+        # the held matrix serves "auto" and "blocked" without knobs
+        held = (self._held if strategy in ("auto", "blocked")
+                and not strategy_kwargs else None)
+        if held is not None:
+            prepared = self._driver_queries(target)
+            if prepared is not None:
+                queries, q_type = prepared
+                frames = driver_rank(
+                    queries, held,
+                    ks=[topK] if isinstance(topK, int) else topK,
+                    query_type=q_type, keep_rank_no=keep_rank_no,
+                    score_scale=score_scale)
+                frames = {k: self._post(df, keep_rank_no)
+                          for k, df in frames.items()}
+                return frames[topK] if isinstance(topK, int) else frames
         queries = self._prepare_queries(target)
         if self._index is None:
             queries = _knn._query_frame(queries, corpus.sparkSession,
                                         "source_item", _VEC)
 
         payload = self._payload_cols()
-        held = self._held
         if self._index is not None:
             # index_param overrides the exact-strategy matrix (reference
             # semantics: every search uses the built index). Refuse a
@@ -378,11 +406,9 @@ class SparkSearcher:
 
             def rank_at(k: int) -> DataFrame:
                 return self._rank_indexed(queries, k, payload, score_scale)
-        elif (held is not None and strategy in ("auto", "blocked")
-                and not strategy_kwargs):
-            # the held matrix is the blocked kernel's corpus side, built
-            # at train() with its payload: rank against it, no collect,
-            # no join and no job here
+        elif held is not None:
+            # a target too large (or too unknown) to collect: rank it in
+            # Spark against the held broadcasts, no join and no job here
             def rank_at(k: int) -> DataFrame:
                 return blocked_rank(
                     queries, held, k=k, query_vec_col=_VEC,
@@ -444,46 +470,96 @@ class SparkSearcher:
         ``(source_item, _VEC)``.
 
         A List[str] target on an encoder searcher is encoded on the
-        driver (:meth:`_encode_texts`) into :class:`knn.DriverQueries`:
+        driver (:meth:`_list_queries`) into :class:`knn.DriverQueries`:
         an index takes its matrix as is, and the other plans build a
-        local frame from it (``knn._query_frame``). A raw-vector
-        searcher has no encoder for a list. A DataFrame target goes
-        through :meth:`_vectorize` (queries are data, not driver-side
-        state — the reference's primary form): the encoder/raw-vector
-        branch picks the text column.
-
-        A list target's text is its query id, so a repeated text is the
-        same query and is searched once: every strategy then returns k
-        rows per distinct target (the kernels rank each query ROW, the
-        catalyst plan each id, so repeated ids would split them)."""
+        local frame from it (``knn._query_frame``). A DataFrame target
+        goes through :meth:`_vectorize` (queries are data, not
+        driver-side state — the reference's primary form): the
+        encoder/raw-vector branch picks the text column."""
         if not isinstance(target, DataFrame):
-            if self.encoder is None:
-                raise TypeError("a list target needs an encoder; pass a "
-                                "DataFrame with the vector column")
-            return self._encode_texts(list(dict.fromkeys(map(str, target))))
-        if self.encoder is not None:
-            q_text, q_vec = (self.item_col
-                             if self.item_col in target.columns
-                             else target.columns[0]), None
-        else:
-            q_text, q_vec = None, self.vec_col
-        src_col = q_text if q_text is not None else self.key_col
+            return self._list_queries(target)
+        src_col, q_text, q_vec = self._query_cols(target)
         queries = self._vectorize(target, q_text, q_vec, src_col, "query")
         return queries.select(F.col(src_col).alias("source_item"),
                               F.col(_VEC))
 
+    def _query_cols(self, target: DataFrame) -> tuple:
+        """``(id, text, vector)`` columns of a DataFrame target: in
+        encoder mode its text (the item column if it has one, else its
+        first column) is both id and text and the vector is None; in
+        raw-vector mode the key and vector columns, the text None."""
+        if self.encoder is not None:
+            text = (self.item_col if self.item_col in target.columns
+                    else target.columns[0])
+            return text, text, None
+        return self.key_col, None, self.vec_col
+
+    def _list_queries(self, target) -> DriverQueries:
+        """A List[str] target encoded on the driver (:meth:`_encode_texts`).
+
+        A list target's text is its query id, so a repeated text is the
+        same query and is searched once: every strategy then returns k
+        rows per distinct target (the kernels rank each query ROW, the
+        catalyst plan each id, so repeated ids would split them). A
+        raw-vector searcher has no encoder for a list."""
+        if self.encoder is None:
+            raise TypeError("a list target needs an encoder; pass a "
+                            "DataFrame with the vector column")
+        return self._encode_texts(list(dict.fromkeys(map(str, target))))
+
+    def _driver_queries(self, target):
+        """``(DriverQueries, id type)`` of a search ranked on the driver,
+        or None for a target that stays in Spark: a stream, or a frame
+        whose estimate is unknown or over
+        ``knn.QUERY_BROADCAST_CAP_BYTES``.
+
+        A list target is :meth:`_list_queries`'s. A batch frame is one
+        Arrow collect of what the encode reads: in encoder mode its text
+        column, encoded as a list's texts are (:meth:`_encode_texts`,
+        one query per ROW, as the kernels rank); in raw-vector mode its
+        ids and raw vectors, checked as ``validate_vectors`` checks
+        (NULL, ragged, wrong dim), then :meth:`_finish_queries`. No
+        Spark-side encode runs: the driver does the same arithmetic."""
+        if not isinstance(target, DataFrame):
+            return self._list_queries(target), StringType()
+        if target.isStreaming:
+            return None
+        src_col, q_text, q_vec = self._query_cols(target)
+        proj = _knn._project(target, [q_text] if q_text is not None
+                             else [src_col, q_vec])
+        size = _knn._plan_size_bytes(proj)
+        if size is None or size > _knn.QUERY_BROADCAST_CAP_BYTES:
+            return None
+        q_type = proj.schema[src_col].dataType
+        if q_text is not None:
+            return (self._encode_texts(
+                proj.toArrow().column(0).to_pylist()), q_type)
+        # raw vectors are checked at the dim the whitening map takes
+        dim = (self.whitening.kernel.shape[0] if self.whitening is not None
+               else self.vec_dim)
+        ids, mat, _ = _knn._collect_vectors(proj, src_col, q_vec, dim=dim)
+        return self._finish_queries(ids, mat), q_type
+
     def _encode_texts(self, texts: list) -> DriverQueries:
         """:meth:`_vectorize`'s steps on the driver, with its arithmetic:
-        the encoder's float32 batch (``encode_batch``), the whitening map
-        in float64 (``VecsWhitening.apply``), then under ``norm_vec`` the
-        division by the L2 norm, and the float32 rounding. The norm is
-        summed as a left fold, the order of ``l2_normalize``'s Spark
-        ``aggregate``: the last column of ``cumsum`` is that sum bit for
-        bit, where numpy's pairwise ``sum`` is not. A text that encodes
-        to the zero vector has no direction and raises."""
+        the encoder's float32 batch (``encode_batch``), then
+        :meth:`_finish_queries`."""
         if not texts:
             return DriverQueries([], np.empty((0, 0), dtype=np.float32))
-        mat = encode_batch(self.encoder, texts)
+        return self._finish_queries(texts, encode_batch(self.encoder, texts))
+
+    def _finish_queries(self, ids, mat) -> DriverQueries:
+        """The steps :meth:`_vectorize` runs after the encode, on the
+        driver and with its arithmetic: the whitening map in float64
+        (``VecsWhitening.apply``), then under ``norm_vec`` the division
+        by the L2 norm, and the float32 rounding. The norm is summed as
+        a left fold, the order of ``l2_normalize``'s Spark
+        ``aggregate``: the last column of ``cumsum`` is that sum bit for
+        bit, where numpy's pairwise ``sum`` is not. A query that
+        normalizes to zero has no direction and raises ``ValueError``
+        naming it, in the words the Spark step uses."""
+        if not len(ids):
+            return DriverQueries(list(ids), np.empty((0, 0), np.float32))
         if self.whitening is not None:
             mat = self.whitening.apply(mat)
         if self.norm_vec:
@@ -491,11 +567,9 @@ class SparkSearcher:
             norm = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
             zero = np.flatnonzero(norm == 0)
             if len(zero):
-                raise ValueError(
-                    f"query {texts[zero[0]]!r} encodes to the zero vector, "
-                    "which cannot be L2-normalized")
+                raise ValueError(f"query '{ids[zero[0]]}' {_ZERO_NORM}")
             mat = mat / norm[:, None]
-        return DriverQueries(texts, mat.astype(np.float32))
+        return DriverQueries(ids, mat.astype(np.float32))
 
     def range_search(
         self,

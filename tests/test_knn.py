@@ -338,6 +338,53 @@ class TestBlockedCorpus:
         assert str(driver_side.value) == str(spark_side.value)
 
 
+class TestQueryBatchInvariance:
+    """A query scores to the same bits in any batch of queries: the GEMM
+    scorer pads the query side to a multiple of 16 rows, as it pads the
+    item side, because BLAS computes a last partial tile with other
+    code. The held searcher (one driver batch), the blocked kernel (one
+    batch per Arrow batch) and IVF (one per probed cell) then return
+    identical rows, sim_val included, at 1 and at 7 query partitions."""
+
+    @pytest.mark.parametrize("path", ["held", "blocked", "ivf"])
+    def test_rows_identical_at_1_and_7_partitions(self, spark, embeddings,
+                                                  path):
+        from faisssearcher_spark import SparkSearcher
+        from faisssearcher_spark.operators.ann import IVFIndex
+
+        q = embeddings.filter(F.col("vec_id") < 40).select(
+            F.col("vec_id").alias("qid"), "embedding")
+        if path == "held":
+            searcher = SparkSearcher(embeddings, vec_col="embedding",
+                                     key_col="vec_id").train()
+            assert searcher._held is not None
+
+            def search(qp):
+                return searcher.search(qp.withColumnRenamed("qid", "vec_id"),
+                                       topK=5, keep_rank_no=True)
+        elif path == "blocked":
+            def search(qp):
+                return knn_join(qp, embeddings, metric="cos", k=5,
+                                query_item_col="qid", item_key_col="vec_id",
+                                payload_cols=["label"], strategy="blocked")
+        else:
+            index = IVFIndex(n_cells=4, nprobe=2, train_mode="sample").fit(
+                embeddings, item_key_col="vec_id", item_vec_col="embedding")
+
+            def search(qp):
+                return index.search(qp, k=5, query_item_col="qid",
+                                    payload_cols=["label"])
+
+        one, seven = (sorted(map(tuple, search(qp).collect()))
+                      for qp in (q.coalesce(1), q.repartition(7)))
+        assert len(one) == 200
+        assert one == seven
+        if path == "held":
+            searcher.close()
+        elif path == "ivf":
+            index.close()
+
+
 class TestShardedStrategy:
     """knn_join(strategy='sharded') — per-item-shard local top-k + merge —
     must be indistinguishable from the catalyst plan across shard layouts,

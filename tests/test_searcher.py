@@ -263,10 +263,21 @@ class TestAutoStrategyThroughSearcher:
     QUERIES = ["spark join merge", "vector search index", "the",
                "spark join merge"]   # a repeated target is one query
 
-    def test_search_with_auto_strategy(self, doc_searcher):
+    def test_search_with_auto_strategy(self, spark, doc_searcher,
+                                       monkeypatch):
+        """The held matrix ranks a small target on the driver (a local
+        result); a frame over the query cap ranks in Spark against its
+        broadcasts (the blocked kernel). Neither is the catalyst join."""
+        from faisssearcher_spark.operators import knn as knn_mod
         from faisssearcher_spark.plans import inspect
 
-        plan = inspect.executed_plan(doc_searcher.search(self.QUERIES, topK=3))
+        frame = _sized(spark, [(t,) for t in self.QUERIES], "text string")
+        for target in (self.QUERIES, frame):
+            plan = inspect.executed_plan(doc_searcher.search(target, topK=3))
+            assert "LocalTableScan" in plan and "MapInPandas" not in plan
+            assert "BroadcastNestedLoopJoin" not in plan
+        monkeypatch.setattr(knn_mod, "QUERY_BROADCAST_CAP_BYTES", 0)
+        plan = inspect.executed_plan(doc_searcher.search(frame, topK=3))
         assert "MapInPandas" in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
@@ -570,6 +581,19 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _sized(spark, rows, ddl: str):
+    """A frame of local rows whose size Catalyst knows (a LocalRelation
+    built from Arrow). ``createDataFrame`` of a Python list is an RDD
+    scan of unknown size, which a holding searcher ranks in Spark."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = spark.createDataFrame([], ddl).schema
+    return spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema)), schema)
+
+
 def _last_job_id(spark) -> int:
     """The highest job id the status tracker has seen, once the listener
     bus has delivered every event posted so far."""
@@ -871,21 +895,95 @@ class TestHeldCorpus:
         with pytest.raises(RuntimeError, match="not trained"):
             s.search(embeddings.limit(1), topK=1)
 
-    def test_search_launches_no_job(self, spark, embeddings, documents):
+    def test_search_runs_its_jobs_inside_search(self, spark, embeddings,
+                                                documents):
+        """A driver-ranked search runs its one job (the query collect)
+        inside search() and none on read, a multi-K one included; a list
+        target runs none at all. The local results read no broadcast, so
+        they outlive close()."""
         vec = SparkSearcher(embeddings, vec_col="embedding",
                             key_col="vec_id", measurement="cos").train()
         text = SparkSearcher(documents.select("text", "lang"),
                              encoder=HashingEncoder(dim=8)).train()
         q = embeddings.filter(F.col("vec_id") < 4)
-        last = _last_job_id(spark)
-        results = [vec.search(q, topK=3), text.search(self.TEXTS, topK=3),
-                   *vec.search(q, topK=[1, 2]).values()]
-        assert _last_job_id(spark) == last
-        for res in results:
-            res.collect()
-        assert _last_job_id(spark) > last    # the tracker does see jobs
+        for search, jobs, n_queries in (
+                (lambda: {3: vec.search(q, topK=3)}, 1, 4),
+                (lambda: vec.search(q, topK=[1, 5]), 1, 4),
+                (lambda: {3: text.search(self.TEXTS, topK=3)}, 0, 3),
+                (lambda: text.search(self.TEXTS, topK=[1, 5]), 0, 3)):
+            last = _last_job_id(spark)
+            results = search()
+            assert _last_job_id(spark) - last == jobs
+            counts = {k: len(res.collect()) for k, res in results.items()}
+            assert _last_job_id(spark) - last == jobs
+            assert counts == {k: k * n_queries for k in results}
+        kept = vec.search(q, topK=3, **self.KW)
+        expect = _rows(kept)
         vec.close()
         text.close()
+        assert _rows(kept) == expect
+
+    FALLBACKS = ("over_cap", "unknown_size", "streaming")
+
+    @pytest.mark.parametrize("case", FALLBACKS)
+    @pytest.mark.parametrize("measurement", ["cos", "l2"])
+    def test_fallback_targets_equal_driver_rows(self, spark, embeddings,
+                                                monkeypatch, tmp_path,
+                                                case, measurement):
+        """A frame over QUERY_BROADCAST_CAP_BYTES, of unknown size, or a
+        stream ranks in Spark against the held broadcasts (MapInPandas),
+        and returns the rows the driver path returns, sim_val bits
+        included."""
+        from faisssearcher_spark.operators import knn as knn_mod
+        from faisssearcher_spark.plans import inspect
+
+        s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
+                          measurement=measurement).train()
+        q = embeddings.filter(F.col("vec_id") % 23 == 0)
+        for kw in ({}, self.KW):
+            expect = _rows(s.search(q, topK=5, **kw))
+            with monkeypatch.context() as mp:
+                if case == "over_cap":
+                    mp.setattr(knn_mod, "QUERY_BROADCAST_CAP_BYTES", 0)
+                elif case == "unknown_size":
+                    mp.setattr(knn_mod, "_plan_size_bytes", lambda df: None)
+                if case != "streaming":
+                    res = s.search(q, topK=5, **kw)
+                    assert "MapInPandas" in inspect.executed_plan(res)
+                    assert _rows(res) == expect
+                    continue
+                path = str(tmp_path / f"q{len(kw)}")
+                q.repartition(3).write.parquet(path)
+                stream = spark.readStream.schema(q.schema).parquet(path)
+                res = s.search(stream, topK=5, **kw)
+                assert res.isStreaming
+                name = f"held_fallback_{measurement}_{len(kw)}"
+                query = (res.writeStream.format("memory").queryName(name)
+                         .trigger(availableNow=True).start())
+                query.awaitTermination()
+                assert _rows(spark.table(name)) == expect
+        s.close()
+
+    def test_payload_dtypes_equal_catalyst(self, spark, embeddings):
+        """Long, string, double and date payload columns keep their types
+        and per-row values through the driver-built result."""
+        items = embeddings.select(
+            "vec_id", "embedding",
+            (F.col("vec_id") * 7).cast("long").alias("p_long"),
+            F.concat(F.lit("s"), F.col("vec_id").cast("string"))
+            .alias("p_str"),
+            (F.col("vec_id") / 3.0).alias("p_dbl"),
+            F.date_add(F.lit("2020-01-01").cast("date"),
+                       F.col("vec_id").cast("int")).alias("p_date"))
+        s = SparkSearcher(items, vec_col="embedding", key_col="vec_id",
+                          measurement="cos").train()
+        assert s._held is not None
+        q = embeddings.filter(F.col("vec_id") < 6)
+        held = s.search(q, topK=4, **self.KW)
+        assert held.schema.simpleString().endswith(
+            "p_long:bigint,p_str:string,p_dbl:double,p_date:date>")
+        self.assert_catalyst_parity(s, q, 4)
+        s.close()
 
 
 class TestAddItemsValidation:
@@ -1089,6 +1187,57 @@ class TestDriverEncodedQueries:
         s.corpus = documents   # train() would fail on the same encoder
         with pytest.raises(ValueError, match=r"want \(n, dim\)"):
             s.search(["spark join merge"], topK=2)
+
+
+class TestBadQueriesRaiseInSearch:
+    """Bad query vectors raise inside search(), on a holding searcher's
+    driver path as on an index: NULL, ragged and wrong-dim vectors with
+    validate_vectors' errors, and under cos a query that normalizes to
+    zero with one message naming it, for list and frame targets."""
+
+    BAD = {"null": ([(9001, [1.0] * 64, 0), (9002, None, 0)],
+                    "1 NULL vectors in column"),
+           "ragged": ([(9001, [1.0] * 64, 0), (9002, [1.0] * 63, 0)],
+                      r"ragged vector column .*: dims in \[63, 64\]"),
+           "wrong_dim": ([(9001, [1.0] * 32, 0)],
+                         "expected dim 64, found 32")}
+
+    @pytest.mark.parametrize("case", sorted(BAD))
+    @pytest.mark.parametrize("index_param", [None, "IVF4"],
+                             ids=["held", "indexed"])
+    def test_bad_vectors(self, spark, embeddings, index_param, case):
+        s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
+                          index_param=index_param).train()
+        assert (s._held is not None) == (index_param is None)
+        rows, msg = self.BAD[case]
+        target = _sized(spark, rows,
+                        "vec_id long, embedding array<float>, label int")
+        with pytest.raises(ValueError, match=msg):
+            s.search(target, topK=3)
+        s.close()
+
+    @pytest.mark.parametrize("index_param", [None, "IVF4"],
+                             ids=["held", "indexed"])
+    def test_zero_vector_one_message(self, spark, documents, embeddings,
+                                     index_param):
+        text = SparkSearcher(documents.select("text", "lang"),
+                             encoder=HashingEncoder(dim=8),
+                             index_param=index_param).train()
+        vec = SparkSearcher(embeddings, vec_col="embedding",
+                            key_col="vec_id", index_param=index_param).train()
+        zero = "encodes to the zero vector, which cannot be L2-normalized"
+        for s, target, name in (
+                (text, ["spark join", ""], ""),
+                (text, _sized(spark, [("spark join",), ("",)],
+                              "text string"), ""),
+                (vec, _sized(spark, [(9001, [0.0] * 64, 0)],
+                             "vec_id long, embedding array<float>, "
+                             "label int"), "9001")):
+            with pytest.raises(ValueError) as err:
+                s.search(target, topK=3)
+            assert str(err.value) == f"query '{name}' {zero}"
+        text.close()
+        vec.close()
 
 
 class TestZeroNormRows:

@@ -28,6 +28,9 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.01"
 
+#: audited legs that are not registry queries: name -> registry builder
+LEGS = {"searcher_hash8": "_q_searcher_text_hash_leg"}
+
 AUDITS = {
     "knn_cosine_top5": [
         ("WindowGroupLimit", True,
@@ -294,6 +297,14 @@ AUDITS = {
          "results meet truth only through the (query, item) equi-join; "
          "every post-knn frame is candidate-sized"),
     ],
+    "searcher_hash8": [
+        ("LocalTableScan", True,
+         "the held corpus matrix ranks the list target on the driver: "
+         "the result is a local frame, read with no job"),
+        ("MapInPandas", False,
+         "no Python worker: neither the query encode nor the ranking "
+         "runs in Spark"),
+    ],
 }
 
 
@@ -322,8 +333,10 @@ def audit(spark, registry) -> None:
            "Generated by `tools/explain_plans.py`; the same properties are",
            "pinned as regression tests in `tests/test_plans.py`.", ""]
     for name, checks in AUDITS.items():
-        df = registry.ALL_QUERY_FNS[name](spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        build = (getattr(registry, LEGS[name]) if name in LEGS
+                 else registry.ALL_QUERY_FNS[name])
+        plan = build(spark, SF_DIR)._jdf.queryExecution().executedPlan() \
+            .toString()
         out.append(f"## {name}")
         out.append("")
         for marker, expected, why in checks:
