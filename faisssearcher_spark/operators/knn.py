@@ -38,10 +38,11 @@ Scale design (the part FAISS cannot do):
   (:func:`driver_rank`). ``knn_join(strategy="blocked")`` builds a
   handle per call; a trained flat ``SparkSearcher`` whose corpus
   ``"auto"`` would hand to blocked builds it in ``train()`` and keeps
-  it. Its searches run no corpus collect: a small target is collected
-  (one job, or none for a list), ranked on the driver and returned as
-  a local frame, as the reference returns a pandas frame; a larger one
-  or a stream ranks in Spark against the broadcasts.
+  it. Its searches run no corpus collect: a search whose driver work
+  is within ``DRIVER_RANK_CAP_BYTES`` is collected (one job, or none
+  for a list), ranked on the driver and returned as a local frame, as
+  the reference returns a pandas frame; a larger one or a stream ranks
+  in Spark against the broadcasts.
 - **One top-k fold, one sharded scan.** Every numpy kernel ranks
   through :func:`_topk_fold`: a caller's per-block scorer streams
   key-ordered item blocks under a scratch bound, and each block's cut
@@ -72,6 +73,7 @@ Determinism: FAISS breaks distance ties by index order; we order by
 
 from __future__ import annotations
 
+import functools
 from typing import Callable, Iterable, Mapping, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -94,6 +96,18 @@ ITEMS_MEMORY_CAP_BYTES = 256 << 20
 #: the blocked kernel; past it the per-search corpus collect costs more
 #: than sharded's corpus scan (measurements in :func:`_auto_strategy`).
 BLOCKED_SMALL_QUERY_ITEMS_BYTES = 8 << 20
+#: largest driver-side work a holding searcher ranks on the driver
+#: (:meth:`BlockedCorpus.driver_bytes`: the query matrix plus the ranked
+#: rows, held at once as pandas, Arrow and a JVM LocalRelation); a
+#: larger search ranks on the executors (:func:`blocked_rank`). Set
+#: where the driver stops winning in ``tools/ab_driver_rank.py``
+#: (4,096 × 64 cos corpus, 4 cores, 6 alternating rounds per size):
+#: the driver's median was lower at every size up to 0.95 MB, by 2–3%
+#: at K=100 (128 and 256 queries, half the rounds each); at 1.9 MB (512
+#: queries at K=100) the executors won every round, 0.29 s against
+#: 0.36 s. Ranked rows cost the driver more than query rows: at K=10 it
+#: still won at 27 MB (32,768 queries), a gain this cap leaves out.
+DRIVER_RANK_CAP_BYTES = 1 << 20
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
@@ -600,12 +614,18 @@ def _gemm_scorer(q, mat, metric: str, *, scale=None, mat_sq=None):
     squared norms, read only for ``l2``) may be passed precomputed; it
     is derived once here otherwise.
 
-    A (query, row) product does not depend on the batch of queries or
+    A (query, row) product should not depend on the batch of queries or
     the block of rows it is scored in: BLAS computes a last partial
     tile with other code, whose last bit can differ (one query then
     scored unequal at 1 and at 7 partitions, or on the driver and on an
     executor), so both sides are padded with zero rows to a multiple of
-    16 and the product is cut back to the real ones."""
+    16 and the product is cut back to the real ones. The 16 is a
+    multiple of the GEMM tile heights of the OpenBLAS 0.3.23 HASWELL
+    kernels numpy 1.26 ships, where every batch of 1 to 64 queries then
+    gives the same bits; a BLAS with other tile shapes (AVX-512, ARM,
+    MKL) is not checked and may differ in the last bit across batches,
+    though never in more (``TestQueryBatchInvariance`` asserts the
+    equality on the BLAS it runs on)."""
     import numpy as np
 
     m = len(q)
@@ -937,6 +957,23 @@ class BlockedCorpus:
     def dim(self) -> int:
         return self.mat.shape[1]
 
+    @functools.cached_property
+    def _row_bytes(self) -> int:
+        """Estimated driver bytes of one ranked row: query id, key,
+        score and rank at 8 bytes each, plus the mean size of a corpus
+        row's payload as pandas holds it."""
+        if self.payload is None or not len(self.payload):
+            return 32
+        used = self.payload.memory_usage(index=False, deep=True).sum()
+        return 32 + int(used) // len(self.payload)
+
+    def driver_bytes(self, n_queries: int, k: int) -> int:
+        """Estimated driver bytes of ranking ``n_queries`` queries at
+        ``k`` against this corpus on the driver (:func:`driver_rank`):
+        their float64 matrix and their ranked rows, payload included."""
+        return n_queries * (self.dim * 8
+                            + min(k, len(self.keys)) * self._row_bytes)
+
     @property
     def key_type(self) -> str:
         return self.fields[0].dataType.simpleString()
@@ -1049,7 +1086,8 @@ def driver_rank(queries: DriverQueries, corpus: BlockedCorpus, *,
     search with one BLAS call in its own process
     (faiss_searcher.py:161-187): ``queries`` ranked once at the largest
     of ``ks`` against ``corpus``'s own matrix (:func:`_rank_rows`, the
-    executors' arithmetic bit for bit), each k a filter of that one
+    executors' arithmetic; bit for bit where :func:`_gemm_scorer`'s
+    padding makes BLAS batch-invariant), each k a filter of that one
     pandas frame. Returns ``{k: local frame}``, each built from Arrow on
     the driver (a LocalTableScan: reading it runs no job) with the
     ``query_type`` query ids and ``corpus``'s key and payload fields;

@@ -359,31 +359,32 @@ class SparkSearcher:
         On a searcher that holds its corpus matrix, ``"auto"`` and
         ``"blocked"`` rank on the driver, as the reference does
         (faiss_searcher.py:161-187): a list target, or a batch frame
-        whose size estimate is within ``knn.QUERY_BROADCAST_CAP_BYTES``,
+        whose size estimate is within ``knn.DRIVER_RANK_CAP_BYTES``,
         is collected (a frame: one Spark job, run here), prepared with
         the Spark encode's arithmetic and folded against the held
         matrix, and the result is a local frame — reading it runs no
         job and reads no broadcast, so it outlives ``close()``. A list
-        ``topK`` ranks once. A larger frame, one of unknown size or a
-        stream ranks in Spark against the held broadcasts instead
+        ``topK`` ranks once. A query set whose driver work at the
+        largest K (its matrix and ranked rows) is over that cap, a
+        frame of unknown size or a stream ranks in Spark against the
+        held broadcasts instead
         (``knn.blocked_rank``): building that result runs no job, and it
         must be read before ``close()`` destroys them (``add_items`` and
         a retrain leave them be). Bad query vectors (NULL, ragged, wrong
         dim; under ``cos`` one that normalizes to zero) raise
         ``ValueError`` inside a driver-ranked search."""
         corpus = self._require_trained()
+        ks = [topK] if isinstance(topK, int) else _knn._sorted_ks(topK)
         # the held matrix serves "auto" and "blocked" without knobs
         held = (self._held if strategy in ("auto", "blocked")
                 and not strategy_kwargs else None)
         if held is not None:
-            prepared = self._driver_queries(target)
+            prepared = self._driver_queries(target, held, ks[-1])
             if prepared is not None:
                 queries, q_type = prepared
                 frames = driver_rank(
-                    queries, held,
-                    ks=[topK] if isinstance(topK, int) else topK,
-                    query_type=q_type, keep_rank_no=keep_rank_no,
-                    score_scale=score_scale)
+                    queries, held, ks=ks, query_type=q_type,
+                    keep_rank_no=keep_rank_no, score_scale=score_scale)
                 frames = {k: self._post(df, keep_rank_no)
                           for k, df in frames.items()}
                 return frames[topK] if isinstance(topK, int) else frames
@@ -448,7 +449,7 @@ class SparkSearcher:
             return finish(rank_at(topK))
         # reference O2 (faiss_searcher.py:170-183): rank once at max(K),
         # each K a filter over that one cached frame
-        return {k: finish(df) for k, df in multi_k(rank_at, topK).items()}
+        return {k: finish(df) for k, df in multi_k(rank_at, ks).items()}
 
     def _rank_indexed(self, queries: DataFrame | DriverQueries, k: int,
                       payload: list,
@@ -507,11 +508,12 @@ class SparkSearcher:
                             "DataFrame with the vector column")
         return self._encode_texts(list(dict.fromkeys(map(str, target))))
 
-    def _driver_queries(self, target):
+    def _driver_queries(self, target, held: BlockedCorpus, k: int):
         """``(DriverQueries, id type)`` of a search ranked on the driver,
-        or None for a target that stays in Spark: a stream, or a frame
-        whose estimate is unknown or over
-        ``knn.QUERY_BROADCAST_CAP_BYTES``.
+        or None for a target that stays in Spark: a stream, a frame whose
+        size estimate is unknown or over ``knn.DRIVER_RANK_CAP_BYTES``,
+        or a query set whose driver work at ``k``
+        (``held.driver_bytes``) is over it.
 
         A list target is :meth:`_list_queries`'s. A batch frame is one
         Arrow collect of what the encode reads: in encoder mode its text
@@ -519,25 +521,40 @@ class SparkSearcher:
         one query per ROW, as the kernels rank); in raw-vector mode its
         ids and raw vectors, checked as ``validate_vectors`` checks
         (NULL, ragged, wrong dim), then :meth:`_finish_queries`. No
-        Spark-side encode runs: the driver does the same arithmetic."""
+        Spark-side encode runs: the driver does the same arithmetic.
+        The row count is checked before anything is encoded or ranked;
+        a frame found too large then is read again by the Spark path."""
+        cap = _knn.DRIVER_RANK_CAP_BYTES
+
+        def fits(n: int) -> bool:
+            return held.driver_bytes(n, k) <= cap
+
         if not isinstance(target, DataFrame):
-            return self._list_queries(target), StringType()
+            texts = list(dict.fromkeys(map(str, target)))
+            if self.encoder is not None and not fits(len(texts)):
+                return None
+            return self._list_queries(texts), StringType()
         if target.isStreaming:
             return None
         src_col, q_text, q_vec = self._query_cols(target)
         proj = _knn._project(target, [q_text] if q_text is not None
                              else [src_col, q_vec])
+        # the input's estimate is a lower bound of the driver work
         size = _knn._plan_size_bytes(proj)
-        if size is None or size > _knn.QUERY_BROADCAST_CAP_BYTES:
+        if size is None or size > cap:
             return None
         q_type = proj.schema[src_col].dataType
         if q_text is not None:
-            return (self._encode_texts(
-                proj.toArrow().column(0).to_pylist()), q_type)
+            texts = proj.toArrow().column(0)
+            if not fits(len(texts)):
+                return None
+            return self._encode_texts(texts.to_pylist()), q_type
         # raw vectors are checked at the dim the whitening map takes
         dim = (self.whitening.kernel.shape[0] if self.whitening is not None
                else self.vec_dim)
         ids, mat, _ = _knn._collect_vectors(proj, src_col, q_vec, dim=dim)
+        if not fits(len(ids)):
+            return None
         return self._finish_queries(ids, mat), q_type
 
     def _encode_texts(self, texts: list) -> DriverQueries:

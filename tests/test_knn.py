@@ -344,7 +344,10 @@ class TestQueryBatchInvariance:
     item side, because BLAS computes a last partial tile with other
     code. The held searcher (one driver batch), the blocked kernel (one
     batch per Arrow batch) and IVF (one per probed cell) then return
-    identical rows, sim_val included, at 1 and at 7 query partitions."""
+    identical rows, sim_val included, at 1 and at 7 query partitions.
+    The 16-row pad was checked against OpenBLAS 0.3.23's HASWELL GEMM
+    kernels (numpy 1.26); on a BLAS with other tile shapes this exact
+    equality is what fails first."""
 
     @pytest.mark.parametrize("path", ["held", "blocked", "ivf"])
     def test_rows_identical_at_1_and_7_partitions(self, spark, embeddings,

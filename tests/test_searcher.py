@@ -276,7 +276,7 @@ class TestAutoStrategyThroughSearcher:
             plan = inspect.executed_plan(doc_searcher.search(target, topK=3))
             assert "LocalTableScan" in plan and "MapInPandas" not in plan
             assert "BroadcastNestedLoopJoin" not in plan
-        monkeypatch.setattr(knn_mod, "QUERY_BROADCAST_CAP_BYTES", 0)
+        monkeypatch.setattr(knn_mod, "DRIVER_RANK_CAP_BYTES", 0)
         plan = inspect.executed_plan(doc_searcher.search(frame, topK=3))
         assert "MapInPandas" in plan
         assert "BroadcastNestedLoopJoin" not in plan
@@ -930,10 +930,11 @@ class TestHeldCorpus:
     def test_fallback_targets_equal_driver_rows(self, spark, embeddings,
                                                 monkeypatch, tmp_path,
                                                 case, measurement):
-        """A frame over QUERY_BROADCAST_CAP_BYTES, of unknown size, or a
+        """A frame over DRIVER_RANK_CAP_BYTES, of unknown size, or a
         stream ranks in Spark against the held broadcasts (MapInPandas),
         and returns the rows the driver path returns, sim_val bits
-        included."""
+        included (on a BLAS the GEMM padding makes batch-invariant, see
+        TestQueryBatchInvariance)."""
         from faisssearcher_spark.operators import knn as knn_mod
         from faisssearcher_spark.plans import inspect
 
@@ -944,7 +945,7 @@ class TestHeldCorpus:
             expect = _rows(s.search(q, topK=5, **kw))
             with monkeypatch.context() as mp:
                 if case == "over_cap":
-                    mp.setattr(knn_mod, "QUERY_BROADCAST_CAP_BYTES", 0)
+                    mp.setattr(knn_mod, "DRIVER_RANK_CAP_BYTES", 0)
                 elif case == "unknown_size":
                     mp.setattr(knn_mod, "_plan_size_bytes", lambda df: None)
                 if case != "streaming":
@@ -962,6 +963,46 @@ class TestHeldCorpus:
                          .trigger(availableNow=True).start())
                 query.awaitTermination()
                 assert _rows(spark.table(name)) == expect
+        s.close()
+
+    @pytest.mark.parametrize("case", ["large_k", "text_frame",
+                                      "text_list"])
+    def test_driver_work_over_cap_ranks_in_spark(self, spark, embeddings,
+                                                 documents, monkeypatch,
+                                                 case):
+        """A query set whose input estimate is small but whose driver
+        work is not — a large max(K), or texts that encode to more
+        query rows than their bytes suggest — ranks in Spark
+        (MapInPandas) and returns the driver path's rows."""
+        from faisssearcher_spark.operators import knn as knn_mod
+        from faisssearcher_spark.plans import inspect
+
+        if case == "large_k":
+            s = SparkSearcher(embeddings, vec_col="embedding",
+                              key_col="vec_id", measurement="cos").train()
+            target, n = embeddings.filter(F.col("vec_id") < 6), 6
+        else:
+            s = SparkSearcher(documents.select("text", "lang"),
+                              encoder=HashingEncoder(dim=8)).train()
+            texts = [f"query {i} spark join" for i in range(6)]
+            target, n = ((texts, 6) if case == "text_list" else
+                         (_sized(spark, [(t,) for t in texts],
+                                 "text string"), 6))
+        expect = _rows(s.search(target, topK=5, **self.KW))
+        # the input estimate passes; the driver work at max(K) does not
+        monkeypatch.setattr(knn_mod, "_plan_size_bytes", lambda df: 1)
+        monkeypatch.setattr(knn_mod, "DRIVER_RANK_CAP_BYTES",
+                            s._held.driver_bytes(n, 5))
+        res = s.search(target, topK=5, **self.KW)
+        assert "LocalTableScan" in inspect.executed_plan(res)
+        if case == "large_k":
+            res = s.search(target, topK=[5, 50], **self.KW)[5]
+        else:
+            monkeypatch.setattr(knn_mod, "DRIVER_RANK_CAP_BYTES",
+                                s._held.driver_bytes(n - 1, 5))
+            res = s.search(target, topK=5, **self.KW)
+        assert "MapInPandas" in inspect.executed_plan(res)
+        assert _rows(res) == expect
         s.close()
 
     def test_payload_dtypes_equal_catalyst(self, spark, embeddings):
