@@ -359,13 +359,13 @@ class SparkSearcher:
         On a searcher that holds its corpus matrix, ``"auto"`` and
         ``"blocked"`` rank on the driver, as the reference does
         (faiss_searcher.py:161-187): a list target, or a batch frame
-        whose size estimate is within ``knn.DRIVER_RANK_CAP_BYTES``,
-        is collected (a frame: one Spark job, run here), prepared with
-        the Spark encode's arithmetic and folded against the held
-        matrix, and the result is a local frame — reading it runs no
-        job and reads no broadcast, so it outlives ``close()``. A list
-        ``topK`` ranks once. A query set whose driver work at the
-        largest K (its matrix and ranked rows) is over that cap, a
+        with a size estimate, whose driver work at the largest K (its
+        query matrix and ranked rows) is within
+        ``knn.DRIVER_RANK_CAP_BYTES`` is collected (a frame: one Spark
+        job, run here), prepared with the Spark encode's arithmetic and
+        folded against the held matrix, and the result is a local frame
+        — reading it runs no job and reads no broadcast, so it outlives
+        ``close()``. A list ``topK`` ranks once. A larger query set, a
         frame of unknown size or a stream ranks in Spark against the
         held broadcasts instead
         (``knn.blocked_rank``): building that result runs no job, and it
@@ -511,9 +511,8 @@ class SparkSearcher:
     def _driver_queries(self, target, held: BlockedCorpus, k: int):
         """``(DriverQueries, id type)`` of a search ranked on the driver,
         or None for a target that stays in Spark: a stream, a frame whose
-        size estimate is unknown or over ``knn.DRIVER_RANK_CAP_BYTES``,
-        or a query set whose driver work at ``k``
-        (``held.driver_bytes``) is over it.
+        size estimate is unknown, or a query set whose driver work at
+        ``k`` (``held.driver_bytes``) is over ``knn.DRIVER_RANK_CAP_BYTES``.
 
         A list target is :meth:`_list_queries`'s. A batch frame is one
         Arrow collect of what the encode reads: in encoder mode its text
@@ -522,38 +521,35 @@ class SparkSearcher:
         ids and raw vectors, checked as ``validate_vectors`` checks
         (NULL, ragged, wrong dim), then :meth:`_finish_queries`. No
         Spark-side encode runs: the driver does the same arithmetic.
-        The row count is checked before anything is encoded or ranked;
-        a frame found too large then is read again by the Spark path."""
-        cap = _knn.DRIVER_RANK_CAP_BYTES
-
-        def fits(n: int) -> bool:
-            return held.driver_bytes(n, k) <= cap
-
+        The collect stops one row past the most queries that fit, so no
+        more than that lands on the driver; a frame found too large
+        then is read again by the Spark path. (The frame's size estimate
+        cannot bound its rows: a filter keeps its input's estimate.)"""
+        most = _knn.DRIVER_RANK_CAP_BYTES // held.driver_bytes(1, k)
         if not isinstance(target, DataFrame):
             texts = list(dict.fromkeys(map(str, target)))
-            if self.encoder is not None and not fits(len(texts)):
+            if self.encoder is not None and len(texts) > most:
                 return None
             return self._list_queries(texts), StringType()
-        if target.isStreaming:
+        if target.isStreaming or most < 1:
             return None
         src_col, q_text, q_vec = self._query_cols(target)
         proj = _knn._project(target, [q_text] if q_text is not None
                              else [src_col, q_vec])
-        # the input's estimate is a lower bound of the driver work
-        size = _knn._plan_size_bytes(proj)
-        if size is None or size > cap:
+        if _knn._plan_size_bytes(proj) is None:
             return None
         q_type = proj.schema[src_col].dataType
+        proj = proj.limit(most + 1)
         if q_text is not None:
             texts = proj.toArrow().column(0)
-            if not fits(len(texts)):
+            if len(texts) > most:
                 return None
             return self._encode_texts(texts.to_pylist()), q_type
         # raw vectors are checked at the dim the whitening map takes
         dim = (self.whitening.kernel.shape[0] if self.whitening is not None
                else self.vec_dim)
         ids, mat, _ = _knn._collect_vectors(proj, src_col, q_vec, dim=dim)
-        if not fits(len(ids)):
+        if len(ids) > most:
             return None
         return self._finish_queries(ids, mat), q_type
 

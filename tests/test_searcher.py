@@ -970,27 +970,27 @@ class TestHeldCorpus:
     def test_driver_work_over_cap_ranks_in_spark(self, spark, embeddings,
                                                  documents, monkeypatch,
                                                  case):
-        """A query set whose input estimate is small but whose driver
-        work is not — a large max(K), or texts that encode to more
-        query rows than their bytes suggest — ranks in Spark
+        """The driver work at max(K) decides, not the frame's size
+        estimate (a filter keeps its input's): a search within the cap
+        ranks on the driver whatever the estimate, and one over it — a
+        larger max(K), or one text more than fits — ranks in Spark
         (MapInPandas) and returns the driver path's rows."""
         from faisssearcher_spark.operators import knn as knn_mod
         from faisssearcher_spark.plans import inspect
 
+        n = 6
         if case == "large_k":
             s = SparkSearcher(embeddings, vec_col="embedding",
                               key_col="vec_id", measurement="cos").train()
-            target, n = embeddings.filter(F.col("vec_id") < 6), 6
+            target = embeddings.filter(F.col("vec_id") < n)
         else:
             s = SparkSearcher(documents.select("text", "lang"),
                               encoder=HashingEncoder(dim=8)).train()
-            texts = [f"query {i} spark join" for i in range(6)]
-            target, n = ((texts, 6) if case == "text_list" else
-                         (_sized(spark, [(t,) for t in texts],
-                                 "text string"), 6))
+            texts = [f"query {i} spark join" for i in range(n)]
+            target = (texts if case == "text_list" else
+                      _sized(spark, [(t,) for t in texts], "text string"))
         expect = _rows(s.search(target, topK=5, **self.KW))
-        # the input estimate passes; the driver work at max(K) does not
-        monkeypatch.setattr(knn_mod, "_plan_size_bytes", lambda df: 1)
+        monkeypatch.setattr(knn_mod, "_plan_size_bytes", lambda df: 1 << 40)
         monkeypatch.setattr(knn_mod, "DRIVER_RANK_CAP_BYTES",
                             s._held.driver_bytes(n, 5))
         res = s.search(target, topK=5, **self.KW)
