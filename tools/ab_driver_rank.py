@@ -5,14 +5,15 @@ growing size and K against one held corpus (raw-vector cosine
 ``SparkSearcher``, the ``flat_search`` shape), ranked on the driver
 (``knn.driver_rank``) and on the executors (``knn.blocked_rank``) in
 alternating order within one Spark session. The route is forced by
-moving ``knn.DRIVER_RANK_CAP_BYTES``; both routes must return the same
-rows. Prints one JSON line per (queries, K) with the driver work
+moving ``knn.DRIVER_RANK_CAP_BYTES``; ``auto`` keeps the cap as it is
+(over it, a frame's row-bounded collect runs and is dropped before the
+executors rank). Every route must return the same rows. Prints one JSON line per (queries, K) with the driver work
 estimate (``BlockedCorpus.driver_bytes``, the number the cap is set
 against), the per-route median and quartiles in seconds, and how many
 rounds each route won.
 
     PYTHONPATH=. SPARK_GRAFT_CPUS=4 python tools/ab_driver_rank.py \\
-        --queries 64,1024,8192 --ks 10,100 --rounds 6
+        --queries 64,1024,8192 --ks 10,100 --rounds 6 [--routes ...]
 """
 from __future__ import annotations
 
@@ -28,9 +29,6 @@ import numpy as np
 
 from ab_knn_route import write_vectors
 
-ROUTES = ("driver", "blocked")
-
-
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--items", type=int, default=4096)
@@ -40,7 +38,10 @@ def main() -> None:
     ap.add_argument("--dim", type=int, default=64)
     ap.add_argument("--rounds", type=int, default=6)
     ap.add_argument("--seed", type=int, default=7)
+    ap.add_argument("--routes", default="driver,blocked",
+                    help="comma-separated, of driver, blocked, auto")
     args = ap.parse_args()
+    routes = args.routes.split(",")
 
     from faisssearcher_spark import SparkSearcher
     from faisssearcher_spark.operators import knn
@@ -52,13 +53,15 @@ def main() -> None:
     def timed(searcher, target, k, route):
         """Seconds for one search and the read of its result, and the
         result as a sorted Arrow table."""
-        knn.DRIVER_RANK_CAP_BYTES = 1 << 62 if route == "driver" else -1
+        knn.DRIVER_RANK_CAP_BYTES = {"driver": 1 << 62, "blocked": -1,
+                                     "auto": cap}[route]
         t0 = time.perf_counter()
         res = searcher.search(target, topK=k, keep_rank_no=True)
         tbl = res.toArrow()
         seconds = time.perf_counter() - t0
-        spark_ranked = "MapInPandas" in inspect.executed_plan(res)
-        assert spark_ranked == (route == "blocked"), route
+        if route != "auto":
+            spark_ranked = "MapInPandas" in inspect.executed_plan(res)
+            assert spark_ranked == (route == "blocked"), route
         return seconds, tbl.sort_by([("source_item", "ascending"),
                                      ("rank_no", "ascending")])
 
@@ -81,14 +84,15 @@ def main() -> None:
                                               dtype=np.float32))
             target = spark.read.parquet(qpath).select("key", "vec")
             for k in (int(x) for x in args.ks.split(",")):
-                times: dict = {r: [] for r in ROUTES}
-                wins: dict = {r: 0 for r in ROUTES}
+                times: dict = {r: [] for r in routes}
+                wins: dict = {r: 0 for r in routes}
                 for rnd in range(args.rounds + 1):  # round 0 warms up
-                    order = ROUTES if rnd % 2 else ROUTES[::-1]
+                    order = routes if rnd % 2 else routes[::-1]
                     lap, rows = {}, {}
                     for r in order:
                         lap[r], rows[r] = timed(searcher, target, k, r)
-                    assert rows["driver"].equals(rows["blocked"]), (nq, k)
+                    first, *rest = rows.values()
+                    assert all(first.equals(t) for t in rest), (nq, k)
                     if rnd:
                         for r, v in lap.items():
                             times[r].append(v)
