@@ -139,9 +139,6 @@ def lang_scores_from_tokens(toks: Column) -> list[tuple[str, Column]]:
     return [(lang, hit_counter(sw)) for lang, sw in LANG_STOPWORDS.items()]
 
 
-def lang_scores(c: ColumnOrName) -> list[tuple[str, Column]]:
-    return lang_scores_from_tokens(tokens(c))
-
 def language_confidence(c: ColumnOrName, *,
                         temperature: float = 0.05) -> Column:
     """Calibrated confidence in ``[1/K, 1]`` for
@@ -245,16 +242,6 @@ def word_ngrams_sql(c: str, n: int, *, pre_tokenized: bool = False) -> str:
     return acc
 
 
-def char_ngrams(c: ColumnOrName, n: int) -> Column:
-    """Character n-gram shingles of the raw string; strings shorter than n
-    yield an empty array."""
-    s = _col(c)
-    idx = F.sequence(F.lit(1), F.length(s) - (n - 1))
-    grams = F.transform(idx, lambda i: F.substring(s, i, n))
-    return F.when(F.length(s) >= n, grams).otherwise(
-        F.array().cast("array<string>"))
-
-
 def fingerprint(c: ColumnOrName, *, pre_tokenized: bool = False) -> Column:
     """Canonical content fingerprint: md5 of the sorted distinct lowercase
     token set. Robust to token order and duplication — the classic
@@ -307,15 +294,6 @@ def normalize_text(c: ColumnOrName) -> Column:
     lowered = F.lower(_col(c))
     stripped = F.regexp_replace(lowered, r"[^a-z0-9\s]", " ")
     return F.trim(F.regexp_replace(stripped, r"\s+", " "))
-
-
-def duplicate_line_count(c: ColumnOrName) -> Column:
-    """Number of line occurrences beyond each line's first — the Gopher /
-    C4 boilerplate signal (nav bars, cookie banners, repeated headers).
-    Emitted as an exact integer so cross-engine checks never hit float
-    rounding; divide by ``size(lines(c))`` for the ratio."""
-    ls = lines(c)
-    return F.size(ls) - F.size(F.array_distinct(ls))
 
 
 def top_element_count(arr: Column) -> Column:

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType, DoubleType
+from pyspark.sql.types import ArrayType
 
 from faisssearcher_spark.functions.metrics import ColumnOrName, _col, as_double
 
@@ -59,12 +59,6 @@ def to_float32(c: ColumnOrName) -> Column:
     (faiss_searcher.py:92-94). Use for storage; metric math re-casts to
     float64 for stable accumulation."""
     return _col(c).cast("array<float>")
-
-
-def round_vector(c: ColumnOrName, scale: int) -> Column:
-    """Round each element — used to stabilize float comparisons in tests
-    and DuckDB-oracle checks (summation-order tolerance)."""
-    return F.transform(as_double(c), lambda x: F.round(x, scale))
 
 
 def vector_dim(df: DataFrame, col: str) -> int:
@@ -114,12 +108,6 @@ def check_vector_stats(col: str, nulls: int | None, dmin: int | None,
     if dim is not None and dmin != dim:
         raise ValueError(f"expected dim {dim}, found {dmin} in {col!r}")
     return dmin
-
-
-def is_vector_column(df: DataFrame, col: str) -> bool:
-    field = df.schema[col]
-    return isinstance(field.dataType, ArrayType) and isinstance(
-        field.dataType.elementType, (FloatType, DoubleType))
 
 
 # ---------------------------------------------------------------------------

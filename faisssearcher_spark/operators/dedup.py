@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.functions import text as T
+from faisssearcher_spark.operators import knn as _knn
 
 
 # ---------------------------------------------------------------------------
@@ -705,7 +706,7 @@ BAND_DENSITY_WARN_RATIO = 16
 def _estimate_rows(df: DataFrame) -> "int | None":
     """Catalyst's optimized-plan row-count estimate, or None when the
     optimizer doesn't carry one (no CBO stats) — module-level so tests
-    can monkeypatch it, mirroring :func:`_plan_size_bytes`."""
+    can monkeypatch it, like ``knn._plan_size_bytes``."""
     try:
         rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
         if rc.isDefined():
@@ -797,22 +798,6 @@ def simhash_pairs(df: DataFrame, *, id_col: str = "doc_id",
 # embedding-space near-dup
 # ---------------------------------------------------------------------------
 
-#: cap on single-machine corpus materialization for the "blocked" strategy
-#: (which collects the id+vector frame to the driver and broadcasts the
-#: normalized matrix) — same value and semantics as
-#: knn.ITEMS_MEMORY_CAP_BYTES, the quadrant rule both auto-dispatchers
-#: share.
-EMBED_MEMORY_CAP_BYTES = 256 << 20
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate (plans/inspect
-    ``plan_size_bytes``); module-level so tests can monkeypatch the
-    estimator — mirrors knn._plan_size_bytes."""
-    from faisssearcher_spark.plans.inspect import plan_size_bytes
-    return plan_size_bytes(df)
-
-
 def embedding_cosine_pairs(df: DataFrame, *, id_col: str = "vec_id",
                            vec_col: str = "embedding",
                            threshold: float = 0.9,
@@ -829,8 +814,11 @@ def embedding_cosine_pairs(df: DataFrame, *, id_col: str = "vec_id",
 
     - ``"auto"`` (default): size-dispatch on Catalyst's optimized-plan
       size estimate, the same quadrant rule as ``knn_join`` (knn.py
-      ``_auto_strategy``): corpora whose estimate fits
-      ``EMBED_MEMORY_CAP_BYTES`` run ``"blocked"`` (exact, fastest at
+      ``_auto_strategy``), read through knn's estimator
+      (``knn._plan_size_bytes``): corpora whose estimate fits knn's
+      ``ITEMS_MEMORY_CAP_BYTES`` (the cap on collecting the id+vector
+      frame to the driver and broadcasting the normalized matrix) run
+      ``"blocked"`` (exact, fastest at
       single-machine sizes); anything larger — or with an UNKNOWN
       estimate, which must be presumed large because guessing small
       risks a driver OOM while guessing large only costs shuffle —
@@ -881,9 +869,9 @@ def embedding_cosine_pairs(df: DataFrame, *, id_col: str = "vec_id",
     exact verification confines any such difference to the recall tail.
     """
     if strategy == "auto":
-        est = _plan_size_bytes(df)
+        est = _knn._plan_size_bytes(df)
         strategy = ("blocked" if est is not None
-                    and est <= EMBED_MEMORY_CAP_BYTES else "lsh")
+                    and est <= _knn.ITEMS_MEMORY_CAP_BYTES else "lsh")
     if strategy == "lsh":
         return _embedding_pairs_lsh(
             df, id_col=id_col, vec_col=vec_col, threshold=threshold,

@@ -26,10 +26,10 @@ Scale design (the part FAISS cannot do):
   functions/metrics.py). They do not join whole-stage codegen:
   ``ZipWith`` / ``ArrayAggregate`` are ``CodegenFallback`` in Spark 4.1.2,
   so every pair is scored by the interpreter (~226k pairs/s on 3 task
-  slots). ``strategy="auto"`` — the ``SparkSearcher.search`` default —
-  therefore scores ``cos`` / ``ip`` / ``l2`` with BLAS in the blocked,
-  sharded or grid kernel below and keeps this plan for every metric a
-  GEMM cannot express.
+  slots). ``strategy="auto"`` — the plan a flat ``SparkSearcher`` that
+  holds no corpus matrix searches through — therefore scores ``cos`` /
+  ``ip`` / ``l2`` with BLAS in the blocked, sharded or grid kernel below
+  and keeps this plan for every metric a GEMM cannot express.
 - **A trained corpus is collected once.** The blocked kernel is split
   into its corpus handle (:class:`BlockedCorpus`: the key-sorted float64
   matrix, keys, payload and squared norms, broadcast) and one ranking
@@ -39,10 +39,10 @@ Scale design (the part FAISS cannot do):
   handle per call; a trained flat ``SparkSearcher`` whose corpus
   ``"auto"`` would hand to blocked builds it in ``train()`` and keeps
   it. Its searches run no corpus collect: a search whose driver work
-  is within ``DRIVER_RANK_CAP_BYTES`` is collected (one job, or none
-  for a list), ranked on the driver and returned as a local frame, as
-  the reference returns a pandas frame; a larger one or a stream ranks
-  in Spark against the broadcasts.
+  is within ``DRIVER_RANK_CAP_BYTES`` is collected (one row-bounded
+  job, or none for a list), ranked on the driver and returned as a
+  local frame, as the reference returns a pandas frame; a larger one or
+  a stream ranks in Spark against the broadcasts.
 - **One top-k fold, one sharded scan.** Every numpy kernel ranks
   through :func:`_topk_fold`: a caller's per-block scorer streams
   key-ordered item blocks under a scratch bound, and each block's cut
@@ -125,9 +125,7 @@ def _fill_cache(df: DataFrame) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def _auto_strategy(q_bytes: int | None, i_bytes: int | None, *,
-                   query_cap: int = QUERY_BROADCAST_CAP_BYTES,
-                   items_cap: int = ITEMS_MEMORY_CAP_BYTES) -> str:
+def _auto_strategy(q_bytes: int | None, i_bytes: int | None) -> str:
     """Pick the GEMM kernel for ``strategy="auto"`` from the two sides'
     estimated sizes:
 
@@ -186,9 +184,10 @@ def _auto_strategy(q_bytes: int | None, i_bytes: int | None, *,
     :func:`_gemm_servable`)."""
     if i_bytes is not None and i_bytes <= BLOCKED_SMALL_QUERY_ITEMS_BYTES:
         return "blocked"
-    if q_bytes is not None and q_bytes <= query_cap:
+    if q_bytes is not None and q_bytes <= QUERY_BROADCAST_CAP_BYTES:
         return "sharded"
-    return "blocked" if i_bytes is not None and i_bytes <= items_cap else "grid"
+    return ("blocked" if i_bytes is not None
+            and i_bytes <= ITEMS_MEMORY_CAP_BYTES else "grid")
 
 
 def _gemm_servable(metric: str, p: float | None, normalize: bool | None,
@@ -335,7 +334,8 @@ def knn_join(
 
     ``strategy``:
 
-    - ``"auto"`` (``SparkSearcher.search``'s default): a GEMM kernel
+    - ``"auto"`` (what ``SparkSearcher.search`` runs for a flat searcher
+      that holds no corpus matrix): a GEMM kernel
       below picked from Catalyst's size estimates of the two sides (see
       :func:`_auto_strategy` for the matrix and the treat-unknown-as-large
       rule), or ``"catalyst"`` when no kernel can serve the call — a

@@ -17,7 +17,7 @@ guarantee is needed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: redaction rules: name → (regex, replacement token). ORDER IS LOAD-
@@ -33,15 +33,6 @@ PII_RULES: dict[str, tuple[str, str]] = {
               "<PHONE>"),
     "long_digits": (r"(?<!\d)\d{9,}(?!\d)", "<NUMBER>"),
 }
-
-
-def redact_text(c: Column | str, rules: dict[str, tuple[str, str]]
-                | None = None) -> Column:
-    """The redacted text column (rules applied in declaration order)."""
-    out = F.col(c) if isinstance(c, str) else c
-    for pattern, token in (rules or PII_RULES).values():
-        out = F.regexp_replace(out, pattern, token)
-    return out
 
 
 def redact_pii(df: DataFrame, *, text_col: str = "text",

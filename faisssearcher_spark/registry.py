@@ -734,10 +734,8 @@ def _q_searcher_text_hash_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build():
         corpus = docs.select("text", "lang", "source")
-        s = SparkSearcher(corpus, encoder=HashingEncoder(dim=8),
-                          measurement="cos")
-        s.train(validate=False)
-        return s
+        return SparkSearcher(corpus, encoder=HashingEncoder(dim=8),
+                             measurement="cos").train()
 
     searcher = BENCH_MEMO.get(_memo_key(spark, sf_dir, "searcher_hash8"),
                               _build)

@@ -13,18 +13,20 @@ constructor keeps the reference's two modes:
    already has a vector column; ``item_list`` becomes an explicit key column
    (``vec_col`` + ``key_col``) instead of positional alignment.
 
-``train()`` materializes the encoded/normalized corpus and builds the index
-(the analog of FAISS train+add, faiss_searcher.py:116-125). For an exact
-(flat) ``cos`` / ``ip`` / ``l2`` searcher whose filled corpus cache Spark
-measures within ``knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES`` — where
-``strategy="auto"`` picks the blocked GEMM kernel anyway — the flat index
-is the kernel's key-sorted corpus matrix and payload columns, collected
-once (validating the vectors on the driver) and broadcast, held until
-``close()`` like FAISS's
-``IndexFlat``; ``add_items`` merges new rows into it. ``search()`` answers batched top-K
-queries (faiss_searcher.py:161-187) including the multi-K dict form; a
-holding searcher ranks a small search on the driver against that matrix
-and returns a local frame, as the reference returns a pandas frame. A
+``train()`` materializes the encoded/normalized corpus, checks its vector
+shapes (faiss_searcher.py:38-40, 67-68) and builds the index (the analog of
+FAISS train+add, faiss_searcher.py:116-125). For an exact (flat) ``cos`` /
+``ip`` / ``l2`` searcher whose filled corpus cache Spark measures within
+``knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES`` — where ``knn_join``'s ``"auto"``
+plan picks the blocked GEMM kernel anyway — the flat index is the
+kernel's key-sorted corpus matrix and payload columns, collected once and
+broadcast, held until ``close()`` like FAISS's ``IndexFlat``;
+``add_items`` merges new rows into it. ``search()`` answers batched top-K
+queries (faiss_searcher.py:161-187) including the multi-K dict form, with
+the reference's arguments only: the trained state picks the plan. A
+holding searcher ranks a search whose rows fit on the driver against
+that matrix and returns a local frame, as the reference returns a pandas
+frame. A
 list target on an encoder searcher is encoded once on the driver, as the
 reference encodes its queries: the same encode / whiten / normalize
 arithmetic as the Spark path, bit for bit, with no query job; an indexed
@@ -42,7 +44,7 @@ import functools
 import json
 import os
 import re
-from typing import Any, Iterable, Mapping, Sequence, Union
+from typing import Iterable, Mapping, Sequence, Union
 
 import numpy as np
 from pyspark.errors import PySparkException
@@ -67,6 +69,9 @@ _VEC = "__vec"
 
 #: how a row that encodes to the zero vector is reported under norm_vec
 _ZERO_NORM = "encodes to the zero vector, which cannot be L2-normalized"
+#: how a NULL query text is reported
+_NULL_TEXT = ("query NULL has no text to encode; drop or fill the NULL "
+              "query texts")
 
 
 @functools.cache
@@ -100,6 +105,13 @@ def _zero_rows_named():
                 or not msg.endswith(_ZERO_NORM):
             raise
         raise ValueError(msg) from None
+
+
+def _distinct_texts(target) -> list:
+    """A list target's texts as strings, each once and in order; a NULL
+    stays None, for :meth:`SparkSearcher._encode_texts` to refuse."""
+    return list(dict.fromkeys(None if t is None else str(t)
+                              for t in target))
 
 
 class SparkSearcher:
@@ -197,7 +209,7 @@ class SparkSearcher:
 
     # -- train (faiss_searcher.py:116-125) ------------------------------------
 
-    def train(self, validate: bool = True) -> "SparkSearcher":
+    def train(self) -> "SparkSearcher":
         # a retrain drops the old matrix without destroying it: results of
         # earlier searches still read its broadcasts (Spark's
         # ContextCleaner frees them once no plan does)
@@ -205,33 +217,24 @@ class SparkSearcher:
         self.corpus = self._vectorize(
             self.items, self.item_col, self.vec_col).cache()
         with _zero_rows_named():
-            self._build_index(validate, dim=None)
+            self._build_index(dim=None)
         return self
 
-    def _build_index(self, validate: bool, dim: int | None) -> None:
+    def _build_index(self, dim: int | None) -> None:
         """Build what search() ranks against from the cached corpus (FAISS
-        train+add). The first job fills the corpus cache: validate_vectors'
-        aggregate, or a count when ``validate`` is False and the searcher
-        may hold its matrix. The hold check then reads the size Spark
-        measured for the cache, which ``strategy="auto"`` routes on too,
-        not the plan's guess (that takes an encoder's output array for one
-        element). A holdable corpus is collected once into the held matrix
-        (None when empty); the collect checks the vectors on the driver,
-        so NULL / ragged / wrong-dim rows raise even with
-        ``validate=False``: they cannot form a matrix. Then the
-        index_param structure is fitted."""
-        may_hold = self._gemm_flat()
-        if validate:
-            self.vec_dim = validate_vectors(self.corpus, _VEC, dim)
-        elif may_hold:
-            _knn._fill_cache(self.corpus)
-        if may_hold and self._within_hold_bound(self.corpus):
+        train+add). The first job, validate_vectors' aggregate, checks
+        the vectors (at ``dim`` when given) and fills the corpus cache.
+        The hold check then reads the size Spark measured for the cache,
+        which ``knn_join``'s ``"auto"`` plan routes on too, not the
+        plan's guess (that takes an encoder's output array for one
+        element). A holdable corpus is collected once into the held
+        matrix. Then the index_param structure is fitted."""
+        self.vec_dim = validate_vectors(self.corpus, _VEC, dim)
+        if self._gemm_flat() and self._within_hold_bound(self.corpus):
             self._held = BlockedCorpus.collect(
                 self.corpus, item_key_col=self.key_col, item_vec_col=_VEC,
                 metric=self._kernel_metric(), normalize=False, dim=dim,
                 payload_cols=self._payload_cols())
-        if self._held is not None:
-            self.vec_dim = self._held.dim
         self._fit_index()
 
     def _payload_cols(self) -> list:
@@ -254,20 +257,23 @@ class SparkSearcher:
     @staticmethod
     def _within_hold_bound(corpus: DataFrame) -> bool:
         """Whether Catalyst's estimate of ``corpus`` is within the bound
-        under which ``strategy="auto"`` picks blocked whatever the query
-        size (knn._auto_strategy). Call it once ``corpus``'s cache is
+        under which ``knn_join``'s ``"auto"`` plan picks blocked whatever
+        the query size (knn._auto_strategy). Call it once ``corpus``'s cache is
         filled: Spark memoizes a frame's estimate on first use."""
         size = _knn._plan_size_bytes(corpus)
         return size is not None and size <= _knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES
 
     def _fit_index(self) -> None:
         """Fit the structure the index_param spec names over the cached
-        corpus. Its vectors are already normalized / whitened
-        (_vectorize), so the index metric is 'ip' for cosine, the same
-        rewrite search() does."""
+        corpus, less a raw-vector searcher's input vector column: the
+        index keeps the normalized / whitened ``_VEC`` (_vectorize) and
+        no search reads the raw one. The index metric is 'ip' for
+        cosine, the same rewrite search() does."""
         if self._new_index is not None:
+            items = self.corpus.select(
+                *[c for c in self.corpus.columns if c != self.vec_col])
             self._index = self._new_index().fit(
-                self.corpus, item_key_col=self.key_col, item_vec_col=_VEC)
+                items, item_key_col=self.key_col, item_vec_col=_VEC)
 
     def add_items(self, items: DataFrame, validate: bool = False) -> "SparkSearcher":
         """Append new items to a trained corpus — the analog of FAISS
@@ -349,35 +355,38 @@ class SparkSearcher:
         topK: Union[int, Iterable[int]] = 10,
         keep_rank_no: bool = False,
         score_scale: int | None = None,
-        strategy: str = "auto",
-        **strategy_kwargs: Any,
     ) -> Union[DataFrame, Mapping[int, DataFrame]]:
         """Top-``topK`` corpus items per query, ``topK`` an int or a list
         (one frame per K). Each result row carries its own corpus row's
-        payload columns.
+        payload columns. The arguments are the reference's
+        (faiss_searcher.py:161): what ``train()`` built picks the plan.
 
-        On a searcher that holds its corpus matrix, ``"auto"`` and
-        ``"blocked"`` rank on the driver, as the reference does
-        (faiss_searcher.py:161-187): a list target, or a batch frame
-        with a size estimate, whose driver work at the largest K (its
-        query matrix and ranked rows) is within
-        ``knn.DRIVER_RANK_CAP_BYTES`` is collected (a frame: one Spark
-        job, run here), prepared with the Spark encode's arithmetic and
-        folded against the held matrix, and the result is a local frame
-        — reading it runs no job and reads no broadcast, so it outlives
-        ``close()``. A list ``topK`` ranks once. A larger query set, a
-        frame of unknown size or a stream ranks in Spark against the
-        held broadcasts instead
-        (``knn.blocked_rank``): building that result runs no job, and it
-        must be read before ``close()`` destroys them (``add_items`` and
-        a retrain leave them be). Bad query vectors (NULL, ragged, wrong
-        dim; under ``cos`` one that normalizes to zero) raise
-        ``ValueError`` inside a driver-ranked search."""
+        - A searcher that holds its corpus matrix ranks on the driver, as
+          the reference does (faiss_searcher.py:161-187): a list target,
+          or a batch frame, whose driver work at the largest K (its
+          query matrix and ranked rows) is within
+          ``knn.DRIVER_RANK_CAP_BYTES`` is collected (a frame: one Spark
+          job, run here, that reads one row past the most queries that
+          fit), prepared with the Spark encode's arithmetic and folded
+          against the held matrix, and the result is a local frame —
+          reading it runs no job and reads no broadcast, so it outlives
+          ``close()``. A list ``topK`` ranks once. A larger query set or
+          a stream ranks in Spark against the held broadcasts instead
+          (``knn.blocked_rank``): building that result runs no job, and
+          it must be read before ``close()`` destroys them
+          (``add_items`` and a retrain leave them be). Bad query vectors
+          (NULL, ragged, wrong dim; under ``cos`` one that normalizes to
+          zero) raise ``ValueError`` inside a driver-ranked search.
+        - An index_param searcher ranks through its index.
+        - Any other searcher ranks through ``knn_join(strategy="auto")``:
+          a GEMM kernel for ``cos`` / ``ip`` / ``l2``, the catalyst plan
+          for the other metrics.
+
+        A NULL query text raises ``ValueError`` wherever the driver
+        prepares the queries (a list target; a driver-ranked frame)."""
         corpus = self._require_trained()
         ks = [topK] if isinstance(topK, int) else _knn._sorted_ks(topK)
-        # the held matrix serves "auto" and "blocked" without knobs
-        held = (self._held if strategy in ("auto", "blocked")
-                and not strategy_kwargs else None)
+        held = self._held
         if held is not None:
             prepared = self._driver_queries(target, held, ks[-1])
             if prepared is not None:
@@ -389,57 +398,34 @@ class SparkSearcher:
                           for k, df in frames.items()}
                 return frames[topK] if isinstance(topK, int) else frames
         queries = self._prepare_queries(target)
-        if self._index is None:
-            queries = _knn._query_frame(queries, corpus.sparkSession,
-                                        "source_item", _VEC)
-
         payload = self._payload_cols()
         if self._index is not None:
-            # index_param overrides the exact-strategy matrix (reference
-            # semantics: every search uses the built index). Refuse a
-            # conflicting explicit strategy rather than silently ignore
-            # it; score_scale still applies to the returned scores.
-            if strategy != "auto" or strategy_kwargs:
-                raise ValueError(
-                    f"strategy={strategy!r} conflicts with index_param="
-                    f"{self.index_param!r} — an indexed searcher routes "
-                    "every search through its index")
-
+            # reference semantics: every search of an index_param
+            # searcher uses the built index; score_scale still applies
             def rank_at(k: int) -> DataFrame:
                 return self._rank_indexed(queries, k, payload, score_scale)
-        elif held is not None:
-            # a target too large (or too unknown) to collect: rank it in
-            # Spark against the held broadcasts, no join and no job here
-            def rank_at(k: int) -> DataFrame:
-                return blocked_rank(
-                    queries, held, k=k, query_vec_col=_VEC,
-                    query_item_col="source_item", keep_rank_no=True,
-                    score_scale=score_scale)
         else:
-            kwargs: dict[str, Any] = dict(
-                metric=self._kernel_metric(),
-                query_vec_col=_VEC,
-                item_vec_col=_VEC,
-                query_item_col="source_item",
-                item_key_col=self.key_col,
-                payload_cols=payload,
-                # corpus vectors were already normalized at train time
-                # (O3); don't re-normalize inside the join.
-                normalize=False,
-                p=self.p,
-                score_scale=score_scale,
-                # "auto" scores cos/ip/l2 with a BLAS GEMM kernel picked
-                # from the corpus size estimate and keeps the catalyst plan
-                # for the other metrics (knn_join docstring)
-                strategy=strategy,
-                # tuning knobs forwarded to the chosen kernel (e.g. the
-                # grid strategy's n_query_blocks / n_item_shards)
-                **strategy_kwargs,
-            )
-
-            def rank_at(k: int) -> DataFrame:
-                return knn_join(queries, corpus, k=k, keep_rank_no=True,
-                                **kwargs)
+            queries = _knn._query_frame(queries, corpus.sparkSession,
+                                        "source_item", _VEC)
+            if held is not None:
+                # a target too large to collect: rank it in Spark against
+                # the held broadcasts, no join and no job here
+                def rank_at(k: int) -> DataFrame:
+                    return blocked_rank(
+                        queries, held, k=k, query_vec_col=_VEC,
+                        query_item_col="source_item", keep_rank_no=True,
+                        score_scale=score_scale)
+            else:
+                def rank_at(k: int) -> DataFrame:
+                    # corpus vectors were already normalized at train
+                    # time (O3); don't re-normalize inside the join
+                    return knn_join(
+                        queries, corpus, k=k, keep_rank_no=True,
+                        metric=self._kernel_metric(), query_vec_col=_VEC,
+                        item_vec_col=_VEC, query_item_col="source_item",
+                        item_key_col=self.key_col, payload_cols=payload,
+                        normalize=False, p=self.p, score_scale=score_scale,
+                        strategy="auto")
 
         def finish(res: DataFrame) -> DataFrame:
             return self._post(res if keep_rank_no else res.drop("rank_no"),
@@ -499,20 +485,20 @@ class SparkSearcher:
         """A List[str] target encoded on the driver (:meth:`_encode_texts`).
 
         A list target's text is its query id, so a repeated text is the
-        same query and is searched once: every strategy then returns k
-        rows per distinct target (the kernels rank each query ROW, the
+        same query and is searched once: every plan then returns k rows
+        per distinct target (the kernels rank each query ROW, the
         catalyst plan each id, so repeated ids would split them). A
         raw-vector searcher has no encoder for a list."""
         if self.encoder is None:
             raise TypeError("a list target needs an encoder; pass a "
                             "DataFrame with the vector column")
-        return self._encode_texts(list(dict.fromkeys(map(str, target))))
+        return self._encode_texts(_distinct_texts(target))
 
     def _driver_queries(self, target, held: BlockedCorpus, k: int):
         """``(DriverQueries, id type)`` of a search ranked on the driver,
-        or None for a target that stays in Spark: a stream, a frame whose
-        size estimate is unknown, or a query set whose driver work at
-        ``k`` (``held.driver_bytes``) is over ``knn.DRIVER_RANK_CAP_BYTES``.
+        or None for a target that stays in Spark: a stream, or a query
+        set whose driver work at ``k`` (``held.driver_bytes``) is over
+        ``knn.DRIVER_RANK_CAP_BYTES``.
 
         A list target is :meth:`_list_queries`'s. A batch frame is one
         Arrow collect of what the encode reads: in encoder mode its text
@@ -522,12 +508,13 @@ class SparkSearcher:
         (NULL, ragged, wrong dim), then :meth:`_finish_queries`. No
         Spark-side encode runs: the driver does the same arithmetic.
         The collect stops one row past the most queries that fit, so no
-        more than that lands on the driver; a frame found too large
-        then is read again by the Spark path. (The frame's size estimate
-        cannot bound its rows: a filter keeps its input's estimate.)"""
+        more than that lands on the driver, whatever the frame's size
+        estimate says or whether it has one (a filter keeps its input's
+        estimate; a frame of local rows has none); a frame found too
+        large then is read again by the Spark path."""
         most = _knn.DRIVER_RANK_CAP_BYTES // held.driver_bytes(1, k)
         if not isinstance(target, DataFrame):
-            texts = list(dict.fromkeys(map(str, target)))
+            texts = _distinct_texts(target)
             if self.encoder is not None and len(texts) > most:
                 return None
             return self._list_queries(texts), StringType()
@@ -536,8 +523,6 @@ class SparkSearcher:
         src_col, q_text, q_vec = self._query_cols(target)
         proj = _knn._project(target, [q_text] if q_text is not None
                              else [src_col, q_vec])
-        if _knn._plan_size_bytes(proj) is None:
-            return None
         q_type = proj.schema[src_col].dataType
         proj = proj.limit(most + 1)
         if q_text is not None:
@@ -556,9 +541,14 @@ class SparkSearcher:
     def _encode_texts(self, texts: list) -> DriverQueries:
         """:meth:`_vectorize`'s steps on the driver, with its arithmetic:
         the encoder's float32 batch (``encode_batch``), then
-        :meth:`_finish_queries`."""
+        :meth:`_finish_queries`. A text is its query's id, so a NULL
+        text is the query NULL: it has nothing to encode (an encoder
+        would encode some stand-in, such as the string "None") and
+        raises ``ValueError``."""
         if not texts:
             return DriverQueries([], np.empty((0, 0), dtype=np.float32))
+        if None in texts:
+            raise ValueError(_NULL_TEXT)
         return self._finish_queries(texts, encode_batch(self.encoder, texts))
 
     def _finish_queries(self, ids, mat) -> DriverQueries:
@@ -777,9 +767,9 @@ class SparkSearcher:
             index_kwargs=meta.get("index_kwargs"),
         )
         searcher.corpus = corpus.cache()
-        searcher.vec_dim = meta["vec_dim"]
-        # the held matrix and the ANN structure rebuild deterministically
-        # from the stored corpus (seeded k-means / Lloyd) — "data +
-        # config" persistence, same policy as the rest of the searcher
-        searcher._build_index(validate=False, dim=searcher.vec_dim)
+        # the stored corpus is checked at the saved dim, then the held
+        # matrix and the ANN structure rebuild deterministically from it
+        # (seeded k-means / Lloyd) — "data + config" persistence, same
+        # policy as the rest of the searcher
+        searcher._build_index(dim=meta["vec_dim"])
         return searcher

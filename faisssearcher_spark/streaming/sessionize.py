@@ -19,6 +19,11 @@ Scale notes: state lives in the executor state store keyed by user —
 the shuffle is the same hash-by-key exchange as the batch window, and a
 1000-executor run partitions state horizontally. Arrow moves each
 micro-batch's rows per key in vectorized batches.
+
+Times cross the Python boundary as epoch microseconds (``unix_micros``
+in, ``timestamp_micros`` out), so no pandas timestamp conversion and no
+session time zone touches them, and the gap is measured in elapsed time,
+as the batch twin measures it.
 """
 
 from __future__ import annotations
@@ -29,19 +34,34 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (DoubleType, LongType, StructField, StructType,
-                               TimestampType)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-SESSION_SCHEMA = StructType([
+#: what the state function emits per closed session; the bounds are epoch
+#: microseconds, made timestamps in Spark (session_start / session_end)
+_CLOSED_SCHEMA = StructType([
     StructField("user_id", LongType()),
-    StructField("session_start", TimestampType()),
-    StructField("session_end", TimestampType()),
+    StructField("start_us", LongType()),
+    StructField("end_us", LongType()),
     StructField("n_events", LongType()),
     StructField("sum_value", DoubleType()),
 ])
 
 # state: (session_start_epoch_us, last_ts_epoch_us, n_events, sum_value)
 _STATE_SCHEMA = ("start_us long, last_us long, n long, sum_value double")
+
+
+def _closed_frame(user: int, closed: list) -> pd.DataFrame:
+    """The rows of ``user``'s closed sessions ``(start_us, last_us, n,
+    sum_value)``, as object columns of the Python values
+    ``_CLOSED_SCHEMA`` takes. applyInPandasWithState's serializer
+    concatenates the emitted frames with an all-None object frame (its
+    padding rows); a typed column (float64, datetime64) would then take
+    the dtype pandas picks from the other frames alone, a rule pandas
+    deprecates (``FutureWarning``) in favour of object. Object columns
+    concatenate to object under either rule."""
+    return pd.DataFrame([(user, start, last, n, round(sv, 2))
+                         for start, last, n, sv in closed],
+                        columns=_CLOSED_SCHEMA.names, dtype=object)
 
 
 def sessionize_stream(stream: DataFrame, *, user_col: str = "user_id",
@@ -70,10 +90,9 @@ def sessionize_stream(stream: DataFrame, *, user_col: str = "user_id",
                 state.remove()
         else:
             rows = pd.concat(list(pdfs), ignore_index=True)
-            rows = rows.sort_values(ts_col)
-            ts_us = rows[ts_col].astype("int64")  # pandas ts -> epoch ns
-            ts_us = (ts_us // 1000).tolist()
-            vals = rows[value_col].astype(float).tolist()
+            rows = rows.sort_values("ts_us")
+            ts_us = rows["ts_us"].tolist()
+            vals = rows["value"].astype(float).tolist()
 
             if state.exists:
                 start_us, last_us, n, sv = state.get
@@ -92,23 +111,22 @@ def sessionize_stream(stream: DataFrame, *, user_col: str = "user_id",
             state.setTimeoutTimestamp(last_us // 1000 + gap_minutes * 60 * 1000)
 
         if closed:
-            yield pd.DataFrame({
-                "user_id": [user] * len(closed),
-                "session_start": [pd.Timestamp(c[0], unit="us") for c in closed],
-                "session_end": [pd.Timestamp(c[1], unit="us") for c in closed],
-                "n_events": [c[2] for c in closed],
-                "sum_value": [round(c[3], 2) for c in closed],
-            })
+            yield _closed_frame(user, closed)
 
     return (
-        stream.select(F.col(user_col).alias("user_id"),
-                      F.col(ts_col), F.col(value_col))
+        stream.select(F.col(user_col).alias("user_id"), F.col(ts_col),
+                      F.unix_micros(ts_col).alias("ts_us"),
+                      F.col(value_col).alias("value"))
         .withWatermark(ts_col, watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
             _update,
-            outputStructType=SESSION_SCHEMA,
+            outputStructType=_CLOSED_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout)
+        .select("user_id",
+                F.timestamp_micros("start_us").alias("session_start"),
+                F.timestamp_micros("end_us").alias("session_end"),
+                "n_events", "sum_value")
     )

@@ -6,7 +6,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from faisssearcher_spark.operators import dedup
+from faisssearcher_spark.operators import dedup, knn
 
 
 @pytest.fixture(scope="module")
@@ -204,7 +204,7 @@ class TestEmbeddingCosine:
     def test_auto_dispatch_small_runs_blocked(self, embeddings, monkeypatch):
         """auto → blocked below the cap: the plan carries the Arrow
         MapInPandas scoring kernel."""
-        monkeypatch.setattr(dedup, "_plan_size_bytes", lambda df: 1 << 20)
+        monkeypatch.setattr(knn, "_plan_size_bytes", lambda df: 1 << 20)
         out = dedup.embedding_cosine_pairs(embeddings, threshold=0.45,
                                            score_scale=4)
         assert "MapInPandas" in out._jdf.queryExecution() \
@@ -222,8 +222,8 @@ class TestEmbeddingCosine:
             return real(self)
 
         monkeypatch.setattr(dedup.DataFrame, "toPandas", spy)
-        for est in (dedup.EMBED_MEMORY_CAP_BYTES + 1, None):
-            monkeypatch.setattr(dedup, "_plan_size_bytes",
+        for est in (knn.ITEMS_MEMORY_CAP_BYTES + 1, None):
+            monkeypatch.setattr(knn, "_plan_size_bytes",
                                 lambda df, e=est: e)
             out = dedup.embedding_cosine_pairs(embeddings, threshold=0.45,
                                                score_scale=4)
@@ -238,8 +238,8 @@ class TestEmbeddingCosine:
                  for r in dedup.embedding_cosine_pairs(
                      embeddings, threshold=0.45, score_scale=4,
                      strategy="catalyst").collect()}
-        for est in (1 << 20, dedup.EMBED_MEMORY_CAP_BYTES + 1):
-            monkeypatch.setattr(dedup, "_plan_size_bytes",
+        for est in (1 << 20, knn.ITEMS_MEMORY_CAP_BYTES + 1):
+            monkeypatch.setattr(knn, "_plan_size_bytes",
                                 lambda df, e=est: e)
             got = {(r["id_a"], r["id_b"]): r["cos_sim"]
                    for r in dedup.embedding_cosine_pairs(

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from faisssearcher_spark.encoders import HashingEncoder
 from faisssearcher_spark.operators import ann
+from faisssearcher_spark.operators import knn as knn_mod
 from faisssearcher_spark.searcher import SparkSearcher
 
 
@@ -186,10 +187,10 @@ class TestAddItems:
         rest = corpus.subtract(first)
 
         inc = SparkSearcher(first, encoder=HashingEncoder(dim=8),
-                            measurement="cos").train(validate=False)
+                            measurement="cos").train()
         inc.add_items(rest)
         full = SparkSearcher(corpus, encoder=HashingEncoder(dim=8),
-                             measurement="cos").train(validate=False)
+                             measurement="cos").train()
 
         q = ["spark join merge"]
         a = inc.search(q, topK=5, keep_rank_no=True, score_scale=4)
@@ -212,7 +213,7 @@ class TestAddItems:
         corpus in executor storage."""
         corpus = documents.select("text", "lang")
         s = SparkSearcher(corpus.limit(20), encoder=HashingEncoder(dim=8),
-                          measurement="cos").train(validate=False)
+                          measurement="cos").train()
         old = s.corpus
         assert old.storageLevel.useMemory
         s.add_items(corpus.limit(30).subtract(corpus.limit(20)))
@@ -256,7 +257,7 @@ class TestCombinedKwargs:
 
 
 class TestAutoStrategyThroughSearcher:
-    """search() defaults to strategy='auto': exact cos/ip/l2 searches are
+    """search() takes no plan argument: exact cos/ip/l2 searches are
     scored by a BLAS GEMM kernel, every other metric by the catalyst
     plan, and the result is the catalyst plan's either way."""
 
@@ -268,7 +269,6 @@ class TestAutoStrategyThroughSearcher:
         """The held matrix ranks a small target on the driver (a local
         result); a frame over the query cap ranks in Spark against its
         broadcasts (the blocked kernel). Neither is the catalyst join."""
-        from faisssearcher_spark.operators import knn as knn_mod
         from faisssearcher_spark.plans import inspect
 
         frame = _sized(spark, [(t,) for t in self.QUERIES], "text string")
@@ -286,8 +286,7 @@ class TestAutoStrategyThroughSearcher:
         # the (score, key) tie-break decides rank_no and membership
         kwargs = dict(topK=5, keep_rank_no=True, score_scale=4)
         auto = doc_searcher.search(self.QUERIES, **kwargs).collect()
-        plan = doc_searcher.search(self.QUERIES, strategy="catalyst",
-                                   **kwargs).collect()
+        plan = _catalyst(doc_searcher, self.QUERIES, **kwargs).collect()
         assert sorted(map(tuple, auto)) == sorted(map(tuple, plan))
         # k distinct rows per distinct target on both paths
         assert len(auto) == 5 * len(set(self.QUERIES))
@@ -303,8 +302,8 @@ class TestAutoStrategyThroughSearcher:
         key = lambda r: (r["source_item"], r["rank_no"])
         auto = sorted(s.search(q, topK=5, keep_rank_no=True).collect(),
                       key=key)
-        plan = sorted(s.search(q, topK=5, keep_rank_no=True,
-                               strategy="catalyst").collect(), key=key)
+        plan = sorted(_catalyst(s, q, topK=5, keep_rank_no=True)
+                      .collect(), key=key)
         s.close()
         assert len(auto) == len(plan) == 30
         for a, b in zip(auto, plan):
@@ -322,17 +321,9 @@ class TestAutoStrategyThroughSearcher:
         q = embeddings.filter(F.col("vec_id") < 3)
         res = s.search(q, topK=4, keep_rank_no=True, score_scale=4)
         assert "InPandas" not in inspect.executed_plan(res)   # no kernel
-        plan = s.search(q, topK=4, keep_rank_no=True, score_scale=4,
-                        strategy="catalyst")
+        plan = _catalyst(s, q, topK=4, keep_rank_no=True, score_scale=4)
         assert sorted(map(tuple, res.collect())) \
             == sorted(map(tuple, plan.collect()))
-        s.close()
-
-    def test_indexed_searcher_refuses_explicit_catalyst(self, embeddings):
-        s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
-                          measurement="cos", index_param="IVF8").train()
-        with pytest.raises(ValueError, match="conflicts with index_param"):
-            s.search(embeddings.limit(1), topK=2, strategy="catalyst")
         s.close()
 
 
@@ -581,6 +572,29 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _catalyst(s, target, topK, keep_rank_no=False, score_scale=None):
+    """What ``s.search(target, topK, ...)`` returns through the catalyst
+    plan: ``knn_join(strategy="catalyst")`` over the searcher's corpus,
+    its queries prepared and its results finished as search() does."""
+    queries = knn_mod._query_frame(s._prepare_queries(target),
+                                   s.corpus.sparkSession, "source_item",
+                                   "__vec")
+
+    def rank(k):
+        res = knn_mod.knn_join(
+            queries, s.corpus, k=k, keep_rank_no=True,
+            metric=s._kernel_metric(), query_vec_col="__vec",
+            item_vec_col="__vec", query_item_col="source_item",
+            item_key_col=s.key_col, payload_cols=s._payload_cols(),
+            normalize=False, p=s.p, score_scale=score_scale,
+            strategy="catalyst")
+        return s._post(res if keep_rank_no else res.drop("rank_no"),
+                       keep_rank_no)
+
+    return rank(topK) if isinstance(topK, int) else {k: rank(k)
+                                                     for k in topK}
+
+
 def _sized(spark, rows, ddl: str):
     """A frame of local rows whose size Catalyst knows (a LocalRelation
     built from Arrow). ``createDataFrame`` of a Python list is an RDD
@@ -683,7 +697,7 @@ class TestHeldCorpus:
 
     def assert_catalyst_parity(self, s, target, topK):
         held = s.search(target, topK=topK, **self.KW)
-        plan = s.search(target, topK=topK, strategy="catalyst", **self.KW)
+        plan = _catalyst(s, target, topK, **self.KW)
         if isinstance(topK, int):
             held, plan = {topK: held}, {topK: plan}
         assert sorted(held) == sorted(plan)
@@ -745,7 +759,7 @@ class TestHeldCorpus:
         q = embeddings.filter(F.col("vec_id") < 3)
         before = s.search(q, topK=4, **self.KW)
         multi = s.search(q, topK=[1, 4], **self.KW)
-        expect = _rows(s.search(q, topK=4, strategy="catalyst", **self.KW))
+        expect = _rows(_catalyst(s, q, 4, **self.KW))
         old = s._held
         s.add_items(embeddings.filter(F.col("vec_id") >= 300))
         s.train()
@@ -773,7 +787,6 @@ class TestHeldCorpus:
         s.close()
 
     def test_add_items_past_bound_releases(self, embeddings, monkeypatch):
-        from faisssearcher_spark.operators import knn as knn_mod
 
         s = SparkSearcher(embeddings.filter(F.col("vec_id") < 300),
                           vec_col="embedding", key_col="vec_id",
@@ -794,19 +807,17 @@ class TestHeldCorpus:
         until its cache is filled. The hold check must read the filled
         cache: here the plan guess is within the bound, the matrix and
         the measured cache are not."""
-        from faisssearcher_spark.operators import knn as knn_mod
 
         items = documents.select("text", "lang")
         bound = items.count() * 512 * 2     # a quarter of the matrix
         monkeypatch.setattr(knn_mod, "BLOCKED_SMALL_QUERY_ITEMS_BYTES", bound)
-        for validate in (True, False):
-            s = SparkSearcher(items, encoder=HashingEncoder(dim=512))
-            guess = s._vectorize(items, "text", None)
-            assert knn_mod._plan_size_bytes(guess) < bound
-            s.train(validate=validate)
-            assert s._held is None
-            assert knn_mod._plan_size_bytes(s.corpus) > bound
-            s.close()
+        s = SparkSearcher(items, encoder=HashingEncoder(dim=512))
+        guess = s._vectorize(items, "text", None)
+        assert knn_mod._plan_size_bytes(guess) < bound
+        s.train()
+        assert s._held is None
+        assert knn_mod._plan_size_bytes(s.corpus) > bound
+        s.close()
 
     def test_save_load_holds(self, spark, embeddings, tmp_path):
         s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
@@ -831,37 +842,26 @@ class TestHeldCorpus:
 
     @pytest.mark.parametrize("case", sorted(BAD_CORPORA))
     def test_train_errors_match_unheld_path(self, spark, monkeypatch, case):
-        """train(validate=False) on a holdable corpus checks the vectors
-        in its driver collect; it must raise exactly what validate_vectors
-        raises (train() on a corpus forced over the bound). An empty
-        corpus holds nothing, and raises only when validated. Local rows
-        have no size estimate (treated as large), so both are forced."""
-        from faisssearcher_spark.operators import knn as knn_mod
-
+        """train() on a holdable corpus raises exactly what it raises on
+        a corpus over the bound: validate_vectors' errors, an empty
+        corpus included. Local rows have no size estimate (treated as
+        large), so both sizes are forced."""
         items = spark.createDataFrame(self.BAD_CORPORA[case],
                                       "k long, v array<float>")
 
-        def train_error(size: int, validate: bool) -> str | None:
+        def train_error(size: int) -> str:
             monkeypatch.setattr(knn_mod, "_plan_size_bytes", lambda df: size)
             s = SparkSearcher(items, vec_col="v", key_col="k")
-            try:
-                s.train(validate=validate)
-            except ValueError as err:
-                return str(err)
-            assert s._held is None
+            with pytest.raises(ValueError) as err:
+                s.train()
             s.close()
-            return None
+            return str(err.value)
 
         over = knn_mod.BLOCKED_SMALL_QUERY_ITEMS_BYTES + 1
-        expected = train_error(over, validate=True)
-        assert expected is not None
-        assert train_error(1 << 10, validate=True) == expected
-        assert train_error(1 << 10, validate=False) == (
-            None if case == "empty" else expected)
+        assert train_error(1 << 10) == train_error(over)
 
     def test_over_bound_keeps_knn_join_routing(self, embeddings,
                                                monkeypatch):
-        from faisssearcher_spark.operators import knn as knn_mod
 
         monkeypatch.setattr(knn_mod, "_plan_size_bytes",
                             lambda df: knn_mod.BLOCKED_SMALL_QUERY_ITEMS_BYTES
@@ -930,12 +930,13 @@ class TestHeldCorpus:
     def test_fallback_targets_equal_driver_rows(self, spark, embeddings,
                                                 monkeypatch, tmp_path,
                                                 case, measurement):
-        """A frame over DRIVER_RANK_CAP_BYTES, of unknown size, or a
-        stream ranks in Spark against the held broadcasts (MapInPandas),
-        and returns the rows the driver path returns, sim_val bits
-        included (on a BLAS the GEMM padding makes batch-invariant, see
-        TestQueryBatchInvariance)."""
-        from faisssearcher_spark.operators import knn as knn_mod
+        """A frame over DRIVER_RANK_CAP_BYTES or a stream ranks in Spark
+        against the held broadcasts (MapInPandas), and returns the rows
+        the driver path returns, sim_val bits included (on a BLAS the
+        GEMM padding makes batch-invariant, see
+        TestQueryBatchInvariance). A frame of local rows, whose size
+        Catalyst does not know, ranks on the driver like any frame whose
+        rows fit (LocalTableScan)."""
         from faisssearcher_spark.plans import inspect
 
         s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
@@ -946,11 +947,15 @@ class TestHeldCorpus:
             with monkeypatch.context() as mp:
                 if case == "over_cap":
                     mp.setattr(knn_mod, "DRIVER_RANK_CAP_BYTES", 0)
-                elif case == "unknown_size":
-                    mp.setattr(knn_mod, "_plan_size_bytes", lambda df: None)
-                if case != "streaming":
                     res = s.search(q, topK=5, **kw)
                     assert "MapInPandas" in inspect.executed_plan(res)
+                    assert _rows(res) == expect
+                    continue
+                if case == "unknown_size":
+                    local = spark.createDataFrame(q.collect(), q.schema)
+                    assert knn_mod._plan_size_bytes(local) is None
+                    res = s.search(local, topK=5, **kw)
+                    assert "LocalTableScan" in inspect.executed_plan(res)
                     assert _rows(res) == expect
                     continue
                 path = str(tmp_path / f"q{len(kw)}")
@@ -975,7 +980,6 @@ class TestHeldCorpus:
         ranks on the driver whatever the estimate, and one over it — a
         larger max(K), or one text more than fits — ranks in Spark
         (MapInPandas) and returns the driver path's rows."""
-        from faisssearcher_spark.operators import knn as knn_mod
         from faisssearcher_spark.plans import inspect
 
         n = 6
@@ -1045,7 +1049,6 @@ class TestAddItemsValidation:
     def test_bad_batch_leaves_searcher_unchanged(self, spark, embeddings,
                                                  monkeypatch, index_param,
                                                  case):
-        from faisssearcher_spark.operators import knn as knn_mod
 
         # local rows have no size estimate: pin one so that the union
         # stays within the hold bound
@@ -1281,6 +1284,49 @@ class TestBadQueriesRaiseInSearch:
         vec.close()
 
 
+    @pytest.mark.parametrize("index_param", [None, "IVF4"],
+                             ids=["held", "indexed"])
+    def test_null_text_raises(self, spark, documents, index_param):
+        """A NULL query text is refused where the driver prepares the
+        queries (a list target; a frame the held matrix ranks on the
+        driver), not encoded as the string "None"."""
+        s = SparkSearcher(documents.select("text", "lang"),
+                          encoder=HashingEncoder(dim=8),
+                          index_param=index_param).train()
+        targets = [["spark join", None]]
+        if index_param is None:
+            targets.append(_sized(spark, [("spark join",), (None,)],
+                                  "text string"))
+        for target in targets:
+            with pytest.raises(ValueError, match="query NULL has no text "
+                                                 "to encode"):
+                s.search(target, topK=3)
+        s.close()
+
+
+@pytest.mark.parametrize("spec", ["IVF4", "HNSW8"])
+def test_index_leaves_out_raw_vectors(embeddings, spec):
+    """A raw-vector searcher's index stores the prepared vectors only:
+    its table has no copy of the input vector column, and it searches
+    to the rows an index over the whole corpus returns."""
+    s = SparkSearcher(embeddings, vec_col="embedding", key_col="vec_id",
+                      measurement="cos", index_param=spec).train()
+
+    def table():
+        return s._index.graph if spec.startswith("HNSW") else s._index._items
+
+    assert "embedding" not in table().columns and "label" in table().columns
+    q = embeddings.filter(F.col("vec_id") < 4)
+    got = _rows(s.search(q, topK=5, keep_rank_no=True))
+    lean, s._index = s._index, s._new_index().fit(
+        s.corpus, item_key_col="vec_id", item_vec_col="__vec")
+    lean.close()
+    assert "embedding" in table().columns
+    assert _rows(s.search(q, topK=5, keep_rank_no=True)) == got
+    assert len(got) == 20
+    s.close()
+
+
 class TestZeroNormRows:
     """Under cos (norm_vec) a text that encodes to the zero vector has no
     direction: the normalize step names its row in whatever job first
@@ -1292,12 +1338,9 @@ class TestZeroNormRows:
         return documents.select("text", F.col("doc_id").cast("long")) \
             .filter(F.col("doc_id") < 40)
 
-    @pytest.mark.parametrize("validate,index_param",
-                             [(True, None), (False, None),
-                              (False, "IVF8,PQ4")],
-                             ids=["validate", "no-validate", "indexed"])
-    def test_train_names_the_item(self, spark, documents, validate,
-                                  index_param):
+    @pytest.mark.parametrize("index_param", [None, "IVF8,PQ4"],
+                             ids=["flat", "indexed"])
+    def test_train_names_the_item(self, spark, documents, index_param):
         corpus = self._docs(documents).unionByName(spark.createDataFrame(
             [("", 10_000)], "text string, doc_id long"))
         s = SparkSearcher(corpus, encoder=HashingEncoder(dim=8),
@@ -1305,7 +1348,7 @@ class TestZeroNormRows:
         try:
             with pytest.raises(ValueError, match="item '10000' encodes to "
                                                  "the zero vector"):
-                s.train(validate=validate)
+                s.train()
         finally:
             s.close()
 

@@ -295,6 +295,35 @@ class TestPlanInspection:
 
 
 class TestStatefulSessionize:
+    def test_emitted_frames_keep_their_dtypes(self, events_stream):
+        """applyInPandasWithState's serializer concatenates the emitted
+        frames with an all-None object frame (its padding rows). The
+        emitter's object columns keep their dtype through that, with no
+        pandas FutureWarning about all-NA entries, and Spark sees the
+        session schema."""
+        import warnings
+
+        import pandas as pd
+
+        from faisssearcher_spark.streaming import sessionize as ssz
+
+        frame = ssz._closed_frame(7, [(0, 60_000_000, 3, 1.234),
+                                      (10 ** 12, 10 ** 12, 1, 2.0)])
+        assert frame.dtypes.tolist() == [object] * 5
+        assert frame.values.tolist() == [[7, 0, 60_000_000, 3, 1.23],
+                                         [7, 10 ** 12, 10 ** 12, 1, 2.0]]
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", FutureWarning)
+            for pad_rows in (0, 2):
+                pad = pd.DataFrame(dict.fromkeys(frame.columns),
+                                   index=range(pad_rows))
+                merged = pd.concat([frame, frame, pad], ignore_index=True)
+                assert merged.dtypes.tolist() == [object] * 5
+        out = ssz.sessionize_stream(events_stream, gap_minutes=30)
+        assert out.schema.simpleString() == (
+            "struct<user_id:bigint,session_start:timestamp,"
+            "session_end:timestamp,n_events:bigint,sum_value:double>")
+
     def test_closed_sessions_match_batch(self, spark, sf_dir, events_stream):
         from faisssearcher_spark.operators import events as bev
         from faisssearcher_spark.sources.catalog import load_table

@@ -6,9 +6,11 @@ corpora of growing size, for each strategy named, in alternating order
 within one Spark session, and checks every result against a numpy
 top-k. ``held`` is the path a searcher within the hold bound takes: its
 ``train()`` collects the corpus once into the blocked kernel's matrix
-and every search ranks against it (the tool lifts the bound so every
-size holds); ``blocked`` / ``sharded`` / ``catalyst`` search a searcher
-that holds nothing through ``knn_join`` with that strategy. Prints one
+and every ``search()`` ranks against it (the tool lifts the bound so
+every size holds); ``blocked`` / ``sharded`` / ``catalyst`` train a
+searcher that holds nothing (the tool sets the bound below every size)
+and rank its prepared queries against its corpus with ``knn_join`` and
+that strategy, the call ``search()`` makes with ``"auto"``. Prints one
 JSON line per corpus size with the corpus's Catalyst size estimate (the
 number ``_auto_strategy`` and the hold bound see), the per-strategy
 median and quartiles of a round (train + searches) in seconds, and how
@@ -17,8 +19,9 @@ many rounds each strategy won.
     PYTHONPATH=. SPARK_GRAFT_CPUS=3 python tools/ab_knn_route.py \\
         --items 4096,32768,131072 --strategies held,sharded --searches 8
 
-``catalyst`` (the plan the facade used before its default became
-``auto``) scores in the interpreter: keep it to small ``--items``.
+``catalyst`` (the plan ``knn_join`` runs by default, and the facade
+ran before it routed through ``auto``) scores in the interpreter: keep
+it to small ``--items``.
 """
 from __future__ import annotations
 
@@ -76,6 +79,19 @@ def main() -> None:
 
     bound = knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES
 
+    def search(searcher, target, strategy):
+        """``searcher.search(target, topK=K)``, with ``knn_join``'s plan
+        forced to ``strategy`` unless the searcher holds its matrix."""
+        if strategy == "held":
+            return searcher.search(target, topK=K)
+        queries = knn._query_frame(searcher._prepare_queries(target),
+                                   spark, "source_item", "__vec")
+        return knn.knn_join(
+            queries, searcher.corpus, k=K, metric="ip",
+            query_vec_col="__vec", item_vec_col="__vec",
+            query_item_col="source_item", item_key_col="key",
+            payload_cols=[], normalize=False, strategy=strategy)
+
     def timed_round(cpath, target, strategy):
         """Seconds for train + the searches, and each search's rows."""
         held = strategy == "held"
@@ -85,10 +101,9 @@ def main() -> None:
         searcher = SparkSearcher(spark.read.parquet(cpath), vec_col="vec",
                                  key_col="key", measurement="cos").train()
         assert (searcher._held is not None) == held
-        results = [searcher.search(
-            target, topK=K, strategy="blocked" if held else strategy)
-            .select("source_item", "sim_item", "sim_val").collect()
-            for _ in range(args.searches)]
+        results = [search(searcher, target, strategy)
+                   .select("source_item", "sim_item", "sim_val").collect()
+                   for _ in range(args.searches)]
         seconds = time.perf_counter() - t0
         estimate = knn._plan_size_bytes(searcher.corpus)
         searcher.close()
