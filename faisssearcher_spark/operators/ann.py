@@ -37,9 +37,12 @@ FAISS drives every index through ``train`` / ``add`` / ``search`` /
 corpus rows with their codes), add_items, search (one scan, an exact
 re-score of a shortlist when refining, the rank window; payload rides
 the scan, so each result row carries its own corpus row's), save and
-load. Each class supplies only its quantizer: trained arrays and
-trainer, the columns its encode adds, its scan parts and the checks on
-its stored table. The quantizers of PQ, SQ and IVF-PQ (and IVF's
+load. A coded table within the hold bound is also copied to the driver,
+where a search that fits the driver cap runs the same scan and ranking
+(``knn.driver_scan``) and returns a local frame, as the reference
+answers a search from the index in its own process. Each class supplies
+only its quantizer: trained arrays and trainer, the columns its encode
+adds, its scan parts and the checks on its stored table. The quantizers of PQ, SQ and IVF-PQ (and IVF's
 ``"sample"`` mode) train in the driver on the first ``train_sample``
 rows by key, the way the reference trains its FAISS index
 (faiss_searcher.py:116-125).
@@ -62,10 +65,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from faisssearcher_spark.functions import metrics as M
+from faisssearcher_spark.operators import knn as _knn
 from faisssearcher_spark.operators.graph import NSWIndex
 from faisssearcher_spark.operators.knn import (
-    DriverQueries, _empty_result, _fill_cache, _gemm_scan, _gemm_scorer,
-    _query_frame, _rank_topk, _sharded_scan, _unit_rows)
+    DriverQueries, ScanRows, _empty_result, _fill_cache, _gemm_scan,
+    _gemm_scorer, _query_frame, _query_type, _query_vectors, _rank_topk,
+    _sharded_scan, _unit_rows, _within_hold_bound, driver_scan)
 
 
 def _write_index_meta(spark, path: str, meta: dict) -> None:
@@ -238,7 +243,9 @@ class _CodedIndex:
       (run through :func:`_batch_udf`);
     - ``_scan()``, its parts of the one
       :func:`~faisssearcher_spark.operators.knn._sharded_scan`: item
-      column, ``prepare``, ``scorer``, ``probe`` and ``dim``;
+      column, ``prepare``, ``scorer``, ``probe`` and ``dim``, and
+      ``_row_col``, the stored column that item column reads (the
+      codes, unless overridden);
     - ``_table_checks()``, aggregate flags that are true on a stored
       table its quantizer cannot have written.
 
@@ -250,7 +257,23 @@ class _CodedIndex:
     lineage on the next search (one re-encode pass at worst).
     ``close()`` is terminal: it also drops the table, so a closed index
     raises the not-fitted guard instead of silently re-encoding a
-    100 TB corpus nobody asked for."""
+    100 TB corpus nobody asked for.
+
+    A small index is also held on the driver, as the reference holds
+    its FAISS index in its own process (faiss_searcher.py:116-125):
+    while the cached table's measured size is within
+    ``knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES`` (the bound a flat
+    ``SparkSearcher`` holds its corpus matrix under), ``_held`` is a
+    key-sorted :class:`~faisssearcher_spark.operators.knn.ScanRows`
+    copy of its key, ``cell``, scanned rows (the codes; IVF's vectors)
+    and other columns, not the float vectors the codes stand for. It is
+    taken by the Arrow collect that fills the table's cache, after a
+    ``fit`` or ``load`` whose input Catalyst estimates within the bound
+    (one job more there; the first search filled the cache before), and
+    again by each ``add_items``, whose collect replaces the job that
+    filled the union's cache; a table measured over the bound drops it.
+    ``unpersist()`` keeps it and ``close()`` drops it. A search it can
+    serve is ranked on the driver (see :meth:`_search_refined`)."""
 
     _CONFIG: "tuple[str, ...]" = ()
     _ARRAYS: "tuple[str, ...]" = ()
@@ -262,6 +285,8 @@ class _CodedIndex:
     _items: "DataFrame | None" = None
     _item_key: "str | None" = None
     _vec_col: "str | None" = None
+    #: the driver copy of the coded table while the index holds one
+    _held: "ScanRows | None" = None
 
     @property
     def _higher(self) -> bool:
@@ -276,6 +301,38 @@ class _CodedIndex:
     def _sample(self, items: DataFrame) -> np.ndarray:
         return _driver_sample(items, self._item_key, self._vec_col,
                               self.train_sample, type(self).__name__)
+
+    @property
+    def _row_col(self) -> str:
+        """The stored column the scan scores: the codes."""
+        return "__codes"
+
+    def _hold(self, table: DataFrame) -> "ScanRows | None":
+        """The driver copy of ``table`` (see the class docstring): one
+        Arrow collect that also fills ``table``'s cache, kept only if
+        the filled cache's measured size is within the hold bound."""
+        own = {self._item_key, self._row_col, self._vec_col, *self._ENCODED}
+        copy = ScanRows.collect(
+            table, key_col=self._item_key, row_col=self._row_col,
+            cells="cell" in self._ENCODED,
+            payload_cols=[c for c in table.columns if c not in own],
+            dim=self._scan()["dim"])
+        return copy if _within_hold_bound(table) else None
+
+    def _cache(self, table: DataFrame, source: DataFrame) -> None:
+        """Cache ``table`` as the coded table, held on the driver when
+        Catalyst estimates ``source``, the frame it is coded from,
+        within the hold bound (asked of a new frame over it: an estimate
+        memoizes). A collect that raises releases the cache and leaves
+        the index as it was."""
+        small = _within_hold_bound(source.select(*source.columns))
+        table = table.cache()
+        try:
+            held = self._hold(table) if small else None
+        except Exception:
+            table.unpersist()
+            raise
+        self._items, self._held = table, held
 
     def _coded(self, items: DataFrame) -> DataFrame:
         """``items`` with the columns its encode adds (``_ENCODED``)."""
@@ -296,7 +353,7 @@ class _CodedIndex:
                                  "rename it first")
         self._item_key, self._vec_col = item_key_col, item_vec_col
         self._train(items)
-        self._items = self._coded(items).cache()
+        self._cache(self._coded(items), items)
         return self
 
     def add_items(self, items: DataFrame):
@@ -304,7 +361,8 @@ class _CodedIndex:
         encode the new rows with the EXISTING quantizer (no retrain —
         FAISS semantics) and union them into the cached table: one
         encode pass over the new rows, and one job that fills the
-        union's cache."""
+        union's cache (and, on an index held on the driver, refreshes
+        the copy)."""
         self._fitted()
         self._append(self._coded(items))
         return self
@@ -316,13 +374,15 @@ class _CodedIndex:
         """Top-k of each query: one
         :func:`~faisssearcher_spark.operators.knn._sharded_scan` of the
         coded table with the index's scorer (reading only the probed
-        cells of an IVF index), then the one (score, key) rank window.
-        The queries are checked on the driver at the index's dim (NULL,
-        ragged or wrong-dim vectors raise ``ValueError`` before any
-        job). ``payload_cols`` ride the scan: each result row carries
-        its own corpus row's payload, and nothing item-sized is joined
-        or broadcast. Returns ``(source_item, sim_item, sim_val,
-        rank_no, *payload_cols)``."""
+        cells of an IVF index), then the one (score, key) rank window;
+        or, on an index held on the driver, the same scan and ranking
+        there (see :meth:`_search_refined`). The queries are collected
+        and checked on the driver at the index's dim (NULL, ragged or
+        wrong-dim vectors raise ``ValueError`` before any other job).
+        ``payload_cols`` ride the scan: each result row carries its own
+        corpus row's payload, and nothing item-sized is joined or
+        broadcast. Returns ``(source_item, sim_item, sim_val, rank_no,
+        *payload_cols)``."""
         return self._search_refined(
             queries, k=k, query_item_col=query_item_col,
             query_vec_col=query_vec_col, payload_cols=payload_cols)
@@ -338,25 +398,48 @@ class _CodedIndex:
         one window, so the shortlist does not depend on partitioning),
         which are then EXACTLY re-scored against the stored float
         vectors (:func:`_exact_rescore`, a candidate-sized join), so the
-        survivors' ranking and scores are exact."""
+        survivors' ranking and scores are exact.
+
+        An index held on the driver (``_held``) ranks there, as the
+        reference answers a search with one call in its own process
+        (faiss_searcher.py:161-187), when the search does not refine,
+        its ``payload_cols`` are in the copy, and its driver work at
+        ``k`` (``ScanRows.driver_bytes``: the query matrix and the
+        ranked rows) is within ``knn.DRIVER_RANK_CAP_BYTES``: the
+        scan's own ``probe``, ``prepare`` and scorer run over the copy's
+        probed rows (:func:`~faisssearcher_spark.operators.knn.
+        driver_scan`), and the result is a local frame, which reads with
+        no job, the same rows as the scan's. Any other search scans."""
         items, higher = self._fitted(), self._higher
         if refine_factor is not None and refine_factor < 1:
             raise ValueError("refine_factor must be >= 1")
         payload = list(payload_cols or [])
-        cand = _sharded_scan(
-            queries, items, k=k * (refine_factor or 1),
-            query_item_col=query_item_col, query_vec_col=query_vec_col,
-            item_key_col=self._item_key, higher_is_closer=higher,
-            payload_cols=payload, **self._scan())
-        if cand is None and self._EMPTY_QUERIES_OK:
+        scan = self._scan()
+        qids, qmat = _query_vectors(queries, query_item_col, query_vec_col,
+                                    dim=scan.pop("dim"))
+        if not len(qids) and self._EMPTY_QUERIES_OK:
             return _empty_result(queries, items,
                                  query_item_col=query_item_col,
                                  item_key_col=self._item_key,
                                  payload_cols=payload, keep_rank_no=True)
-        if cand is None:
+        if not len(qids):
             raise ValueError(f"{type(self).__name__}.search needs a "
                              "non-empty query set (the query state is "
                              "driver-built)")
+        q_type, held = _query_type(queries, query_item_col), self._held
+        item_col = scan.pop("item_col")
+        if (held is not None and refine_factor is None
+                and set(payload) <= {f.name for f in held.fields[1:]}
+                and held.driver_bytes(len(qids), k)
+                <= _knn.DRIVER_RANK_CAP_BYTES):
+            return driver_scan(qids, qmat, held, items.sparkSession, k=k,
+                               query_type=q_type, higher_is_closer=higher,
+                               payload_cols=payload, **scan)
+        cand = _sharded_scan(
+            qids, qmat, items, k=k * (refine_factor or 1),
+            query_type=q_type, item_key_col=self._item_key,
+            item_col=item_col, higher_is_closer=higher,
+            payload_cols=payload, **scan)
         if refine_factor is not None:
             cand = _exact_rescore(
                 _rank_topk(cand, k * refine_factor, higher)
@@ -400,7 +483,7 @@ class _CodedIndex:
         if any(bad):
             raise ValueError(f"stored table inconsistent with the "
                              f"{cls.__name__} quantizer — corrupt index?")
-        index._items = items.cache()
+        index._cache(items, items)
         return index
 
     # -- executor storage (the lifecycle the bench memo and SparkSearcher
@@ -420,24 +503,31 @@ class _CodedIndex:
     def close(self) -> None:
         self.unpersist(blocking=True)
         self._items = None
+        self._held = None
 
     def _append(self, rows: DataFrame) -> None:
         """FAISS ``index.add``: union ``rows`` into the cached state.
         The union's cache fills before the superseded one is released —
         released first, the next use would recompute the whole old state
-        from its lineage (a re-encode of every corpus row). The alias
-        keeps a union ``old`` whole: unionByName flattens it into its
-        inputs otherwise, bypassing its cache."""
+        from its lineage (a re-encode of every corpus row). On an index
+        held on the driver the job that fills it is the collect of the
+        new copy (:meth:`_hold`). The alias keeps a union ``old`` whole:
+        unionByName flattens it into its inputs otherwise, bypassing its
+        cache."""
         old = self._items
         union = old.alias("__items").unionByName(
             rows.select(*old.columns)).cache()
         try:
-            _fill_cache(union)
+            if self._held is None:
+                _fill_cache(union)
+                held = None
+            else:
+                held = self._hold(union)
         except Exception:
             union.unpersist()
             raise
         old.unpersist()
-        self._items = union
+        self._items, self._held = union, held
 
     # context-manager sugar: `with PQIndex(...).fit(items) as idx:`
     # guarantees the executor-storage release on any exit path
@@ -472,9 +562,14 @@ class IVFIndex(_CodedIndex):
     driver and scores *within the probed cells only*: one probed-cell
     scan of the fitted assignment (``knn._sharded_scan``), each cell's
     rows scored with a GEMM against the queries that probe it, then the
-    one (score, key) rank window. An empty query set returns the typed
-    empty frame. ``range_search`` keeps a Catalyst plan (the cell
-    equi-join), as ``knn.radius_join`` keeps one for exact search.
+    one (score, key) rank window. An index held on the driver (its
+    cached table within ``knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES``; its
+    copy keeps the vectors, which IVF's scan reads) runs that scan over
+    its copy there for a search whose driver work is within
+    ``knn.DRIVER_RANK_CAP_BYTES`` (:meth:`_CodedIndex._search_refined`).
+    An empty query set returns the typed empty frame. ``range_search``
+    keeps a Catalyst plan (the cell equi-join), as ``knn.radius_join``
+    keeps one for exact search.
 
     ``train_mode="mllib"`` (the default) fits MLlib k-means over the
     whole corpus: one Spark job per iteration plus k-means‖ init.
@@ -573,6 +668,11 @@ class IVFIndex(_CodedIndex):
 
     def _table_checks(self) -> list:
         return _cell_flags(self.n_cells)
+
+    @property
+    def _row_col(self) -> str:
+        """IVF (FAISS ``IVF<n>,Flat``) scans the float vectors."""
+        return self._vec_col
 
     def assignments(self) -> DataFrame:
         """The fitted corpus with its ``cell`` assignment column — the
@@ -992,9 +1092,12 @@ class PQIndex(_CodedIndex):
     Arrow batch accumulates scores with numpy gathers under a scratch
     bound and emits its local top-k with each row's own payload, tied
     scores resolved to the smallest keys; the rank window merges
-    per-shard candidates (≤ shards·k rows shuffle). ``refine_factor``
-    re-scores a shortlist exactly (FAISS ``IndexRefineFlat``). An empty
-    query set raises ``ValueError``.
+    per-shard candidates (≤ shards·k rows shuffle). A code table within
+    the hold bound is copied to the driver, which runs the same gather
+    for a search within the driver cap and returns a local frame.
+    ``refine_factor`` re-scores a shortlist exactly (FAISS
+    ``IndexRefineFlat``), always through the scan. An empty query set
+    raises ``ValueError``.
     """
 
     _CONFIG = ("m", "nbits", "seed", "metric", "train_sample",
@@ -1077,7 +1180,9 @@ class SQIndex(_CodedIndex):
     matrix broadcasts; each key-sorted Arrow batch decodes (one fused
     multiply-add) and GEMMs against the queries under a scratch bound,
     emitting its local top-k with each row's own payload; the rank
-    window merges. An empty query set raises ``ValueError``.
+    window merges. A code table within the hold bound is copied to the
+    driver, which runs the same decode and GEMM for a search within the
+    driver cap. An empty query set raises ``ValueError``.
 
     ``add_items`` encodes with the EXISTING bounds (values beyond the
     trained range clip — FAISS behavior; retrain if the distribution
@@ -1170,9 +1275,15 @@ class IVFPQIndex(_CodedIndex):
     nothing item-sized is joined or broadcast; payload rides the scan.
     Broadcast state: the LUT tensor (n_queries · m · 2^nbits doubles)
     and the queries' q·c over every cell — the inherent ADC state,
-    independent of corpus size. ``refine_factor`` re-scores a shortlist
-    exactly, which compensates both quantization loss and residual
-    approximation. An empty query set raises ``ValueError``.
+    independent of corpus size. An index whose cached code table is
+    within ``knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES`` holds a copy of it
+    on the driver (key, cell, codes and payload; not the float vectors)
+    and runs the same probed-cell scan there for a search whose driver
+    work is within ``knn.DRIVER_RANK_CAP_BYTES``: no Spark job, a local
+    frame of the scan's rows (:meth:`_CodedIndex._search_refined`).
+    ``refine_factor`` re-scores a shortlist exactly, which compensates
+    both quantization loss and residual approximation, and always
+    scans. An empty query set raises ``ValueError``.
     """
 
     _CONFIG = ("n_cells", "nprobe", "m", "nbits", "seed", "metric",

@@ -383,7 +383,7 @@ class NSWIndex:
         the graph table lacks (a graph saved before it kept the items'
         columns has none) raises ``ValueError`` naming it."""
         from faisssearcher_spark.operators.knn import (
-            _candidate_schema, _query_vectors, _top_rows)
+            _candidate_schema, _query_type, _query_vectors, _top_rows)
 
         graph = self._require_fitted()
         payloads = list(payload_cols or [])
@@ -439,7 +439,8 @@ class NSWIndex:
 
         cand = graph.select(*self._COLS, *payloads).groupBy("shard") \
             .applyInPandas(_shard_search, _candidate_schema(
-                queries, query_item_col, graph, "key", payloads))
+                _query_type(queries, query_item_col), graph, "key",
+                payloads))
         return _top_rows(cand, kk, self.metric != "l2", payloads)
 
     # -- lifecycle (the ann.py _CodedIndex storage contract; the NSW

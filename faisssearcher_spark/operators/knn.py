@@ -56,7 +56,10 @@ Scale design (the part FAISS cannot do):
   gather, ``SQIndex`` with its decode step, ``IVFIndex`` with a GEMM
   per probed cell and ``IVFPQIndex`` with the cell's q·c plus the LUT
   gather, so all of them break ties the way the catalyst window does.
-  :func:`_rank_topk` is the one (score, key) rank window.
+  :func:`_rank_topk` is the one (score, key) rank window. The scan's
+  per-batch body (:func:`_scan_rows`) also runs on the driver over an
+  index's held copy of its table (:class:`ScanRows`,
+  :func:`driver_scan`), under the same two bounds as a held flat corpus.
 - **One payload rule.** Payload attaches by corpus row, as the
   reference's ``self.items.iloc[sim_ind]`` (faiss_searcher.py:146-147)
   and the catalyst plan do: every numpy kernel emits each candidate
@@ -123,6 +126,17 @@ def _fill_cache(df: DataFrame) -> None:
     where ``count()`` launches three jobs over a cached union. The size
     Spark then measures for the cache is the same either way."""
     df.write.mode("overwrite").format("noop").save()
+
+
+def _within_hold_bound(df: DataFrame) -> bool:
+    """Whether Catalyst's estimate of ``df`` is within
+    ``BLOCKED_SMALL_QUERY_ITEMS_BYTES``, the bound under which
+    ``"auto"`` picks blocked whatever the query size
+    (:func:`_auto_strategy`) and a trained corpus or coded index is
+    held on the driver. Call it once ``df``'s cache is filled to read
+    the measured size: Spark memoizes a frame's estimate on first use."""
+    size = _plan_size_bytes(df)
+    return size is not None and size <= BLOCKED_SMALL_QUERY_ITEMS_BYTES
 
 
 def _auto_strategy(q_bytes: int | None, i_bytes: int | None) -> str:
@@ -689,7 +703,7 @@ def _topk_fold(score, n_rows: int, n_items: int, kc: int, *,
     def rank(v):
         return -v if higher_is_closer else v
 
-    blk = max(kc, min(n_items, scratch_bytes // (8 * max(n_rows, 1))))
+    blk = max(1, kc, min(n_items, scratch_bytes // (8 * max(n_rows, 1))))
     pos = np.empty((n_rows, 0), dtype=np.int64)
     val = np.empty((n_rows, 0))
     for s in range(0, n_items, blk):
@@ -767,8 +781,8 @@ def _empty_result(queries: DataFrame | DriverQueries, items: DataFrame,
     is empty, built from the two schemas without running a job."""
     from pyspark.sql import types as T
 
-    fields = _candidate_schema(queries, query_item_col, items,
-                               item_key_col).fields
+    fields = _candidate_schema(_query_type(queries, query_item_col),
+                               items, item_key_col).fields
     if keep_rank_no:
         fields.append(T.StructField("rank_no", T.IntegerType()))
     fields += [items.schema[c] for c in payload_cols]
@@ -837,18 +851,23 @@ def _query_frame(queries: DataFrame | DriverQueries, spark, id_col: str,
                       T.StructField(vec_col, T.ArrayType(T.FloatType()))]))
 
 
-def _candidate_schema(queries: DataFrame | DriverQueries,
-                      query_item_col: str, items: DataFrame,
-                      item_key_col: str, payload_cols: Sequence[str] = ()):
-    """The ``(source_item, sim_item, sim_val, *payload_cols)`` candidate
-    frame's schema: the query id's type (a string for DriverQueries),
-    then the item key's and the payload columns' types in ``items``."""
+def _query_type(queries: DataFrame | DriverQueries, query_item_col: str):
+    """The Spark type of a query set's ids: a string for DriverQueries."""
     from pyspark.sql import types as T
 
-    q_type = (queries.schema[query_item_col].dataType
-              if isinstance(queries, DataFrame) else T.StringType())
+    return (queries.schema[query_item_col].dataType
+            if isinstance(queries, DataFrame) else T.StringType())
+
+
+def _candidate_schema(query_type, items: DataFrame, item_key_col: str,
+                      payload_cols: Sequence[str] = ()):
+    """The ``(source_item, sim_item, sim_val, *payload_cols)`` candidate
+    frame's schema: the query id's type, then the item key's and the
+    payload columns' types in ``items``."""
+    from pyspark.sql import types as T
+
     return T.StructType([
-        T.StructField("source_item", q_type),
+        T.StructField("source_item", query_type),
         T.StructField("sim_item", items.schema[item_key_col].dataType),
         T.StructField("sim_val", T.DoubleType()),
         *[items.schema[c] for c in payload_cols]])
@@ -896,7 +915,35 @@ def _collect_vectors(items: DataFrame, key_col: str, vec_col: str, *,
             mat.astype(np.float64).reshape(len(vecs), d), payload)
 
 
-class BlockedCorpus:
+class _DriverRows:
+    """Corpus rows held on the driver for searches ranked there: their
+    ``keys``, ``payload`` (a pandas frame, or None) and the query
+    ``dim``. Holds the one estimate of a driver-ranked search's memory
+    that :class:`BlockedCorpus` and :class:`ScanRows` gate on."""
+
+    keys: "np.ndarray"
+    payload: "pd.DataFrame | None"
+    dim: int
+
+    @functools.cached_property
+    def _row_bytes(self) -> int:
+        """Estimated driver bytes of one ranked row: query id, key,
+        score and rank at 8 bytes each, plus the mean size of a corpus
+        row's payload as pandas holds it."""
+        if self.payload is None or not len(self.payload):
+            return 32
+        used = self.payload.memory_usage(index=False, deep=True).sum()
+        return 32 + int(used) // len(self.payload)
+
+    def driver_bytes(self, n_queries: int, k: int) -> int:
+        """Estimated driver bytes of ranking ``n_queries`` queries at
+        ``k`` against these rows on the driver: their float64 matrix and
+        their ranked rows, payload included."""
+        return n_queries * (self.dim * 8
+                            + min(k, len(self.keys)) * self._row_bytes)
+
+
+class BlockedCorpus(_DriverRows):
     """The blocked kernel's corpus side, built once on the driver: the
     float64 item matrix in KEY order, its keys, the payload columns
     (a pandas frame, rows in the same order) and (``l2`` only) the
@@ -957,23 +1004,6 @@ class BlockedCorpus:
     def dim(self) -> int:
         return self.mat.shape[1]
 
-    @functools.cached_property
-    def _row_bytes(self) -> int:
-        """Estimated driver bytes of one ranked row: query id, key,
-        score and rank at 8 bytes each, plus the mean size of a corpus
-        row's payload as pandas holds it."""
-        if self.payload is None or not len(self.payload):
-            return 32
-        used = self.payload.memory_usage(index=False, deep=True).sum()
-        return 32 + int(used) // len(self.payload)
-
-    def driver_bytes(self, n_queries: int, k: int) -> int:
-        """Estimated driver bytes of ranking ``n_queries`` queries at
-        ``k`` against this corpus on the driver (:func:`driver_rank`):
-        their float64 matrix and their ranked rows, payload included."""
-        return n_queries * (self.dim * 8
-                            + min(k, len(self.keys)) * self._row_bytes)
-
     @property
     def key_type(self) -> str:
         return self.fields[0].dataType.simpleString()
@@ -1029,17 +1059,19 @@ def _rank_rows(qids, q, mat, keys, payload, sq, *, metric: str, k: int,
     return _emit(qids, keys, top_pos, top_val, payload, rank_no=rank_no)
 
 
-def _ranked_schema(query_type, corpus: BlockedCorpus, keep_rank_no: bool):
+def _ranked_schema(query_type, fields, keep_rank_no: bool):
     """``(source_item, sim_item, sim_val[, rank_no], *payload)`` with the
-    query id's Spark type and ``corpus``'s key and payload fields."""
+    query id's Spark type and ``fields``, the key's and the payload
+    columns' Spark fields; ``rank_no`` is never NULL, as the rank
+    window's."""
     from pyspark.sql import types as T
 
-    key, *payload = corpus.fields
+    key, *payload = fields
     return T.StructType([
         T.StructField("source_item", query_type),
         T.StructField("sim_item", key.dataType),
         T.StructField("sim_val", T.DoubleType()),
-        *([T.StructField("rank_no", T.IntegerType())] if keep_rank_no
+        *([T.StructField("rank_no", T.IntegerType(), False)] if keep_rank_no
           else []), *payload])
 
 
@@ -1076,7 +1108,8 @@ def blocked_rank(queries: DataFrame, corpus: BlockedCorpus, *, k: int,
         F.col(query_item_col).alias("__qid"),
         F.col(query_vec_col).cast("array<double>").alias("__qv"),
     ).mapInPandas(_score, _ranked_schema(
-        queries.schema[query_item_col].dataType, corpus, keep_rank_no))
+        queries.schema[query_item_col].dataType, corpus.fields,
+        keep_rank_no))
 
 
 def driver_rank(queries: DriverQueries, corpus: BlockedCorpus, *,
@@ -1093,8 +1126,6 @@ def driver_rank(queries: DriverQueries, corpus: BlockedCorpus, *,
     ``query_type`` query ids and ``corpus``'s key and payload fields;
     it reads no broadcast, so it outlives ``corpus``."""
     import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     ks = _sorted_ks(ks)
     n, ids = len(queries.ids), queries.ids
@@ -1104,34 +1135,84 @@ def driver_rank(queries: DriverQueries, corpus: BlockedCorpus, *,
         corpus.mat, corpus.keys, corpus.payload, corpus.sq,
         metric=corpus.metric, k=ks[-1], scale=score_scale,
         normalize=corpus.normalize, rank_no=True)
-    schema = _ranked_schema(query_type, corpus, keep_rank_no)
-    arrow = to_arrow_schema(schema)
+    schema = _ranked_schema(query_type, corpus.fields, keep_rank_no)
     out = {}
     for k in ks:
         pdf = ranked[ranked["rank_no"] < k] if k < ks[-1] else ranked
         if not keep_rank_no:
             pdf = pdf.drop(columns="rank_no")
-        out[k] = corpus._spark.createDataFrame(
-            pa.Table.from_pandas(pdf, schema=arrow, preserve_index=False),
-            schema)
+        out[k] = _local_frame(corpus._spark, pdf, schema)
     return out
 
 
-def _sharded_scan(queries: DataFrame | DriverQueries, items: DataFrame,
-                  *, k: int,
-                  query_item_col: str, query_vec_col: str,
+def _local_frame(spark, pdf, schema) -> DataFrame:
+    """A driver-ranked pandas frame as a local DataFrame of ``schema``,
+    built from Arrow on the driver: a LocalTableScan, so reading it runs
+    no job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(
+        pa.Table.from_pandas(pdf, schema=to_arrow_schema(schema),
+                             preserve_index=False), schema)
+
+
+def _probes(probed) -> dict:
+    """Each cell of a (queries × nprobe) probe array, mapped to the
+    queries that probe it, ascending."""
+    import numpy as np
+
+    return {int(c): np.flatnonzero((probed == c).any(axis=1))
+            for c in np.unique(probed)}
+
+
+def _scan_rows(qids, state, probes, keys, rows, cells, payload, *, k: int,
+               scorer: Callable, higher_is_closer: bool,
+               rank_no: bool = False):
+    """The scan's ranking body, written once for an Arrow batch of item
+    rows on an executor (:func:`_sharded_scan`) and for a held copy's
+    rows on the driver (:func:`driver_scan`): each query's top-``k``
+    among the rows it probes, as :func:`_emit`'s pandas frame with the
+    rows' own ``payload`` (a pandas frame in row order, or None).
+
+    The rows are sorted by key first, so the fold's position tie-break
+    is the rank window's (score, key) order. ``scorer(state, rows, cell)``
+    gives the block scorer of ``rows`` (one cell's, ``state`` cut to the
+    queries that probe it, under :func:`_cell_scorer`; all of them with
+    ``cell=None`` when ``probes`` is None) and :func:`_topk_fold` ranks
+    them under a 64 MB scratch bound. A pair whose cell the query does
+    not probe scores ``worst`` and is dropped; it ranks after every
+    real score, so ``rank_no`` (0-based, per query) stays dense."""
+    import numpy as np
+
+    order = np.argsort(keys, kind="stable")
+    rows = rows[order]
+    worst = -np.inf if higher_is_closer else np.inf
+    score = (scorer(state, rows, None) if probes is None else
+             _cell_scorer(scorer, state, len(qids), probes, rows,
+                          cells[order], worst))
+    top_pos, top_val = _topk_fold(
+        score, len(qids), len(keys), min(k, len(keys)),
+        higher_is_closer=higher_is_closer, scratch_bytes=64 << 20)
+    out = _emit(qids, keys, top_pos, top_val, payload, order,
+                rank_no=rank_no)
+    return out if probes is None else out[out["sim_val"] != worst]
+
+
+def _sharded_scan(qids, qmat, items: DataFrame, *, k: int, query_type,
                   item_key_col: str, item_col: Column,
                   higher_is_closer: bool, prepare: Callable, scorer: Callable,
-                  dim: int | None = None, probe: Callable | None = None,
-                  payload_cols: Sequence[str] = ()) -> "DataFrame | None":
+                  probe: Callable | None = None,
+                  payload_cols: Sequence[str] = ()) -> DataFrame:
     """The broadcast-queries scan over a distributed item table, shared
     by ``knn_join(strategy="sharded")`` and the PQ, SQ, IVF and IVF-PQ
     searches (ann.py): the per-shard half of shard-and-merge.
 
-    The queries are collected once on the driver and checked there
-    (:func:`_query_vectors`: NULL, ragged, and — given ``dim`` — wrong
-    dimension raise before any job; :class:`DriverQueries` need no
-    collect). ``prepare(qmat)`` turns the float64 query matrix into the
+    The caller collects and checks the queries on the driver
+    (:func:`_query_vectors`: NULL, ragged and wrong-dim vectors raise
+    before any job) and decides what an empty set means: ``qids`` are
+    their ids (Spark type ``query_type``) and ``qmat`` their float64
+    matrix, one row each. ``prepare(qmat)`` turns the matrix into the
     state every executor needs: a tuple of arrays with one row per query
     (the query matrix, a PQ LUT tensor) or None, broadcast with the
     query ids.
@@ -1142,35 +1223,21 @@ def _sharded_scan(queries: DataFrame | DriverQueries, items: DataFrame,
     of probed cells are read. A flat scan (``probe=None``) is the case
     of one cell that every query probes.
 
-    Each Arrow batch is sorted by key and its ``item_col`` values
-    stacked into one array. ``scorer(state, rows, cell)`` returns the
-    block scorer of ``rows`` (one cell's, ``state`` cut to the queries
-    that probe it, under :func:`_cell_scorer`; the whole batch with
-    ``cell=None`` in a flat scan) and :func:`_topk_fold` ranks the
-    batch under a 64 MB scratch bound, so ties resolve to the smallest
-    key. The batch emits each query's local top-k among the rows it
-    probes, with the ``payload_cols`` of the rows it emits: the payload
-    of a result row is its own corpus row's. Rank the candidates with
-    :func:`_rank_topk` (or :func:`_top_rows`).
+    Each Arrow batch of ``item_col`` values, stacked into one array,
+    runs :func:`_scan_rows` and emits each query's local top-k among the
+    rows it probes, with the ``payload_cols`` of the rows it emits: the
+    payload of a result row is its own corpus row's. Rank the
+    candidates with :func:`_rank_topk` (or :func:`_top_rows`).
 
     Returns the ``(source_item, sim_item, sim_val, *payload_cols)``
-    candidate frame, or None when ``queries`` has no rows (the caller
-    decides what an empty query set means). ``scorer`` ships to the
-    executors: it must close over arrays, not over a DataFrame or an
-    index."""
+    candidate frame. ``scorer`` ships to the executors: it must close
+    over arrays, not over a DataFrame or an index."""
     import numpy as np
 
-    qids, qmat = _query_vectors(queries, query_item_col, query_vec_col,
-                                dim=dim)
-    if not len(qids):
-        return None
     cols = [F.col(item_key_col).alias("__ik"), item_col.alias("__iv")]
     probes = None
     if probe is not None:
-        probed = probe(qmat)
-        # each probed cell and the queries that probe it, ascending
-        probes = {int(c): np.flatnonzero((probed == c).any(axis=1))
-                  for c in np.unique(probed)}
+        probes = _probes(probe(qmat))
         # array_contains over an array literal, not isin: Spark compiles
         # an int isin's values into the generated code (a switch), so
         # every new set of probed cells would compile a new stage
@@ -1181,32 +1248,93 @@ def _sharded_scan(queries: DataFrame | DriverQueries, items: DataFrame,
     b_state = items.sparkSession.sparkContext.broadcast(
         (qids, prepare(qmat), probes))
 
-    # a (query, row) pair whose cell the query does not probe
-    worst = -np.inf if higher_is_closer else np.inf
-
     def _local(batches):
         qids, state, probes = b_state.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            keys = pdf["__ik"].to_numpy()
-            # key order: the fold's position tie-break is the rank
-            # window's (score, key) order
-            order = np.argsort(keys, kind="stable")
-            rows = np.array(pdf["__iv"].to_list())[order]
-            score = (scorer(state, rows, None) if probes is None else
-                     _cell_scorer(scorer, state, len(qids), probes, rows,
-                                  pdf["__ic"].to_numpy()[order], worst))
-            top_pos, top_val = _topk_fold(
-                score, len(qids), len(keys), min(k, len(keys)),
-                higher_is_closer=higher_is_closer, scratch_bytes=64 << 20)
-            out = _emit(qids, keys, top_pos, top_val,
-                        pdf[payload] if payload else None, order)
-            yield out if probes is None else out[out["sim_val"] != worst]
+            yield _scan_rows(
+                qids, state, probes, pdf["__ik"].to_numpy(),
+                np.array(pdf["__iv"].to_list()),
+                None if probes is None else pdf["__ic"].to_numpy(),
+                pdf[payload] if payload else None, k=k, scorer=scorer,
+                higher_is_closer=higher_is_closer)
 
     return items.select(*cols, *payload).mapInPandas(
-        _local, _candidate_schema(queries, query_item_col, items,
-                                  item_key_col, payload))
+        _local, _candidate_schema(query_type, items, item_key_col, payload))
+
+
+class ScanRows(_DriverRows):
+    """A scan's item table held on the driver, in KEY order: the keys,
+    the rows the scorer reads (codes, or float64 vectors), the ``cell``
+    of each row (None for a flat scan), the payload columns (a pandas
+    frame, or None) and the Spark fields of the key and the payload.
+    ``dim`` is the query dim. What an ann.py index keeps to rank a
+    search on the driver (:func:`driver_scan`), as the reference keeps
+    its FAISS index in its own process (faiss_searcher.py:116-125)."""
+
+    def __init__(self, keys, rows, cells, payload, *, fields, dim: int):
+        import numpy as np
+
+        order = np.argsort(keys, kind="stable")
+        self.keys, self.rows = keys[order], rows[order]
+        self.cells = None if cells is None else cells[order]
+        self.payload = (None if payload is None
+                        else payload.iloc[order].reset_index(drop=True))
+        self.fields, self.dim = fields, dim
+
+    @classmethod
+    def collect(cls, table: DataFrame, *, key_col: str, row_col: str,
+                cells: bool, payload_cols: Sequence[str],
+                dim: int) -> "ScanRows":
+        """One Arrow collect of ``table``'s key, ``cell`` (when
+        ``cells``), ``row_col`` and ``payload_cols``. The rows come back
+        as the executors stack them: float vectors as float64, codes as
+        integers."""
+        import numpy as np
+
+        cols = [key_col, *(["cell"] if cells else []), row_col]
+        tbl = _project(table, [*cols, *payload_cols]).toArrow()
+        n = tbl.num_rows
+        rows = tbl.column(row_col).combine_chunks().flatten() \
+            .to_numpy(zero_copy_only=False)
+        rows = rows.reshape(n, -1) if n else rows.reshape(0, 0)
+        if np.issubdtype(rows.dtype, np.floating):
+            rows = rows.astype(np.float64)
+        return cls(tbl.column(key_col).to_numpy(), rows,
+                   tbl.column("cell").to_numpy() if cells else None,
+                   tbl.select(list(payload_cols)).to_pandas()
+                   if payload_cols else None,
+                   fields=[table.schema[c]
+                           for c in (key_col, *payload_cols)],
+                   dim=dim)
+
+
+def driver_scan(qids, qmat, held: ScanRows, spark, *, k: int, query_type,
+                higher_is_closer: bool, prepare: Callable,
+                scorer: Callable, probe: Callable | None = None,
+                payload_cols: Sequence[str] = ()) -> DataFrame:
+    """:func:`_sharded_scan` and its rank window on the driver, over a
+    held copy of the item table: the probed rows (every row without
+    ``probe``) run :func:`_scan_rows` once with the scan's own
+    ``prepare`` and ``scorer``, and each query's rows come out ranked.
+    Returns ``(source_item, sim_item, sim_val, rank_no,
+    *payload_cols)``, built from Arrow on the driver (a LocalTableScan:
+    reading it runs no job). ``payload_cols`` must be among ``held``'s."""
+    import numpy as np
+
+    probes = None if probe is None else _probes(probe(qmat))
+    sel = (slice(None) if probes is None else
+           np.flatnonzero(np.isin(held.cells, list(probes))))
+    payload = list(payload_cols)
+    ranked = _scan_rows(
+        qids, prepare(qmat), probes, held.keys[sel], held.rows[sel],
+        None if probes is None else held.cells[sel],
+        held.payload[payload].iloc[sel] if payload else None, k=k,
+        scorer=scorer, higher_is_closer=higher_is_closer, rank_no=True)
+    by_name = {f.name: f for f in held.fields[1:]}
+    return _local_frame(spark, ranked, _ranked_schema(
+        query_type, [held.fields[0], *[by_name[c] for c in payload]], True))
 
 
 def _cell_scorer(scorer, state, n_q: int, probes: dict, rows, cells,
@@ -1264,18 +1392,20 @@ def _knn_join_sharded(queries: DataFrame, items: DataFrame, *, metric: str,
     scorer, payload riding the scan, then the one rank window. See
     ``knn_join(strategy="sharded")``."""
     higher = metric in ("cos", "ip")
-    cand = _sharded_scan(
-        queries, items, k=k, query_item_col=query_item_col,
-        query_vec_col=query_vec_col, item_key_col=item_key_col,
-        item_col=F.col(item_vec_col).cast("array<double>"),
-        higher_is_closer=higher, payload_cols=payload_cols,
-        **_gemm_scan(metric, normalize, score_scale))
-    if cand is None:
+    qids, qmat = _query_vectors(queries, query_item_col, query_vec_col)
+    if not len(qids):
         # no queries, no rows — there is no query matrix to broadcast
         return _empty_result(queries, items, query_item_col=query_item_col,
                              item_key_col=item_key_col,
                              payload_cols=payload_cols,
                              keep_rank_no=keep_rank_no)
+    cand = _sharded_scan(
+        qids, qmat, items, k=k,
+        query_type=_query_type(queries, query_item_col),
+        item_key_col=item_key_col,
+        item_col=F.col(item_vec_col).cast("array<double>"),
+        higher_is_closer=higher, payload_cols=payload_cols,
+        **_gemm_scan(metric, normalize, score_scale))
     return _top_rows(cand, k, higher, payload_cols, keep_rank_no)
 
 
@@ -1365,7 +1495,7 @@ def _knn_join_grid(queries: DataFrame, items: DataFrame, *, metric: str,
     cand = (q_rep.groupby("__gb", "__gs")
             .cogroup(i_rep.groupby("__gb", "__gs"))
             .applyInPandas(_cell, _candidate_schema(
-                queries, query_item_col, items, item_key_col,
+                _query_type(queries, query_item_col), items, item_key_col,
                 payload_cols)))
     return _top_rows(cand, k, higher, payload_cols, keep_rank_no)
 
@@ -1397,9 +1527,13 @@ def _sorted_ks(ks: Iterable[int]) -> list:
 def multi_k(rank_at: Callable[[int], DataFrame],
             ks: Iterable[int]) -> Mapping[int, DataFrame]:
     """``{k: top-k}`` from one cached ``rank_at(max(ks))`` frame (which
-    must carry ``rank_no``), each k a filter over it."""
+    must carry ``rank_no``), each k a filter over it. A local frame (one
+    ranked on the driver) is filtered as it is: it already holds its
+    rows, and caching it would add a job to read them."""
     ks = _sorted_ks(ks)
-    ranked = rank_at(ks[-1]).cache()
+    ranked = rank_at(ks[-1])
+    if not ranked.isLocal():
+        ranked = ranked.cache()
     return {k: ranked.filter(F.col("rank_no") < k) for k in ks}
 
 

@@ -31,7 +31,8 @@ list target on an encoder searcher is encoded once on the driver, as the
 reference encodes its queries: the same encode / whiten / normalize
 arithmetic as the Spark path, bit for bit, with no query job; an indexed
 search takes that query matrix as it is, so it launches no job until
-the result is read;
+the result is read, and none at all when a small index ranks it on the
+driver;
 ``cal_sim()`` is exact pairwise scoring (faiss_searcher.py:192-198);
 ``save()``/``load()`` replace whole-object pickling (faiss_searcher.py:
 200-208) with Parquet + JSON metadata ("a searcher is data + config").
@@ -81,7 +82,7 @@ def _storage_steps(norm: bool, id_col: str, role: str) -> tuple:
     math re-promotes to float64). A row that encodes to the zero vector
     has no direction: the normalize step raises for it, naming the row's
     ``id_col`` value as the ``role`` ("item" or "query"), in whatever job
-    first computes the column (:func:`_zero_rows_named` turns that into
+    first computes the column (:func:`_bad_rows_named` turns that into
     a ``ValueError``). The steps depend on nothing else, so they are
     built once per process and id column: l2_normalize's higher-order
     expression alone costs about 45 ms of py4j round trips, which every
@@ -93,16 +94,28 @@ def _storage_steps(norm: bool, id_col: str, role: str) -> tuple:
             + (to_float32(_VEC),))
 
 
+@functools.cache
+def _null_text_step(text_col: str):
+    """The step after a query frame's encode that refuses a NULL text:
+    the query has nothing to encode (an encoder would encode a stand-in,
+    such as the string "None"), so its row raises ``_NULL_TEXT`` in
+    whatever job first computes the column, as :func:`_storage_steps`
+    raises for a zero vector, and adds no job of its own."""
+    return F.when(F.col(text_col).isNull(),
+                  F.raise_error(F.lit(_NULL_TEXT))).otherwise(F.col(_VEC))
+
+
 @contextlib.contextmanager
-def _zero_rows_named():
-    """Re-raise the normalize step's error for a zero vector (see
-    :func:`_storage_steps`) as the ``ValueError`` it stands for."""
+def _bad_rows_named():
+    """Re-raise a step's error for a row it refuses (a zero vector, see
+    :func:`_storage_steps`; a NULL query text, :func:`_null_text_step`)
+    as the ``ValueError`` it stands for."""
     try:
         yield
     except PySparkException as e:
         msg = (e.getMessageParameters() or {}).get("errorMessage", "")
         if e.getCondition() != "USER_RAISED_EXCEPTION" \
-                or not msg.endswith(_ZERO_NORM):
+                or not (msg.endswith(_ZERO_NORM) or msg == _NULL_TEXT):
             raise
         raise ValueError(msg) from None
 
@@ -189,7 +202,8 @@ class SparkSearcher:
                    role: str = "item") -> DataFrame:
         """``df`` with its ``_VEC`` column; ``id_col`` (the key column by
         default) names a row that cannot be normalized (see
-        :func:`_storage_steps`)."""
+        :func:`_storage_steps`). A query text that is NULL raises
+        (:func:`_null_text_step`)."""
         # the encoder UDF and the whitening expression are built on the
         # first call and reused: each costs py4j round trips that every
         # search would otherwise pay again
@@ -202,6 +216,8 @@ class SparkSearcher:
         udf, steps = self._vec_exprs
         out = df.withColumn(_VEC, udf(F.col(text_col)) if udf is not None
                             else F.col(vec_col))
+        if udf is not None and role == "query":
+            steps = [_null_text_step(text_col), *steps]
         for step in steps + list(_storage_steps(
                 self.norm_vec, id_col or self.key_col, role)):
             out = out.withColumn(_VEC, step)
@@ -216,7 +232,7 @@ class SparkSearcher:
         self._held = None
         self.corpus = self._vectorize(
             self.items, self.item_col, self.vec_col).cache()
-        with _zero_rows_named():
+        with _bad_rows_named():
             self._build_index(dim=None)
         return self
 
@@ -230,7 +246,7 @@ class SparkSearcher:
         element). A holdable corpus is collected once into the held
         matrix. Then the index_param structure is fitted."""
         self.vec_dim = validate_vectors(self.corpus, _VEC, dim)
-        if self._gemm_flat() and self._within_hold_bound(self.corpus):
+        if self._gemm_flat() and _knn._within_hold_bound(self.corpus):
             self._held = BlockedCorpus.collect(
                 self.corpus, item_key_col=self.key_col, item_vec_col=_VEC,
                 metric=self._kernel_metric(), normalize=False, dim=dim,
@@ -253,15 +269,6 @@ class SparkSearcher:
         searchers that may hold their corpus matrix."""
         return (self._new_index is None and self.p is None
                 and self.measurement in ("cos", "ip", "l2"))
-
-    @staticmethod
-    def _within_hold_bound(corpus: DataFrame) -> bool:
-        """Whether Catalyst's estimate of ``corpus`` is within the bound
-        under which ``knn_join``'s ``"auto"`` plan picks blocked whatever
-        the query size (knn._auto_strategy). Call it once ``corpus``'s cache is
-        filled: Spark memoizes a frame's estimate on first use."""
-        size = _knn._plan_size_bytes(corpus)
-        return size is not None and size <= _knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES
 
     def _fit_index(self) -> None:
         """Fit the structure the index_param spec names over the cached
@@ -313,7 +320,7 @@ class SparkSearcher:
                 _knn._fill_cache(union)
                 if held is not None and (
                         union.schema[self.key_col].dataType.simpleString()
-                        == held.key_type and self._within_hold_bound(union)):
+                        == held.key_type and _knn._within_hold_bound(union)):
                     held = held.add(new, item_key_col=self.key_col,
                                     item_vec_col=_VEC)
                 else:
@@ -377,13 +384,25 @@ class SparkSearcher:
           (``add_items`` and a retrain leave them be). Bad query vectors
           (NULL, ragged, wrong dim; under ``cos`` one that normalizes to
           zero) raise ``ValueError`` inside a driver-ranked search.
-        - An index_param searcher ranks through its index.
+        - An index_param searcher ranks through its index. An IVF, PQ,
+          SQ or IVF-PQ index whose cached code table is within
+          ``knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES`` holds a copy of it on
+          the driver (taken in ``train()``, refreshed by ``add_items``)
+          and ranks there a search that does not refine (no ``,RFlat``)
+          and whose driver work at the largest K is within
+          ``knn.DRIVER_RANK_CAP_BYTES``: the same rows as its Spark
+          scan, as a local frame. A list target then runs no job; a
+          frame target runs the one that collects its queries. Any
+          other indexed search, and NSW's, runs in Spark.
         - Any other searcher ranks through ``knn_join(strategy="auto")``:
           a GEMM kernel for ``cos`` / ``ip`` / ``l2``, the catalyst plan
           for the other metrics.
 
         A NULL query text raises ``ValueError`` wherever the driver
-        prepares the queries (a list target; a driver-ranked frame)."""
+        prepares or collects the queries (a list target; a frame ranked
+        on the driver or through an index), and raises the same message
+        from Spark where a frame is encoded in the plan that ranks it (a
+        frame over the driver cap, a stream)."""
         corpus = self._require_trained()
         ks = [topK] if isinstance(topK, int) else _knn._sorted_ks(topK)
         held = self._held
@@ -444,7 +463,7 @@ class SparkSearcher:
         (reference semantics: when an index_param is given, EVERY search
         uses it, faiss_searcher.py:161-187)."""
         extra = {"refine_factor": self.refine_factor} if self._refine else {}
-        with _zero_rows_named():   # the index collects the query vectors
+        with _bad_rows_named():   # the index collects the query vectors
             res = self._index.search(
                 queries, k=k, query_item_col="source_item",
                 query_vec_col=_VEC, payload_cols=payload, **extra)

@@ -246,7 +246,8 @@ class TestIVFPQ:
         assert r_pruned >= 0.65     # measured 0.75 at seed 42
         assert r_full >= r_pruned   # more cells probed can only help
 
-    def test_payload_rank_and_plan(self, embeddings):
+    def test_payload_rank_and_plan(self, embeddings, monkeypatch):
+        from faisssearcher_spark.operators import knn
         from faisssearcher_spark.operators.ann import IVFPQIndex
         from faisssearcher_spark.plans import inspect
 
@@ -255,6 +256,9 @@ class TestIVFPQ:
         idx = IVFPQIndex(n_cells=8, nprobe=4, m=8, metric="cos",
                          seed=42).fit(embeddings, item_key_col="vec_id",
                                       item_vec_col="embedding")
+        # the Spark scan's plan: a cap no search fits keeps this small
+        # index from ranking on the driver (tests/test_ann_driver.py)
+        monkeypatch.setattr(knn, "DRIVER_RANK_CAP_BYTES", -1)
         res = idx.search(q, k=5, query_item_col="qid",
                          payload_cols=["label"])
         rows = res.collect()
@@ -329,10 +333,15 @@ class TestIVFPQDriverFit:
         seven.close()
 
     def test_fit_launches_one_job(self, spark, embeddings, monkeypatch):
+        from faisssearcher_spark.operators import knn
+
         sc = spark.sparkContext
         embeddings.count()   # the fixture's cache is filled beforehand
         # no MLlib on this path: importing it would raise
         monkeypatch.setitem(sys.modules, "pyspark.ml.clustering", None)
+        # an index within the hold bound also collects its driver copy,
+        # one job more (tests/test_ann_driver.py); the fit is one job
+        monkeypatch.setattr(knn, "BLOCKED_SMALL_QUERY_ITEMS_BYTES", 0)
 
         def jobs():
             sc._jsc.sc().listenerBus().waitUntilEmpty()

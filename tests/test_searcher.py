@@ -1303,6 +1303,43 @@ class TestBadQueriesRaiseInSearch:
                 s.search(target, topK=3)
         s.close()
 
+    @pytest.mark.parametrize("path", ["over_cap", "indexed_frame",
+                                      "stream"])
+    def test_null_text_raises_where_spark_encodes(self, spark, documents,
+                                                  monkeypatch, tmp_path,
+                                                  path):
+        """A frame whose texts Spark encodes refuses a NULL text too, in
+        the job that encodes it: inside search() on an indexed searcher
+        (which collects its queries), and when the result is read on a
+        held searcher's frame over the driver cap and on a stream."""
+        msg = "query NULL has no text to encode"
+        s = SparkSearcher(documents.select("text", "lang"),
+                          encoder=HashingEncoder(dim=8),
+                          index_param="IVF4" if path == "indexed_frame"
+                          else None).train()
+        target = _sized(spark, [("spark join",), (None,)], "text string")
+        try:
+            if path == "indexed_frame":
+                with pytest.raises(ValueError, match=msg):
+                    s.search(target, topK=3)
+            elif path == "over_cap":
+                monkeypatch.setattr(knn_mod, "DRIVER_RANK_CAP_BYTES", 0)
+                res = s.search(target, topK=3)
+                with pytest.raises(Exception, match=msg):
+                    res.collect()
+            else:
+                src = str(tmp_path / "q")
+                target.write.parquet(src)
+                res = s.search(spark.readStream.schema(target.schema)
+                               .parquet(src), topK=3)
+                query = (res.writeStream.format("memory")
+                         .queryName("null_text_stream")
+                         .trigger(availableNow=True).start())
+                with pytest.raises(Exception, match=msg):
+                    query.awaitTermination()
+        finally:
+            s.close()
+
 
 @pytest.mark.parametrize("spec", ["IVF4", "HNSW8"])
 def test_index_leaves_out_raw_vectors(embeddings, spec):

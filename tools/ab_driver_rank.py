@@ -1,19 +1,25 @@
-"""Driver-versus-executor ranking probe for a holding flat searcher.
+"""Driver-versus-executor ranking probe for a holding searcher.
 
 Times ``search()`` plus an Arrow read of the result for query sets of
 growing size and K against one held corpus (raw-vector cosine
 ``SparkSearcher``, the ``flat_search`` shape), ranked on the driver
-(``knn.driver_rank``) and on the executors (``knn.blocked_rank``) in
-alternating order within one Spark session. The route is forced by
-moving ``knn.DRIVER_RANK_CAP_BYTES``; ``auto`` keeps the cap as it is
-(over it, a frame's row-bounded collect runs and is dropped before the
-executors rank). Every route must return the same rows. Prints one JSON line per (queries, K) with the driver work
-estimate (``BlockedCorpus.driver_bytes``, the number the cap is set
-against), the per-route median and quartiles in seconds, and how many
-rounds each route won.
+and in Spark in alternating order within one Spark session. A flat
+searcher ranks on the driver with ``knn.driver_rank`` and in Spark with
+``knn.blocked_rank`` (route ``blocked``); with ``--index`` (an
+``index_param`` such as ``IVF64,PQ8``) the index ranks its held copy on
+the driver with ``knn.driver_scan`` and in Spark with its probed-cell
+scan and rank window (route ``scan``). The route is forced by moving
+``knn.DRIVER_RANK_CAP_BYTES``; ``auto`` keeps the cap as it is (over
+it, a flat searcher's row-bounded collect runs and is dropped before
+the executors rank). Every route must return the same rows. Prints one
+JSON line per (queries, K) with the driver work estimate
+(``driver_bytes`` of the held rows, the number the cap is set against),
+the per-route median and quartiles in seconds, and how many rounds
+each route won.
 
     PYTHONPATH=. SPARK_GRAFT_CPUS=4 python tools/ab_driver_rank.py \\
-        --queries 64,1024,8192 --ks 10,100 --rounds 6 [--routes ...]
+        --queries 64,1024,8192 --ks 10,100 --rounds 6 \\
+        [--index IVF64,PQ8] [--routes ...]
 """
 from __future__ import annotations
 
@@ -38,10 +44,16 @@ def main() -> None:
     ap.add_argument("--dim", type=int, default=64)
     ap.add_argument("--rounds", type=int, default=6)
     ap.add_argument("--seed", type=int, default=7)
-    ap.add_argument("--routes", default="driver,blocked",
-                    help="comma-separated, of driver, blocked, auto")
+    ap.add_argument("--index", default=None,
+                    help="an index_param spec (e.g. IVF64,PQ8); flat "
+                         "when omitted")
+    ap.add_argument("--routes", default=None,
+                    help="comma-separated, of driver, auto and blocked "
+                         "(flat) or scan (--index); default driver and "
+                         "the Spark route")
     args = ap.parse_args()
-    routes = args.routes.split(",")
+    spark_route = "scan" if args.index else "blocked"
+    routes = (args.routes or f"driver,{spark_route}").split(",")
 
     from faisssearcher_spark import SparkSearcher
     from faisssearcher_spark.operators import knn
@@ -53,7 +65,7 @@ def main() -> None:
     def timed(searcher, target, k, route):
         """Seconds for one search and the read of its result, and the
         result as a sorted Arrow table."""
-        knn.DRIVER_RANK_CAP_BYTES = {"driver": 1 << 62, "blocked": -1,
+        knn.DRIVER_RANK_CAP_BYTES = {"driver": 1 << 62, spark_route: -1,
                                      "auto": cap}[route]
         t0 = time.perf_counter()
         res = searcher.search(target, topK=k, keep_rank_no=True)
@@ -61,7 +73,7 @@ def main() -> None:
         seconds = time.perf_counter() - t0
         if route != "auto":
             spark_ranked = "MapInPandas" in inspect.executed_plan(res)
-            assert spark_ranked == (route == "blocked"), route
+            assert spark_ranked == (route == spark_route), route
         return seconds, tbl.sort_by([("source_item", "ascending"),
                                      ("rank_no", "ascending")])
 
@@ -75,8 +87,11 @@ def main() -> None:
                       rng.standard_normal((args.items, args.dim),
                                           dtype=np.float32))
         searcher = SparkSearcher(spark.read.parquet(cpath), vec_col="vec",
-                                 key_col="key", measurement="cos").train()
-        assert searcher._held is not None
+                                 key_col="key", measurement="cos",
+                                 index_param=args.index).train()
+        held = (searcher._held if args.index is None
+                else searcher._index._held)
+        assert held is not None
         for nq in (int(x) for x in args.queries.split(",")):
             qpath = os.path.join(tmp, f"queries_{nq}.parquet")
             write_vectors(qpath, np.arange(nq, dtype=np.int64),
@@ -99,8 +114,8 @@ def main() -> None:
                         wins[min(lap, key=lap.get)] += 1
                 print(json.dumps({
                     "items": args.items, "queries": nq, "k": k,
-                    "dim": args.dim,
-                    "driver_bytes": searcher._held.driver_bytes(nq, k),
+                    "dim": args.dim, "index": args.index,
+                    "driver_bytes": held.driver_bytes(nq, k),
                     "median_s": {r: round(float(np.median(v)), 4)
                                  for r, v in times.items()},
                     "quartiles_s": {r: [round(float(x), 4) for x in
