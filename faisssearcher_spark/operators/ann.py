@@ -70,7 +70,7 @@ from faisssearcher_spark.operators.graph import NSWIndex
 from faisssearcher_spark.operators.knn import (
     DriverQueries, ScanRows, _empty_result, _fill_cache, _gemm_scan,
     _gemm_scorer, _query_frame, _query_type, _query_vectors, _rank_topk,
-    _sharded_scan, _unit_rows, _within_hold_bound, driver_scan)
+    _sharded_scan, _unit_rows, driver_scan)
 
 
 def _write_index_meta(spark, path: str, meta: dict) -> None:
@@ -242,10 +242,9 @@ class _CodedIndex:
       and ``_encoder()``, the numpy batch function computing them
       (run through :func:`_batch_udf`);
     - ``_scan()``, its parts of the one
-      :func:`~faisssearcher_spark.operators.knn._sharded_scan`: item
-      column, ``prepare``, ``scorer``, ``probe`` and ``dim``, and
-      ``_row_col``, the stored column that item column reads (the
-      codes, unless overridden);
+      :func:`~faisssearcher_spark.operators.knn._sharded_scan`: the
+      name of the stored column it scores (``item_col``), ``prepare``,
+      ``scorer``, ``probe`` and ``dim``;
     - ``_table_checks()``, aggregate flags that are true on a stored
       table its quantizer cannot have written.
 
@@ -266,14 +265,18 @@ class _CodedIndex:
     ``SparkSearcher`` holds its corpus matrix under), ``_held`` is a
     key-sorted :class:`~faisssearcher_spark.operators.knn.ScanRows`
     copy of its key, ``cell``, scanned rows (the codes; IVF's vectors)
-    and other columns, not the float vectors the codes stand for. It is
-    taken by the Arrow collect that fills the table's cache, after a
-    ``fit`` or ``load`` whose input Catalyst estimates within the bound
-    (one job more there; the first search filled the cache before), and
-    again by each ``add_items``, whose collect replaces the job that
-    filled the union's cache; a table measured over the bound drops it.
-    ``unpersist()`` keeps it and ``close()`` drops it. A search it can
-    serve is ranked on the driver (see :meth:`_search_refined`)."""
+    and other columns, not the float vectors the codes stand for. The
+    size is measured before anything is collected: ``fit`` and ``load``
+    run no job for the copy; the first search that could be ranked on
+    the driver fills the cache (the job its scan would have run), reads
+    the size Spark measured and, within the bound, takes the copy in one
+    Arrow collect (:meth:`_driver_copy`). ``add_items`` on an index that
+    holds a copy refreshes it by the collect that fills the union's
+    cache, while the copy's measured size plus Catalyst's estimate of
+    the new rows is within the bound; otherwise it fills the union's
+    cache as an unheld index does and drops the copy. ``unpersist()``
+    keeps it and ``close()`` drops it. A search it can serve is ranked
+    on the driver (see :meth:`_search_refined`)."""
 
     _CONFIG: "tuple[str, ...]" = ()
     _ARRAYS: "tuple[str, ...]" = ()
@@ -287,6 +290,9 @@ class _CodedIndex:
     _vec_col: "str | None" = None
     #: the driver copy of the coded table while the index holds one
     _held: "ScanRows | None" = None
+    #: the coded table's size as Spark measured its filled cache, None
+    #: before a job has filled it
+    _size: "float | None" = None
 
     @property
     def _higher(self) -> bool:
@@ -302,37 +308,36 @@ class _CodedIndex:
         return _driver_sample(items, self._item_key, self._vec_col,
                               self.train_sample, type(self).__name__)
 
-    @property
-    def _row_col(self) -> str:
-        """The stored column the scan scores: the codes."""
-        return "__codes"
+    def _copy_payload(self, table: DataFrame) -> list:
+        """The columns a driver copy of ``table`` keeps as payload: all
+        but the key, the vectors and the encoded ones."""
+        own = {self._item_key, self._vec_col, *self._ENCODED}
+        return [c for c in table.columns if c not in own]
 
-    def _hold(self, table: DataFrame) -> "ScanRows | None":
-        """The driver copy of ``table`` (see the class docstring): one
-        Arrow collect that also fills ``table``'s cache, kept only if
-        the filled cache's measured size is within the hold bound."""
-        own = {self._item_key, self._row_col, self._vec_col, *self._ENCODED}
-        copy = ScanRows.collect(
-            table, key_col=self._item_key, row_col=self._row_col,
+    def _collect_copy(self, table: DataFrame) -> ScanRows:
+        """The driver copy of ``table`` (see the class docstring) in one
+        Arrow collect, which also fills ``table``'s cache: its key,
+        ``cell``, the column its scan scores and the payload."""
+        scan = self._scan()
+        return ScanRows.collect(
+            table, key_col=self._item_key, row_col=scan["item_col"],
             cells="cell" in self._ENCODED,
-            payload_cols=[c for c in table.columns if c not in own],
-            dim=self._scan()["dim"])
-        return copy if _within_hold_bound(table) else None
+            payload_cols=self._copy_payload(table), dim=scan["dim"])
 
-    def _cache(self, table: DataFrame, source: DataFrame) -> None:
-        """Cache ``table`` as the coded table, held on the driver when
-        Catalyst estimates ``source``, the frame it is coded from,
-        within the hold bound (asked of a new frame over it: an estimate
-        memoizes). A collect that raises releases the cache and leaves
-        the index as it was."""
-        small = _within_hold_bound(source.select(*source.columns))
-        table = table.cache()
-        try:
-            held = self._hold(table) if small else None
-        except Exception:
-            table.unpersist()
-            raise
-        self._items, self._held = table, held
+    def _driver_copy(self) -> "ScanRows | None":
+        """The copy a search can rank on, taken on first need: a cached
+        table no job has filled yet is filled (one job, the one a scan
+        would run) and its measured size read; a table within the hold
+        bound is then collected (one job). An unpersisted table is not
+        collected: that would recompute it."""
+        items = self._items
+        if self._held is None and items.is_cached:
+            if self._size is None:
+                _fill_cache(items)
+                self._size = _knn._measured_bytes(items)
+            if self._size <= _knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES:
+                self._held = self._collect_copy(items)
+        return self._held
 
     def _coded(self, items: DataFrame) -> DataFrame:
         """``items`` with the columns its encode adds (``_ENCODED``)."""
@@ -353,7 +358,8 @@ class _CodedIndex:
                                  "rename it first")
         self._item_key, self._vec_col = item_key_col, item_vec_col
         self._train(items)
-        self._cache(self._coded(items), items)
+        self._items, self._held, self._size = \
+            self._coded(items).cache(), None, None
         return self
 
     def add_items(self, items: DataFrame):
@@ -362,7 +368,7 @@ class _CodedIndex:
         FAISS semantics) and union them into the cached table: one
         encode pass over the new rows, and one job that fills the
         union's cache (and, on an index held on the driver, refreshes
-        the copy)."""
+        the copy while it stays within the hold bound)."""
         self._fitted()
         self._append(self._coded(items))
         return self
@@ -400,7 +406,8 @@ class _CodedIndex:
         vectors (:func:`_exact_rescore`, a candidate-sized join), so the
         survivors' ranking and scores are exact.
 
-        An index held on the driver (``_held``) ranks there, as the
+        An index within the hold bound ranks on the driver, over the
+        copy :meth:`_driver_copy` takes on the first such search, as the
         reference answers a search with one call in its own process
         (faiss_searcher.py:161-187), when the search does not refine,
         its ``payload_cols`` are in the copy, and its driver work at
@@ -426,20 +433,21 @@ class _CodedIndex:
             raise ValueError(f"{type(self).__name__}.search needs a "
                              "non-empty query set (the query state is "
                              "driver-built)")
-        q_type, held = _query_type(queries, query_item_col), self._held
-        item_col = scan.pop("item_col")
-        if (held is not None and refine_factor is None
-                and set(payload) <= {f.name for f in held.fields[1:]}
+        q_type = _query_type(queries, query_item_col)
+        held = (self._driver_copy() if refine_factor is None
+                and set(payload) <= set(self._copy_payload(items))
+                else None)
+        if (held is not None
                 and held.driver_bytes(len(qids), k)
                 <= _knn.DRIVER_RANK_CAP_BYTES):
+            scan.pop("item_col")
             return driver_scan(qids, qmat, held, items.sparkSession, k=k,
                                query_type=q_type, higher_is_closer=higher,
                                payload_cols=payload, **scan)
         cand = _sharded_scan(
             qids, qmat, items, k=k * (refine_factor or 1),
             query_type=q_type, item_key_col=self._item_key,
-            item_col=item_col, higher_is_closer=higher,
-            payload_cols=payload, **scan)
+            higher_is_closer=higher, payload_cols=payload, **scan)
         if refine_factor is not None:
             cand = _exact_rescore(
                 _rank_topk(cand, k * refine_factor, higher)
@@ -483,7 +491,7 @@ class _CodedIndex:
         if any(bad):
             raise ValueError(f"stored table inconsistent with the "
                              f"{cls.__name__} quantizer — corrupt index?")
-        index._cache(items, items)
+        index._items = items.cache()
         return index
 
     # -- executor storage (the lifecycle the bench memo and SparkSearcher
@@ -510,24 +518,33 @@ class _CodedIndex:
         The union's cache fills before the superseded one is released —
         released first, the next use would recompute the whole old state
         from its lineage (a re-encode of every corpus row). On an index
-        held on the driver the job that fills it is the collect of the
-        new copy (:meth:`_hold`). The alias keeps a union ``old`` whole:
-        unionByName flattens it into its inputs otherwise, bypassing its
-        cache."""
-        old = self._items
+        held on the driver whose copy stays within the hold bound with
+        ``rows`` (Catalyst's estimate of them) the job that fills it is
+        the collect of the new copy (:meth:`_collect_copy`); otherwise
+        the copy is dropped, and a table measured within the bound is
+        copied again by the next search. The alias keeps a union ``old``
+        whole: unionByName flattens it into its inputs otherwise,
+        bypassing its cache."""
+        old, held = self._items, self._held
         union = old.alias("__items").unionByName(
             rows.select(*old.columns)).cache()
-        try:
-            if self._held is None:
-                _fill_cache(union)
+        if held is not None:
+            added = _knn._plan_size_bytes(rows)
+            if added is None or (self._size + added
+                                 > _knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES):
                 held = None
+        try:
+            if held is None:
+                _fill_cache(union)
             else:
-                held = self._hold(union)
+                held = self._collect_copy(union)
         except Exception:
             union.unpersist()
             raise
         old.unpersist()
-        self._items, self._held = union, held
+        self._items, self._size = union, _knn._measured_bytes(union)
+        self._held = (held if self._size
+                      <= _knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES else None)
 
     # context-manager sugar: `with PQIndex(...).fit(items) as idx:`
     # guarantees the executor-storage release on any exit path
@@ -661,18 +678,13 @@ class IVFIndex(_CodedIndex):
 
     def _scan(self) -> dict:
         cents, nprobe, spherical = self.centroids, self.nprobe, self._spherical
-        return dict(item_col=M.as_double(self._vec_col), dim=cents.shape[1],
+        return dict(item_col=self._vec_col, dim=cents.shape[1],
                     probe=lambda qmat: _nearest_cells(qmat, cents, nprobe,
                                                       spherical),
                     **_gemm_scan(self.metric, self.metric == "cos"))
 
     def _table_checks(self) -> list:
         return _cell_flags(self.n_cells)
-
-    @property
-    def _row_col(self) -> str:
-        """IVF (FAISS ``IVF<n>,Flat``) scans the float vectors."""
-        return self._vec_col
 
     def assignments(self) -> DataFrame:
         """The fitted corpus with its ``cell`` assignment column — the
@@ -1159,7 +1171,7 @@ class PQIndex(_CodedIndex):
                 qmat = qmat @ rot
             return (_pq_lut(qmat, books, higher),)
 
-        return dict(item_col=F.col("__codes"), prepare=prepare,
+        return dict(item_col="__codes", prepare=prepare,
                     scorer=lambda st, codes, _cell: _adc_scorer(st[0], codes),
                     dim=books.shape[0] * books.shape[2])
 
@@ -1234,7 +1246,7 @@ class SQIndex(_CodedIndex):
         vmin, step, spherical = self.vmin, self._step(), self._spherical
         # decoded items are not unit rows, so cos scores them by dot
         metric = "ip" if self._higher else "l2"
-        return dict(item_col=F.col("__codes"), dim=vmin.size,
+        return dict(item_col="__codes", dim=vmin.size,
                     prepare=lambda qmat: (_unit_rows(qmat) if spherical
                                           else qmat,),
                     scorer=lambda st, codes, _cell: _gemm_scorer(
@@ -1383,7 +1395,7 @@ class IVFPQIndex(_CodedIndex):
 
         # nearest cells by L2 on normalized vectors == max inner product
         # on the unit sphere
-        return dict(item_col=F.col("__codes"), prepare=prepare,
+        return dict(item_col="__codes", prepare=prepare,
                     scorer=scorer, dim=cents.shape[1],
                     probe=lambda qmat: _nearest_cells(unit(qmat), cents,
                                                       nprobe, False))

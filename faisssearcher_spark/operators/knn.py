@@ -139,6 +139,14 @@ def _within_hold_bound(df: DataFrame) -> bool:
     return size is not None and size <= BLOCKED_SMALL_QUERY_ITEMS_BYTES
 
 
+def _measured_bytes(df: DataFrame) -> float:
+    """The size Spark measured for ``df``'s filled cache, asked of a new
+    frame over it (a frame memoizes its estimate on first use); infinite
+    when Catalyst gives none."""
+    size = _plan_size_bytes(df.select(*df.columns))
+    return float("inf") if size is None else size
+
+
 def _auto_strategy(q_bytes: int | None, i_bytes: int | None) -> str:
     """Pick the GEMM kernel for ``strategy="auto"`` from the two sides'
     estimated sizes:
@@ -1199,8 +1207,21 @@ def _scan_rows(qids, state, probes, keys, rows, cells, payload, *, k: int,
     return out if probes is None else out[out["sim_val"] != worst]
 
 
+def _scan_col(items: DataFrame, name: str) -> Column:
+    """Column ``name`` of ``items`` as a scan's scorer reads it, on the
+    executors (:func:`_sharded_scan`) and in a driver copy
+    (:meth:`ScanRows.collect`): integer codes as stored, vectors as
+    ``array<double>``."""
+    from pyspark.sql import types as T
+
+    elem = items.schema[name].dataType.elementType
+    col = F.col(name)
+    return col if isinstance(elem, T.IntegralType) \
+        else col.cast("array<double>")
+
+
 def _sharded_scan(qids, qmat, items: DataFrame, *, k: int, query_type,
-                  item_key_col: str, item_col: Column,
+                  item_key_col: str, item_col: str,
                   higher_is_closer: bool, prepare: Callable, scorer: Callable,
                   probe: Callable | None = None,
                   payload_cols: Sequence[str] = ()) -> DataFrame:
@@ -1234,7 +1255,8 @@ def _sharded_scan(qids, qmat, items: DataFrame, *, k: int, query_type,
     over arrays, not over a DataFrame or an index."""
     import numpy as np
 
-    cols = [F.col(item_key_col).alias("__ik"), item_col.alias("__iv")]
+    cols = [F.col(item_key_col).alias("__ik"),
+            _scan_col(items, item_col).alias("__iv")]
     probes = None
     if probe is not None:
         probes = _probes(probe(qmat))
@@ -1288,19 +1310,16 @@ class ScanRows(_DriverRows):
                 cells: bool, payload_cols: Sequence[str],
                 dim: int) -> "ScanRows":
         """One Arrow collect of ``table``'s key, ``cell`` (when
-        ``cells``), ``row_col`` and ``payload_cols``. The rows come back
-        as the executors stack them: float vectors as float64, codes as
-        integers."""
-        import numpy as np
-
-        cols = [key_col, *(["cell"] if cells else []), row_col]
-        tbl = _project(table, [*cols, *payload_cols]).toArrow()
+        ``cells``), ``row_col`` and ``payload_cols``; ``row_col`` comes
+        back as the executors read it (:func:`_scan_col`)."""
+        tbl = table.select(
+            key_col, *(["cell"] if cells else []),
+            _scan_col(table, row_col).alias(row_col),
+            *payload_cols).toArrow()
         n = tbl.num_rows
         rows = tbl.column(row_col).combine_chunks().flatten() \
             .to_numpy(zero_copy_only=False)
         rows = rows.reshape(n, -1) if n else rows.reshape(0, 0)
-        if np.issubdtype(rows.dtype, np.floating):
-            rows = rows.astype(np.float64)
         return cls(tbl.column(key_col).to_numpy(), rows,
                    tbl.column("cell").to_numpy() if cells else None,
                    tbl.select(list(payload_cols)).to_pandas()
@@ -1403,8 +1422,8 @@ def _knn_join_sharded(queries: DataFrame, items: DataFrame, *, metric: str,
         qids, qmat, items, k=k,
         query_type=_query_type(queries, query_item_col),
         item_key_col=item_key_col,
-        item_col=F.col(item_vec_col).cast("array<double>"),
-        higher_is_closer=higher, payload_cols=payload_cols,
+        item_col=item_vec_col, higher_is_closer=higher,
+        payload_cols=payload_cols,
         **_gemm_scan(metric, normalize, score_scale))
     return _top_rows(cand, k, higher, payload_cols, keep_rank_no)
 

@@ -59,7 +59,7 @@ from faisssearcher_spark.functions import metrics as M
 from faisssearcher_spark.functions.vector import (
     l2_normalize, to_float32, validate_vectors)
 from faisssearcher_spark.operators import knn as _knn
-from faisssearcher_spark.operators.ann import parse_index_param
+from faisssearcher_spark.operators.ann import _CodedIndex, parse_index_param
 from faisssearcher_spark.operators.knn import (
     BlockedCorpus, DriverQueries, blocked_rank, cal_sim, driver_rank,
     knn_join, multi_k)
@@ -95,20 +95,22 @@ def _storage_steps(norm: bool, id_col: str, role: str) -> tuple:
 
 
 @functools.cache
-def _null_text_step(text_col: str):
-    """The step after a query frame's encode that refuses a NULL text:
-    the query has nothing to encode (an encoder would encode a stand-in,
-    such as the string "None"), so its row raises ``_NULL_TEXT`` in
-    whatever job first computes the column, as :func:`_storage_steps`
-    raises for a zero vector, and adds no job of its own."""
-    return F.when(F.col(text_col).isNull(),
-                  F.raise_error(F.lit(_NULL_TEXT))).otherwise(F.col(_VEC))
+def _query_text(text_col: str):
+    """A query frame's text as the encoder UDF's input, refusing a NULL
+    text: the query has nothing to encode (an encoder would encode a
+    stand-in, such as the string "None", or fail on it), so its row
+    raises ``_NULL_TEXT`` in whatever job first computes the column,
+    before the encoder is called, as :func:`_storage_steps` raises for a
+    zero vector, and adds no job of its own."""
+    text = F.col(text_col)
+    return F.when(text.isNull(),
+                  F.raise_error(F.lit(_NULL_TEXT))).otherwise(text)
 
 
 @contextlib.contextmanager
 def _bad_rows_named():
     """Re-raise a step's error for a row it refuses (a zero vector, see
-    :func:`_storage_steps`; a NULL query text, :func:`_null_text_step`)
+    :func:`_storage_steps`; a NULL query text, :func:`_query_text`)
     as the ``ValueError`` it stands for."""
     try:
         yield
@@ -203,7 +205,7 @@ class SparkSearcher:
         """``df`` with its ``_VEC`` column; ``id_col`` (the key column by
         default) names a row that cannot be normalized (see
         :func:`_storage_steps`). A query text that is NULL raises
-        (:func:`_null_text_step`)."""
+        (:func:`_query_text`)."""
         # the encoder UDF and the whitening expression are built on the
         # first call and reused: each costs py4j round trips that every
         # search would otherwise pay again
@@ -214,10 +216,12 @@ class SparkSearcher:
                    else None)
             self._vec_exprs = (udf, steps)
         udf, steps = self._vec_exprs
-        out = df.withColumn(_VEC, udf(F.col(text_col)) if udf is not None
-                            else F.col(vec_col))
-        if udf is not None and role == "query":
-            steps = [_null_text_step(text_col), *steps]
+        if udf is None:
+            vec = F.col(vec_col)
+        else:
+            vec = udf(_query_text(text_col) if role == "query"
+                      else F.col(text_col))
+        out = df.withColumn(_VEC, vec)
         for step in steps + list(_storage_steps(
                 self.norm_vec, id_col or self.key_col, role)):
             out = out.withColumn(_VEC, step)
@@ -275,12 +279,17 @@ class SparkSearcher:
         corpus, less a raw-vector searcher's input vector column: the
         index keeps the normalized / whitened ``_VEC`` (_vectorize) and
         no search reads the raw one. The index metric is 'ip' for
-        cosine, the same rewrite search() does."""
+        cosine, the same rewrite search() does. A coded index that the
+        searches can rank on the driver (no refine) takes its driver
+        copy now, as its first search would: a trained searcher's
+        searches then run no job to take it."""
         if self._new_index is not None:
             items = self.corpus.select(
                 *[c for c in self.corpus.columns if c != self.vec_col])
             self._index = self._new_index().fit(
                 items, item_key_col=self.key_col, item_vec_col=_VEC)
+            if isinstance(self._index, _CodedIndex) and not self._refine:
+                self._index._driver_copy()
 
     def add_items(self, items: DataFrame, validate: bool = False) -> "SparkSearcher":
         """Append new items to a trained corpus — the analog of FAISS
@@ -387,13 +396,15 @@ class SparkSearcher:
         - An index_param searcher ranks through its index. An IVF, PQ,
           SQ or IVF-PQ index whose cached code table is within
           ``knn.BLOCKED_SMALL_QUERY_ITEMS_BYTES`` holds a copy of it on
-          the driver (taken in ``train()``, refreshed by ``add_items``)
-          and ranks there a search that does not refine (no ``,RFlat``)
-          and whose driver work at the largest K is within
-          ``knn.DRIVER_RANK_CAP_BYTES``: the same rows as its Spark
-          scan, as a local frame. A list target then runs no job; a
-          frame target runs the one that collects its queries. Any
-          other indexed search, and NSW's, runs in Spark.
+          the driver (taken in ``train()`` by the job that fills the
+          index's cache and one collect; refreshed by ``add_items``)
+          and ranks there a search that
+          does not refine (no ``,RFlat``) and whose driver work at the
+          largest K is within ``knn.DRIVER_RANK_CAP_BYTES``: the same
+          rows as its Spark scan, as a local frame. A list target then
+          runs no job; a frame target runs the one that collects its
+          queries. Any other indexed search, and NSW's, runs in
+          Spark.
         - Any other searcher ranks through ``knn_join(strategy="auto")``:
           a GEMM kernel for ``cos`` / ``ip`` / ``l2``, the catalyst plan
           for the other metrics.

@@ -1,7 +1,8 @@
 """An IVF, PQ, SQ or IVF-PQ index within the hold bound keeps a copy of
-its coded table on the driver (ann._CodedIndex._held) and ranks a
-search there (knn.driver_scan): the same rows as its Spark scan, and no
-Spark job to build or read the result."""
+its coded table on the driver (ann._CodedIndex._held), taken by its
+first search that can use it, and ranks a search there
+(knn.driver_scan): the same rows as its Spark scan, and no Spark job to
+build or read the result."""
 
 import numpy as np
 import pytest
@@ -39,6 +40,10 @@ def _jobs(spark) -> set:
     return set(sc.statusTracker().getJobIdsForGroup(None))
 
 
+def _no_collect(*args, **kwargs):
+    raise AssertionError("the driver copy was collected")
+
+
 def _queries(embeddings):
     return embeddings.filter(F.col("vec_id") < 12).select(
         F.col("vec_id").alias("qid"), "embedding")
@@ -69,10 +74,10 @@ class TestDriverRouteParity:
         idx = _indexes()[name]().fit(items, item_key_col="vec_id",
                                      item_vec_col="embedding")
         try:
-            assert idx._held is not None
             driver, scan = _driver_and_scan(
                 idx, _queries(embeddings), monkeypatch, k=10,
                 payload_cols=payload)
+            assert idx._held is not None
         finally:
             idx.close()
         assert len(driver) == 120
@@ -86,6 +91,8 @@ class TestDriverRouteParity:
             embeddings.filter(vid % 3 != 0), item_key_col="vec_id",
             item_vec_col="embedding")
         try:
+            idx.search(_queries(embeddings), k=10, query_item_col="qid")
+            assert len(idx._held.keys) == embeddings.count() * 2 // 3
             before = _jobs(spark)
             idx.add_items(embeddings.filter(vid % 3 == 0))
             # the collect that refreshes the copy fills the union's cache
@@ -114,9 +121,10 @@ class TestDriverRouteParity:
             idx.close()
         loaded = type(idx).load(spark, str(tmp_path / name))
         try:
-            assert loaded._held is not None
+            assert loaded._held is None   # load runs no job for it
             driver, scan = _driver_and_scan(loaded, q, monkeypatch, k=10,
                                             payload_cols=["label"])
+            assert loaded._held is not None
         finally:
             loaded.close()
         assert driver == scan == fitted
@@ -127,6 +135,7 @@ class TestDriverRouteBounds:
         idx = IVFPQIndex(n_cells=8, nprobe=3, m=8, seed=5).fit(
             embeddings, item_key_col="vec_id", item_vec_col="embedding")
         try:
+            idx.search(_queries(embeddings), k=3, query_item_col="qid")
             held = idx._held
             assert held.rows.shape == (embeddings.count(), 8)
             assert held.rows.dtype == np.int16
@@ -137,43 +146,70 @@ class TestDriverRouteBounds:
 
     def test_over_the_hold_bound_keeps_no_copy(self, spark, embeddings,
                                                monkeypatch):
+        """A table measured over the bound is never collected: its first
+        search fills the cache, reads the size and scans."""
         q = _queries(embeddings)
         idx = PQIndex(m=8, seed=5).fit(embeddings, item_key_col="vec_id",
                                        item_vec_col="embedding")
+        monkeypatch.setattr(knn, "BLOCKED_SMALL_QUERY_ITEMS_BYTES", 1)
+        monkeypatch.setattr(knn.ScanRows, "collect", _no_collect)
         try:
-            # a union measured over the bound drops the copy
-            monkeypatch.setattr(knn, "BLOCKED_SMALL_QUERY_ITEMS_BYTES", 1)
-            idx.add_items(embeddings.limit(1))
-            assert idx._held is None
-            assert "MapInPandas" in inspect.executed_plan(
-                idx.search(q, k=5, query_item_col="qid"))
+            res = idx.search(q, k=5, query_item_col="qid")
+            assert idx._held is None and idx._size > 1
+            assert "MapInPandas" in inspect.executed_plan(res)
+            assert res.count() == 60
         finally:
             idx.close()
-        fresh = PQIndex(m=8, seed=5)
-        before = _jobs(spark)
-        fresh.fit(embeddings, item_key_col="vec_id",
-                  item_vec_col="embedding")
-        # no copy and no collect: the fit is its one sample job
-        assert fresh._held is None and len(_jobs(spark) - before) == 1
-        fresh.close()
 
-    def test_fit_collects_the_copy_in_one_job(self, spark, embeddings):
-        """Within the bound, fit is its sample job plus the collect that
-        fills the coded cache and takes the copy; a search of a driver
-        query matrix then runs no job, to build or to read."""
+    def test_add_over_the_bound_drops_the_copy_uncollected(
+            self, spark, embeddings, monkeypatch):
+        """An add whose rows Catalyst estimates past the bound, beside
+        the copy's measured size, fills the union's cache in its one job
+        and drops the copy without collecting anything; the union,
+        measured within the bound, is copied again by the next search."""
+        vid = F.col("vec_id")
+        q = _queries(embeddings)
+        idx = SQIndex(nbits=8).fit(embeddings.filter(vid % 2 == 0),
+                                   item_key_col="vec_id",
+                                   item_vec_col="embedding")
+        try:
+            want = idx.search(q, k=5, query_item_col="qid")
+            assert idx._held is not None
+            with monkeypatch.context() as m:
+                m.setattr(knn, "BLOCKED_SMALL_QUERY_ITEMS_BYTES",
+                          int(idx._size) + 1)
+                m.setattr(knn.ScanRows, "collect", _no_collect)
+                before = _jobs(spark)
+                idx.add_items(embeddings.filter(vid % 2 == 1))
+                assert len(_jobs(spark) - before) == 1
+                assert idx._held is None
+            res = idx.search(q, k=5, query_item_col="qid")
+            assert len(idx._held.keys) == embeddings.count()
+            assert "LocalTableScan" in inspect.executed_plan(res)
+            assert _rows(want) != _rows(res)   # the odd rows now rank
+        finally:
+            idx.close()
+
+    def test_fit_runs_one_job_and_the_first_search_two(self, spark,
+                                                       embeddings):
+        """fit is its one sample job; the first search fills the coded
+        cache and collects the copy (the two jobs a scan ran), and a
+        search of a driver query matrix then runs no job, to build or to
+        read."""
         embeddings.count()
         before = _jobs(spark)
         idx = IVFPQIndex(n_cells=8, nprobe=3, m=8, seed=5).fit(
             embeddings, item_key_col="vec_id", item_vec_col="embedding")
         try:
-            assert len(_jobs(spark) - before) == 2
-            assert idx._items.is_cached and idx._held is not None
+            assert len(_jobs(spark) - before) == 1
+            assert idx._items.is_cached and idx._held is None
             q = knn.DriverQueries(
                 ["a", "b"], np.eye(2, 64, dtype=np.float32))
-            before = _jobs(spark)
-            rows = idx.search(q, k=5, payload_cols=["label"]).collect()
-            assert len(_jobs(spark) - before) == 0
-            assert {r["source_item"] for r in rows} == {"a", "b"}
+            for want in (2, 0):
+                before = _jobs(spark)
+                rows = idx.search(q, k=5, payload_cols=["label"]).collect()
+                assert len(_jobs(spark) - before) == want
+                assert {r["source_item"] for r in rows} == {"a", "b"}
         finally:
             idx.close()
 
@@ -203,6 +239,7 @@ class TestDriverRouteBounds:
         idx = SQIndex(nbits=8).fit(embeddings, item_key_col="vec_id",
                                    item_vec_col="embedding")
         try:
+            idx.search(q, k=5, query_item_col="qid")
             work = idx._held.driver_bytes(12, 5)
             for cap, plan in ((work, "LocalTableScan"),
                               (work - 1, "MapInPandas")):
@@ -275,7 +312,7 @@ class TestSearcherOnTheDriver:
                           encoder=HashingEncoder(dim=16),
                           index_param="IVF64,PQ8").train()
         try:
-            assert s._index._held is not None
+            assert s._index._held is not None   # train took the copy
             before = _jobs(spark)
             rows = s.search(["spark join merge", "vector search"],
                             topK=5).collect()
@@ -295,6 +332,7 @@ class TestSearcherOnTheDriver:
                           encoder=HashingEncoder(dim=16),
                           index_param="IVF8,PQ8,RFlat").train()
         try:
+            assert s._index._held is None   # no search of it would use one
             res = s.search(["spark join merge", "vector search"], topK=5)
             assert "MapInPandas" in inspect.executed_plan(res)
             assert res.count() == 10

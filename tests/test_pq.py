@@ -333,15 +333,10 @@ class TestIVFPQDriverFit:
         seven.close()
 
     def test_fit_launches_one_job(self, spark, embeddings, monkeypatch):
-        from faisssearcher_spark.operators import knn
-
         sc = spark.sparkContext
         embeddings.count()   # the fixture's cache is filled beforehand
         # no MLlib on this path: importing it would raise
         monkeypatch.setitem(sys.modules, "pyspark.ml.clustering", None)
-        # an index within the hold bound also collects its driver copy,
-        # one job more (tests/test_ann_driver.py); the fit is one job
-        monkeypatch.setattr(knn, "BLOCKED_SMALL_QUERY_ITEMS_BYTES", 0)
 
         def jobs():
             sc._jsc.sc().listenerBus().waitUntilEmpty()
@@ -910,8 +905,6 @@ class TestCodedIndexCore:
     def test_payload_adds_no_job(self, spark, embeddings, name):
         """Payload rides the scan: a search with payload_cols runs no
         more Spark jobs than the same search without."""
-        from faisssearcher_spark.operators.knn import _fill_cache
-
         sc = spark.sparkContext
         q = embeddings.filter(F.col("vec_id") < 20).select(
             F.col("vec_id").alias("qid"), "embedding")
@@ -929,7 +922,7 @@ class TestCodedIndexCore:
             return len(ids() - before)
 
         try:
-            _fill_cache(idx._items)
+            jobs()   # a first search fills the cache, takes the copy
             assert jobs(payload_cols=["label"]) <= jobs()
         finally:
             idx.close()

@@ -616,6 +616,18 @@ def _last_job_id(spark) -> int:
     return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
 
 
+class _NoNullEncoder:
+    """HashingEncoder that fails on a NULL text with an error of its own,
+    as a real model would."""
+
+    dim = 8
+
+    def encode(self, items):
+        if any(t is None for t in items):
+            raise TypeError("encoder was handed a NULL text")
+        return HashingEncoder(dim=8).encode(items)
+
+
 class _CountingEncoder:
     """HashingEncoder that counts the texts it encodes in an accumulator."""
 
@@ -1309,12 +1321,14 @@ class TestBadQueriesRaiseInSearch:
                                                   monkeypatch, tmp_path,
                                                   path):
         """A frame whose texts Spark encodes refuses a NULL text too, in
-        the job that encodes it: inside search() on an indexed searcher
-        (which collects its queries), and when the result is read on a
-        held searcher's frame over the driver cap and on a stream."""
+        the job that encodes it, before the encoder is called (this one
+        fails on None with its own error): inside search() on an indexed
+        searcher (which collects its queries), and when the result is
+        read on a held searcher's frame over the driver cap and on a
+        stream."""
         msg = "query NULL has no text to encode"
         s = SparkSearcher(documents.select("text", "lang"),
-                          encoder=HashingEncoder(dim=8),
+                          encoder=_NoNullEncoder(),
                           index_param="IVF4" if path == "indexed_frame"
                           else None).train()
         target = _sized(spark, [("spark join",), (None,)], "text string")

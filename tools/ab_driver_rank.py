@@ -89,8 +89,10 @@ def main() -> None:
         searcher = SparkSearcher(spark.read.parquet(cpath), vec_col="vec",
                                  key_col="key", measurement="cos",
                                  index_param=args.index).train()
+        # an index takes its driver copy on the first search that can
+        # use it; take it here, outside the timed rounds
         held = (searcher._held if args.index is None
-                else searcher._index._held)
+                else searcher._index._driver_copy())
         assert held is not None
         for nq in (int(x) for x in args.queries.split(",")):
             qpath = os.path.join(tmp, f"queries_{nq}.parquet")
